@@ -41,7 +41,6 @@ def _engine(args) -> CdcEngine:
         args.state,
         args.manifest,
         buckets=args.buckets,
-        salt_buckets=getattr(args, "salt_buckets", None),
         merge_mode=getattr(args, "merge_mode", "auto"),
         commit_protocol=getattr(args, "commit_protocol", "rename"),
         changes_dir=getattr(args, "changes_dir", None),
@@ -345,11 +344,6 @@ def main(argv: list[str] | None = None) -> int:
         # default None = take the bucket count from the table's layout
         # marker / manifest, falling back to 32 for a fresh table.
         sp.add_argument("--buckets", type=int, default=None)
-        # accepted-but-deprecated so existing invocations keep working
-        # (the hash-agg LWW path made salting unnecessary); the engine
-        # emits the DeprecationWarning.
-        sp.add_argument("--salt-buckets", type=int, default=None,
-                        help=argparse.SUPPRESS)
         # fresh-table default only; an existing table's layout marker
         # decides (rename = atomic-dir-rename filesystems, pointer =
         # S3-class object stores: immutable files + atomic marker)

@@ -7,7 +7,7 @@ One call = one resumable CDC replay::
     engine.replay(changelog_df, batch_size=100_000)
 
 Per micro-batch: filter the log to the LSN window → normalize (vectorized
-cleaners) → LWW dedup (salted when skewed) → bucket-pruned MERGE →
+cleaners) → LWW dedup → bucket-pruned MERGE →
 atomically commit a manifest entry carrying lsn range, per-bucket row
 counts (per-partition lineage + metrics, the north_rule requirement) and
 schema version. Restart resumes after ``manifest.high_watermark()``;
@@ -17,6 +17,7 @@ re-delivered batches are no-ops.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -24,7 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .operators import publish
 from .operators.merge import StateTable
+from .operators.store import key_bucket, parquet_footer_rows
 from .plans.checkpoint import Manifest
 from .schema import CHANGELOG_SCHEMA, CODE_KEY, OP_DELETE, SchemaRegistry
 
@@ -133,7 +136,6 @@ class CdcEngine:
         manifest_path: str,
         keys: list[str] | None = None,
         buckets: int | None = None,
-        salt_buckets: int | None = None,
         normalize: Callable[[DataFrame], DataFrame] | None = default_normalize,
         registry: SchemaRegistry | None = None,
         merge_mode: str = "auto",
@@ -166,15 +168,6 @@ class CdcEngine:
             commit_protocol=commit_protocol,
             feed_preimages=feed_preimages,
         )
-        if salt_buckets is not None:
-            import warnings
-
-            warnings.warn(
-                "salt_buckets is deprecated and ignored: the hash-agg LWW "
-                "merge path collapses hot keys map-side (no salting needed)",
-                DeprecationWarning,
-                stacklevel=2,
-            )
         self.normalize = normalize
         self.registry = registry or SchemaRegistry(CHANGELOG_SCHEMA)
         #: per-batch write strategy: "cow" always rewrites touched
@@ -187,6 +180,8 @@ class CdcEngine:
         #: Change-Data-Feed analog, making the state table itself
         #: consumable as a changelog by a downstream pipeline.
         self.changes_dir = changes_dir
+        if changes_dir:
+            publish.recover_root(changes_dir)
 
     #: (window, bucket) probe rows the driver will hold at once before
     #: switching to the streamed per-partition fetch (65536 rows of 4
@@ -355,8 +350,6 @@ class CdcEngine:
         # actually contain events are enumerated — never the numeric
         # window range, which for sparse LSN spaces (timestamp-derived
         # sequences) can be orders of magnitude larger than the data.
-        from .operators.merge import key_bucket
-
         # Buckets MUST be derived from the keys as merge() will see them —
         # i.e. AFTER normalization (sanitize trims/NUL-strips the key
         # columns; a key altered by it hashes to a different bucket).
@@ -617,8 +610,6 @@ class CdcEngine:
         under ``{index}/pairs/``. Their counts are in the manifest and
         the data is re-derivable from the index, so this is garbage
         collection, not state loss."""
-        import os
-
         if retention is None:
             return 0
         return CdcEngine._prune_batch_dirs(
@@ -635,62 +626,36 @@ class CdcEngine:
         trading time travel for space). Dirs not in the manifest (the
         published-but-uncommitted crash window) are never touched — the
         re-driven batch reuses them."""
-        import shutil
-
         root = self.changes_dir
-        if not os.path.isdir(root):
-            return 0
-        dirs = [
-            d
-            for d in os.listdir(root)
-            if d.startswith("batch=") and not d.endswith(".staging")
-        ]
+        dirs = publish.published(root, "batch")
         if len(dirs) <= retention:
             return 0
         cps = self._feed_checkpoints()
         ids = [e["batch_id"] for e in self._merge_entries()]
         pos = {bid: i for i, bid in enumerate(ids)}
-        if not cps:
-            return self._prune_batch_dirs(root, retention)
-        newest_cp = max(
-            (pos[b] for b in cps if b in pos), default=None
-        )
+        newest_cp = max((pos[b] for b in cps if b in pos), default=None)
         if newest_cp is None:
             return self._prune_batch_dirs(root, retention)
         removable = sorted(
-            (
-                d
-                for d in dirs
-                if pos.get(d.split("=", 1)[1], newest_cp + 1) <= newest_cp
-            ),
-            key=lambda d: pos[d.split("=", 1)[1]],
+            (b for b in dirs if pos.get(b, newest_cp + 1) <= newest_cp),
+            key=pos.__getitem__,
         )
-        removed = 0
-        for d in removable[: len(dirs) - retention]:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-            removed += 1
-        return removed
+        doomed = removable[: len(dirs) - retention]
+        for b in doomed:
+            shutil.rmtree(dirs[b], ignore_errors=True)
+        return len(doomed)
 
     @staticmethod
     def _prune_batch_dirs(root: str, retention: int) -> int:
         """Drop all but the newest ``retention`` ``batch=*`` dirs under
         ``root`` (ordered by commit time — batch ids are opaque here)."""
-        import os
-        import shutil
-
-        if not os.path.isdir(root):
-            return 0
-        dirs = [
-            os.path.join(root, d)
-            for d in os.listdir(root)
-            if d.startswith("batch=") and not d.endswith(".staging")
-        ]
-        dirs.sort(key=os.path.getmtime)
-        removed = 0
-        for d in dirs[: max(0, len(dirs) - retention)]:
+        dirs = sorted(
+            publish.published(root, "batch").values(), key=os.path.getmtime
+        )
+        doomed = dirs[: max(0, len(dirs) - retention)]
+        for d in doomed:
             shutil.rmtree(d, ignore_errors=True)
-            removed += 1
-        return removed
+        return len(doomed)
 
     # ------------------------------------------------------------------
 
@@ -732,15 +697,7 @@ class CdcEngine:
                 "engine was built without changes_dir; pass changes_dir= "
                 "to CdcEngine to record a change feed"
             )
-        dirs = (
-            [
-                os.path.join(self.changes_dir, d)
-                for d in sorted(os.listdir(self.changes_dir))
-                if d.startswith("batch=") and not d.endswith(".staging")
-            ]
-            if os.path.isdir(self.changes_dir)
-            else []
-        )
+        dirs = list(publish.published(self.changes_dir, "batch").values())
         if not dirs:
             raise ValueError(
                 f"no published change-feed batches under {self.changes_dir}"
@@ -769,13 +726,9 @@ class CdcEngine:
         publish rename is the commit point — a torn ``.staging`` is
         invisible), so a crash between publish and the advisory
         manifest entry loses nothing."""
-        if not (self.changes_dir and os.path.isdir(self.changes_dir)):
+        if not self.changes_dir:
             return {}
-        return {
-            d.split("=", 1)[1]: os.path.join(self.changes_dir, d)
-            for d in os.listdir(self.changes_dir)
-            if d.startswith("checkpoint=") and not d.endswith(".staging")
-        }
+        return publish.published(self.changes_dir, "checkpoint")
 
     def checkpoint_feed(self, batch_id: str | None = None) -> dict:
         """Materialize a snapshot checkpoint into the change feed (the
@@ -801,9 +754,6 @@ class CdcEngine:
         Idempotent (an existing published dir is reused) and crash-safe
         (stage → atomic rename; the advisory manifest entry commits
         after, and discovery never depends on it)."""
-        import json
-        import shutil
-
         if not self.changes_dir:
             raise ValueError(
                 "engine was built without changes_dir; checkpoints live "
@@ -817,87 +767,70 @@ class CdcEngine:
             batch_id = ids[-1]
         if batch_id not in ids:
             raise ValueError(f"batch {batch_id!r} not in the manifest")
-        out_dir = os.path.join(self.changes_dir, f"checkpoint={batch_id}")
-        meta_path = os.path.join(out_dir, StateTable.FEED_META)
-        if os.path.isdir(out_dir):
-            rows = None
-            try:
-                with open(meta_path, encoding="utf-8") as f:
-                    rows = int(json.load(f)["rows"])
-            except (OSError, ValueError, KeyError):
-                pass
-            return {"checkpoint_of": batch_id, "rows": rows, "reused": True}
 
-        if batch_id == ids[-1]:
-            # newest batch: the live state IS the snapshot — one state
-            # scan, no feed fold (and no feed-coverage requirement,
-            # which is what lets a late-enabled feed bootstrap). Guard
-            # the one crash window where the live state is AHEAD of the
-            # manifest (batch merged, manifest commit never landed):
-            # the feed publishes BEFORE the state mutates, so that
-            # window always leaves a published-but-uncommitted batch
-            # dir — refuse rather than label a snapshot containing the
-            # uncommitted batch's rows with the prior batch's id.
-            committed = set(ids)
-            stray = sorted(
-                d.split("=", 1)[1]
-                for d in (
-                    os.listdir(self.changes_dir)
-                    if os.path.isdir(self.changes_dir)
-                    else []  # late-enabled feed: nothing published yet
+        def write(staging: str) -> dict:
+            from pyspark.sql import Observation
+
+            if batch_id == ids[-1]:
+                # newest batch: the live state IS the snapshot — one
+                # state scan, no feed fold (and no feed-coverage
+                # requirement, which is what lets a late-enabled feed
+                # bootstrap). Guard the one crash window where the live
+                # state is AHEAD of the manifest (batch merged, manifest
+                # commit never landed): the feed publishes BEFORE the
+                # state mutates, so that window always leaves a
+                # published-but-uncommitted batch dir — refuse rather
+                # than label a snapshot containing the uncommitted
+                # batch's rows with the prior batch's id.
+                stray = sorted(
+                    set(publish.published(self.changes_dir, "batch"))
+                    - set(ids)
                 )
-                if d.startswith("batch=")
-                and not d.endswith(".staging")
-                and d.split("=", 1)[1] not in committed
+                if stray:
+                    raise ValueError(
+                        f"feed dirs {stray} are published but not manifest-"
+                        "committed — the live state may already contain "
+                        "their mutations (merge-then-crash window); "
+                        "re-drive replay to commit them, then checkpoint"
+                    )
+                snap = self.state.read()
+            else:
+                snap = self.state_as_of(batch_id)
+            drop = [
+                c
+                for c in ("bucket", "content_sha256", self.state.op_col)
+                if c in snap.columns
+            ]
+            obs = Observation()
+            snap = snap.drop(*drop).observe(
+                obs, F.count(F.lit(1)).alias("rows")
             )
-            if stray:
-                raise ValueError(
-                    f"feed dirs {stray} are published but not manifest-"
-                    "committed — the live state may already contain "
-                    "their mutations (merge-then-crash window); re-drive "
-                    "replay to commit them, then checkpoint"
-                )
-            snap = self.state.read()
-        else:
-            snap = self.state_as_of(batch_id)
-        drop = [
-            c
-            for c in ("bucket", "content_sha256", self.state.op_col)
-            if c in snap.columns
-        ]
-        snap = snap.drop(*drop)
+            snap.write.mode("overwrite").parquet(staging)
+            try:
+                rows = int(obs.get["rows"])
+            except Exception:  # noqa: BLE001 — AQE may prune the metrics node
+                rows = parquet_footer_rows(staging)
+            return {"rows": rows, "checkpoint_of": batch_id}
 
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        snap = snap.observe(obs, F.count(F.lit(1)).alias("rows"))
-        staging = f"{out_dir}.staging"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        snap.write.mode("overwrite").parquet(staging)
-        try:
-            rows = int(obs.get["rows"])
-        except Exception:  # noqa: BLE001 — AQE may prune the metrics node
-            from .operators.store import parquet_footer_rows
-
-            rows = parquet_footer_rows(staging)
-        with open(
-            os.path.join(staging, StateTable.FEED_META), "w", encoding="utf-8"
-        ) as f:
-            json.dump({"rows": rows, "checkpoint_of": batch_id}, f)
-        os.rename(staging, out_dir)  # atomic publish
-        hw = self.manifest.high_watermark()
-        self.manifest.commit(
-            {
-                "batch_id": f"feed_checkpoint_{self.manifest.count()}",
-                "lsn_lo": hw,
-                "lsn_hi": hw,
-                "schema_version": self.registry.version,
-                "checkpoint_of": batch_id,
-                "checkpoint_rows": rows,
-            }
-        )
-        return {"checkpoint_of": batch_id, "rows": rows, "reused": False}
+        out_dir = os.path.join(self.changes_dir, f"checkpoint={batch_id}")
+        res = publish.publish_once(out_dir, write, StateTable.FEED_META)
+        if not res["reused"]:
+            hw = self.manifest.high_watermark()
+            self.manifest.commit(
+                {
+                    "batch_id": f"feed_checkpoint_{self.manifest.count()}",
+                    "lsn_lo": hw,
+                    "lsn_hi": hw,
+                    "schema_version": self.registry.version,
+                    "checkpoint_of": batch_id,
+                    "checkpoint_rows": res["rows"],
+                }
+            )
+        return {
+            "checkpoint_of": batch_id,
+            "rows": res.get("rows"),
+            "reused": res["reused"],
+        }
 
     def state_as_of(self, batch_id: str) -> DataFrame:
         """Time travel (the Iceberg snapshot-read / Delta ``VERSION AS

@@ -23,7 +23,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..schema import OP_DELETE, OP_UPSERT
-from .store import BucketedParquetStore
+from . import publish
+from .store import BucketedParquetStore, dir_bytes, parquet_footer_rows
 
 # ---------------------------------------------------------------------------
 # CDC dedup
@@ -524,14 +525,7 @@ class _LwwIndexStore(BucketedParquetStore):
     # -- meta: row estimates + seq counter ride the layout marker ------
 
     def _load_lww_meta(self) -> None:
-        import json as _json
-        import os as _os
-
-        meta = _os.path.join(self.path, self.META_FILE)
-        if not _os.path.exists(meta):
-            return
-        with open(meta, encoding="utf-8") as f:
-            raw = _json.load(f)
+        raw = self._read_marker()
         self._row_est = {
             int(k): int(v) for k, v in (raw.get("row_est") or {}).items()
         }
@@ -604,8 +598,6 @@ class _LwwIndexStore(BucketedParquetStore):
         )
         if res["compacted_buckets"]:
             import os as _os
-
-            from .store import parquet_footer_rows
 
             for b in res["bucket_ids"]:
                 d = f"{self.path}/bucket={b}"
@@ -729,14 +721,10 @@ class MinhashIndex:
         index (no params marker yet). This is what the CLI uses so a
         non-default index is resumable/maintainable without replaying
         its parameters on the command line."""
-        import json
         import os
 
-        marker = os.path.join(path, cls.PARAMS_FILE)
-        if os.path.exists(marker):
-            with open(marker, encoding="utf-8") as f:
-                defaults = {**defaults, **json.load(f)}
-        return cls(spark, path, **defaults)
+        stored = publish.read_json(os.path.join(path, cls.PARAMS_FILE))
+        return cls(spark, path, **{**defaults, **(stored or {})})
 
     PARAMS_FILE = "_index_meta.json"
 
@@ -746,7 +734,6 @@ class MinhashIndex:
         bands, hash_family) would silently join fresh signatures against
         incompatible stored ones — fail loudly instead (same ground-
         truth-marker pattern as the stores' bucket count)."""
-        import json
         import os
 
         params = {
@@ -756,21 +743,16 @@ class MinhashIndex:
             "hash_family": self.hash_family,
         }
         marker = os.path.join(self.path, self.PARAMS_FILE)
-        if os.path.exists(marker):
-            with open(marker, encoding="utf-8") as f:
-                stored = json.load(f)
-            if stored != params:
-                raise ValueError(
-                    f"MinhashIndex at {self.path} was built with {stored} "
-                    f"but reopened with {params}; delete the index to "
-                    "change hash parameters (stored signatures are not "
-                    "comparable across parameter sets)"
-                )
-        else:
-            tmp = marker + ".part"
-            with open(tmp, "w", encoding="utf-8") as f:
-                json.dump(params, f)
-            os.replace(tmp, marker)
+        stored = publish.read_json(marker)
+        if stored is None:
+            publish.write_json(marker, params)
+        elif stored != params:
+            raise ValueError(
+                f"MinhashIndex at {self.path} was built with {stored} "
+                f"but reopened with {params}; delete the index to "
+                "change hash parameters (stored signatures are not "
+                "comparable across parameter sets)"
+            )
 
     # -- crash recovery --------------------------------------------------
 
@@ -787,14 +769,12 @@ class MinhashIndex:
         skipped; pointer: same-token copies are idempotent and a dropped
         staging means done). Re-crashing mid-redo just redoes less next
         time."""
-        import json
         import os
 
         jp = self._journal_path()
-        if not os.path.exists(jp):
+        journal = publish.read_json(jp)
+        if journal is None:
             return
-        with open(jp, encoding="utf-8") as f:
-            journal = json.load(f)
         for ent in journal["stores"]:
             store = (
                 self.sig_store if ent["store"] == "sig" else self.post_store
@@ -847,15 +827,6 @@ class MinhashIndex:
         return sorted(
             r["b"] for r in df.select(bucket_col.alias("b")).distinct().collect()
         )
-
-    @staticmethod
-    def _staged_bytes(staging: str) -> int:
-        import os
-
-        total = 0
-        for root, _dirs, files in os.walk(staging):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
 
     # -- write path ------------------------------------------------------
 
@@ -1018,7 +989,7 @@ class MinhashIndex:
                     # the same fallback); footer-only count of what was
                     # just written — no data scan (the pairs output is a
                     # flat parquet dir, not bucket-partitioned).
-                    n = self._parquet_rows(pairs_out)
+                    n = parquet_footer_rows(pairs_out)
                 metrics["pairs"] = n
                 metrics["pairs_path"] = pairs_out
                 pairs = self.spark.read.parquet(pairs_out)
@@ -1079,34 +1050,10 @@ class MinhashIndex:
     def _staged_rows(staging: str) -> dict[int, int]:
         """Row counts per staged bucket, footer-only (pyarrow metadata
         — no Spark job); feeds the sig store's row estimates."""
-        import os
-
-        out: dict[int, int] = {}
-        if not os.path.isdir(staging):
-            return out
-        for d in os.listdir(staging):
-            if d.startswith("bucket="):
-                out[int(d.split("=", 1)[1])] = MinhashIndex._parquet_rows(
-                    os.path.join(staging, d)
-                )
-        return out
-
-    @staticmethod
-    def _parquet_rows(path: str) -> int:
-        """Total rows of a flat (non-bucket-partitioned) parquet dir,
-        footer-only — no Spark job."""
-        import os
-
-        import pyarrow.parquet as pq
-
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for fname in files:
-                if fname.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(root, fname)
-                    ).metadata.num_rows
-        return total
+        return {
+            int(b): parquet_footer_rows(d)
+            for b, d in publish.published(staging, "bucket").items()
+        }
 
     def _ingest_cow(
         self,
@@ -1124,7 +1071,6 @@ class MinhashIndex:
         from the pre-swap state ``cur``), so no tombstones survive a
         COW bucket. Touched deltas are folded by the staging read and
         their files cleared after the swap."""
-        import json
         import os
         import shutil
 
@@ -1183,8 +1129,8 @@ class MinhashIndex:
             "buckets": self.buckets,
             "sig_buckets": self.sig_store.buckets,
             "post_buckets": self.post_store.buckets,
-            "sig_bytes_written": self._staged_bytes(sig_staging),
-            "post_bytes_written": self._staged_bytes(post_staging),
+            "sig_bytes_written": dir_bytes(sig_staging),
+            "post_bytes_written": dir_bytes(post_staging),
         }
 
         # exact row estimates for the rewritten buckets (advisory — the
@@ -1220,10 +1166,7 @@ class MinhashIndex:
             ]
         }
         jp = self._journal_path()
-        tmp = jp + ".part"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(journal, f)
-        os.replace(tmp, jp)
+        publish.write_json(jp, journal)
         self.sig_store.commit_staged(
             sig_staging, touched_sig, staged=staged_sig, token=sig_token
         )
@@ -1291,7 +1234,7 @@ class MinhashIndex:
                 f"{sorted(set(staged_post) - set(touched_post))} outside "
                 f"the touched set {touched_post}"
             )
-        post_bytes = self._staged_bytes(post_staging)
+        post_bytes = dir_bytes(post_staging)
         post_files = self.post_store.append_delta(post_staging, staged_post)
 
         # ---- signature delta: upserts + deleted-id tombstones ----------
@@ -1319,7 +1262,7 @@ class MinhashIndex:
                 f"the changed-id bucket set {touched_sig}"
             )
         sig_rows = self._staged_rows(sig_staging)
-        sig_bytes = self._staged_bytes(sig_staging)
+        sig_bytes = dir_bytes(sig_staging)
         sig_files = self.sig_store.append_delta(sig_staging, staged_sig)
         # appended winners as an upper-bound estimate (tombstones incl.)
         for b, n in sig_rows.items():

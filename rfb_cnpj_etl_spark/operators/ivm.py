@@ -43,15 +43,14 @@ shape stay exact.
 
 from __future__ import annotations
 
-import json
 import os
 import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import Manifest
+from . import publish
 
 #: change_type values that contribute to the aggregate, with sign.
 _SIGNS = {
@@ -100,16 +99,14 @@ class IncrementalAggregate:
         if clash:
             raise ValueError(f"measure/group name collision: {sorted(clash)}")
         os.makedirs(self.path, exist_ok=True)
-        self._recover()
+        publish.recover(self.agg_dir)
         stored = self._meta()
-        if stored is not None:
-            spec = {"group_cols": self.group_cols, "sums": self.sums}
-            if stored.get("spec") != spec:
-                raise ValueError(
-                    f"aggregate at {self.path} was built with spec "
-                    f"{stored.get('spec')}, not {spec}; use a new path "
-                    "to change the view definition"
-                )
+        if stored is not None and stored.get("spec") != self._spec:
+            raise ValueError(
+                f"aggregate at {self.path} was built with spec "
+                f"{stored.get('spec')}, not {self._spec}; use a new path "
+                "to change the view definition"
+            )
 
     # -- storage --------------------------------------------------------
 
@@ -117,21 +114,12 @@ class IncrementalAggregate:
     def agg_dir(self) -> str:
         return os.path.join(self.path, "agg")
 
-    def _recover(self) -> None:
-        """Heal the one crash window of the rename-aside swap: live dir
-        renamed aside but the staged replacement not yet renamed in."""
-        old = f"{self.agg_dir}.old"
-        if not os.path.isdir(self.agg_dir) and os.path.isdir(old):
-            os.replace(old, self.agg_dir)
+    @property
+    def _spec(self) -> dict:
+        return {"group_cols": self.group_cols, "sums": self.sums}
 
     def _meta(self) -> dict | None:
-        try:
-            with open(
-                os.path.join(self.agg_dir, self.META), encoding="utf-8"
-            ) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
+        return publish.read_json(os.path.join(self.agg_dir, self.META))
 
     def exists(self) -> bool:
         return self._meta() is not None
@@ -214,7 +202,6 @@ class IncrementalAggregate:
 
     def read(self) -> DataFrame:
         """The maintained aggregate: ``group_cols + n + <sums>``."""
-        self._recover()
         if not self.exists():
             raise ValueError(
                 f"aggregate at {self.path} has never been refreshed"
@@ -281,12 +268,13 @@ class IncrementalAggregate:
         Direct calls keep their batch ids exact (``fold_ids=None`` —
         folding an unverified id would mark earlier unapplied batches
         applied), so a caller that ONLY ever refreshes directly grows
-        the applied record by one id per call; any later
-        :meth:`advance` re-bounds it by folding every manifest-verified
-        id into the watermarks. ``fold_ids`` is advance/seed's verified
-        committed set (see :meth:`_merge_applied`).
+        the applied record by one id per call; the next :meth:`advance`
+        that applies new batches re-bounds it by folding every
+        manifest-verified id into the watermarks. ``fold_ids`` is
+        advance/seed's verified committed set (see
+        :meth:`_merge_applied`).
         """
-        self._recover()
+        publish.recover(self.agg_dir)
         meta = self._meta()
         todo = [b for b in batch_ids if not self._is_applied_in(meta, b)]
         if not todo:
@@ -335,46 +323,27 @@ class IncrementalAggregate:
         for s in self.sums:
             nonzero = nonzero | (F.col(s) != 0)
         merged = merged.filter(nonzero)
-        staging = f"{self.agg_dir}.staging"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        merged.write.mode("overwrite").parquet(staging)
-        if obs is not None:
-            try:
-                counts = dict(obs.get)
-            except Exception:  # noqa: BLE001 — AQE may prune the node
-                counts = {
-                    r["change_type"]: r["cnt"]
-                    for r in feed.groupBy("change_type")
-                    .agg(F.count(F.lit(1)).alias("cnt"))
-                    .collect()
-                }
-            try:
-                self._check_preimage_counts(counts)
-            except ValueError:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
-        with open(os.path.join(staging, self.META), "w", encoding="utf-8") as f:
-            json.dump(
-                {
-                    **self._merge_applied(meta, todo, fold_ids),
-                    "spec": {"group_cols": self.group_cols, "sums": self.sums},
-                },
-                f,
-            )
-        self._swap_in(staging)
-        return {"applied": len(todo), "batch_ids": todo}
 
-    def _swap_in(self, staging: str) -> None:
-        """store.py's rename-aside idiom: never a window with neither
-        dir, trash removed last; ``_recover`` heals the mid-swap crash."""
-        trash = f"{self.agg_dir}.old"
-        if os.path.isdir(trash):
-            shutil.rmtree(trash)
-        if os.path.isdir(self.agg_dir):
-            os.replace(self.agg_dir, trash)
-        os.replace(staging, self.agg_dir)
-        shutil.rmtree(trash, ignore_errors=True)
+        def write(staging: str) -> dict:
+            merged.write.mode("overwrite").parquet(staging)
+            if obs is not None:
+                try:
+                    counts = dict(obs.get)
+                except Exception:  # noqa: BLE001 — AQE may prune the node
+                    counts = {
+                        r["change_type"]: r["cnt"]
+                        for r in feed.groupBy("change_type")
+                        .agg(F.count(F.lit(1)).alias("cnt"))
+                        .collect()
+                    }
+                self._check_preimage_counts(counts)
+            return {
+                **self._merge_applied(meta, todo, fold_ids),
+                "spec": self._spec,
+            }
+
+        publish.replace_dir(self.agg_dir, write, self.META)
+        return {"applied": len(todo), "batch_ids": todo}
 
     def seed(self, engine) -> dict:
         """Bootstrap (or rebuild) from a full recompute over the CURRENT
@@ -398,32 +367,18 @@ class IncrementalAggregate:
             for e in engine._merge_entries()
             if "change_rows" in e
         )
-        staging = f"{self.agg_dir}.staging"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        full.filter(F.col("n") > 0).write.mode("overwrite").parquet(staging)
-        with open(os.path.join(staging, self.META), "w", encoding="utf-8") as f:
-            json.dump(
-                {
-                    **self._merge_applied(None, seen, fold=seen),
-                    "spec": {"group_cols": self.group_cols, "sums": self.sums},
-                },
-                f,
-            )
-        self._swap_in(staging)
-        return {"seeded": True, "batches_marked": len(seen)}
 
-    @staticmethod
-    def _feed_dirs(engine) -> dict[str, str]:
-        return (
-            {
-                d.split("=", 1)[1]: os.path.join(engine.changes_dir, d)
-                for d in os.listdir(engine.changes_dir)
-                if d.startswith("batch=") and not d.endswith(".staging")
+        def write(staging: str) -> dict:
+            full.filter(F.col("n") > 0).write.mode("overwrite").parquet(
+                staging
+            )
+            return {
+                **self._merge_applied(None, seen, fold=seen),
+                "spec": self._spec,
             }
-            if os.path.isdir(engine.changes_dir)
-            else {}
-        )
+
+        publish.replace_dir(self.agg_dir, write, self.META)
+        return {"seeded": True, "batches_marked": len(seen)}
 
     def advance(self, engine) -> dict:
         """Catch up with every manifest-COMMITTED, unapplied feed batch
@@ -448,8 +403,8 @@ class IncrementalAggregate:
         # applied" and turn long-applied-but-retention-pruned batches
         # into a spurious 'pruned' error (or refresh's all-or-nothing
         # guard) on a same-instance retry
-        self._recover()
-        dirs = self._feed_dirs(engine)
+        publish.recover(self.agg_dir)
+        dirs = publish.published(engine.changes_dir, "batch")
         committed = [
             e["batch_id"]
             for e in engine._merge_entries()

@@ -13,10 +13,9 @@ plan is the scalable parquet fallback:
 2. a micro-batch only touches the buckets its keys hash to → read just
    those partitions (partition-pruned scan), union with the batch
    winners, window-dedup by (key, lsn), and rewrite ONLY those buckets;
-3. the rewrite goes to a hidden staging dir first, then bucket dirs are
-   swapped into place — the reference's ``.part`` + ``os.replace``
-   atomic-rename pattern (``cnpj_downloader.py:67,116,169``) applied to
-   partitions. The checkpoint manifest (plans/checkpoint.py) is the
+3. the rewrite goes to a staging dir first, then bucket dirs are
+   swapped into place (operators/publish.py holds the staging, swap and
+   heal rules). The checkpoint manifest (plans/checkpoint.py) is the
    commit point; a crash between swap and manifest replays the batch,
    and LWW-by-LSN makes the replay a no-op (idempotent).
 
@@ -24,30 +23,27 @@ Write amplification is bounded by touched-buckets/B of the table, not
 the whole table. At 100 TB you raise B so a bucket ≈ a few GB; the
 algorithm is unchanged.
 
-The layout/swap/recovery machinery is factored into
-:class:`BucketedParquetStore` so other engine stores (the incremental
-MinHash index's signature and posting stores, operators/dedup.py) ride
-the exact same crash-safety protocol instead of reinventing it.
+The layout machinery is :class:`BucketedParquetStore`, shared with the
+incremental MinHash index's signature and posting stores
+(operators/dedup.py).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import CODE_KEY, OP_DELETE, OP_UPSERT
+from . import publish
 from .dedup import last_writer_wins_agg
-
-
-from .store import (  # noqa: F401  (re-exported for compatibility)
+from .store import (
     BucketedParquetStore,
+    dir_bytes,
     key_bucket,
     parquet_footer_rows,
-    path_health,
 )
 
 
@@ -130,13 +126,7 @@ class StateTable(BucketedParquetStore):
         self._row_est: dict[int, int] = self._load_row_est()
 
     def _load_row_est(self) -> dict[int, int]:
-        import json as _json
-
-        meta = os.path.join(self.path, self.META_FILE)
-        if not os.path.exists(meta):
-            return {}
-        with open(meta, encoding="utf-8") as f:
-            raw = _json.load(f).get("row_est") or {}
+        raw = self._read_marker().get("row_est") or {}
         return {int(k): int(v) for k, v in raw.items()}
 
     def _meta_payload(self) -> dict:
@@ -206,7 +196,6 @@ class StateTable(BucketedParquetStore):
         batch: DataFrame,
         lsn_col: str | None = None,
         op_col: str | None = None,
-        salt_buckets: int | None = None,
         touched: list[int] | None = None,
         mode: str = "auto",
         batch_rows: int | None = None,
@@ -224,13 +213,12 @@ class StateTable(BucketedParquetStore):
               WHEN NOT MATCHED AND op<>'delete' THEN INSERT *
 
         LWW-by-LSN is associative, so state ∪ batch needs only ONE
-        keyed dedup (``salt_buckets`` is deprecated: the hash-agg LWW
-        collapses hot keys map-side — SURVEY P7's skew answer is free
-        here). ``touched`` can be precomputed for all batches in a
-        single upfront pass (CdcEngine.replay does), stored sha256 is
-        reused so only new winners hash, and the per-bucket manifest
-        metrics ride the write job as observed metrics instead of a
-        follow-up count.
+        keyed dedup (the hash-agg LWW collapses hot keys map-side —
+        SURVEY P7's skew answer is free here). ``touched`` can be
+        precomputed for all batches in a single upfront pass
+        (CdcEngine.replay does), stored sha256 is reused so only new
+        winners hash, and the per-bucket manifest metrics ride the
+        write job as observed metrics instead of a follow-up count.
 
         ``mode``: ``"cow"`` rewrites the touched buckets (bulk path),
         ``"mor"`` appends the batch winners as delta files (small-churn
@@ -255,15 +243,6 @@ class StateTable(BucketedParquetStore):
         be unique per batch (the engine uses ``batch=<batch_id>``);
         see :meth:`_emit_changes` for the exactly-once crash contract.
         """
-        if salt_buckets is not None:
-            import warnings
-
-            warnings.warn(
-                "salt_buckets is deprecated and ignored: the hash-agg LWW "
-                "path collapses hot keys map-side before the shuffle",
-                DeprecationWarning,
-                stacklevel=2,
-            )
         if mode not in ("auto", "cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}")
         lsn_col = lsn_col or self.lsn_col
@@ -329,8 +308,9 @@ class StateTable(BucketedParquetStore):
 
     # -- CDC-out change feed ---------------------------------------------
 
-    #: sidecar recording the feed's row count inside each published
-    #: batch dir (underscore prefix → ignored by parquet readers).
+    #: sidecar recording the feed's row count (and, for batch dirs, the
+    #: touched buckets it was diffed over) inside each published dir
+    #: (underscore prefix → ignored by parquet readers).
     FEED_META = "_feed_meta.json"
 
     def _pre_image(
@@ -393,22 +373,53 @@ class StateTable(BucketedParquetStore):
         manifest re-drives the batch, feed reused (it holds the
         correct pre-image diff).
 
+        The one published dir NOT reused: its recorded touched set
+        misses buckets of this call's. That feed came from an attempt
+        whose merge raised :class:`TouchedSetMismatchError` — before
+        any state mutation, but after the publish, and the crash hit
+        before the raise could unpublish it — so it was diffed against
+        a pre-image missing those buckets. It is recomputed. Dirs from
+        before the set was recorded are reused as they are.
+        """
+
+        def write(staging: str) -> dict:
+            from pyspark.sql import Observation
+
+            obs = Observation()
+            feed = self._changes(incoming, lsn_col, op_col, touched)
+            feed = feed.observe(obs, F.count(F.lit(1)).alias("rows"))
+            feed.write.mode("overwrite").parquet(staging)
+            try:
+                rows = int(obs.get["rows"])
+            except Exception:  # noqa: BLE001 — AQE may prune the metrics node
+                rows = parquet_footer_rows(staging)
+            return {"rows": rows, "touched": sorted(touched)}
+
+        res = publish.publish_once(out_dir, write, self.FEED_META)
+        recorded = set(res.get("touched", touched))
+        if res["reused"] and not recorded.issuperset(touched):
+            shutil.rmtree(out_dir)
+            res = publish.publish_once(out_dir, write, self.FEED_META)
+        if res["reused"]:
+            return {"change_rows": res.get("rows"), "change_feed_reused": True}
+        return {"change_rows": res["rows"]}
+
+    def _changes(
+        self,
+        incoming: DataFrame,
+        lsn_col: str,
+        op_col: str,
+        touched: list[int],
+    ) -> DataFrame:
+        """This batch's net row-level changes against the current state
+        of the ``touched`` buckets (the feed :meth:`_emit_changes`
+        publishes).
+
         Classification per batch LWW winner joined to the pre-image:
         no before-row → ``insert`` (delete-on-absent emits nothing);
         before-row outranked (lsn, delete-priority) → ``update`` /
         ``delete``; a stale winner the state outranks emits nothing.
         """
-        if os.path.isdir(out_dir):
-            rows = None
-            try:
-                with open(
-                    os.path.join(out_dir, self.FEED_META), encoding="utf-8"
-                ) as f:
-                    rows = int(json.load(f)["rows"])
-            except (OSError, ValueError, KeyError):
-                pass
-            return {"change_rows": rows, "change_feed_reused": True}
-
         winners = last_writer_wins_agg(incoming, self.keys, lsn_col, op_col)
         prev_col = f"prev_{lsn_col}"
         pre = self._pre_image(touched, lsn_col)
@@ -516,34 +527,7 @@ class StateTable(BucketedParquetStore):
                 .select(*self.keys, "change_type", *pre_data_cols, prev_col)
             )
             feed = feed.unionByName(pre_rows, allowMissingColumns=True)
-
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        feed = feed.observe(obs, F.count(F.lit(1)).alias("rows"))
-        # dot-prefixed staging name: a torn staging dir must be invisible
-        # to every feed consumer — change_feed()'s ``batch=`` listing and
-        # the streaming tail's ``batch=*`` glob both skip hidden dirs,
-        # so only the atomic rename below ever exposes feed data.
-        parent, base = os.path.split(out_dir)
-        staging = os.path.join(parent, f".{base}.staging")
-        # clean a torn dir under the new hidden name AND the legacy
-        # visible one (pre-hidden-staging crashes left `batch=<id>.staging`)
-        for torn in (staging, f"{out_dir}.staging"):
-            if os.path.isdir(torn):
-                shutil.rmtree(torn)
-        feed.write.mode("overwrite").parquet(staging)
-        try:
-            rows = int(obs.get["rows"])
-        except Exception:  # noqa: BLE001 — AQE may prune the metrics node
-            rows = parquet_footer_rows(staging)
-        with open(
-            os.path.join(staging, self.FEED_META), "w", encoding="utf-8"
-        ) as f:
-            json.dump({"rows": rows}, f)
-        os.makedirs(os.path.dirname(out_dir) or ".", exist_ok=True)
-        os.rename(staging, out_dir)  # atomic publish = the feed commit
-        return {"change_rows": rows}
+        return feed
 
     def _observe_bucket_counts(self, df: DataFrame, touched: list[int]):
         """Attach per-bucket row counters to ride the write job (V4
@@ -575,13 +559,6 @@ class StateTable(BucketedParquetStore):
         except Exception:  # noqa: BLE001
             return None
 
-    @staticmethod
-    def _dir_bytes(path: str) -> int:
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
-
     def _merge_mor(
         self, incoming: DataFrame, lsn_col: str, op_col: str, touched: list[int]
     ) -> dict:
@@ -612,7 +589,7 @@ class StateTable(BucketedParquetStore):
                 "bucket probe must run on keys normalized identically to "
                 "the merged batch (state table left unchanged)"
             )
-        bytes_written = self._dir_bytes(staging)
+        bytes_written = dir_bytes(staging)
         files = self.append_delta(staging, staged)
         counts = self._obs_counts(obs)
         if counts is None:
@@ -698,7 +675,7 @@ class StateTable(BucketedParquetStore):
                 "the merged batch (state table left unchanged)"
             )
 
-        bytes_written = self._dir_bytes(staging)
+        bytes_written = dir_bytes(staging)
         counts = self._obs_counts(obs)
         if counts is not None:
             # refresh the row estimates BEFORE the commit writes the

@@ -5,10 +5,9 @@ Every persistent store in the engine — the CDC MERGE state table
 (operators/merge.py) and the incremental MinHash index's signature and
 posting stores (operators/dedup.py) — shares this machinery: the
 ``bucket=<i>`` partition layout with its ``_table_meta.json`` marker,
-rename-aside atomic swaps with crash recovery (the reference's
-``.part`` + ``os.replace`` pattern, ``cnpj_downloader.py:67,116,169``,
-applied to partitions), partition-pruned reads, staged writes,
-small-file compaction and a metadata-only health report.
+rename-aside bucket swaps with crash recovery (the staging, swap and
+heal rules live in operators/publish.py), partition-pruned reads,
+staged writes, small-file compaction and a metadata-only health report.
 
 **Object-store translation (the 100×-cluster commit protocol).** The
 swap protocol needs exactly three filesystem primitives: atomic rename
@@ -43,13 +42,14 @@ the same pattern at batch granularity.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import publish
 
 
 def key_bucket(keys: list[str], buckets: int) -> Column:
@@ -71,6 +71,15 @@ def parquet_footer_rows(path: str) -> int:
                     os.path.join(root, fname)
                 ).metadata.num_rows
     return total
+
+
+def dir_bytes(path: str) -> int:
+    """Total bytes of every file under ``path``."""
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _dirs, files in os.walk(path)
+        for f in files
+    )
 
 
 class BucketedParquetStore:
@@ -120,8 +129,10 @@ class BucketedParquetStore:
         #: :meth:`bucket_col` instead).
         self.bucket_keys = bucket_keys
         # the whole-dir restore must run before the marker can be read
-        # (a crashed rebucket may have left the table only in `.old`)
-        self._restore_whole_old()
+        # (a crashed rebucket may have left the table only in `.old`).
+        # Not recover(): `{path}.staging` is commit_staged's staging,
+        # which an index journal may still redo from.
+        publish.restore(path)
         stored = self._read_marker()
         # protocol + live-file map: the marker — swapped atomically WITH
         # the data — is the ground truth; the ctor arg is a fresh-store
@@ -171,18 +182,11 @@ class BucketedParquetStore:
     def layout_buckets(cls, path: str) -> int | None:
         """Bucket count recorded in the store's layout marker (None for
         a missing store or one predating the marker)."""
-        meta = os.path.join(path, cls.META_FILE)
-        if not os.path.exists(meta):
-            return None
-        with open(meta, encoding="utf-8") as f:
-            return int(json.load(f)["buckets"])
+        meta = publish.read_json(os.path.join(path, cls.META_FILE))
+        return None if meta is None else int(meta["buckets"])
 
     def _read_marker(self) -> dict:
-        meta = os.path.join(self.path, self.META_FILE)
-        if not os.path.exists(meta):
-            return {}
-        with open(meta, encoding="utf-8") as f:
-            return json.load(f)
+        return publish.read_json(os.path.join(self.path, self.META_FILE)) or {}
 
     def _meta_payload(self) -> dict:
         payload: dict = {
@@ -195,42 +199,23 @@ class BucketedParquetStore:
             payload["bucket_keys"] = self.bucket_keys
         return payload
 
-    def _write_meta(
-        self,
-        into: str | None = None,
-        buckets: int | None = None,
-        fresh_layout: bool = False,
-    ) -> None:
-        """Write the layout marker (atomically) into the live dir — or
-        into ``into`` (a staging dir), so the marker can ride an atomic
-        whole-dir rename instead of trailing it.
+    def _fresh_layout_marker(self, buckets: int) -> dict:
+        """The marker for a new layout under ``buckets``, without the
+        per-bucket row estimates: a rebucket invalidates their bucket
+        keying, and the marker staged with the new layout must not
+        carry OLD-keyed but valid-looking estimates through the crash
+        window between the directory swap and the subclass's
+        post-rebucket reseed (a reopen there should read "untracked"
+        and take the conservative COW path until reseeded)."""
+        payload = {**self._meta_payload(), "buckets": buckets}
+        payload.pop("row_est", None)
+        return payload
 
-        ``fresh_layout`` strips per-bucket row estimates from the
-        payload: a rebucket invalidates their bucket keying, and the
-        marker staged with the new layout must not carry OLD-keyed but
-        valid-looking estimates through the crash window between the
-        directory swap and the subclass's post-rebucket reseed (a
-        reopen there should read "untracked" and take the conservative
-        COW path until reseeded)."""
-        payload = self._meta_payload()
-        if buckets is not None:
-            payload["buckets"] = buckets
-        if fresh_layout:
-            payload.pop("row_est", None)
-        meta = os.path.join(into or self.path, self.META_FILE)
-        tmp = meta + ".part"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(payload, f)
-        os.replace(tmp, meta)
-
-    def _restore_whole_old(self) -> None:
-        """Restore a crashed rebucket's intact pre-swap table: the
-        ``{path}.old`` directory exists only between the rebucket's two
-        renames (staging is discarded on rerun)."""
-        whole_old = f"{self.path}.old"
-        if not os.path.isdir(self.path) and os.path.isdir(whole_old):
-            os.replace(whole_old, self.path)
-        shutil.rmtree(whole_old, ignore_errors=True)
+    def _write_meta(self) -> None:
+        """Write the layout marker (atomically) into the live dir."""
+        publish.write_json(
+            os.path.join(self.path, self.META_FILE), self._meta_payload()
+        )
 
     def _recover(self) -> None:
         """Undo a crashed swap. Invariants of the swap protocols below:
@@ -239,22 +224,9 @@ class BucketedParquetStore:
         does not reference is never committed (pointer protocol) — so
         rolling back and letting the batch/rebucket re-apply is always
         correct (LWW idempotence)."""
-        if os.path.isdir(self.path):
-            for d in os.listdir(self.path):
-                if d.startswith("bucket=") and d.endswith(".old"):
-                    src = os.path.join(self.path, d)
-                    dst = os.path.join(self.path, d[: -len(".old")])
-                    if os.path.isdir(dst):
-                        shutil.rmtree(src)  # swap completed; stale trash
-                    else:
-                        os.replace(src, dst)  # swap crashed mid-bucket
+        publish.recover_root(self.path)  # per-bucket swap leftovers
         if self.commit_protocol == "pointer":
-            if not self._marker_present and any(
-                d.startswith("bucket=")
-                for d in (
-                    os.listdir(self.path) if os.path.isdir(self.path) else []
-                )
-            ):
+            if not self._marker_present and self._bucket_dirs(self.path):
                 # fail loud: GC'ing under an empty live map would delete
                 # foreign (marker-less legacy) data wholesale
                 raise ValueError(
@@ -284,13 +256,8 @@ class BucketedParquetStore:
         manifest/journal re-drives the batch) or a replaced file whose
         post-commit GC was interrupted; delete both. A committed live
         file that is MISSING is real corruption — fail loudly."""
-        if not os.path.isdir(self.path):
-            return
-        for d in os.listdir(self.path):
-            if not d.startswith("bucket=") or d.endswith(".old"):
-                continue
-            b = int(d.split("=", 1)[1])
-            bdir = os.path.join(self.path, d)
+        for b, bdir in publish.published(self.path, "bucket").items():
+            b = int(b)
             keep = set(self._live.get(b, []))
             have = {e for e in os.listdir(bdir) if e.endswith(".parquet")}
             missing = sorted(keep - have)
@@ -304,28 +271,12 @@ class BucketedParquetStore:
             if not keep:
                 shutil.rmtree(bdir, ignore_errors=True)
 
-    def _swap_in(self, src: str, dst: str) -> None:
-        """Replace ``dst`` with ``src`` without a window where neither
-        exists: dst is renamed aside first (never rmtree'd before the
-        replacement lands) and the trash only deleted last. ``src``
-        absent = the bucket emptied out (every key deleted)."""
-        trash = f"{dst}.old"
-        if os.path.isdir(trash):
-            shutil.rmtree(trash)
-        if os.path.isdir(dst):
-            os.replace(dst, trash)
-        if os.path.isdir(src):
-            os.replace(src, dst)
-        shutil.rmtree(trash, ignore_errors=True)
-
     # -- read ----------------------------------------------------------
 
     def exists(self) -> bool:
         if self.commit_protocol == "pointer":
             return bool(self._live)
-        return os.path.isdir(self.path) and any(
-            e.startswith("bucket=") for e in os.listdir(self.path)
-        )
+        return bool(self._bucket_dirs(self.path))
 
     def base_bucket_ids(self) -> list[int]:
         """Bucket ids currently holding base data (pointer: the live
@@ -334,14 +285,9 @@ class BucketedParquetStore:
             return sorted(self._live)
         return self._bucket_dirs(self.path)
 
-    def _bucket_dirs(self, root: str) -> list[int]:
-        if not os.path.isdir(root):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(root)
-            if d.startswith("bucket=") and not d.endswith(".old")
-        )
+    @staticmethod
+    def _bucket_dirs(root: str) -> list[int]:
+        return sorted(int(b) for b in publish.published(root, "bucket"))
 
     def _live_files(self, bucket_ids: list[int]) -> list[str]:
         return [
@@ -412,11 +358,8 @@ class BucketedParquetStore:
         return f"{self.path}.delta"
 
     def _delta_layout_buckets(self) -> int | None:
-        meta = os.path.join(self.delta_root, self.DELTA_META)
-        if not os.path.exists(meta):
-            return None
-        with open(meta, encoding="utf-8") as f:
-            return int(json.load(f)["buckets"])
+        meta = publish.read_json(os.path.join(self.delta_root, self.DELTA_META))
+        return None if meta is None else int(meta["buckets"])
 
     def delta_bucket_ids(self) -> list[int]:
         """Bucket ids that currently hold delta files."""
@@ -469,10 +412,7 @@ class BucketedParquetStore:
         os.makedirs(self.delta_root, exist_ok=True)
         meta = os.path.join(self.delta_root, self.DELTA_META)
         if not os.path.exists(meta):
-            tmp = meta + ".part"
-            with open(tmp, "w", encoding="utf-8") as f:
-                json.dump({"buckets": self.buckets}, f)
-            os.replace(tmp, meta)
+            publish.write_json(meta, {"buckets": self.buckets})
         token = uuid.uuid4().hex[:12]
         moved = 0
         for b in staged:
@@ -511,20 +451,7 @@ class BucketedParquetStore:
         if os.path.isdir(staging):
             shutil.rmtree(staging)
         df.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(staging)
-            if d.startswith("bucket=")
-        )
-
-    def _staged_bucket_ids(self, staging: str) -> list[int]:
-        if not os.path.isdir(staging):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(staging)
-            if d.startswith("bucket=")
-        )
+        return self._bucket_dirs(staging)
 
     def commit_staged(
         self,
@@ -557,14 +484,14 @@ class BucketedParquetStore:
         names — a no-op (sources outlive the commit: staging is dropped
         last). A fully-dropped staging means the commit completed."""
         if staged is None:
-            staged = self._staged_bucket_ids(staging)
+            staged = self._bucket_dirs(staging)
         os.makedirs(self.path, exist_ok=True)
         if self.commit_protocol == "rename":
             staged_set = set(staged)
             for b in touched:
                 src = f"{staging}/bucket={b}"
                 if os.path.isdir(src) or b not in staged_set:
-                    self._swap_in(src, f"{self.path}/bucket={b}")
+                    publish.swap_in(src, f"{self.path}/bucket={b}")
             self._write_meta()
             shutil.rmtree(staging, ignore_errors=True)
             return
@@ -676,11 +603,7 @@ class BucketedParquetStore:
         if sort_within_buckets:
             df = df.sortWithinPartitions("bucket", *sort_within_buckets)
         df.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        bytes_written = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _dirs, files in os.walk(staging)
-            for f in files
-        )
+        bytes_written = dir_bytes(staging)
         self.commit_staged(staging, bucket_ids)
         # deltas are folded into the rewritten base; a crash before this
         # cleanup leaves already-folded rows the next fold LWW-no-ops.
@@ -718,69 +641,55 @@ class BucketedParquetStore:
             raise ValueError(f"no store at {self.path} to rebucket")
         new_bucket_col = self.bucket_col(new_buckets)  # fails loudly w/o keys
         old_buckets = self.buckets
-        staging = f"{self.path}.rebucket"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
         df = self.read().drop("bucket")
-        (
-            df.withColumn("bucket", new_bucket_col)
-            .repartition(new_buckets, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(staging)
-        )
-        # per-bucket counts (≤ B′ ints on the driver) — footer-only via
-        # parquet aggregate pushdown; StateTable seeds its row tracking
-        # for the merge-mode heuristic from these.
-        bucket_rows = {
-            int(r["bucket"]): int(r["n"])
-            for r in self.spark.read.parquet(staging)
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        if self.commit_protocol == "pointer":
-            # the staged marker must reference the staged files: on a
-            # real object store a rebucket writes a NEW table root and
-            # flips the catalog pointer — the whole-dir rename below is
-            # that flip's local analog, and the live map rides it.
-            self._live = {
-                b: sorted(
-                    e
-                    for e in os.listdir(f"{staging}/bucket={b}")
-                    if e.endswith(".parquet")
-                )
-                for b in self._staged_bucket_ids(staging)
-            }
-        # The new-layout marker is written INTO staging so it rides the
-        # atomic rename below: a crash between the two os.replace calls
-        # must never leave a new-layout table without its marker (the
-        # post-swap _write_meta alone opened exactly that window — a
-        # marker-less new-layout table would resolve B from a stale
-        # manifest and a later merge would mix hash moduli, letting
-        # stale versions escape LWW). fresh_layout: the staged marker
-        # must NOT carry row estimates still keyed by OLD bucket ids —
-        # a crash before the subclass's post-rebucket reseed would
-        # otherwise reopen with wrong-keyed but valid-looking estimates
-        # feeding the COW/MOR decision.
-        self._write_meta(into=staging, buckets=new_buckets, fresh_layout=True)
-        # Whole-table rename-aside swap. Crash between the two renames
-        # leaves the intact pre-rebucket table in {path}.old, which
-        # _recover() restores on the next construction — the rebucket is
-        # then simply re-run. Crash after the swap but before the
-        # caller's manifest commit is detected by the layout marker
-        # (already inside the swapped dir): the marker, not the
-        # manifest, is the layout's ground truth.
-        old = f"{self.path}.old"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.replace(self.path, old)
-        os.replace(staging, self.path)
+        bucket_rows: dict[int, int] = {}
+
+        def write(staging: str) -> dict:
+            (
+                df.withColumn("bucket", new_bucket_col)
+                .repartition(new_buckets, "bucket")
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(staging)
+            )
+            # per-bucket counts (≤ B′ ints on the driver) — footer-only
+            # via parquet aggregate pushdown; StateTable seeds its row
+            # tracking for the merge-mode heuristic from these.
+            bucket_rows.update(
+                (int(r["bucket"]), int(r["n"]))
+                for r in self.spark.read.parquet(staging)
+                .groupBy("bucket")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            )
+            if self.commit_protocol == "pointer":
+                # the staged marker must reference the staged files: on
+                # a real object store a rebucket writes a NEW table root
+                # and flips the catalog pointer — the whole-dir swap is
+                # that flip's local analog, and the live map rides it.
+                self._live = {
+                    b: sorted(
+                        e
+                        for e in os.listdir(f"{staging}/bucket={b}")
+                        if e.endswith(".parquet")
+                    )
+                    for b in self._bucket_dirs(staging)
+                }
+            # The new-layout marker is staged WITH the data so it rides
+            # the atomic swap: a new-layout table without its marker
+            # would resolve B from a stale manifest and a later merge
+            # would mix hash moduli, letting stale versions escape LWW.
+            return self._fresh_layout_marker(new_buckets)
+
+        # Whole-table rename-aside swap. A crash between its two renames
+        # leaves the intact pre-rebucket table in {path}.old, which the
+        # next construction restores — the rebucket is then simply
+        # re-run. A crash after the swap but before the caller's
+        # manifest commit is detected by the layout marker (already
+        # inside the swapped dir): the marker, not the manifest, is the
+        # layout's ground truth.
+        publish.replace_dir(self.path, write, self.META_FILE)
         self.buckets = new_buckets
-        # refresh = the staged marker's content (still estimate-free;
-        # subclasses reseed and write the full payload right after)
-        self._write_meta(fresh_layout=True)
-        shutil.rmtree(old, ignore_errors=True)
         # deltas were folded into the new base by the read() above; the
         # crash window between the swap and this clear is covered by the
         # delta layout marker check in _recover().
@@ -823,20 +732,14 @@ def path_health(path: str) -> dict:
     ``os.listdir``/``getsize``, requiring neither a SparkSession nor a
     store object (the CLI's ``health`` verb uses this directly so the
     metadata-only report doesn't pay JVM startup)."""
-    if not os.path.isdir(path) or not any(
-        e.startswith("bucket=") for e in os.listdir(path)
-    ):
+    dirs = publish.published(path, "bucket")
+    if not dirs:
         return {"buckets": 0, "files": 0, "bytes": 0, "per_bucket": {}}
     per_bucket: dict[int, dict] = {}
-    for d in sorted(os.listdir(path)):
-        if not d.startswith("bucket=") or d.endswith(".old"):
-            continue
-        b = int(d.split("=", 1)[1])
-        files = [
-            e for e in os.listdir(os.path.join(path, d)) if e.endswith(".parquet")
-        ]
-        nbytes = sum(os.path.getsize(os.path.join(path, d, e)) for e in files)
-        per_bucket[b] = {"files": len(files), "bytes": nbytes}
+    for b, d in dirs.items():
+        files = [e for e in os.listdir(d) if e.endswith(".parquet")]
+        nbytes = sum(os.path.getsize(os.path.join(d, e)) for e in files)
+        per_bucket[int(b)] = {"files": len(files), "bytes": nbytes}
     sizes = sorted(v["bytes"] for v in per_bucket.values())
     total = sum(sizes)
     median = sizes[len(sizes) // 2] if sizes else 0
@@ -863,23 +766,12 @@ def store_health(path: str) -> dict:
     h = path_health(path)
     delta_root = f"{path}.delta"
     delta_per_bucket: dict[int, dict] = {}
-    if os.path.isdir(delta_root):
-        for d in sorted(os.listdir(delta_root)):
-            if not d.startswith("bucket="):
-                continue
-            b = int(d.split("=", 1)[1])
-            files = [
-                e
-                for e in os.listdir(os.path.join(delta_root, d))
-                if e.endswith(".parquet")
-            ]
-            delta_per_bucket[b] = {
-                "files": len(files),
-                "bytes": sum(
-                    os.path.getsize(os.path.join(delta_root, d, e))
-                    for e in files
-                ),
-            }
+    for b, d in publish.published(delta_root, "bucket").items():
+        files = [e for e in os.listdir(d) if e.endswith(".parquet")]
+        delta_per_bucket[int(b)] = {
+            "files": len(files),
+            "bytes": sum(os.path.getsize(os.path.join(d, e)) for e in files),
+        }
     h["delta_files"] = sum(v["files"] for v in delta_per_bucket.values())
     h["delta_bytes"] = sum(v["bytes"] for v in delta_per_bucket.values())
     h["max_delta_files_per_bucket"] = max(

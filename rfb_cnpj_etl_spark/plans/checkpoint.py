@@ -10,10 +10,10 @@ SURVEY S8 calls out. The engine closes that gap:
   ``{batch_id, lsn_lo, lsn_hi, touched_buckets, bucket_rows, rows,
   schema_version, columns}``;
 * the entry is committed as its own atomic segment file (write temp +
-  ``os.replace`` into ``{path}.segs/``) — O(entry) per commit, not
-  O(manifest): round 2 rewrote the whole JSONL file per commit and
-  re-read it per ``is_applied`` probe, an O(n²) driver cost across a
-  long replay;
+  ``os.replace`` into ``{path}.segs/``, operators/publish.py) —
+  O(entry) per commit, not O(manifest): round 2 rewrote the whole
+  JSONL file per commit and re-read it per ``is_applied`` probe, an
+  O(n²) driver cost across a long replay;
 * segments are folded into the JSONL snapshot every
   ``compact_segments`` commits by APPENDING them (O(segments) per fold,
   O(n) total over the manifest's lifetime — round 3 rewrote the whole
@@ -55,6 +55,8 @@ import os
 import re
 import time
 from collections import deque
+
+from ..operators.publish import write_json
 
 
 class Manifest:
@@ -203,16 +205,14 @@ class Manifest:
 
     def commit(self, entry: dict) -> dict:
         """Atomically append one entry: O(entry) — a single segment file
-        renamed into place (the reference's .part/os.replace pattern)."""
+        renamed into place (:func:`write_json`)."""
         if self.is_applied(entry["batch_id"]):
             return entry  # already committed → no-op (exactly-once)
         entry = {**entry, "committed_at": time.time(), "seq": self._count}
         os.makedirs(self.segs_dir, exist_ok=True)
-        name = f"seg-{entry['seq']:010d}.json"
-        tmp = os.path.join(self.segs_dir, name + ".part")
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(entry, f)
-        os.replace(tmp, os.path.join(self.segs_dir, name))
+        write_json(
+            os.path.join(self.segs_dir, f"seg-{entry['seq']:010d}.json"), entry
+        )
         self._track(entry)
         if len(self._segment_files()) >= self.compact_segments:
             self._fold_segments()

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import CdcEngine
+from ..operators import publish
 from ..schema import CHANGELOG_SCHEMA, CODE_KEY
 
 
@@ -194,16 +195,11 @@ def change_feed_stream(
     """
     import os
 
+    # the ``batch=*`` glob below would match a torn legacy visible
+    # ``batch=<id>.staging``; drop such leftovers before the tail starts
+    publish.recover_root(changes_dir)
     if schema is None:
-        dirs = (
-            [
-                os.path.join(changes_dir, d)
-                for d in sorted(os.listdir(changes_dir))
-                if d.startswith("batch=") and not d.endswith(".staging")
-            ]
-            if os.path.isdir(changes_dir)
-            else []
-        )
+        dirs = list(publish.published(changes_dir, "batch").values())
         if not dirs:
             raise ValueError(
                 f"no published change-feed batches under {changes_dir}; "

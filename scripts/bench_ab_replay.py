@@ -45,7 +45,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 def replay_r1_probe(eng, log, batch_size: int, lsn_col: str = "lsn"):
     """Round-1 replay shape: raw-key probe, driver-side collect."""
-    from rfb_cnpj_etl_spark.operators.merge import key_bucket
+    from rfb_cnpj_etl_spark.operators.store import key_bucket
 
     watermark = eng.manifest.high_watermark()
     pending = log.filter(F.col(lsn_col) > watermark)

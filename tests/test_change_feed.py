@@ -197,14 +197,25 @@ class TestChangeFeedExactlyOnce:
             os.makedirs(d)
             with open(os.path.join(d, "part-0.parquet"), "w") as f:
                 f.write("torn write")
-        # consumers: batch listing, streaming schema inference, pruning
+        # consumers: batch listing, pruning, the streaming tail
         assert feed_tuples(eng.change_feed()) == [
             ("r1", "a", "insert", 1, None)
         ]
+        assert eng._prune_change_feed(retention=5) == 0
         from rfb_cnpj_etl_spark.streaming.pipeline import change_feed_stream
 
-        assert change_feed_stream(spark, eng.changes_dir) is not None
-        assert eng._prune_change_feed(retention=5) == 0
+        q = (
+            change_feed_stream(spark, eng.changes_dir, as_changelog=False)
+            .writeStream.format("memory")
+            .queryName("torn_feed_tail")
+            .option("checkpointLocation", str(tmp_path / "tail_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        assert feed_tuples(spark.table("torn_feed_tail")) == [
+            ("r1", "a", "insert", 1, None)
+        ]
 
     def test_wrong_touched_set_unpublishes_its_feed(self, spark, tmp_path):
         """The touched-set guard fires AFTER the feed publish: the feed
@@ -228,6 +239,42 @@ class TestChangeFeedExactlyOnce:
         m = t.merge(batch, changes_out=out)  # correct re-drive
         assert m["change_rows"] == 32
         assert spark.read.parquet(out).count() == 32
+
+    def test_feed_left_by_crash_before_mismatch_raise_is_recomputed(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A crash between the feed publish and the touched-set raise
+        leaves the poisoned feed published: the merge with the wrong
+        set never got to unpublish it. The re-drive with the right set
+        must recompute it, not reuse it."""
+        state = str(tmp_path / "state")
+        out = str(tmp_path / "changes/batch=b2")
+        t = StateTable(spark, state, ["repo", "path"], buckets=8)
+        t.merge(log_df(spark, [row("r", f"p{i}", "v1", i) for i in range(32)]))
+        batch = log_df(
+            spark, [row("r", f"p{i}", "v2", 100 + i) for i in range(32)]
+        )
+        real = t.touched_buckets(batch)
+
+        class Crash(BaseException):
+            pass
+
+        def crash(*_args, **_kwargs):
+            raise Crash
+
+        monkeypatch.setattr(StateTable, "_merge_cow", crash)
+        monkeypatch.setattr(StateTable, "_merge_mor", crash)
+        with pytest.raises(Crash):
+            t.merge(batch, touched=real[:1], changes_out=out)
+        assert os.path.isdir(out)  # the poisoned feed survived
+        monkeypatch.undo()
+
+        m = t.merge(batch, touched=real, changes_out=out)
+        assert "change_feed_reused" not in m
+        assert m["change_rows"] == 32
+        assert feed_tuples(spark.read.parquet(out)) == sorted(
+            ("r", f"p{i}", "update", 100 + i, i) for i in range(32)
+        )
 
     def test_torn_staging_is_recomputed(self, spark, tmp_path):
         state = str(tmp_path / "state")

@@ -176,12 +176,13 @@ class TestEngineReplay:
         assert eng.verify_against(expected_final_state(log))["ok"]
 
     def test_hot_key_skew_replay(self, spark, tmp_path):
-        # SURVEY §5.6: one hot repo = 50% of events; salted path on
+        # SURVEY §5.6: one hot repo = 50% of events; the hash-agg LWW
+        # collapses the hot key map-side
         state, man = self._paths(tmp_path)
         log = synthesize_changelog(
             spark, 4000, n_repos=8, n_paths=30, hot_repo_fraction=0.5
         ).cache()
-        eng = CdcEngine(spark, state, man, salt_buckets=8)
+        eng = CdcEngine(spark, state, man)
         eng.replay(log, batch_size=2000)
         assert eng.verify_against(expected_final_state(log))["ok"]
         assert eng.state.audit_key_uniqueness() == 0
