@@ -7,11 +7,15 @@ One call = one resumable CDC replay::
     engine.replay(changelog_df, batch_size=100_000)
 
 Per micro-batch: filter the log to the LSN window → normalize (vectorized
-cleaners) → LWW dedup → bucket-pruned MERGE →
-atomically commit a manifest entry carrying lsn range, per-bucket row
-counts (per-partition lineage + metrics, the north_rule requirement) and
-schema version. Restart resumes after ``manifest.high_watermark()``;
-re-delivered batches are no-ops.
+cleaners) → ONE LWW dedup into the batch winners → optional change feed
+(one classification of the winners against the pre-image) →
+bucket-pruned MERGE of the winners → optional index update from the
+same winners → atomically commit a manifest entry carrying lsn range,
+per-bucket row counts (per-partition lineage + metrics, the north_rule
+requirement) and schema version. The winners are O(batch); when two or
+more of the feed, the MERGE and the index read them they are persisted
+for the window and released when it commits or fails. Restart resumes
+after ``manifest.high_watermark()``; re-delivered batches are no-ops.
 """
 
 from __future__ import annotations
@@ -26,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators import publish
-from .operators.merge import StateTable
+from .operators.merge import StateTable, shared
 from .operators.store import key_bucket, parquet_footer_rows
 from .plans.checkpoint import Manifest
 from .schema import CHANGELOG_SCHEMA, CODE_KEY, OP_DELETE, SchemaRegistry
@@ -227,34 +231,37 @@ class CdcEngine:
             added = self.registry.evolve(merged_schema)
         if self.normalize is not None:
             batch = self.normalize(batch)
-        metrics = self.state.merge(
-            batch,
-            touched=touched,
-            mode=self.merge_mode,
-            batch_rows=batch_rows,
-            changes_out=(
-                os.path.join(self.changes_dir, f"batch={batch_id}")
-                if self.changes_dir
-                else None
-            ),
-        )
-        entry = {
-            "batch_id": batch_id,
-            "lsn_lo": int(lsn_lo),
-            "lsn_hi": int(lsn_hi),
-            "schema_version": self.registry.version,
-            "added_columns": [f.name for f in added],
-            "columns": batch.columns,
-            **metrics,
-        }
-        if minhash_index is not None:
-            entry.update(
-                self._update_index(
-                    minhash_index, batch, batch_id, index_threshold,
-                    index_max_fanout, batch_rows,
-                )
+        readers = 1 + bool(self.changes_dir) + (minhash_index is not None)
+        with shared(self.state.batch_winners(batch), readers) as winners:
+            metrics = self.state.merge(
+                batch,
+                touched=touched,
+                mode=self.merge_mode,
+                batch_rows=batch_rows,
+                changes_out=(
+                    os.path.join(self.changes_dir, f"batch={batch_id}")
+                    if self.changes_dir
+                    else None
+                ),
+                winners=winners,
             )
-        return self.manifest.commit(entry)
+            entry = {
+                "batch_id": batch_id,
+                "lsn_lo": int(lsn_lo),
+                "lsn_hi": int(lsn_hi),
+                "schema_version": self.registry.version,
+                "added_columns": [f.name for f in added],
+                "columns": batch.columns,
+                **metrics,
+            }
+            if minhash_index is not None:
+                entry.update(
+                    self._update_index(
+                        minhash_index, winners, batch_id, index_threshold,
+                        index_max_fanout, batch_rows,
+                    )
+                )
+            return self.manifest.commit(entry)
 
     #: unit separator — joins the MERGE key columns into the index's
     #: single doc id (no printable-text collisions).
@@ -263,30 +270,27 @@ class CdcEngine:
     def _update_index(
         self,
         index,
-        normalized_batch: DataFrame,
+        winners: DataFrame,
         batch_id: str,
         threshold: float,
         max_fanout: int | None = None,
         batch_rows: int | None = None,
     ) -> dict:
-        """Fold one (already normalized) micro-batch into the MinHash
-        index and surface the near-dup pairs that become detectable with
-        it. The batch's LWW winners are recomputed from the batch alone
-        (deterministic — NOT from merged state, so a crash-replay feeds
-        the index identical docs); upsert winners become index docs,
+        """Fold one micro-batch's LWW winners (the same
+        :meth:`StateTable.batch_winners` frame the MERGE applied) into
+        the MinHash index and surface the near-dup pairs that become
+        detectable with it. The winners are a pure function of the
+        normalized batch — NOT of merged state — so a crash-replay feeds
+        the index identical docs; upsert winners become index docs,
         delete winners drop their signatures/postings. Pairs land in
         ``{index.path}/pairs/batch=<id>`` (overwritten on re-apply:
         idempotent), and the manifest entry carries their count."""
-        from .operators.dedup import last_writer_wins_agg
-
-        winners = last_writer_wins_agg(normalized_batch, self.state.keys)
         doc_id = F.concat_ws(self._ID_SEP, *self.state.keys).alias("doc_id")
-        upserts = winners.filter(F.col("op") != OP_DELETE).select(
+        is_del = F.col(self.state.op_col) == OP_DELETE
+        upserts = winners.filter(~is_del).select(
             doc_id, F.col(self.state.content_col).alias("text")
         )
-        deletes = winners.filter(F.col("op") == OP_DELETE).select(
-            doc_id
-        )
+        deletes = winners.filter(is_del).select(doc_id)
         pairs_path = f"{index.path}/pairs/batch={batch_id}"
         metrics, _pairs = index.ingest(
             upserts,

@@ -985,7 +985,7 @@ class MinhashIndex:
                     n = int(obs.get["n"])
                 except Exception:  # noqa: BLE001
                     # AQE empty-relation propagation can eliminate the
-                    # CollectMetrics node (StateTable._obs_counts has
+                    # CollectMetrics node (StateTable._staged_counts has
                     # the same fallback); footer-only count of what was
                     # just written — no data scan (the pairs output is a
                     # flat parquet dir, not bucket-partitioned).

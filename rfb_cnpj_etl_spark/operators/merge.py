@@ -32,6 +32,8 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +47,30 @@ from .store import (
     key_bucket,
     parquet_footer_rows,
 )
+
+
+@contextmanager
+def shared(df: DataFrame, readers: int) -> Iterator[DataFrame]:
+    """``df`` for ``readers`` consumers: persisted while two or more
+    read it, so the first computes it once, and released on exit,
+    commit or raise."""
+    if readers < 2:
+        yield df
+        return
+    # read when the cache is defined: only with it on does AQE size the
+    # cached partitions (else one per shuffle partition: a task for each
+    # reader and a file for each write)
+    conf, key = df.sparkSession.conf, "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    prev = conf.get(key)
+    conf.set(key, "true")
+    try:
+        df = df.persist()
+    finally:
+        conf.set(key, prev)
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 class TouchedSetMismatchError(RuntimeError):
@@ -186,9 +212,31 @@ class StateTable(BucketedParquetStore):
             for r in batch.select(bucket_col.alias("bucket")).distinct().collect()
         )
 
+    def batch_winners(
+        self, batch: DataFrame, lsn_col: str | None = None, op_col: str | None = None
+    ) -> DataFrame:
+        """The batch's LWW winners (:func:`last_writer_wins_agg`): one
+        row per key, tombstones included, with ``bucket`` and
+        ``content_sha256`` (NULL on a tombstone). O(batch) and a pure
+        function of the batch, so a crash-replay recomputes identical
+        rows; the feed, the MERGE and the engine's index all read it."""
+        lsn_col = lsn_col or self.lsn_col
+        op_col = op_col or self.op_col
+        winners = last_writer_wins_agg(batch, self.keys, lsn_col, op_col)
+        if "bucket" not in winners.columns:
+            winners = winners.withColumn(
+                "bucket", key_bucket(self.keys, self.buckets)
+            )
+        sha = F.sha2(F.col(self.content_col).cast("string"), 256)
+        if "content_sha256" in winners.columns:
+            sha = F.coalesce(F.col("content_sha256"), sha)
+        return winners.withColumn(
+            "content_sha256", F.when(F.col(op_col) != OP_DELETE, sha)
+        )
+
     #: above this many touched buckets, per-bucket observe() metrics
-    #: (one conditional sum per bucket) get bulky — fall back to a
-    #: footer-only count job (parquet aggregate pushdown).
+    #: (one conditional sum per bucket) get bulky — fall back to the
+    #: staged files' parquet footers.
     OBSERVE_METRICS_MAX_BUCKETS = 256
 
     def merge(
@@ -200,6 +248,8 @@ class StateTable(BucketedParquetStore):
         mode: str = "auto",
         batch_rows: int | None = None,
         changes_out: str | None = None,
+        *,
+        winners: DataFrame | None = None,
     ) -> dict:
         """Apply a changelog micro-batch. Returns manifest metrics:
         ``{"touched_buckets": [...], "bucket_rows": {b: n}, "rows": N,
@@ -212,9 +262,10 @@ class StateTable(BucketedParquetStore):
               WHEN MATCHED                   THEN UPDATE SET *
               WHEN NOT MATCHED AND op<>'delete' THEN INSERT *
 
-        LWW-by-LSN is associative, so state ∪ batch needs only ONE
-        keyed dedup (the hash-agg LWW collapses hot keys map-side —
-        SURVEY P7's skew answer is free here). ``touched`` can be
+        The batch is deduplicated ONCE (:meth:`batch_winners`); the
+        feed, the MOR append and the COW fold of state ∪ winners (LWW is
+        associative) all read those winners. ``winners`` passes a
+        caller-owned :meth:`batch_winners` frame. ``touched`` can
         precomputed for all batches in a single upfront pass
         (CdcEngine.replay does), stored sha256 is reused so only new
         winners hash, and the per-bucket manifest metrics ride the
@@ -247,38 +298,39 @@ class StateTable(BucketedParquetStore):
             raise ValueError(f"unknown merge mode {mode!r}")
         lsn_col = lsn_col or self.lsn_col
         op_col = op_col or self.op_col
-        bucket_col = key_bucket(self.keys, self.buckets)
         if touched is None:
             touched = self.touched_buckets(batch)
         if not touched:
             return {"touched_buckets": [], "bucket_rows": {}, "rows": 0}
 
-        incoming = batch
-        if "bucket" not in incoming.columns:
-            incoming = incoming.withColumn("bucket", bucket_col)
-        feed_metrics: dict = {}
-        if changes_out is not None:
-            # before-image diff MUST run before any state mutation below
-            feed_metrics = self._emit_changes(
-                incoming, lsn_col, op_col, touched, changes_out
-            )
-        try:
-            if self._resolve_mode(mode, batch_rows, touched) == "mor":
-                res = self._merge_mor(incoming, lsn_col, op_col, touched)
-            else:
-                res = self._merge_cow(incoming, lsn_col, op_col, touched)
-        except TouchedSetMismatchError:
-            # the feed just published above was diffed against a
-            # pre-image read from the SAME wrong touched set (keys in
-            # unprobed buckets misclassify as inserts). The state is
-            # guaranteed unchanged at this raise, so unpublish it —
-            # otherwise the re-driven batch would reuse the poisoned
-            # feed via the exactly-once reuse check.
-            if changes_out is not None and not feed_metrics.get(
-                "change_feed_reused"
-            ):
-                shutil.rmtree(changes_out, ignore_errors=True)
-            raise
+        own = winners is None
+        if own:
+            winners = self.batch_winners(batch, lsn_col, op_col)
+        readers = 2 if own and changes_out is not None else 1
+        with shared(winners, readers) as winners:
+            feed_metrics: dict = {}
+            if changes_out is not None:
+                # before-image diff MUST run before any state mutation below
+                feed_metrics = self._emit_changes(
+                    winners, lsn_col, op_col, touched, changes_out
+                )
+            try:
+                if self._resolve_mode(mode, batch_rows, touched) == "mor":
+                    res = self._merge_mor(winners, op_col, touched)
+                else:
+                    res = self._merge_cow(winners, lsn_col, op_col, touched)
+            except TouchedSetMismatchError:
+                # the feed just published above was diffed against a
+                # pre-image read from the SAME wrong touched set (keys in
+                # unprobed buckets misclassify as inserts). The state is
+                # guaranteed unchanged at this raise, so unpublish it —
+                # otherwise the re-driven batch would reuse the poisoned
+                # feed via the exactly-once reuse check.
+                if changes_out is not None and not feed_metrics.get(
+                    "change_feed_reused"
+                ):
+                    shutil.rmtree(changes_out, ignore_errors=True)
+                raise
         res.update(feed_metrics)
         return res
 
@@ -313,8 +365,21 @@ class StateTable(BucketedParquetStore):
     #: (underscore prefix → ignored by parquet readers).
     FEED_META = "_feed_meta.json"
 
+    def _touched_scans(
+        self, touched: list[int]
+    ) -> tuple[DataFrame | None, DataFrame | None]:
+        """Raw (base, delta) scans of the touched buckets (None where
+        empty). Each read infers its schema in a Spark job, so the feed
+        reads each side once for both the pre-image and the preimages."""
+        base = self._read_base_buckets(touched) if self.exists() else None
+        delta_ids = [b for b in self.delta_bucket_ids() if b in set(touched)]
+        return base, self._read_delta(delta_ids) if delta_ids else None
+
     def _pre_image(
-        self, touched: list[int], lsn_col: str
+        self,
+        touched: list[int],
+        lsn_col: str,
+        scans: tuple[DataFrame | None, DataFrame | None] | None = None,
     ) -> DataFrame | None:
         """Pruned ``(keys, lsn)`` view of the CURRENT surviving rows in
         the touched buckets — the before-image the change feed diffs
@@ -331,29 +396,16 @@ class StateTable(BucketedParquetStore):
         The scan is the intrinsic price of eager CDF classification —
         the same price Delta's CDF pays on MERGE."""
         cols = [*self.keys, lsn_col]
-        base = self._read_base_buckets(touched) if self.exists() else None
+        base, delta = scans or self._touched_scans(touched)
         if base is not None:
             base = base.select(*cols)
-        delta_ids = [b for b in self.delta_bucket_ids() if b in set(touched)]
-        if delta_ids:
-            delta = self._read_delta(delta_ids).select(*cols, self.op_col)
-            if base is not None:
-                merged = base.withColumn(
-                    self.op_col, F.lit(OP_UPSERT)
-                ).unionByName(delta)
-            else:
-                merged = delta
-            folded = last_writer_wins_agg(
-                merged, self.keys, lsn_col, self.op_col
-            )
-            return folded.filter(F.col(self.op_col) != OP_DELETE).drop(
-                self.op_col
-            )
+        if delta is not None:
+            return self._fold_delta(base, delta.select(*cols, self.op_col))
         return base
 
     def _emit_changes(
         self,
-        incoming: DataFrame,
+        winners: DataFrame,
         lsn_col: str,
         op_col: str,
         touched: list[int],
@@ -386,9 +438,9 @@ class StateTable(BucketedParquetStore):
             from pyspark.sql import Observation
 
             obs = Observation()
-            feed = self._changes(incoming, lsn_col, op_col, touched)
-            feed = feed.observe(obs, F.count(F.lit(1)).alias("rows"))
-            feed.write.mode("overwrite").parquet(staging)
+            with self._changes(winners, lsn_col, op_col, touched) as feed:
+                feed = feed.observe(obs, F.count(F.lit(1)).alias("rows"))
+                feed.write.mode("overwrite").parquet(staging)
             try:
                 rows = int(obs.get["rows"])
             except Exception:  # noqa: BLE001 — AQE may prune the metrics node
@@ -404,25 +456,27 @@ class StateTable(BucketedParquetStore):
             return {"change_rows": res.get("rows"), "change_feed_reused": True}
         return {"change_rows": res["rows"]}
 
+    @contextmanager
     def _changes(
         self,
-        incoming: DataFrame,
+        winners: DataFrame,
         lsn_col: str,
         op_col: str,
         touched: list[int],
-    ) -> DataFrame:
+    ) -> Iterator[DataFrame]:
         """This batch's net row-level changes against the current state
         of the ``touched`` buckets (the feed :meth:`_emit_changes`
-        publishes).
+        publishes), valid inside the ``with`` block.
 
-        Classification per batch LWW winner joined to the pre-image:
-        no before-row → ``insert`` (delete-on-absent emits nothing);
-        before-row outranked (lsn, delete-priority) → ``update`` /
-        ``delete``; a stale winner the state outranks emits nothing.
+        ONE classification, winners ⟕ pre-image: no before-row →
+        ``insert`` (delete-on-absent emits nothing); before-row
+        outranked (lsn, delete-priority) → ``update`` / ``delete``; a
+        stale winner the state outranks emits nothing. Its rows are the
+        feed rows and, with preimages on, also name the replaced rows.
         """
-        winners = last_writer_wins_agg(incoming, self.keys, lsn_col, op_col)
         prev_col = f"prev_{lsn_col}"
-        pre = self._pre_image(touched, lsn_col)
+        scans = self._touched_scans(touched)
+        pre = self._pre_image(touched, lsn_col, scans)
         if pre is None:
             joined = winners.withColumn(
                 prev_col, F.lit(None).cast(dict(winners.dtypes)[lsn_col])
@@ -445,12 +499,16 @@ class StateTable(BucketedParquetStore):
             for c in winners.columns
             if c not in (*self.keys, op_col, "bucket", "content_sha256")
         ]
-        feed = (
+        classified = (
             joined.withColumn("change_type", change_type)
             .filter(F.col("change_type").isNotNull())
             .select(*self.keys, "change_type", *data_cols, prev_col)
         )
-        if self.feed_preimages and pre is not None:
+        preimages = self.feed_preimages and pre is not None
+        with shared(classified, 2 if preimages else 1) as classified:
+            if not preimages:
+                yield classified
+                return
             # Delta-CDF-style preimages: for every update/delete also
             # publish the row being REPLACED (its own lsn, prev NULL) as
             # change_type update_preimage / delete_preimage. An
@@ -460,31 +518,23 @@ class StateTable(BucketedParquetStore):
             # or, on the lsn-tie delete, an outranked — lsn than the
             # row that replaced it), but state_as_of / the streaming
             # source still filter them explicitly. Price: the old rows
-            # come from a full-column fold of the touched buckets
-            # (read_buckets), not the keys+lsn-pruned _pre_image scan —
-            # exactly the cost Delta CDF pays on MERGE, and why the
-            # flag defaults off.
-            replaced = (
-                joined.withColumn("change_type", change_type)
-                .filter(F.col("change_type").isin("update", "delete"))
-                .select(*self.keys, "change_type")
-            )
-            # (key, old_lsn) of every replaced row, from the NARROW fold
-            # already computed for classification — O(batch) rows out
-            old_ids = pre.join(replaced, self.keys, "inner")
+            # come from a full-column scan of the touched buckets, not
+            # the keys+lsn-pruned _pre_image scan — exactly the cost
+            # Delta CDF pays on MERGE, and why the flag defaults off.
+
+            # (key, old_lsn) of every replaced row: O(batch), straight
+            # from the classification, no second pre-image pass
+            old_ids = classified.filter(
+                F.col("change_type").isin("update", "delete")
+            ).select(*self.keys, prev.alias(lsn_col), "change_type")
             # fetch the full old rows by IDENTITY join (key + lsn picks
             # exactly the surviving version) against the raw base +
-            # delta scan — a codegen hash join with the O(batch) side
-            # broadcast, NOT a full-width LWW aggregate (max_by's struct
-            # payload carries strings → SortAggregate; measured 4.6×
-            # churn-replay cost before this rewrite, scripts/
-            # bench_ab_ivm.py methodology)
-            old = self._read_base_buckets(touched) if self.exists() else None
-            delta_ids = [
-                b for b in self.delta_bucket_ids() if b in set(touched)
-            ]
-            if delta_ids:
-                dl = self._read_delta(delta_ids)
+            # delta scan — a codegen hash join, NOT a full-width LWW
+            # aggregate (max_by's struct payload carries strings →
+            # SortAggregate; measured 4.6× churn-replay cost before this
+            # rewrite, scripts/bench_ab_ivm.py methodology)
+            old, dl = scans
+            if dl is not None:
                 dl = dl.filter(F.col(self.op_col) != OP_DELETE).drop(
                     self.op_col
                 )
@@ -511,23 +561,23 @@ class StateTable(BucketedParquetStore):
                 for c in old.columns
                 if c not in skip and c not in data_cols
             ]
+            # no broadcast hint: old_ids is O(replaced-in-batch), and a
+            # huge update batch must be allowed to shuffle instead
+            pre_rows = old.join(old_ids, [*self.keys, lsn_col], "inner")
+            if dl is not None:
+                # a crash-window delta re-append (or a COW that crashed
+                # before dropping the deltas it folded) can hold the
+                # same (key, lsn) row twice — identical rows, keep one
+                pre_rows = pre_rows.dropDuplicates(self.keys)
             pre_rows = (
-                # no broadcast hint: old_ids is O(replaced-in-batch) —
-                # AQE broadcasts it at churn sizes, and a huge update
-                # batch must be allowed to shuffle instead
-                old.join(old_ids, [*self.keys, lsn_col], "inner")
-                # a crash-window delta re-append can hold the same
-                # (key, lsn) row twice — identical rows, keep one
-                .dropDuplicates(self.keys)
-                .withColumn(
+                pre_rows.withColumn(
                     "change_type",
                     F.concat(F.col("change_type"), F.lit("_preimage")),
                 )
                 .withColumn(prev_col, F.lit(None).cast(wtypes[lsn_col]))
                 .select(*self.keys, "change_type", *pre_data_cols, prev_col)
             )
-            feed = feed.unionByName(pre_rows, allowMissingColumns=True)
-        return feed
+            yield classified.unionByName(pre_rows, allowMissingColumns=True)
 
     def _observe_bucket_counts(self, df: DataFrame, touched: list[int]):
         """Attach per-bucket row counters to ride the write job (V4
@@ -548,38 +598,29 @@ class StateTable(BucketedParquetStore):
         return df, obs
 
     @staticmethod
-    def _obs_counts(obs) -> dict[int, int] | None:
-        """Observed per-bucket counts, or None when AQE empty-relation
+    def _staged_counts(obs, staging: str, staged: list[int]) -> dict[int, int]:
+        """Per-bucket rows of a staged write: observed inside the write
+        job, or — past the bulky-metrics bound, or when AQE empty-relation
         propagation eliminated the CollectMetrics node (e.g. every key
-        deleted) — callers fall back to a footer-only count."""
-        if obs is None:
-            return None
-        try:
-            return {int(k[1:]): int(v) for k, v in obs.get.items() if v and v > 0}
-        except Exception:  # noqa: BLE001
-            return None
+        deleted) — read from the staged files' parquet footers (no Spark
+        job, and no recompute of the frame that was written)."""
+        if obs is not None:
+            try:
+                return {
+                    int(k[1:]): int(v) for k, v in obs.get.items() if v and v > 0
+                }
+            except Exception:  # noqa: BLE001
+                pass
+        return {b: parquet_footer_rows(f"{staging}/bucket={b}") for b in staged}
 
-    def _merge_mor(
-        self, incoming: DataFrame, lsn_col: str, op_col: str, touched: list[int]
-    ) -> dict:
-        """Append the batch's LWW winners — delete tombstones included —
-        as per-bucket delta files: write I/O is O(batch), never
-        O(touched corpus). Winners are deterministic from the batch, so
-        a crash-replay appends identical rows that the read-time fold
-        collapses (idempotent without a manifest-side guard)."""
-        winners = last_writer_wins_agg(incoming, self.keys, lsn_col, op_col)
-        sha = F.sha2(F.col(self.content_col).cast("string"), 256)
-        if "content_sha256" in winners.columns:
-            sha = F.coalesce(F.col("content_sha256"), sha)
-        winners = winners.withColumn(
-            "content_sha256",
-            F.when(F.col(op_col) != OP_DELETE, sha),  # tombstones: NULL
-        )
-        winners, obs = self._observe_bucket_counts(winners, touched)
-        staging = f"{self.path}.delta_staging"
-        staged = self.stage_write(
-            winners.repartition(len(touched), "bucket"), staging
-        )
+    @staticmethod
+    def _check_staged(staging: str, staged: list[int], touched: list[int]) -> None:
+        """Fail-loud invariant: every bucket dir the write produced must
+        be in ``touched``. A violation means the bucket probe and merge()
+        saw different keys (e.g. a normalization applied after the
+        probe) — publishing would silently lose the unexpected buckets'
+        rows AND the state scan missed those buckets. Raising here,
+        before any swap or append, leaves the state table untouched."""
         unexpected = sorted(set(staged) - set(touched))
         if unexpected:
             shutil.rmtree(staging, ignore_errors=True)
@@ -589,18 +630,24 @@ class StateTable(BucketedParquetStore):
                 "bucket probe must run on keys normalized identically to "
                 "the merged batch (state table left unchanged)"
             )
+
+    def _merge_mor(
+        self, winners: DataFrame, op_col: str, touched: list[int]
+    ) -> dict:
+        """Append the batch's LWW winners — delete tombstones included —
+        as per-bucket delta files: write I/O is O(batch), never
+        O(touched corpus). Winners are deterministic from the batch, so
+        a crash-replay appends identical rows that the read-time fold
+        collapses (idempotent without a manifest-side guard)."""
+        winners, obs = self._observe_bucket_counts(winners, touched)
+        staging = f"{self.path}.delta_staging"
+        staged = self.stage_write(
+            winners.repartition(len(touched), "bucket"), staging
+        )
+        self._check_staged(staging, staged, touched)
         bytes_written = dir_bytes(staging)
+        counts = self._staged_counts(obs, staging, staged)
         files = self.append_delta(staging, staged)
-        counts = self._obs_counts(obs)
-        if counts is None:
-            # rare fallback (see _obs_counts): recompute the tiny winner
-            # counts — deterministic, and only the counts job, not the data.
-            counts = {
-                int(r["bucket"]): int(r["n"])
-                for r in winners.groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
         for b, n in counts.items():
             self._row_est[b] = self._row_est.get(b, 0) + n
         self._write_meta()
@@ -615,32 +662,20 @@ class StateTable(BucketedParquetStore):
         }
 
     def _merge_cow(
-        self, incoming: DataFrame, lsn_col: str, op_col: str, touched: list[int]
+        self, winners: DataFrame, lsn_col: str, op_col: str, touched: list[int]
     ) -> dict:
+        final = winners
         if self.exists():
-            # state keeps its stored content_sha256; the batch side gets
-            # NULL (allowMissingColumns) and hashes post-dedup.
+            # LWW is associative: state ∪ winners folds to the rows
+            # state ∪ batch would; state rows keep their stored digest
             current = self.read_buckets(touched).withColumn(op_col, F.lit(OP_UPSERT))
-            merged = current.unionByName(incoming, allowMissingColumns=True)
-        else:
-            merged = incoming.withColumn(
-                "content_sha256", F.lit(None).cast("string")
+            final = last_writer_wins_agg(
+                current.unionByName(winners, allowMissingColumns=True),
+                self.keys,
+                lsn_col,
+                op_col,
             )
-        # Hash-aggregate LWW (max_by): no sort, map-side partial agg —
-        # which is also the hot-key skew answer (a hot key collapses to
-        # one row per map task before the shuffle).
-        final = last_writer_wins_agg(merged, self.keys, lsn_col, op_col)
-        final = (
-            final.filter(F.col(op_col) != OP_DELETE)
-            .drop(op_col)
-            .withColumn(
-                "content_sha256",
-                F.coalesce(
-                    F.col("content_sha256"),
-                    F.sha2(F.col(self.content_col).cast("string"), 256),
-                ),
-            )
-        )
+        final = final.filter(F.col(op_col) != OP_DELETE).drop(op_col)
 
         # Per-bucket row metrics observed inside the write job — no
         # follow-up count job (V4 progress metering without extra scans).
@@ -658,61 +693,21 @@ class StateTable(BucketedParquetStore):
         staged = self.stage_write(
             final.repartition(len(touched), "bucket"), staging
         )
-
-        # Fail-loud invariant: every bucket dir the write produced must be
-        # in `touched`. A violation means the bucket probe and merge() saw
-        # different keys (e.g. a normalization applied after the probe) —
-        # swapping would silently lose the unexpected buckets' rows AND
-        # the state scan above missed those buckets. Raising here, before
-        # any swap, leaves the state table untouched.
-        unexpected = sorted(set(staged) - set(touched))
-        if unexpected:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise TouchedSetMismatchError(
-                f"merge produced rows in buckets {unexpected} outside the "
-                f"precomputed touched set {sorted(touched)}; the touched-"
-                "bucket probe must run on keys normalized identically to "
-                "the merged batch (state table left unchanged)"
-            )
+        self._check_staged(staging, staged, touched)
 
         bytes_written = dir_bytes(staging)
-        counts = self._obs_counts(obs)
-        if counts is not None:
-            # refresh the row estimates BEFORE the commit writes the
-            # layout marker, so the marker carries them for free
-            for b in touched:
-                if counts.get(b, 0) > 0:
-                    self._row_est[b] = counts[b]
-                else:
-                    self._row_est.pop(b, None)
+        counts = self._staged_counts(obs, staging, staged)
+        # refresh the row estimates BEFORE the commit writes the layout
+        # marker, so the marker carries them for free
+        for b in touched:
+            if counts.get(b, 0) > 0:
+                self._row_est[b] = counts[b]
+            else:
+                self._row_est.pop(b, None)
         self.commit_staged(staging, touched, staged=staged)
         # a COW rewrite of a bucket folds its deltas into the new base —
         # drop them (crash before this: stale deltas are LWW no-ops)
         self.clear_delta_buckets(touched)
-
-        if counts is None:
-            # AQE-eliminated metrics node (see _obs_counts): footer-only
-            # count job over the rewritten buckets (aggregate pushdown).
-            remaining = [
-                b for b in touched if os.path.isdir(f"{self.path}/bucket={b}")
-            ]
-            counts = (
-                {
-                    int(r["bucket"]): int(r["rows"])
-                    for r in self.read_buckets(remaining)
-                    .groupBy("bucket")
-                    .agg(F.count("*").alias("rows"))
-                    .collect()
-                }
-                if remaining
-                else {}
-            )
-            for b in touched:
-                if counts.get(b, 0) > 0:
-                    self._row_est[b] = counts[b]
-                else:
-                    self._row_est.pop(b, None)
-            self._write_meta()
         return {
             "touched_buckets": touched,
             "bucket_rows": counts,

@@ -438,3 +438,210 @@ class TestEngineChangeFeed:
         )
         with pytest.raises(ValueError, match="changes_dir"):
             eng.change_feed()
+
+
+def _parquet_scans(df):
+    """Parquet scans in ``df``'s physical plan, as (root paths, read
+    columns) pairs: ``(own, computed)`` where ``own`` holds the scans the
+    frame runs itself and ``computed`` adds those inside each distinct
+    persisted frame it reads, counted once (a cache is computed once).
+    Read when captured: a released cache no longer substitutes."""
+    jvm = df.sparkSession._jvm
+    seen: set[int] = set()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def walk(node, into_caches):
+        cls = node.getClass().getSimpleName()
+        if cls == "FileSourceScanExec":
+            paths = [p.toString() for p in seq(node.relation().location().rootPaths())]
+            return [(paths, list(node.requiredSchema().fieldNames()))]
+        out = []
+        if cls == "InMemoryTableScanExec":
+            builder = node.relation().cacheBuilder()
+            key = jvm.System.identityHashCode(builder)
+            if into_caches and key not in seen:
+                seen.add(key)
+                out += walk(builder.cachedPlan(), True)
+            return out
+        if cls == "AdaptiveSparkPlanExec":
+            out += walk(node.inputPlan(), into_caches)
+        for child in seq(node.children()):
+            out += walk(child, into_caches)
+        return out
+
+    plan = df._jdf.queryExecution().sparkPlan()
+    return walk(plan, False), walk(plan, True)
+
+
+class TestOneLwwPassPerWindow:
+    """The window's LWW winners and the feed's classification are each
+    computed once and shared: by the feed, the MERGE and the index."""
+
+    def _engine(self, spark, tmp_path, **kw):
+        return CdcEngine(
+            spark,
+            str(tmp_path / "state"),
+            str(tmp_path / "m.jsonl"),
+            buckets=4,
+            normalize=None,
+            changes_dir=str(tmp_path / "changes"),
+            feed_preimages=True,
+            **kw,
+        )
+
+    def test_feed_merge_and_index_read_one_set_of_winners(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from rfb_cnpj_etl_spark.gen import synthesize_changelog
+        from rfb_cnpj_etl_spark.operators.dedup import MinhashIndex
+
+        log_path = str(tmp_path / "changelog")
+        synthesize_changelog(
+            spark, 600, n_repos=5, n_paths=40, delete_ratio=0.2, seed=7
+        ).write.parquet(log_path)
+        log = spark.read.parquet(log_path)
+        eng = self._engine(spark, tmp_path)
+        idx = MinhashIndex(
+            spark, str(tmp_path / "idx"), buckets=4,
+            k=2, num_hashes=16, bands=4, hash_family="xxhash64",
+        )
+        eng.replay(log.filter("lsn < 500"), batch_size=500, minhash_index=idx)
+        eng.merge_mode = "mor"
+
+        frames: dict[str, list] = {"feed": [], "stage_write": [], "index": []}
+        write_parquet = DataFrameWriter.parquet
+        stage_write = StateTable.stage_write
+        ingest = MinhashIndex.ingest
+
+        def spy_write(writer, path, *a, **kw):
+            if str(path).startswith(eng.changes_dir):
+                frames["feed"].append(_parquet_scans(writer._df))
+            return write_parquet(writer, path, *a, **kw)
+
+        def spy_stage(store, df, staging):
+            frames["stage_write"].append(_parquet_scans(df))
+            return stage_write(store, df, staging)
+
+        def spy_ingest(index, docs, *a, deleted_ids=None, **kw):
+            frames["index"] += [_parquet_scans(docs), _parquet_scans(deleted_ids)]
+            return ingest(index, docs, *a, deleted_ids=deleted_ids, **kw)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", spy_write)
+        monkeypatch.setattr(StateTable, "stage_write", spy_stage)
+        monkeypatch.setattr(MinhashIndex, "ingest", spy_ingest)
+        (entry,) = eng.replay(log, batch_size=500, minhash_index=idx)
+        monkeypatch.undo()
+
+        assert entry["mode"] == "mor" and entry["change_rows"] > 0
+        assert [len(v) for v in frames.values()] == [1, 1, 2]
+        for name, captured in frames.items():
+            for own, _computed in captured:
+                assert not [
+                    s for s in own if any(log_path in p for p in s[0])
+                ], f"{name} rescans the changelog: {own}"
+        (_own, computed), = frames["feed"]
+        folds = [
+            s
+            for s in computed
+            if all("/state/bucket=" in p for p in s[0])
+            and s[1] == ["repo", "path", "lsn"]
+        ]
+        assert len(folds) == 1, computed
+
+    def test_feed_equals_oracle_state_diff_per_window(self, spark, tmp_path):
+        """COW first window, MOR after, hot keys, deletes and an
+        add-column evolution: each window's feed, preimages included,
+        is exactly the row diff of the oracle states at the previous and
+        the current lsn_hi."""
+        from rfb_cnpj_etl_spark.gen import expected_final_state, synthesize_changelog
+
+        log = synthesize_changelog(
+            spark, 900, n_repos=4, n_paths=30, delete_ratio=0.2,
+            hot_repo_fraction=0.3, evolve_at=450, seed=11,
+        ).cache()
+        eng = self._engine(spark, tmp_path)
+        entries = eng.replay(log.filter("lsn < 300").drop("branch"), batch_size=300)
+        eng.merge_mode = "mor"
+        entries += eng.replay(log, batch_size=150)
+        assert [e["mode"] for e in entries] == ["cow"] + ["mor"] * 4
+
+        def state_at(hi):
+            if hi is None:
+                return {}
+            return {
+                (r["repo"], r["path"]): (r["lsn"], r["content"], r["branch"])
+                for r in expected_final_state(log.filter(F.col("lsn") <= hi)).collect()
+            }
+
+        events = sorted(log.collect(), key=lambda r: r["lsn"])
+        prev_hi = None
+        for e in entries:
+            prev, cur = state_at(prev_hi), state_at(e["lsn_hi"])
+            last = {
+                (r["repo"], r["path"]): (r["lsn"], r["content"], r["branch"])
+                for r in events
+                if (prev_hi is None or r["lsn"] > prev_hi) and r["lsn"] <= e["lsn_hi"]
+            }
+            expected = set()
+            for key in prev.keys() | cur.keys():
+                if key not in prev:
+                    expected.add((*key, "insert", *cur[key], None))
+                    continue
+                (old_lsn, *old_row) = prev[key]
+                if key in cur and cur[key][0] == old_lsn:
+                    continue
+                kind, new = ("update", cur[key]) if key in cur else ("delete", last[key])
+                expected.add((*key, kind, *new, old_lsn))
+                expected.add((*key, f"{kind}_preimage", old_lsn, *old_row, None))
+            feed = spark.read.parquet(
+                os.path.join(eng.changes_dir, f"batch={e['batch_id']}")
+            ).collect()
+            got = {
+                (
+                    r["repo"], r["path"], r["change_type"], r["lsn"],
+                    r["content"], r.asDict().get("branch"), r["prev_lsn"],
+                )
+                for r in feed
+            }
+            assert len(feed) == len(got) == e["change_rows"]
+            assert got == expected, e["batch_id"]
+            prev_hi = e["lsn_hi"]
+        log.unpersist()
+
+    def test_persisted_frames_are_released(self, spark, tmp_path, monkeypatch):
+        from rfb_cnpj_etl_spark.gen import synthesize_changelog
+        from rfb_cnpj_etl_spark.operators.merge import TouchedSetMismatchError
+
+        def persisted():
+            return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+        before = persisted()
+        held = []
+        stage_write = StateTable.stage_write
+
+        def spy_stage(store, df, staging):
+            held.append(persisted() - before)
+            return stage_write(store, df, staging)
+
+        monkeypatch.setattr(StateTable, "stage_write", spy_stage)
+        eng = self._engine(spark, tmp_path)
+        log = synthesize_changelog(spark, 500, n_repos=4, n_paths=30, seed=3)
+        eng.replay(log.filter("lsn < 100"), batch_size=100)
+        eng.merge_mode = "mor"
+        assert len(eng.replay(log, batch_size=100)) == 4
+        # one window's winners at a time, held through the merge
+        assert held == [1] * 5
+        assert persisted() == before
+
+        # a merge that raises releases its frames too
+        t = StateTable(spark, str(tmp_path / "state2"), ["repo", "path"], buckets=8)
+        batch = log_df(spark, [row("r", f"p{i}", "v", i) for i in range(32)])
+        real = t.touched_buckets(batch)
+        wrong = [b for b in range(8) if b not in real] or [real[0]]
+        with pytest.raises(TouchedSetMismatchError):
+            t.merge(batch, touched=wrong[:1], changes_out=str(tmp_path / "c2/batch=b1"))
+        assert persisted() == before
