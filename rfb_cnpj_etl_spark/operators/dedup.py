@@ -24,7 +24,12 @@ from pyspark.sql import functions as F
 
 from ..schema import OP_DELETE, OP_UPSERT
 from . import publish
-from .store import BucketedParquetStore, dir_bytes, parquet_footer_rows
+from .store import (
+    BucketedParquetStore,
+    TouchedSetMismatchError,
+    dir_bytes,
+    parquet_footer_rows,
+)
 
 # ---------------------------------------------------------------------------
 # CDC dedup
@@ -499,8 +504,8 @@ def simhash_bits(hash_family: str) -> int:
 class _LwwIndexStore(BucketedParquetStore):
     """Bucketed parquet store whose merge-on-read fold is LWW by
     ``fold_keys`` over a per-ingest sequence column with delete
-    tombstones — the index-store twin of ``StateTable``'s delta fold
-    (operators/merge.py)."""
+    tombstones (the fold, estimates, mode decision and guard are
+    :class:`BucketedParquetStore`'s). Adds the sequence allocator."""
 
     #: delta-vintage sequence, persisted in base rows too so a stale
     #: (crash-window) delta can never outrank a base row that already
@@ -513,27 +518,15 @@ class _LwwIndexStore(BucketedParquetStore):
         self, spark, path, buckets, bucket_keys, fold_keys,
         commit_protocol: str = "rename",
     ):
-        self.fold_keys = fold_keys
-        self._row_est: dict[int, int] = {}
-        self._next_seq = 0
         super().__init__(
             spark, path, buckets, bucket_keys=bucket_keys,
             prefer_marker=True, commit_protocol=commit_protocol,
+            fold=(fold_keys, self.SEQ_COL, self.OP_COL),
         )
-        self._load_lww_meta()
-
-    # -- meta: row estimates + seq counter ride the layout marker ------
-
-    def _load_lww_meta(self) -> None:
-        raw = self._read_marker()
-        self._row_est = {
-            int(k): int(v) for k, v in (raw.get("row_est") or {}).items()
-        }
-        self._next_seq = int(raw.get("next_seq", 0))
+        self._next_seq = int(self._read_marker().get("next_seq", 0))
 
     def _meta_payload(self) -> dict:
         p = super()._meta_payload()
-        p["row_est"] = {str(b): n for b, n in self._row_est.items()}
         # seq lives in the BASE marker, not the delta marker: the delta
         # root is dropped on rebucket/compact and the counter must stay
         # monotonic across those (a reset would let old base rows
@@ -564,65 +557,8 @@ class _LwwIndexStore(BucketedParquetStore):
             ),
         )
 
-    def rebucket(self, new_buckets: int) -> dict:
-        """Generic layout migration plus row-estimate reseed: the
-        estimates are keyed by bucket id, which a rebucket invalidates
-        (StateTable.rebucket does the same). Without the reseed the
-        auto COW/MOR ingest decision would sum stale buckets' counts."""
-        res = super().rebucket(new_buckets)
-        # a bucket absent from the rewrite's counts is KNOWN-empty
-        # after a full-table rewrite — record the 0 (a missing entry
-        # reads as "untracked" and forces the conservative COW path)
-        counts = {int(b): int(n) for b, n in res["bucket_rows"].items()}
-        self._row_est = {b: counts.get(b, 0) for b in range(new_buckets)}
-        self._write_meta()
-        return res
-
-    def compact(
-        self,
-        target_files_per_bucket: int = 1,
-        split_col=None,
-        bucket_ids: list[int] | None = None,
-        sort_within_buckets: list[str] | None = None,
-    ) -> dict:
-        """Compaction plus row-estimate reseed (StateTable.compact's
-        twin). MOR appends only ever GROW the estimates (delete
-        tombstones count as +rows); after delete-heavy churn the fold
-        shrinks the base, so without the reseed the auto COW/MOR
-        decision keeps comparing batches against inflated totals."""
-        res = super().compact(
-            target_files_per_bucket,
-            split_col=split_col,
-            bucket_ids=bucket_ids,
-            sort_within_buckets=sort_within_buckets,
-        )
-        if res["compacted_buckets"]:
-            import os as _os
-
-            for b in res["bucket_ids"]:
-                d = f"{self.path}/bucket={b}"
-                self._row_est[b] = (
-                    parquet_footer_rows(d) if _os.path.isdir(d) else 0
-                )
-            self._write_meta()
-        return res
-
-    # -- merge-on-read fold --------------------------------------------
-
-    def _fold_delta(self, base, delta):
-        if base is not None:
-            merged = (
-                self.with_seq(base)
-                .withColumn(self.OP_COL, F.lit(OP_UPSERT))
-                .unionByName(delta, allowMissingColumns=True)
-            )
-        else:
-            merged = delta
-        folded = last_writer_wins_agg(
-            merged, self.fold_keys, self.SEQ_COL, self.OP_COL
-        )
-        # seq stays in the rows (see SEQ_COL note); only op drops
-        return folded.filter(F.col(self.OP_COL) != OP_DELETE).drop(self.OP_COL)
+    def _base_rows(self, base: DataFrame) -> DataFrame:
+        return self.with_seq(base)
 
 
 class MinhashIndex:
@@ -830,14 +766,6 @@ class MinhashIndex:
 
     # -- write path ------------------------------------------------------
 
-    #: auto ingest mode appends deltas iff the batch's changed ids are
-    #: ≤ ratio × (estimated rows in the touched sig buckets) — the same
-    #: knob as StateTable.MOR_ROW_RATIO.
-    MOR_ROW_RATIO = 0.25
-    #: a bucket already holding this many delta files forces a folding
-    #: COW ingest (bounds what every read must merge).
-    DELTA_FILES_CAP = 32
-
     def ingest(
         self,
         docs: DataFrame,
@@ -872,9 +800,13 @@ class MinhashIndex:
           steady-state small-churn path: a COW batch of uniformly
           spread ids over any B touches every bucket and rewrites the
           whole index to apply a sliver of it.
-        * ``"auto"`` — MOR iff the batch is small relative to the
-          touched sig buckets' row estimates and no bucket has hit the
-          delta-file cap.
+        * ``"auto"`` — the store's one decision
+          (:meth:`BucketedParquetStore._choose_mode`) on the sig store:
+          MOR iff the batch is small relative to the touched sig
+          buckets' row estimates and no touched bucket has hit the
+          delta-file cap. The index also checks its posting store's
+          touched buckets against the cap, and without ``batch_rows``
+          counts the changed ids (one Spark job).
 
         MOR crash ordering: the posting delta is appended BEFORE the
         signature delta. Vacated-key tombstones are derived from the
@@ -954,9 +886,14 @@ class MinhashIndex:
             self._post_bucket(),
         )
 
-        if self._resolve_ingest_mode(
-            mode, changed, touched_sig, touched_post, batch_rows
-        ) == "mor":
+        chosen = self.sig_store._choose_mode(
+            mode, touched_sig, changed.count if batch_rows is None else batch_rows
+        )
+        if mode == "auto" and chosen == "mor" and self.post_store._capped(
+            touched_post
+        ):
+            chosen = "cow"
+        if chosen == "mor":
             metrics = self._ingest_mor(
                 new_sigs, deleted, touched_sig, touched_post,
                 old_banded, new_banded,
@@ -985,7 +922,7 @@ class MinhashIndex:
                     n = int(obs.get["n"])
                 except Exception:  # noqa: BLE001
                     # AQE empty-relation propagation can eliminate the
-                    # CollectMetrics node (StateTable._staged_counts has
+                    # CollectMetrics node (BucketedParquetStore._stage has
                     # the same fallback); footer-only count of what was
                     # just written — no data scan (the pairs output is a
                     # flat parquet dir, not bucket-partitioned).
@@ -1004,56 +941,6 @@ class MinhashIndex:
         # long replay doesn't keep one stale snapshot per index forever
         shutil.rmtree(snap, ignore_errors=True)
         return metrics, pairs
-
-    def _resolve_ingest_mode(
-        self,
-        mode: str,
-        changed: DataFrame,
-        touched_sig: list[int],
-        touched_post: list[int],
-        batch_rows: int | None = None,
-    ) -> str:
-        """COW vs MOR for one index batch (StateTable._resolve_mode's
-        twin). Auto = MOR iff the sig store exists, every touched
-        bucket has a row estimate, the batch is small relative to them,
-        and no TOUCHED bucket of either store has hit the delta-file
-        cap — touched-only exactly like StateTable._resolve_mode: a
-        capped bucket this batch never touches cannot degrade this
-        batch's reads, and the forced COW would not clear it anyway
-        (COW rewrites only touched buckets), so a global check would
-        disable MOR permanently after any one bucket ever capped.
-        ``batch_rows`` (any upper bound on the changed-id count — the
-        engine forwards its replay probe's free per-window row count)
-        skips the count job this decision otherwise runs per batch."""
-        if mode == "cow" or not self.sig_store.exists():
-            return "cow"
-        if mode == "mor":
-            return "mor"
-        if not touched_sig:
-            return "cow"
-        est = [self.sig_store._row_est.get(b) for b in touched_sig]
-        if any(e is None for e in est):
-            return "cow"  # untracked layout (legacy store) → populate via COW
-        total = sum(est)
-        n = batch_rows if batch_rows is not None else changed.count()
-        if total == 0 or n > self.MOR_ROW_RATIO * total:
-            return "cow"
-        sig_d = self.sig_store.delta_file_counts()
-        if any(sig_d.get(b, 0) >= self.DELTA_FILES_CAP for b in touched_sig):
-            return "cow"
-        post_d = self.post_store.delta_file_counts()
-        if any(post_d.get(b, 0) >= self.DELTA_FILES_CAP for b in touched_post):
-            return "cow"
-        return "mor"
-
-    @staticmethod
-    def _staged_rows(staging: str) -> dict[int, int]:
-        """Row counts per staged bucket, footer-only (pyarrow metadata
-        — no Spark job); feeds the sig store's row estimates."""
-        return {
-            int(b): parquet_footer_rows(d)
-            for b, d in publish.published(staging, "bucket").items()
-        }
 
     def _ingest_cow(
         self,
@@ -1089,13 +976,9 @@ class MinhashIndex:
         else:
             merged_sig = new_with_bucket
         sig_staging = f"{self.sig_store.path}.staging"
-        staged_sig = self.sig_store.stage_write(merged_sig, sig_staging)
-        if set(staged_sig) - set(touched_sig):
-            shutil.rmtree(sig_staging, ignore_errors=True)
-            raise RuntimeError(
-                f"sig staging produced buckets {sorted(set(staged_sig) - set(touched_sig))} "
-                f"outside the changed-id bucket set {touched_sig}"
-            )
+        staged_sig, sig_rows = self.sig_store._stage(
+            merged_sig, sig_staging, touched_sig
+        )
 
         # ---- stage the posting store ((band,bkey)-bucket pruned) -------
         post_bucket = self._post_bucket()
@@ -1112,15 +995,13 @@ class MinhashIndex:
         else:
             merged_post = new_post
         post_staging = f"{self.post_store.path}.staging"
-        staged_post = self.post_store.stage_write(merged_post, post_staging)
-        if set(staged_post) - set(touched_post):
-            shutil.rmtree(sig_staging, ignore_errors=True)
-            shutil.rmtree(post_staging, ignore_errors=True)
-            raise RuntimeError(
-                f"posting staging produced buckets "
-                f"{sorted(set(staged_post) - set(touched_post))} outside "
-                f"the touched set {touched_post}"
+        try:
+            staged_post, post_rows = self.post_store._stage(
+                merged_post, post_staging, touched_post
             )
+        except TouchedSetMismatchError:
+            shutil.rmtree(sig_staging, ignore_errors=True)
+            raise
 
         metrics = {
             "mode": "cow",
@@ -1132,13 +1013,6 @@ class MinhashIndex:
             "sig_bytes_written": dir_bytes(sig_staging),
             "post_bytes_written": dir_bytes(post_staging),
         }
-
-        # exact row estimates for the rewritten buckets (advisory — the
-        # auto COW/MOR decision only; commit_staged persists them with
-        # the layout marker it writes anyway)
-        sig_rows = self._staged_rows(sig_staging)
-        for b in touched_sig:
-            self.sig_store._row_est[b] = sig_rows.get(b, 0)
 
         # ---- journal, then commit both stores --------------------------
         # per-store commit tokens ride the journal so a pointer-protocol
@@ -1167,17 +1041,15 @@ class MinhashIndex:
         }
         jp = self._journal_path()
         publish.write_json(jp, journal)
-        self.sig_store.commit_staged(
-            sig_staging, touched_sig, staged=staged_sig, token=sig_token
+        # each commit also clears the touched deltas the staging reads
+        # folded (a crash before that leaves already-folded rows that
+        # lose the seq-LWW to the base) — the journal redo's order
+        self.sig_store._commit_cow(
+            sig_staging, touched_sig, staged_sig, sig_rows, token=sig_token
         )
-        self.post_store.commit_staged(
-            post_staging, touched_post, staged=staged_post, token=post_token
+        self.post_store._commit_cow(
+            post_staging, touched_post, staged_post, post_rows, token=post_token
         )
-        # touched deltas were folded into the rewritten base by the
-        # staging reads; drop their files (a crash before this leaves
-        # already-folded rows that lose the seq-LWW to the base)
-        self.sig_store.clear_delta_buckets(touched_sig)
-        self.post_store.clear_delta_buckets(touched_post)
         os.remove(jp)
         return metrics
 
@@ -1198,8 +1070,6 @@ class MinhashIndex:
         (``old_banded``, read by ingest() before any write), which a
         crash-replay can only re-derive while the sig store is still
         unmodified."""
-        import shutil
-
         SEQ = _LwwIndexStore.SEQ_COL
         OP = _LwwIndexStore.OP_COL
         seq_sig = self.sig_store.allocate_seq()
@@ -1223,19 +1093,13 @@ class MinhashIndex:
             .withColumn("bucket", self._post_bucket())
         )
         post_staging = f"{self.post_store.path}.delta_staging"
-        staged_post = self.post_store.stage_write(
+        staged_post, post_rows = self.post_store._stage(
             post_delta.repartition(max(len(touched_post), 1), "bucket"),
             post_staging,
+            touched_post,
         )
-        if set(staged_post) - set(touched_post):
-            shutil.rmtree(post_staging, ignore_errors=True)
-            raise RuntimeError(
-                f"posting delta staged buckets "
-                f"{sorted(set(staged_post) - set(touched_post))} outside "
-                f"the touched set {touched_post}"
-            )
         post_bytes = dir_bytes(post_staging)
-        post_files = self.post_store.append_delta(post_staging, staged_post)
+        post_files = self.post_store._append(post_staging, staged_post, post_rows)
 
         # ---- signature delta: upserts + deleted-id tombstones ----------
         sig_delta = new_sigs.select("id", "sig").withColumn(
@@ -1250,24 +1114,13 @@ class MinhashIndex:
             SEQ, F.lit(seq_sig).cast("long")
         ).withColumn("bucket", self._sig_bucket())
         sig_staging = f"{self.sig_store.path}.delta_staging"
-        staged_sig = self.sig_store.stage_write(
+        staged_sig, sig_rows = self.sig_store._stage(
             sig_delta.repartition(max(len(touched_sig), 1), "bucket"),
             sig_staging,
+            touched_sig,
         )
-        if set(staged_sig) - set(touched_sig):
-            shutil.rmtree(sig_staging, ignore_errors=True)
-            raise RuntimeError(
-                f"sig delta staged buckets "
-                f"{sorted(set(staged_sig) - set(touched_sig))} outside "
-                f"the changed-id bucket set {touched_sig}"
-            )
-        sig_rows = self._staged_rows(sig_staging)
         sig_bytes = dir_bytes(sig_staging)
-        sig_files = self.sig_store.append_delta(sig_staging, staged_sig)
-        # appended winners as an upper-bound estimate (tombstones incl.)
-        for b, n in sig_rows.items():
-            self.sig_store._row_est[b] = self.sig_store._row_est.get(b, 0) + n
-        self.sig_store._write_meta()
+        sig_files = self.sig_store._append(sig_staging, staged_sig, sig_rows)
 
         metrics = {
             "mode": "mor",

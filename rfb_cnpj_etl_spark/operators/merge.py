@@ -43,6 +43,7 @@ from . import publish
 from .dedup import last_writer_wins_agg
 from .store import (
     BucketedParquetStore,
+    TouchedSetMismatchError,
     dir_bytes,
     key_bucket,
     parquet_footer_rows,
@@ -73,12 +74,6 @@ def shared(df: DataFrame, readers: int) -> Iterator[DataFrame]:
         df.unpersist()
 
 
-class TouchedSetMismatchError(RuntimeError):
-    """A merge wrote rows into buckets outside the precomputed touched
-    set (the probe and merge saw differently-normalized keys). Raised
-    BEFORE any state swap — the state table is guaranteed unchanged."""
-
-
 class StateTable(BucketedParquetStore):
     """A bucket-partitioned parquet table with MERGE apply.
 
@@ -104,16 +99,12 @@ class StateTable(BucketedParquetStore):
     touched-state-rows ratio (the reference's batch-ratio knob,
     ``config.py:31-34``, turned into a data-dependent decision), with a
     per-bucket delta-file cap forcing a folding COW batch before reads
-    degrade.
+    degrade. That decision, the row-estimate ledger it reads, the
+    read-time fold (LWW by ``lsn`` per key, ``op`` tombstones), the
+    touched-set guard and the commit are
+    :class:`BucketedParquetStore`'s, shared with the MinHash index's
+    stores; this class builds the rows a batch writes.
     """
-
-    #: auto mode appends a delta iff batch_rows ≤ ratio × (estimated
-    #: rows already in the touched buckets) — bigger batches amortize a
-    #: rewrite; smaller ones shouldn't pay O(touched corpus).
-    MOR_ROW_RATIO = 0.25
-    #: a touched bucket already holding this many delta files forces a
-    #: folding COW batch (bounds what every read must merge).
-    DELTA_FILES_CAP = 32
 
     def __init__(
         self,
@@ -144,40 +135,8 @@ class StateTable(BucketedParquetStore):
             buckets,
             bucket_keys=self.keys,
             commit_protocol=commit_protocol,
+            fold=(self.keys, lsn_col, op_col),
         )
-        #: estimated current rows per bucket (exact after a COW rewrite
-        #: of the bucket; += appended winners for MOR batches — an upper
-        #: bound). Drives the auto COW/MOR decision; persisted in the
-        #: layout marker. Advisory only: never used for correctness.
-        self._row_est: dict[int, int] = self._load_row_est()
-
-    def _load_row_est(self) -> dict[int, int]:
-        raw = self._read_marker().get("row_est") or {}
-        return {int(k): int(v) for k, v in raw.items()}
-
-    def _meta_payload(self) -> dict:
-        return {
-            **super()._meta_payload(),
-            "keys": self.keys,
-            "row_est": {str(b): n for b, n in self._row_est.items()},
-        }
-
-    # -- merge-on-read fold ---------------------------------------------
-
-    def _fold_delta(self, base: DataFrame | None, delta: DataFrame) -> DataFrame:
-        """Base ∪ delta → current rows: ONE hash-agg LWW by (key, lsn)
-        with delete-tombstone filtering — the exact dedup the COW merge
-        runs, applied at read time. ``allowMissingColumns`` carries
-        add-column schema evolution across base/delta vintages (older
-        rows read NULL for columns added later)."""
-        if base is not None:
-            merged = base.withColumn(
-                self.op_col, F.lit(OP_UPSERT)
-            ).unionByName(delta, allowMissingColumns=True)
-        else:
-            merged = delta
-        folded = last_writer_wins_agg(merged, self.keys, self.lsn_col, self.op_col)
-        return folded.filter(F.col(self.op_col) != OP_DELETE).drop(self.op_col)
 
     # -- write ---------------------------------------------------------
 
@@ -234,11 +193,6 @@ class StateTable(BucketedParquetStore):
             "content_sha256", F.when(F.col(op_col) != OP_DELETE, sha)
         )
 
-    #: above this many touched buckets, per-bucket observe() metrics
-    #: (one conditional sum per bucket) get bulky — fall back to the
-    #: staged files' parquet footers.
-    OBSERVE_METRICS_MAX_BUCKETS = 256
-
     def merge(
         self,
         batch: DataFrame,
@@ -273,7 +227,8 @@ class StateTable(BucketedParquetStore):
 
         ``mode``: ``"cow"`` rewrites the touched buckets (bulk path),
         ``"mor"`` appends the batch winners as delta files (small-churn
-        path, O(batch) write I/O), ``"auto"`` picks per batch —
+        path, O(batch) write I/O), ``"auto"`` picks per batch
+        (:meth:`BucketedParquetStore._choose_mode`) —
         requiring ``batch_rows`` (the replay loop gets it free from its
         upfront window probe; a standalone caller may pass
         ``batch.count()``; without it auto stays on COW). For MOR
@@ -315,7 +270,7 @@ class StateTable(BucketedParquetStore):
                     winners, lsn_col, op_col, touched, changes_out
                 )
             try:
-                if self._resolve_mode(mode, batch_rows, touched) == "mor":
+                if self._choose_mode(mode, touched, batch_rows) == "mor":
                     res = self._merge_mor(winners, op_col, touched)
                 else:
                     res = self._merge_cow(winners, lsn_col, op_col, touched)
@@ -333,30 +288,6 @@ class StateTable(BucketedParquetStore):
                 raise
         res.update(feed_metrics)
         return res
-
-    def _resolve_mode(
-        self, mode: str, batch_rows: int | None, touched: list[int]
-    ) -> str:
-        """COW vs MOR for one batch. Auto = MOR iff the store exists,
-        every touched bucket has a row estimate, the batch is small
-        relative to them (< MOR_ROW_RATIO), and no touched bucket has
-        hit the delta-file cap (then a COW batch folds it)."""
-        if mode == "cow" or not self.exists():
-            return "cow"
-        if mode == "mor":
-            return "mor"
-        if batch_rows is None:
-            return "cow"
-        est = [self._row_est.get(b) for b in touched]
-        if any(v is None for v in est):
-            return "cow"  # untracked layout (legacy store) → populate via COW
-        total = sum(est)
-        if total == 0 or batch_rows > self.MOR_ROW_RATIO * total:
-            return "cow"
-        dcounts = self.delta_file_counts()
-        if any(dcounts.get(b, 0) >= self.DELTA_FILES_CAP for b in touched):
-            return "cow"
-        return "mor"
 
     # -- CDC-out change feed ---------------------------------------------
 
@@ -579,58 +510,6 @@ class StateTable(BucketedParquetStore):
             )
             yield classified.unionByName(pre_rows, allowMissingColumns=True)
 
-    def _observe_bucket_counts(self, df: DataFrame, touched: list[int]):
-        """Attach per-bucket row counters to ride the write job (V4
-        progress metering with zero extra scans); returns (df, obs) with
-        obs None past the bulky-metrics bound."""
-        if len(touched) > self.OBSERVE_METRICS_MAX_BUCKETS:
-            return df, None
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        df = df.observe(
-            obs,
-            *[
-                F.sum(F.when(F.col("bucket") == b, 1).otherwise(0)).alias(f"b{b}")
-                for b in touched
-            ],
-        )
-        return df, obs
-
-    @staticmethod
-    def _staged_counts(obs, staging: str, staged: list[int]) -> dict[int, int]:
-        """Per-bucket rows of a staged write: observed inside the write
-        job, or — past the bulky-metrics bound, or when AQE empty-relation
-        propagation eliminated the CollectMetrics node (e.g. every key
-        deleted) — read from the staged files' parquet footers (no Spark
-        job, and no recompute of the frame that was written)."""
-        if obs is not None:
-            try:
-                return {
-                    int(k[1:]): int(v) for k, v in obs.get.items() if v and v > 0
-                }
-            except Exception:  # noqa: BLE001
-                pass
-        return {b: parquet_footer_rows(f"{staging}/bucket={b}") for b in staged}
-
-    @staticmethod
-    def _check_staged(staging: str, staged: list[int], touched: list[int]) -> None:
-        """Fail-loud invariant: every bucket dir the write produced must
-        be in ``touched``. A violation means the bucket probe and merge()
-        saw different keys (e.g. a normalization applied after the
-        probe) — publishing would silently lose the unexpected buckets'
-        rows AND the state scan missed those buckets. Raising here,
-        before any swap or append, leaves the state table untouched."""
-        unexpected = sorted(set(staged) - set(touched))
-        if unexpected:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise TouchedSetMismatchError(
-                f"merge produced rows in buckets {unexpected} outside the "
-                f"precomputed touched set {sorted(touched)}; the touched-"
-                "bucket probe must run on keys normalized identically to "
-                "the merged batch (state table left unchanged)"
-            )
-
     def _merge_mor(
         self, winners: DataFrame, op_col: str, touched: list[int]
     ) -> dict:
@@ -639,18 +518,13 @@ class StateTable(BucketedParquetStore):
         O(touched corpus). Winners are deterministic from the batch, so
         a crash-replay appends identical rows that the read-time fold
         collapses (idempotent without a manifest-side guard)."""
-        winners, obs = self._observe_bucket_counts(winners, touched)
+        winners, obs = self._observe_counts(winners, touched)
         staging = f"{self.path}.delta_staging"
-        staged = self.stage_write(
-            winners.repartition(len(touched), "bucket"), staging
+        staged, counts = self._stage(
+            winners.repartition(len(touched), "bucket"), staging, touched, obs
         )
-        self._check_staged(staging, staged, touched)
         bytes_written = dir_bytes(staging)
-        counts = self._staged_counts(obs, staging, staged)
-        files = self.append_delta(staging, staged)
-        for b, n in counts.items():
-            self._row_est[b] = self._row_est.get(b, 0) + n
-        self._write_meta()
+        files = self._append(staging, staged, counts)
         return {
             "touched_buckets": touched,
             "bucket_rows": counts,
@@ -679,7 +553,7 @@ class StateTable(BucketedParquetStore):
 
         # Per-bucket row metrics observed inside the write job — no
         # follow-up count job (V4 progress metering without extra scans).
-        final, obs = self._observe_bucket_counts(final, touched)
+        final, obs = self._observe_counts(final, touched)
 
         # stage → swap (atomic per bucket dir, commit point = manifest).
         # Repartition on the partition column first (Iceberg
@@ -690,24 +564,11 @@ class StateTable(BucketedParquetStore):
         # B−2 empty write tasks (two buckets hashing to one partition
         # still come out as one file each — partitionBy splits them).
         staging = f"{self.path}.staging"
-        staged = self.stage_write(
-            final.repartition(len(touched), "bucket"), staging
+        staged, counts = self._stage(
+            final.repartition(len(touched), "bucket"), staging, touched, obs
         )
-        self._check_staged(staging, staged, touched)
-
         bytes_written = dir_bytes(staging)
-        counts = self._staged_counts(obs, staging, staged)
-        # refresh the row estimates BEFORE the commit writes the layout
-        # marker, so the marker carries them for free
-        for b in touched:
-            if counts.get(b, 0) > 0:
-                self._row_est[b] = counts[b]
-            else:
-                self._row_est.pop(b, None)
-        self.commit_staged(staging, touched, staged=staged)
-        # a COW rewrite of a bucket folds its deltas into the new base —
-        # drop them (crash before this: stale deltas are LWW no-ops)
-        self.clear_delta_buckets(touched)
+        self._commit_cow(staging, touched, staged, counts)
         return {
             "touched_buckets": touched,
             "bucket_rows": counts,
@@ -716,68 +577,6 @@ class StateTable(BucketedParquetStore):
             "mode": "cow",
             "bytes_written": bytes_written,
         }
-
-    # -- layout evolution (reference index pass analog, S11) ------------
-
-    def rebucket(self, new_buckets: int) -> dict:
-        """B → B′ layout migration — the generic
-        :meth:`BucketedParquetStore.rebucket` protocol (``bucket_keys``
-        = the MERGE keys), which also folds any merge-on-read deltas
-        into the new base. The per-bucket counts it collects seed the
-        row estimates the auto COW/MOR decision runs on."""
-        res = super().rebucket(new_buckets)
-        # buckets absent from the rewrite's counts are KNOWN-empty after
-        # a full-table rewrite — record the 0 (a missing entry reads as
-        # "untracked" and forces the conservative COW path)
-        counts = dict(res["bucket_rows"])
-        self._row_est = {b: counts.get(b, 0) for b in range(new_buckets)}
-        self._write_meta()
-        return res
-
-    def compact(
-        self,
-        target_files_per_bucket: int = 1,
-        bucket_ids: list[int] | None = None,
-        sort_within_buckets: list[str] | None = None,
-    ) -> dict:
-        """Per-bucket small-file compaction — see the base class (which
-        also folds merge-on-read deltas into the rewritten base and,
-        with ``bucket_ids``, rewrites ONLY the offending buckets —
-        maintenance stays O(offending), never O(table)). The >1-files
-        split hash must be seeded INDEPENDENTLY of key_bucket:
-        xxhash64(keys) % files is fully determined by xxhash64(keys) %
-        buckets whenever files divides buckets."""
-        split = None
-        if target_files_per_bucket > 1:
-            split = F.pmod(
-                F.xxhash64(*[F.col(k) for k in self.keys], F.lit(0x5EED)),
-                F.lit(target_files_per_bucket),
-            )
-        res = super().compact(
-            target_files_per_bucket,
-            split_col=split,
-            bucket_ids=bucket_ids,
-            sort_within_buckets=sort_within_buckets,
-        )
-        if res["compacted_buckets"]:
-            # post-fold base is the whole truth for the rewritten
-            # buckets → exact row estimates via footer-only pyarrow
-            # counts (no Spark job). A compaction can empty a bucket
-            # outright (every key tombstoned in deltas) — record the
-            # explicit zero (an absent key means "untracked" and forces
-            # the conservative COW path, which the fold just proved
-            # unnecessary). A FULL compaction that emptied the whole
-            # table zeroes every bucket.
-            if bucket_ids is None and not self.exists():
-                self._row_est = {b: 0 for b in range(self.buckets)}
-            else:
-                for b in res["bucket_ids"]:
-                    d = f"{self.path}/bucket={b}"
-                    self._row_est[b] = (
-                        parquet_footer_rows(d) if os.path.isdir(d) else 0
-                    )
-            self._write_meta()
-        return res
 
     # -- audits (reference S10/S12 analogs) -----------------------------
 

@@ -1,5 +1,5 @@
-"""Bucket-partitioned parquet store: the engine's one layout + swap
-protocol.
+"""Bucket-partitioned parquet store: the engine's one layout, swap
+protocol and COW/MOR write path.
 
 Every persistent store in the engine — the CDC MERGE state table
 (operators/merge.py) and the incremental MinHash index's signature and
@@ -8,6 +8,13 @@ posting stores (operators/dedup.py) — shares this machinery: the
 rename-aside bucket swaps with crash recovery (the staging, swap and
 heal rules live in operators/publish.py), partition-pruned reads,
 staged writes, small-file compaction and a metadata-only health report.
+
+The merge-on-read (MOR) policy lives here once as well: the LWW fold of
+base + delta rows, the per-bucket row-estimate ledger persisted in the
+layout marker, the auto copy-on-write (COW) vs MOR decision with its
+delta-file cap, and the guard that a staged write stayed inside its
+precomputed touched buckets. A subclass says what it writes; how a
+bucket write is chosen, checked, counted and committed is the store's.
 
 **Object-store translation (the 100×-cluster commit protocol).** The
 swap protocol needs exactly three filesystem primitives: atomic rename
@@ -45,10 +52,12 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schema import OP_DELETE, OP_UPSERT
 from . import publish
 
 
@@ -59,8 +68,7 @@ def key_bucket(keys: list[str], buckets: int) -> Column:
 
 def parquet_footer_rows(path: str) -> int:
     """Total rows under ``path`` from parquet footers only (pyarrow
-    metadata — no Spark job). Subclasses reseed their per-bucket row
-    estimates from this after compaction/rebucket."""
+    metadata — no Spark job)."""
     import pyarrow.parquet as pq
 
     total = 0
@@ -71,6 +79,13 @@ def parquet_footer_rows(path: str) -> int:
                     os.path.join(root, fname)
                 ).metadata.num_rows
     return total
+
+
+class TouchedSetMismatchError(RuntimeError):
+    """A write staged rows into buckets outside its precomputed touched
+    set (the bucket probe and the write saw differently-normalized
+    keys). Raised BEFORE any swap or append — the store is guaranteed
+    unchanged."""
 
 
 def dir_bytes(path: str) -> int:
@@ -90,11 +105,38 @@ class BucketedParquetStore:
     rename-aside bucket swaps, partition-pruned reads, staged writes,
     small-file compaction and a metadata-only health report.
 
+    It also owns the one COW/MOR write path. A subclass passes its
+    ``fold`` spec ``(keys, order col, op col)`` and then only builds the
+    rows it writes; the store does the rest:
+
+    * :meth:`_choose_mode` — COW or MOR for one batch, from the row
+      estimates of the touched buckets and their delta-file counts;
+    * :meth:`_stage` — the staged write, the touched-set guard
+      (:class:`TouchedSetMismatchError`) and the per-bucket row counts;
+    * :meth:`_commit_cow` / :meth:`_append` — publish a staged rewrite
+      or append it as delta files, keeping the estimates current;
+    * :meth:`_fold_delta` — the read-time LWW fold of base + deltas.
+
     :class:`StateTable` (the CDC MERGE target) and the MinHash index's
     signature/posting stores (operators/dedup.py) all subclass this, so
-    every persistent store in the engine has ONE swap protocol and ONE
-    recovery story.
+    every persistent store in the engine has ONE swap protocol, ONE
+    recovery story and ONE write policy. Subclasses must not override
+    ``stage_write``, ``commit_staged``, ``append_delta`` or
+    ``clear_delta_buckets``: the shared path calls them through
+    ``self``, and external tracers wrap them on this class.
     """
+
+    #: auto mode appends a delta iff batch_rows ≤ ratio × (estimated
+    #: rows already in the touched buckets) — bigger batches amortize a
+    #: rewrite; smaller ones shouldn't pay O(touched corpus).
+    MOR_ROW_RATIO = 0.25
+    #: a touched bucket already holding this many delta files forces a
+    #: folding COW batch (bounds what every read must merge).
+    DELTA_FILES_CAP = 32
+    #: above this many touched buckets, per-bucket observe() metrics
+    #: (one conditional sum per bucket) get bulky — fall back to the
+    #: staged files' parquet footers.
+    OBSERVE_METRICS_MAX_BUCKETS = 256
 
     #: layout marker colocated with the data ("_"-prefixed → invisible
     #: to Spark's parquet reader, like _SUCCESS). The physical layout is
@@ -117,6 +159,7 @@ class BucketedParquetStore:
         bucket_keys: list[str] | None = None,
         prefer_marker: bool = False,
         commit_protocol: str = "rename",
+        fold: tuple[list[str], str, str] | None = None,
     ) -> None:
         if commit_protocol not in ("rename", "pointer"):
             raise ValueError(f"unknown commit_protocol {commit_protocol!r}")
@@ -124,10 +167,15 @@ class BucketedParquetStore:
         self.path = path
         self.buckets = buckets
         #: columns the bucket id is hashed from — needed to *re*-bucket
-        #: (recompute ids under a new modulus). None = rebucket disabled
-        #: for this store (subclasses with bespoke exprs override
+        #: (recompute ids under a new modulus) and to split a compacted
+        #: bucket into several files. None = both disabled for this
+        #: store (subclasses with bespoke exprs override
         #: :meth:`bucket_col` instead).
         self.bucket_keys = bucket_keys
+        #: ``(keys, order col, op col)`` of the merge-on-read fold: LWW
+        #: by ``order`` per key with ``op`` delete tombstones. None = the
+        #: store never holds deltas.
+        self.fold = fold
         # the whole-dir restore must run before the marker can be read
         # (a crashed rebucket may have left the table only in `.old`).
         # Not recover(): `{path}.staging` is commit_staged's staging,
@@ -146,6 +194,15 @@ class BucketedParquetStore:
         #: names; anything on disk it does not reference is garbage.
         self._live: dict[int, list[str]] = {
             int(b): list(fs) for b, fs in (stored.get("live") or {}).items()
+        }
+        #: estimated current rows per bucket: exact after a COW rewrite,
+        #: compaction or rebucket of the bucket; += the appended rows for
+        #: a MOR batch (an upper bound — tombstones count). Drives
+        #: :meth:`_choose_mode`; persisted in the layout marker. Advisory
+        #: only: never used for correctness. A missing bucket reads as
+        #: "untracked" and keeps auto mode on COW.
+        self._row_est: dict[int, int] = {
+            int(b): int(n) for b, n in (stored.get("row_est") or {}).items()
         }
         self._recover()
         marker = stored.get("buckets")
@@ -192,23 +249,12 @@ class BucketedParquetStore:
         payload: dict = {
             "buckets": self.buckets,
             "protocol": self.commit_protocol,
+            "row_est": {str(b): n for b, n in self._row_est.items()},
         }
         if self.commit_protocol == "pointer":
             payload["live"] = {str(b): fs for b, fs in self._live.items()}
         if self.bucket_keys is not None:
             payload["bucket_keys"] = self.bucket_keys
-        return payload
-
-    def _fresh_layout_marker(self, buckets: int) -> dict:
-        """The marker for a new layout under ``buckets``, without the
-        per-bucket row estimates: a rebucket invalidates their bucket
-        keying, and the marker staged with the new layout must not
-        carry OLD-keyed but valid-looking estimates through the crash
-        window between the directory swap and the subclass's
-        post-rebucket reseed (a reopen there should read "untracked"
-        and take the conservative COW path until reseeded)."""
-        payload = {**self._meta_payload(), "buckets": buckets}
-        payload.pop("row_est", None)
         return payload
 
     def _write_meta(self) -> None:
@@ -325,9 +371,9 @@ class BucketedParquetStore:
 
     def read(self) -> DataFrame:
         """Current table contents. With merge-on-read delta segments
-        present, the base and the deltas are folded through the
-        subclass's :meth:`_fold_delta` (a store with no fold semantics
-        never has deltas)."""
+        present, the base and the deltas are folded through
+        :meth:`_fold_delta` (a store with no fold semantics never has
+        deltas)."""
         if self.delta_bucket_ids():
             return self._fold_delta(
                 self._read_base() if self.exists() else None, self._read_delta()
@@ -391,16 +437,36 @@ class BucketedParquetStore:
         ]
         return self.spark.read.option("basePath", self.delta_root).parquet(*paths)
 
+    def _base_rows(self, base: DataFrame) -> DataFrame:
+        """Base rows as they enter the fold (the index stores give
+        legacy rows a sequence number here)."""
+        return base
+
     def _fold_delta(
         self, base: DataFrame | None, delta: DataFrame
     ) -> DataFrame:
-        """Resolve base rows against newer delta rows. Only subclasses
-        that append deltas define fold semantics (StateTable: LWW by lsn
-        with delete tombstones)."""
-        raise NotImplementedError(
-            f"store at {self.path} holds delta segments but defines no "
-            "fold semantics"
-        )
+        """Base ∪ delta → current rows: ONE hash-agg LWW per fold key by
+        the fold's order column, delete tombstones filtered — the dedup
+        a COW write runs, applied at read time. ``allowMissingColumns``
+        carries add-column schema evolution across base/delta vintages
+        (older rows read NULL for columns added later)."""
+        from .dedup import last_writer_wins_agg
+
+        if self.fold is None:
+            raise NotImplementedError(
+                f"store at {self.path} holds delta segments but defines no "
+                "fold semantics"
+            )
+        keys, order, op = self.fold
+        merged = delta
+        if base is not None:
+            merged = (
+                self._base_rows(base)
+                .withColumn(op, F.lit(OP_UPSERT))
+                .unionByName(delta, allowMissingColumns=True)
+            )
+        folded = last_writer_wins_agg(merged, keys, order, op)
+        return folded.filter(F.col(op) != OP_DELETE).drop(op)
 
     def append_delta(self, staging: str, staged: list[int]) -> int:
         """Move a staged per-bucket write into the delta root as one new
@@ -533,12 +599,138 @@ class BucketedParquetStore:
                 shutil.rmtree(dst_dir, ignore_errors=True)
         shutil.rmtree(staging, ignore_errors=True)
 
+    # -- COW/MOR write path ---------------------------------------------
+
+    def _choose_mode(
+        self,
+        mode: str,
+        touched: list[int],
+        batch_rows: int | Callable[[], int] | None,
+    ) -> str:
+        """COW vs MOR for one batch. ``"cow"``/``"mor"`` are taken as
+        given (a missing store is always COW). ``"auto"`` = MOR iff
+        every touched bucket has a row estimate, the batch is small
+        relative to them (≤ MOR_ROW_RATIO of their sum), and no TOUCHED
+        bucket has hit DELTA_FILES_CAP (then a COW batch folds it). The
+        cap check is touched-only: a capped bucket this batch never
+        touches cannot degrade its reads, and a COW would not clear it
+        (COW rewrites only touched buckets). ``batch_rows`` may be a
+        callable, run only once the estimates leave the choice open;
+        None stays on COW."""
+        if mode == "cow" or not self.exists():
+            return "cow"
+        if mode == "mor":
+            return "mor"
+        est = [self._row_est.get(b) for b in touched]
+        if not est or None in est:
+            return "cow"  # untracked layout (legacy store) → populate via COW
+        total = sum(est)
+        rows = batch_rows() if callable(batch_rows) else batch_rows
+        if rows is None or total == 0 or rows > self.MOR_ROW_RATIO * total:
+            return "cow"
+        return "cow" if self._capped(touched) else "mor"
+
+    def _capped(self, touched: list[int]) -> bool:
+        """A touched bucket holds DELTA_FILES_CAP delta files or more."""
+        counts = self.delta_file_counts()
+        return any(counts.get(b, 0) >= self.DELTA_FILES_CAP for b in touched)
+
+    def _observe_counts(self, df: DataFrame, touched: list[int]):
+        """Attach per-bucket row counters that ride the write job (no
+        extra scan); returns ``(df, obs)`` with obs None past
+        OBSERVE_METRICS_MAX_BUCKETS."""
+        if len(touched) > self.OBSERVE_METRICS_MAX_BUCKETS:
+            return df, None
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        df = df.observe(
+            obs,
+            *[
+                F.sum(F.when(F.col("bucket") == b, 1).otherwise(0)).alias(f"b{b}")
+                for b in touched
+            ],
+        )
+        return df, obs
+
+    def _stage(
+        self, df: DataFrame, staging: str, touched: list[int], obs=None
+    ) -> tuple[list[int], dict[int, int]]:
+        """:meth:`stage_write` ``df`` (carrying ``bucket``), check that
+        it stayed inside ``touched`` and count its rows per bucket:
+        from ``obs`` (:meth:`_observe_counts`) when given and intact,
+        else from the staged files' parquet footers (no Spark job, no
+        recompute — AQE empty-relation propagation can drop the
+        metrics node, e.g. when every key was deleted). Returns
+        ``(staged bucket ids, rows per bucket)``."""
+        staged = self.stage_write(df, staging)
+        self._check_staged(staging, staged, touched)
+        if obs is not None:
+            try:
+                return staged, {
+                    int(k[1:]): int(v) for k, v in obs.get.items() if v and v > 0
+                }
+            except Exception:  # noqa: BLE001
+                pass
+        return staged, {
+            b: parquet_footer_rows(f"{staging}/bucket={b}") for b in staged
+        }
+
+    def _check_staged(
+        self, staging: str, staged: list[int], touched: list[int]
+    ) -> None:
+        """Fail-loud invariant: every bucket dir the write produced must
+        be in ``touched``. A violation means the bucket probe and the
+        write saw different keys (e.g. a normalization applied after the
+        probe) — publishing would silently lose the unexpected buckets'
+        rows AND the read of current rows missed those buckets. Raising
+        here, before any swap or append, leaves the store untouched."""
+        unexpected = sorted(set(staged) - set(touched))
+        if unexpected:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise TouchedSetMismatchError(
+                f"write to {self.path} staged rows in buckets {unexpected} "
+                f"outside the precomputed touched set {sorted(touched)}; "
+                "the touched-bucket probe must run on keys normalized "
+                "identically to the written rows (store left unchanged)"
+            )
+
+    def _commit_cow(
+        self,
+        staging: str,
+        touched: list[int],
+        staged: list[int],
+        counts: dict[int, int],
+        token: str | None = None,
+    ) -> None:
+        """Publish a staged COW rewrite of ``touched``. The exact row
+        counts become the estimates before :meth:`commit_staged` writes
+        the layout marker, so the marker carries them for free; a
+        touched bucket the rewrite emptied is a known 0. The rewrite
+        folded the touched buckets' deltas — drop them (a crash before
+        this leaves already-folded rows the fold resolves as LWW
+        no-ops)."""
+        self._row_est.update((b, counts.get(b, 0)) for b in touched)
+        self.commit_staged(staging, touched, staged=staged, token=token)
+        self.clear_delta_buckets(touched)
+
+    def _append(
+        self, staging: str, staged: list[int], counts: dict[int, int]
+    ) -> int:
+        """Append a staged MOR write as delta files
+        (:meth:`append_delta`); the estimates grow by the appended rows.
+        Returns the number of files appended."""
+        files = self.append_delta(staging, staged)
+        for b, n in counts.items():
+            self._row_est[b] = self._row_est.get(b, 0) + n
+        self._write_meta()
+        return files
+
     # -- maintenance -----------------------------------------------------
 
     def compact(
         self,
         target_files_per_bucket: int = 1,
-        split_col: Column | None = None,
         bucket_ids: list[int] | None = None,
         sort_within_buckets: list[str] | None = None,
     ) -> dict:
@@ -565,14 +757,21 @@ class BucketedParquetStore:
         The sort satisfies the writer's required partition-column
         ordering (bucket is the prefix), so no extra sort is inserted.
 
-        ``split_col`` is required for >1 file per bucket (subclasses
-        supply a deterministic second partition key — see
-        StateTable.compact); repartitioning on the bucket value alone
-        maps each bucket to exactly one output file."""
+        More than one file per bucket splits each bucket by a second
+        hash of ``bucket_keys``, seeded INDEPENDENTLY of the bucket hash
+        (xxhash64(keys) % files is fully determined by xxhash64(keys) %
+        buckets whenever files divides buckets) and deterministic (a
+        random split can lose rows on task retry).
+
+        The rewritten buckets' row estimates are reseeded from the
+        staged footers: a bucket the fold emptied is a known 0, and a
+        full compaction that empties the whole store zeroes every
+        bucket."""
+        full = bucket_ids is None
         all_ids = sorted(
             set(self.base_bucket_ids()) | set(self.delta_bucket_ids())
         )
-        if bucket_ids is None:
+        if full:
             bucket_ids = all_ids
         else:
             bucket_ids = sorted(set(bucket_ids) & set(all_ids))
@@ -582,32 +781,25 @@ class BucketedParquetStore:
                 "buckets": self.buckets,
                 "bucket_ids": [],
             }
-        staging = f"{self.path}.compacting"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
         df = self.read_buckets(bucket_ids)
         if target_files_per_bucket > 1:
-            if split_col is None:
-                raise ValueError(
-                    "target_files_per_bucket > 1 needs a deterministic "
-                    "split_col (a nondeterministic split can lose rows on "
-                    "task retry)"
-                )
+            split = F.pmod(
+                F.xxhash64(*[F.col(k) for k in self.bucket_keys], F.lit(0x5EED)),
+                F.lit(target_files_per_bucket),
+            )
             df = df.repartition(
-                len(bucket_ids) * target_files_per_bucket,
-                F.col("bucket"),
-                split_col,
+                len(bucket_ids) * target_files_per_bucket, F.col("bucket"), split
             )
         else:
             df = df.repartition(len(bucket_ids), "bucket")
         if sort_within_buckets:
             df = df.sortWithinPartitions("bucket", *sort_within_buckets)
-        df.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+        staging = f"{self.path}.compacting"
+        staged, counts = self._stage(df, staging, bucket_ids)
         bytes_written = dir_bytes(staging)
-        self.commit_staged(staging, bucket_ids)
-        # deltas are folded into the rewritten base; a crash before this
-        # cleanup leaves already-folded rows the next fold LWW-no-ops.
-        self.clear_delta_buckets(bucket_ids)
+        if full and not staged:
+            self._row_est = dict.fromkeys(range(self.buckets), 0)
+        self._commit_cow(staging, bucket_ids, staged, counts)
         return {
             "compacted_buckets": len(bucket_ids),
             "buckets": self.buckets,
@@ -632,6 +824,9 @@ class BucketedParquetStore:
         dropped after the swap (the delta layout marker identifies
         crash-window leftovers as already folded).
 
+        The per-bucket row counts of the new layout become the row
+        estimates, staged in the marker that rides the swap.
+
         Returns ``{"rebucket_from", "rebucket_to", "rows",
         "bucket_rows", "buckets"}``.
         """
@@ -653,8 +848,7 @@ class BucketedParquetStore:
                 .parquet(staging)
             )
             # per-bucket counts (≤ B′ ints on the driver) — footer-only
-            # via parquet aggregate pushdown; StateTable seeds its row
-            # tracking for the merge-mode heuristic from these.
+            # via parquet aggregate pushdown
             bucket_rows.update(
                 (int(r["bucket"]), int(r["n"]))
                 for r in self.spark.read.parquet(staging)
@@ -675,11 +869,16 @@ class BucketedParquetStore:
                     )
                     for b in self._bucket_dirs(staging)
                 }
+            # exact estimates for the new layout; a bucket absent from
+            # the counts is known-empty after a full-table rewrite
+            self._row_est = {b: bucket_rows.get(b, 0) for b in range(new_buckets)}
             # The new-layout marker is staged WITH the data so it rides
             # the atomic swap: a new-layout table without its marker
             # would resolve B from a stale manifest and a later merge
             # would mix hash moduli, letting stale versions escape LWW.
-            return self._fresh_layout_marker(new_buckets)
+            # Its estimates are keyed by the new buckets, so no reopen
+            # ever reads old-keyed ones.
+            return {**self._meta_payload(), "buckets": new_buckets}
 
         # Whole-table rename-aside swap. A crash between its two renames
         # leaves the intact pre-rebucket table in {path}.old, which the

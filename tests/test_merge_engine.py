@@ -1,33 +1,25 @@
 """StateTable MERGE + CdcEngine replay: the idempotency / exactly-once /
-schema-evolution invariants (SURVEY §5 graft test plan items 3–5)."""
+schema-evolution invariants (SURVEY §5 graft test plan items 3–5), and
+the one COW/MOR write policy of BucketedParquetStore, run on both store
+kinds (the state table and the MinHash index's signature store)."""
 
 from __future__ import annotations
 
+import ast
+import json
+import os
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
+
+from conftest import BASE_TEXT, docs_df, log_df, row, state_dict
 
 from rfb_cnpj_etl_spark.engine import CdcEngine
 from rfb_cnpj_etl_spark.gen import expected_final_state, synthesize_changelog
+from rfb_cnpj_etl_spark.operators.dedup import MinhashIndex
 from rfb_cnpj_etl_spark.operators.merge import StateTable
-
-LOG_SCHEMA = (
-    "repo string, path string, commit string, lang string, content string,"
-    " lsn long, op string"
-)
-
-
-def log_df(spark, rows):
-    return spark.createDataFrame(rows, LOG_SCHEMA)
-
-
-def row(repo, path, content, lsn, op="upsert"):
-    return (repo, path, f"c{lsn}", "python", content, lsn, op)
-
-
-def state_dict(st):
-    return {
-        (r["repo"], r["path"]): (r["content"], r["lsn"])
-        for r in st.read().collect()
-    }
+from rfb_cnpj_etl_spark.operators.store import parquet_footer_rows
 
 
 class TestStateTableMerge:
@@ -218,3 +210,196 @@ class TestWindowAlignment:
         eng.replay(log, batch_size=500)
         assert eng.manifest.high_watermark() == 999
         assert eng.verify_against(expected_final_state(log))["ok"]
+
+
+# ---------------------------------------------------------------------------
+# The store's write policy, one test per rule on both store kinds
+# ---------------------------------------------------------------------------
+
+
+class _Kind:
+    """One store kind behind a common face: ``store`` (the
+    BucketedParquetStore under test), ``write(ids, op, mode)`` and
+    ``reopen()``. Keys are ``p<i>`` rows (state) or ``d<i>`` docs
+    (index), each id in its own key."""
+
+    def __init__(self, spark, path, kind, buckets):
+        self.spark, self.path, self.kind = spark, path, kind
+        self.buckets = buckets
+        self.lsn = 1000
+        self.store = self.reopen()
+
+    def reopen(self):
+        if self.kind == "state":
+            buckets = StateTable.layout_buckets(self.path) or self.buckets
+            self.table = StateTable(self.spark, self.path, buckets=buckets)
+            return self.table
+        self.index = MinhashIndex(
+            self.spark, self.path, k=2, num_hashes=16, bands=4,
+            buckets=self.buckets,
+        )
+        return self.index.sig_store
+
+    def write(self, ids, op="upsert", mode="auto", batch_rows=None) -> str:
+        """Apply one batch; returns the mode it ran in."""
+        ids = list(ids)
+        if self.kind == "state":
+            self.lsn += len(ids)
+            rows = [
+                row("r", f"p{i}", None if op == "delete" else f"v{i}",
+                    self.lsn + n, op)
+                for n, i in enumerate(ids)
+            ]
+            return self.table.merge(
+                log_df(self.spark, rows), mode=mode, batch_rows=batch_rows
+            )["mode"]
+        docs = [] if op == "delete" else [
+            (f"d{i}", BASE_TEXT + f" v{i}") for i in ids
+        ]
+        deleted = None
+        if op == "delete":
+            deleted = self.spark.createDataFrame(
+                [(f"d{i}",) for i in ids], "doc_id string"
+            )
+        m, _ = self.index.ingest(
+            docs_df(self.spark, docs), "text", "doc_id", deleted_ids=deleted,
+            compute_pairs=False, mode=mode, batch_rows=batch_rows,
+        )
+        return m["mode"]
+
+    def keys(self) -> set:
+        if self.kind == "state":
+            return {p for _r, p in state_dict(self.table)}
+        return {r["id"] for r in self.index.signatures().collect()}
+
+
+@pytest.fixture(params=["state", "index_sig"])
+def kind(request, spark, tmp_path):
+    return lambda buckets: _Kind(
+        spark, str(tmp_path / request.param), request.param, buckets
+    )
+
+
+def _est_total(store) -> int:
+    return sum(store._row_est.values())
+
+
+class TestEmptyCompact:
+    def test_compact_on_fully_tombstoned_table(self, kind):
+        """Compaction reseeds the estimates from the folded base: MOR
+        appends only ever grow them (tombstones count), so after
+        delete-heavy churn a compaction deflates them to the live rows,
+        and a fresh handle reads the same. A compaction that empties
+        the store outright (every key tombstoned) must succeed — a
+        re-read of the emptied base cannot infer a schema — and record
+        a known 0 for every bucket."""
+        k = kind(4)
+        assert k.write(range(20)) == "cow"
+        assert _est_total(k.store) == 20
+        assert k.write(range(10), op="delete", mode="mor") == "mor"
+        assert _est_total(k.store) == 30
+        k.store.compact()
+        assert _est_total(k.store) == 10
+        k.store = k.reopen()
+        assert _est_total(k.store) == 10
+
+        assert k.write(range(10, 20), op="delete", mode="mor") == "mor"
+        assert k.store.delta_bucket_ids()
+        res = k.store.compact()
+        assert res["compacted_buckets"] > 0
+        assert not k.store.exists()  # every bucket emptied out
+        assert k.store._row_est == {b: 0 for b in range(4)}
+        assert not k.store.delta_bucket_ids()
+        # the store keeps working: a fresh batch COWs in normally
+        assert k.write(["new"]) == "cow"
+        assert k.keys() == {"pnew" if k.kind == "state" else "dnew"}
+
+
+class TestRebucketMarkerFresh:
+    def test_marker_carries_new_layout_counts(self, kind):
+        """A rebucket stages the new layout's per-bucket row counts in
+        the marker that rides the directory swap, so there is no window
+        in which a reopen reads old-keyed estimates: the swapped marker
+        holds exactly the new buckets' footer counts (0 for a bucket the
+        hash left empty), a reopened store reads the same, and auto mode
+        goes on choosing MOR for small churn under the new layout."""
+        k = kind(2)
+        k.write(range(80))
+        k.write(range(5), op="delete", mode="mor")  # inflates to 85
+        k.store.rebucket(4)
+        path = k.store.path
+        with open(os.path.join(path, k.store.META_FILE)) as f:
+            meta = json.load(f)
+        want = {
+            b: parquet_footer_rows(f"{path}/bucket={b}")
+            if os.path.isdir(f"{path}/bucket={b}") else 0
+            for b in range(4)
+        }
+        assert meta["buckets"] == 4
+        assert meta["row_est"] == {str(b): n for b, n in want.items()}
+        assert sum(want.values()) == 75
+        assert k.store._row_est == want
+        k.store = k.reopen()
+        assert k.store._row_est == want
+        assert k.write([7], batch_rows=1) == "mor"
+
+
+class TestOneWritePolicy:
+    """Structure guards, no Spark: the COW/MOR policy has one home, and
+    the cdcbench tracer's per-store spans (which wrap four store methods
+    on BucketedParquetStore only) see every store's writes."""
+
+    PKG = Path(__file__).resolve().parent.parent / "rfb_cnpj_etl_spark"
+
+    def _classes(self):
+        for path in sorted(self.PKG.rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                if isinstance(node, ast.ClassDef):
+                    yield node
+
+    def test_mor_constants_defined_only_on_the_base_store(self):
+        owners = set()
+        for cls in self._classes():
+            for stmt in cls.body:
+                targets = (
+                    stmt.targets if isinstance(stmt, ast.Assign)
+                    else [stmt.target] if isinstance(stmt, ast.AnnAssign)
+                    else []
+                )
+                owners |= {
+                    (cls.name, t.id)
+                    for t in targets
+                    if isinstance(t, ast.Name)
+                    and t.id in ("MOR_ROW_RATIO", "DELTA_FILES_CAP")
+                }
+        assert owners == {
+            ("BucketedParquetStore", "MOR_ROW_RATIO"),
+            ("BucketedParquetStore", "DELTA_FILES_CAP"),
+        }
+
+    def test_no_store_subclass_overrides_a_traced_method(self):
+        from cdcbench.tracing import STORE_METHODS
+
+        classes = list(self._classes())
+        subclasses = {"BucketedParquetStore"}
+        grew = True
+        while grew:
+            before = len(subclasses)
+            subclasses |= {
+                c.name
+                for c in classes
+                if any(
+                    getattr(b, "id", getattr(b, "attr", None)) in subclasses
+                    for b in c.bases
+                )
+            }
+            grew = len(subclasses) > before
+        assert {"StateTable", "_LwwIndexStore"} <= subclasses
+        overrides = {
+            (c.name, f.name)
+            for c in classes
+            if c.name in subclasses - {"BucketedParquetStore"}
+            for f in c.body
+            if isinstance(f, ast.FunctionDef) and f.name in STORE_METHODS
+        }
+        assert overrides == set()

@@ -18,7 +18,13 @@ import random
 
 import pytest
 
+from conftest import BASE_TEXT, OTHER_TEXT, docs_df
+
 from rfb_cnpj_etl_spark.operators.dedup import MinhashIndex, minhash_lsh_pairs
+from rfb_cnpj_etl_spark.operators.store import (
+    BucketedParquetStore,
+    TouchedSetMismatchError,
+)
 
 PARAMS = dict(k=2, num_hashes=16, bands=4, hash_family="xxhash64")
 THRESHOLD = 0.4
@@ -252,3 +258,125 @@ class TestParamsMarker:
         bad = dict(PARAMS, num_hashes=32, bands=8)
         with pytest.raises(ValueError, match="not comparable"):
             MinhashIndex(spark, str(tmp_path / "idx"), buckets=16, **bad)
+
+
+class TestIndexTouchedSetGuard:
+    def test_cow_ingest_outside_touched_raises_typed(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A COW ingest whose staged sig buckets fall outside the
+        touched set (the bucket probe dropped one) raises the store's
+        typed guard before the swap journal is written: both stores
+        read exactly as before and no staging dir is left."""
+        import os
+
+        idx = MinhashIndex(spark, str(tmp_path / "idx"), buckets=8, **PARAMS)
+        idx.update(_docs(spark, _corpus_rows(60)))
+
+        def contents(store):
+            return sorted(map(tuple, store.read().collect()))
+
+        before = contents(idx.sig_store), contents(idx.post_store)
+        probe = MinhashIndex._distinct_buckets
+        calls = []
+
+        def drop_one_sig_bucket(df, bucket_col):
+            out = probe(df, bucket_col)
+            calls.append(out)
+            return out[1:] if len(calls) == 1 else out
+
+        monkeypatch.setattr(
+            MinhashIndex, "_distinct_buckets", staticmethod(drop_one_sig_bucket)
+        )
+        batch = _docs(spark, [(i, f"changed text {i} words") for i in range(20)])
+        with pytest.raises(TouchedSetMismatchError, match="outside the precomputed"):
+            idx.ingest(batch, compute_pairs=False, mode="cow")
+        assert len(calls[0]) > 1  # the batch spans the dropped bucket and more
+        assert not os.path.exists(idx._journal_path())
+        assert (contents(idx.sig_store), contents(idx.post_store)) == before
+        left = [
+            name
+            for _root, dirs, _files in os.walk(tmp_path)
+            for name in dirs
+            if name.endswith(".staging")
+        ]
+        assert left == []
+
+
+class TestIndexCapTouchedOnly:
+    def _sig_bucket_of(self, idx, doc):
+        sigs = idx._sigs_of(docs_df(idx.spark, [doc]), "text", "doc_id")
+        return idx._distinct_buckets(sigs.select("id"), idx._sig_bucket())
+
+    def _post_buckets_of(self, idx, doc):
+        nb = idx._banded(idx._sigs_of(docs_df(idx.spark, [doc]), "text", "doc_id"))
+        return set(
+            idx._distinct_buckets(nb.select("band", "bkey"), idx._post_bucket())
+        )
+
+    def test_untouched_capped_bucket_does_not_disable_mor(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """One capped bucket that later batches never touch must not
+        force them onto COW (the store's cap check is touched-only;
+        forced COW rewrites only touched buckets, so it could never
+        clear the capped one — a global check would disable MOR
+        permanently)."""
+        monkeypatch.setattr(BucketedParquetStore, "DELTA_FILES_CAP", 2)
+        idx = MinhashIndex(
+            spark, str(tmp_path / "idx"), k=2, num_hashes=16, bands=4,
+            buckets=64,
+        )
+        seed = [(f"s{i}", BASE_TEXT + f" v{i} {i * 13}") for i in range(600)]
+        idx.update(docs_df(spark, seed), "text", "doc_id")  # cow
+        hot_doc = ("hot", OTHER_TEXT + " hotdoc")
+        for j in range(2):  # cap the hot doc's buckets with MOR deltas
+            m = idx.update(
+                docs_df(spark, [("hot", OTHER_TEXT + f" hotdoc v{j}")]),
+                "text", "doc_id", mode="mor",
+            )
+            assert m["mode"] == "mor"
+        hot_sig = set(self._sig_bucket_of(idx, hot_doc))
+        capped_sig = {
+            b
+            for b, v in idx.sig_store.delta_file_counts().items()
+            if v >= BucketedParquetStore.DELTA_FILES_CAP
+        }
+        assert capped_sig  # the hot doc's sig bucket hit the cap
+        hot_post = {
+            b
+            for b, v in idx.post_store.delta_file_counts().items()
+            if v >= 1
+        }
+        # find a cold doc whose sig AND post buckets avoid the hot ones
+        # (and whose sig bucket has enough rows for the MOR ratio test)
+        cold = None
+        for i in range(40):
+            cand = (f"y{i}", BASE_TEXT + f" cold candidate {i * 31}")
+            sb = set(self._sig_bucket_of(idx, cand))
+            if sb & hot_sig:
+                continue
+            if any(idx.sig_store._row_est.get(b, 0) < 4 for b in sb):
+                continue
+            if self._post_buckets_of(idx, cand) & hot_post:
+                continue
+            cold = cand
+            break
+        assert cold is not None, "no disjoint candidate found (layout luck)"
+        m, _ = idx.ingest(
+            docs_df(spark, [cold]), "text", "doc_id", compute_pairs=False,
+            mode="auto",
+        )
+        assert m["mode"] == "mor"  # a global cap check would pick cow
+        # a batch that DOES touch the capped bucket still forces the
+        # folding COW, which clears it
+        m2, _ = idx.ingest(
+            docs_df(spark, [("hot", OTHER_TEXT + " hotdoc v9")]),
+            "text", "doc_id", compute_pairs=False, mode="auto",
+        )
+        assert m2["mode"] == "cow"
+        assert not {
+            b
+            for b, v in idx.sig_store.delta_file_counts().items()
+            if b in capped_sig and v > 0
+        }

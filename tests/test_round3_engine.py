@@ -289,12 +289,14 @@ class TestSegmentedManifest:
 
 
 class TestRebucketMarkerCrashWindow:
-    def test_marker_rides_the_swap(self, spark, tmp_path):
-        """ADVICE r2 (medium): crash AFTER the staging→live rename but
-        BEFORE the post-swap marker refresh must still leave the new
-        bucket count in the layout marker (it was staged with the data),
-        so the next engine resolves the new B instead of mixing moduli
-        via the stale manifest record."""
+    def test_marker_rides_the_swap(self, spark, tmp_path, monkeypatch):
+        """ADVICE r2 (medium): crash right AFTER the staging→live swap
+        (before anything else the rebucket or its caller does) must
+        still leave the new bucket count in the layout marker (it was
+        staged with the data), so the next engine resolves the new B
+        instead of mixing moduli via the stale manifest record."""
+        from rfb_cnpj_etl_spark.operators import publish
+
         rows = [
             ("r1", f"p{i}", f"{BASE_TEXT} {i}", i + 1, "upsert")
             for i in range(10)
@@ -303,17 +305,16 @@ class TestRebucketMarkerCrashWindow:
         eng.replay(_log(spark, rows), batch_size=100)
 
         st = eng.state
-        orig = st._write_meta
+        swap = publish.replace_dir
 
-        def crash_on_refresh(into=None, buckets=None, fresh_layout=False):
-            if into is None and buckets is None:
-                raise RuntimeError("crash before post-swap marker refresh")
-            return orig(into=into, buckets=buckets, fresh_layout=fresh_layout)
+        def crash_after_swap(target, write, meta):
+            swap(target, write, meta)
+            raise RuntimeError("crash right after the rebucket swap")
 
-        st._write_meta = crash_on_refresh
+        monkeypatch.setattr(publish, "replace_dir", crash_after_swap)
         with pytest.raises(RuntimeError):
             st.rebucket(8)
-        st._write_meta = orig
+        monkeypatch.undo()
 
         # the marker inside the swapped dir is the new layout
         assert type(st).layout_buckets(st.path) == 8

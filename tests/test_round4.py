@@ -854,33 +854,6 @@ class TestCliRound4:
         )
 
 
-class TestIndexRowEstReseed:
-    def test_rebucket_reseeds_row_estimates(self, spark, tmp_path):
-        """Row estimates are keyed by bucket id; a rebucket must reseed
-        them or the auto COW/MOR decision sums stale buckets."""
-        idx = MinhashIndex(
-            spark, str(tmp_path / "idx"), k=2, num_hashes=16, bands=4, buckets=2
-        )
-        docs = docs_df(
-            spark, [(f"d{i}", BASE_TEXT + f" v{i}") for i in range(80)]
-        )
-        idx.update(docs, "text", "doc_id")  # cow → exact est under B=2
-        before_total = sum(idx.sig_store._row_est.values())
-        idx.sig_store.rebucket(4)
-        est = idx.sig_store._row_est
-        assert set(est) == set(range(4))  # known-empty buckets recorded as 0
-        assert sum(est.values()) == before_total == 80
-        # a fresh handle reloads the reseeded estimates from the marker
-        idx2 = MinhashIndex.open(spark, str(tmp_path / "idx"))
-        assert idx2.sig_store._row_est == est
-        # and auto still selects MOR for small churn under the new layout
-        m, _ = idx2.ingest(
-            docs_df(spark, [("t", BASE_TEXT + " churn")]),
-            "text", "doc_id", compute_pairs=False,
-        )
-        assert m["mode"] == "mor"
-
-
 class TestMorFuzz:
     def test_random_splits_and_modes_converge(self, spark, tmp_path):
         """Seeded fuzz over the replay plan: random window sizes and a
@@ -1115,30 +1088,3 @@ class TestTornTailFold:
         assert m3.count() == 13
         assert m3.high_watermark() == 12
         assert {f"b{i}" for i in range(13)} <= m3.applied_batch_ids()
-
-
-class TestEmptyCompact:
-    def test_compact_on_fully_tombstoned_table(self, spark, tmp_table_dir):
-        """Review finding: compact() re-seeded row estimates by reading
-        the base AFTER the fold — which crashed ('unable to infer
-        schema') when the compaction emptied the table outright. The
-        emptied path must succeed and record known-zero estimates."""
-        st = StateTable(spark, tmp_table_dir, buckets=4)
-        st.merge(log_df(spark, seed_rows(20)))  # cow seed
-        st.merge(
-            log_df(
-                spark,
-                [row("r", f"p{i}", None, 100 + i, op="delete")
-                 for i in range(20)],
-            ),
-            mode="mor",
-        )
-        assert st.delta_bucket_ids()
-        res = st.compact()
-        assert res["compacted_buckets"] > 0
-        assert not st.exists()  # every bucket emptied out
-        assert st._row_est == {b: 0 for b in range(4)}
-        assert not st.delta_bucket_ids()
-        # the table keeps working: a fresh batch COWs in normally
-        st.merge(log_df(spark, [row("r", "new", "v", 200)]))
-        assert state_dict(st) == {("r", "new"): ("v", 200)}

@@ -5,13 +5,14 @@
   COW batch deleted);
 * selective per-bucket compaction (compact only the offending buckets —
   the last O(table) cost on the steady-state path);
-* index auto-MOR delta-cap check aligned to touched-buckets-only
-  (matching StateTable._resolve_mode);
 * within-bucket sort order for parquet min/max data skipping;
 * posting-skew surfaced by maintenance with a max_fanout recommendation;
-* rebucket staging marker carries no stale-keyed row estimates (ADVICE);
-* _LwwIndexStore.compact reseeds row estimates (ADVICE);
 * CLI posting_skew no longer silently creates an index (ADVICE).
+
+The index's touched-only delta-cap check, the rebucket marker's
+estimates and the compaction reseed are now rules of the one store
+write path; their tests live with it (tests/test_merge_engine.py,
+tests/test_minhash_index.py).
 """
 
 from __future__ import annotations
@@ -250,155 +251,6 @@ class TestSortWithinBuckets:
         assert st.read().filter(F.col("lang") == "py").count() == 800
         assert st.read().count() == 4000
         assert st.audit_key_uniqueness() == 0
-
-
-# ---------------------------------------------------------------------------
-# Index auto-MOR delta-cap check: touched-buckets-only (VERDICT item 2)
-# ---------------------------------------------------------------------------
-
-
-class TestIndexCapTouchedOnly:
-    def _sig_bucket_of(self, idx, doc):
-        sigs = idx._sigs_of(docs_df(idx.spark, [doc]), "text", "doc_id")
-        return idx._distinct_buckets(sigs.select("id"), idx._sig_bucket())
-
-    def _post_buckets_of(self, idx, doc):
-        nb = idx._banded(idx._sigs_of(docs_df(idx.spark, [doc]), "text", "doc_id"))
-        return set(
-            idx._distinct_buckets(nb.select("band", "bkey"), idx._post_bucket())
-        )
-
-    def test_untouched_capped_bucket_does_not_disable_mor(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """One capped bucket that later batches never touch must not
-        force them onto COW (StateTable checks touched-only; forced COW
-        rewrites only touched buckets, so it could never clear the
-        capped one — pre-fix the index's global check disabled MOR
-        permanently)."""
-        monkeypatch.setattr(MinhashIndex, "DELTA_FILES_CAP", 2)
-        idx = MinhashIndex(
-            spark, str(tmp_path / "idx"), k=2, num_hashes=16, bands=4,
-            buckets=64,
-        )
-        seed = [(f"s{i}", BASE_TEXT + f" v{i} {i * 13}") for i in range(600)]
-        idx.update(docs_df(spark, seed), "text", "doc_id")  # cow
-        hot_doc = ("hot", OTHER_TEXT + " hotdoc")
-        for j in range(2):  # cap the hot doc's buckets with MOR deltas
-            m = idx.update(
-                docs_df(spark, [("hot", OTHER_TEXT + f" hotdoc v{j}")]),
-                "text", "doc_id", mode="mor",
-            )
-            assert m["mode"] == "mor"
-        hot_sig = set(self._sig_bucket_of(idx, hot_doc))
-        capped_sig = {
-            b
-            for b, v in idx.sig_store.delta_file_counts().items()
-            if v >= MinhashIndex.DELTA_FILES_CAP
-        }
-        assert capped_sig  # the hot doc's sig bucket hit the cap
-        hot_post = {
-            b
-            for b, v in idx.post_store.delta_file_counts().items()
-            if v >= 1
-        }
-        # find a cold doc whose sig AND post buckets avoid the hot ones
-        # (and whose sig bucket has enough rows for the MOR ratio test)
-        cold = None
-        for i in range(40):
-            cand = (f"y{i}", BASE_TEXT + f" cold candidate {i * 31}")
-            sb = set(self._sig_bucket_of(idx, cand))
-            if sb & hot_sig:
-                continue
-            if any(idx.sig_store._row_est.get(b, 0) < 4 for b in sb):
-                continue
-            if self._post_buckets_of(idx, cand) & hot_post:
-                continue
-            cold = cand
-            break
-        assert cold is not None, "no disjoint candidate found (layout luck)"
-        m, _ = idx.ingest(
-            docs_df(spark, [cold]), "text", "doc_id", compute_pairs=False,
-            mode="auto",
-        )
-        assert m["mode"] == "mor"  # pre-fix: cow (global cap check)
-        # a batch that DOES touch the capped bucket still forces the
-        # folding COW, which clears it
-        m2, _ = idx.ingest(
-            docs_df(spark, [("hot", OTHER_TEXT + " hotdoc v9")]),
-            "text", "doc_id", compute_pairs=False, mode="auto",
-        )
-        assert m2["mode"] == "cow"
-        assert not {
-            b
-            for b, v in idx.sig_store.delta_file_counts().items()
-            if b in capped_sig and v > 0
-        }
-
-
-# ---------------------------------------------------------------------------
-# _LwwIndexStore.compact reseeds row estimates (ADVICE)
-# ---------------------------------------------------------------------------
-
-
-class TestIndexCompactReseedsEstimates:
-    def test_delete_heavy_churn_then_compact_deflates_estimates(
-        self, spark, tmp_path
-    ):
-        idx = MinhashIndex(
-            spark, str(tmp_path / "idx"), k=2, num_hashes=16, bands=4,
-            buckets=4,
-        )
-        seed = [(f"d{i}", BASE_TEXT + f" v{i}") for i in range(20)]
-        idx.update(docs_df(spark, seed), "text", "doc_id")  # cow: exact est
-        assert sum(idx.sig_store._row_est.values()) == 20
-        dels = spark.createDataFrame(
-            [(f"d{i}",) for i in range(10)], "doc_id string"
-        )
-        idx.update(docs_df(spark, []), "text", "doc_id",
-                   deleted_ids=dels, mode="mor")
-        # MOR counts tombstones as +rows: estimates inflate to 30
-        assert sum(idx.sig_store._row_est.values()) == 30
-        idx.sig_store.compact()
-        # reseeded from the folded base: the 10 live docs
-        assert sum(idx.sig_store._row_est.values()) == 10
-        # a fresh handle reads the reseeded estimates from the marker
-        idx2 = MinhashIndex.open(spark, str(tmp_path / "idx"))
-        assert sum(idx2.sig_store._row_est.values()) == 10
-
-
-# ---------------------------------------------------------------------------
-# Rebucket staging marker carries no stale-keyed estimates (ADVICE)
-# ---------------------------------------------------------------------------
-
-
-class TestRebucketMarkerFresh:
-    def test_crash_before_reseed_reads_untracked(self, spark, tmp_table_dir):
-        """A crash between the generic rebucket's directory swap and the
-        subclass's estimate reseed must reopen as 'untracked' (→
-        conservative COW), not with wrong-keyed but valid-looking
-        estimates feeding the COW/MOR decision."""
-        import json as _json
-
-        from rfb_cnpj_etl_spark.operators.store import BucketedParquetStore
-
-        st = StateTable(spark, tmp_table_dir, buckets=4)
-        st.merge(log_df(spark, seed_rows(40)))
-        assert st._row_est
-        # crash simulation: ONLY the generic layout migration runs (the
-        # StateTable reseed that normally follows never happens)
-        BucketedParquetStore.rebucket(st, 8)
-        with open(os.path.join(tmp_table_dir, StateTable.META_FILE)) as f:
-            meta = _json.load(f)
-        assert meta["buckets"] == 8
-        assert "row_est" not in meta
-        st2 = StateTable(spark, tmp_table_dir, buckets=8)
-        assert st2._row_est == {}
-        # untracked → auto mode refuses MOR until a COW repopulates
-        m = st2.merge(
-            log_df(spark, [row("r", "p0", "x", 999)]), batch_rows=1
-        )
-        assert m["mode"] == "cow"
 
 
 # ---------------------------------------------------------------------------
