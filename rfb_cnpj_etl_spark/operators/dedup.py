@@ -19,7 +19,11 @@ band-bucket equi-join).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import os
+import shutil
+import uuid
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..schema import OP_DELETE, OP_UPSERT
@@ -28,6 +32,7 @@ from .store import (
     BucketedParquetStore,
     TouchedSetMismatchError,
     dir_bytes,
+    key_bucket,
     parquet_footer_rows,
 )
 
@@ -407,29 +412,33 @@ def release_operator_caches() -> None:
             pass
 
 
+def band_key(b: int, rows: int, hash_family: str) -> Column:
+    """Band ``b`` (``rows`` lanes) of ``sig``: the joined lane string
+    for the md5 (oracle-parity) family — xxhash64 has no DuckDB twin —
+    and its xxhash64 compression for the engine family."""
+    joined = F.array_join(
+        F.transform(F.slice("sig", b * rows + 1, rows), lambda x: x.cast("string")),
+        ",",
+    )
+    return joined if hash_family == "md5" else F.xxhash64(joined)
+
+
 def band_explode(
     sigs: DataFrame, num_hashes: int, bands: int, hash_family: str
 ) -> DataFrame:
-    """(id, sig) → one (id, sig, band, bucket) row per band. The bucket
-    is the joined lane string for the md5 (oracle-parity) family —
-    xxhash64 has no DuckDB twin — and its xxhash64 compression for the
-    engine family."""
+    """(id, sig) → one (id, sig, band, bucket) row per band, the bucket
+    being :func:`band_key`."""
     r = num_hashes // bands
-
-    def band_key(b: int) -> Column:
-        joined = F.array_join(
-            F.transform(F.slice("sig", b * r + 1, r), lambda x: x.cast("string")),
-            ",",
-        )
-        return joined if hash_family == "md5" else F.xxhash64(joined)
-
     return sigs.select(
         "id",
         "sig",
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(b).alias("band"), band_key(b).alias("bucket"))
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        band_key(b, r, hash_family).alias("bucket"),
+                    )
                     for b in range(bands)
                 ]
             )
@@ -537,11 +546,8 @@ class _LwwIndexStore(BucketedParquetStore):
     def allocate_seq(self) -> int:
         """Next delta-vintage sequence (persisted before use; a crash
         after the bump burns a number, which is harmless)."""
-        import os as _os
-
         seq = self._next_seq
         self._next_seq = seq + 1
-        _os.makedirs(self.path, exist_ok=True)
         self._write_meta()
         return seq
 
@@ -627,8 +633,6 @@ class MinhashIndex:
         #: independently by maintenance and still reopen correctly.
         #: commit_protocol likewise: each store's marker records it.
         self.buckets = buckets
-        import os
-
         os.makedirs(path, exist_ok=True)
         self.sig_store = _LwwIndexStore(
             spark,
@@ -657,8 +661,6 @@ class MinhashIndex:
         index (no params marker yet). This is what the CLI uses so a
         non-default index is resumable/maintainable without replaying
         its parameters on the command line."""
-        import os
-
         stored = publish.read_json(os.path.join(path, cls.PARAMS_FILE))
         return cls(spark, path, **{**defaults, **(stored or {})})
 
@@ -670,8 +672,6 @@ class MinhashIndex:
         bands, hash_family) would silently join fresh signatures against
         incompatible stored ones — fail loudly instead (same ground-
         truth-marker pattern as the stores' bucket count)."""
-        import os
-
         params = {
             "k": self.k,
             "num_hashes": self.num_hashes,
@@ -693,8 +693,6 @@ class MinhashIndex:
     # -- crash recovery --------------------------------------------------
 
     def _journal_path(self) -> str:
-        import os
-
         return os.path.join(self.path, self.JOURNAL)
 
     def _recover_journal(self) -> None:
@@ -705,8 +703,6 @@ class MinhashIndex:
         skipped; pointer: same-token copies are idempotent and a dropped
         staging means done). Re-crashing mid-redo just redoes less next
         time."""
-        import os
-
         jp = self._journal_path()
         journal = publish.read_json(jp)
         if journal is None:
@@ -824,79 +820,52 @@ class MinhashIndex:
         rewrite, so callers may defer collection. ``metrics['pairs']``
         carries the pair count with no extra job.
         """
-        import os
-        import shutil
-
         if mode not in ("auto", "cow", "mor"):
             raise ValueError(f"unknown ingest mode {mode!r}")
 
-        # Materialize the batch signatures ONCE (tiny parquet: ~128 B
-        # per doc). Five downstream actions (two touched-bucket
-        # collects, two staging writes, the pair probe) then plan
-        # against a trivial scan instead of each re-deriving — and
-        # re-planning/codegen'ing — the wide shingle-explode +
-        # num_hashes-min-lane aggregation subtree; measured at sf0.1
-        # that re-planning dominated the whole ingest (~2× end-to-end).
-        # Deterministic from the batch → recomputed identically on a
-        # crash-replay (idempotence unchanged). No leading "_" in the
-        # name: Spark's file index hides underscore-prefixed paths,
-        # which both WARNed and risked an empty read. Removed after the
-        # pair probe (the last consumer) below.
+        # Materialize the batch signatures ONCE (:meth:`_snapshot`,
+        # which also observes the touched buckets): the old-key probe,
+        # the two staging writes and the pair probe then plan against a
+        # trivial scan instead of re-deriving the wide shingle-explode +
+        # min-lane aggregation (measured at sf0.1, re-planning it
+        # dominated the ingest, ~2× end-to-end). Deterministic from the
+        # batch, so a crash-replay recomputes it identically. No leading
+        # "_" in the name: Spark's file index hides such paths. Removed
+        # after the pair probe, its last consumer.
         snap = os.path.join(self.path, "batch-sigs.tmp")
-        self._sigs_of(docs, content_col, id_col).write.mode(
-            "overwrite"
-        ).parquet(snap)
-        new_sigs = self.spark.read.parquet(snap)
-        deleted = None
-        changed = new_sigs.select("id")
-        if deleted_ids is not None:
-            dcol = deleted_ids.columns[0]
-            deleted = deleted_ids.select(F.col(dcol).alias("id"))
-            changed = changed.unionByName(deleted).distinct()
-        touched_sig = self._distinct_buckets(changed, self._sig_bucket())
+        snapshot, touched_sig, new_post = self._snapshot(
+            docs, content_col, id_col, deleted_ids, snap
+        )
+        new_sigs = snapshot.filter(F.col("sig").isNotNull())
+        changed = snapshot.select("id")
 
         # Current stored signatures of the changed ids (pre-update
         # state, bucket-pruned) — shared by both write paths: the COW
         # path merges against them; both paths derive the changed ids'
         # OLD band keys from them (exact stale-posting removal /
-        # vacated-key tombstones). Hoisted here so ``touched_post`` is
-        # known BEFORE the COW/MOR decision — the delta-cap check must
-        # look at the posting buckets this batch actually touches.
-        if self.sig_store.exists() or self.sig_store.delta_bucket_ids():
-            try:
-                cur = self.sig_store.with_seq(
-                    self.sig_store.read_buckets(touched_sig)
-                )
-            except ValueError:
-                # every touched bucket is brand new (no base, no delta)
-                cur = None
-        else:
-            cur = None
-        old_changed = (
-            cur.join(changed, "id", "leftsemi").select("id", "sig")
-            if cur is not None
-            else new_sigs.limit(0).select("id", "sig")
-        )
-        old_banded = self._banded(old_changed)
+        # vacated-key tombstones), and their posting buckets join
+        # ``touched_post`` BEFORE the COW/MOR decision — the delta-cap
+        # check must look at the posting buckets this batch touches.
+        try:
+            cur = self.sig_store.with_seq(self.sig_store.read_buckets(touched_sig))
+        except ValueError:
+            cur = None  # no base and no touched delta: nothing stored yet
         new_banded = self._banded(new_sigs)
-        touched_post = self._distinct_buckets(
-            old_banded.select("band", "bkey").unionByName(
-                new_banded.select("band", "bkey")
-            ),
-            self._post_bucket(),
-        )
+        old_banded, touched_post = new_banded.limit(0), new_post
+        if cur is not None:
+            old_banded = self._banded(cur.join(changed, "id", "leftsemi"))
+            old_post = self._distinct_buckets(old_banded, self._post_bucket())
+            touched_post = sorted({*new_post, *old_post})
 
-        chosen = self.sig_store._choose_mode(
-            mode, touched_sig, changed.count if batch_rows is None else batch_rows
-        )
+        rows = changed.distinct().count if batch_rows is None else batch_rows
+        chosen = self.sig_store._choose_mode(mode, touched_sig, rows)
         if mode == "auto" and chosen == "mor" and self.post_store._capped(
             touched_post
         ):
             chosen = "cow"
         if chosen == "mor":
             metrics = self._ingest_mor(
-                new_sigs, deleted, touched_sig, touched_post,
-                old_banded, new_banded,
+                snapshot, touched_sig, touched_post, old_banded, new_banded
             )
         else:
             metrics = self._ingest_cow(
@@ -906,14 +875,12 @@ class MinhashIndex:
 
         pairs = None
         if compute_pairs:
-            plan = self._pairs_for(new_banded, threshold, max_fanout)
+            plan = self._pairs_for(new_banded, new_post, threshold, max_fanout)
             if pairs_out is not None:
                 # engine path: pairs land at the caller's (per-batch,
                 # immutable) destination; count observed inside the
                 # write — no second job, and the returned frame reads
                 # files no later ingest will touch.
-                from pyspark.sql import Observation
-
                 obs = Observation()
                 plan.observe(
                     obs, F.count(F.lit(1)).alias("n")
@@ -929,7 +896,7 @@ class MinhashIndex:
                     n = parquet_footer_rows(pairs_out)
                 metrics["pairs"] = n
                 metrics["pairs_path"] = pairs_out
-                pairs = self.spark.read.parquet(pairs_out)
+                pairs = self.spark.read.schema(plan.schema).parquet(pairs_out)
             else:
                 # convenience path: pin the (batch-sized, small) pair
                 # set on the driver so the returned frame stays valid
@@ -941,6 +908,51 @@ class MinhashIndex:
         # long replay doesn't keep one stale snapshot per index forever
         shutil.rmtree(snap, ignore_errors=True)
         return metrics, pairs
+
+    def _snapshot(
+        self,
+        docs: DataFrame,
+        content_col: str,
+        id_col: str,
+        deleted_ids: DataFrame | None,
+        path: str,
+    ) -> tuple[DataFrame, list[int], list[int]]:
+        """Write the batch's ``(id, sig)`` rows, deleted ids as NULL-sig
+        rows, to ``path``. Returns the snapshot (read back with the
+        schema just written) and, observed by the write as
+        ``collect_set`` metrics, the sig buckets of every changed id and
+        the posting buckets of the new band keys (collected when AQE
+        drops the metrics node, as in ``BucketedParquetStore._stage``)."""
+        sigs = self._sigs_of(docs, content_col, id_col)
+        if deleted_ids is not None:
+            no_sig = F.lit(None).cast(sigs.schema["sig"].dataType).alias("sig")
+            sigs = sigs.unionByName(
+                deleted_ids.select(F.col(deleted_ids.columns[0]).alias("id"), no_sig)
+            )
+        has_sig = F.col("sig").isNotNull()
+        r, nb = self.num_hashes // self.bands, self.post_store.buckets
+        post_buckets = [
+            key_bucket([F.lit(b), band_key(b, r, self.hash_family)], nb)
+            for b in range(self.bands)
+        ]
+        obs = Observation()
+        sigs.observe(
+            obs,
+            F.collect_set(self._sig_bucket()).alias("sig"),
+            *[
+                F.collect_set(F.when(has_sig, pb)).alias(f"post{b}")
+                for b, pb in enumerate(post_buckets)
+            ],
+        ).write.mode("overwrite").parquet(path)
+        snapshot = self.spark.read.schema(sigs.schema).parquet(path)
+        try:
+            got = obs.get
+            new_post = set().union(*(got[f"post{b}"] for b in range(self.bands)))
+            return snapshot, sorted(got["sig"]), sorted(new_post)
+        except Exception:  # noqa: BLE001 — AQE may prune the metrics node
+            banded = self._banded(snapshot.filter(has_sig))
+            sig_b = self._distinct_buckets(snapshot, self._sig_bucket())
+            return snapshot, sig_b, self._distinct_buckets(banded, self._post_bucket())
 
     def _ingest_cow(
         self,
@@ -958,9 +970,6 @@ class MinhashIndex:
         from the pre-swap state ``cur``), so no tombstones survive a
         COW bucket. Touched deltas are folded by the staging read and
         their files cleared after the swap."""
-        import os
-        import shutil
-
         SEQ = _LwwIndexStore.SEQ_COL
         seq_sig = self.sig_store.allocate_seq()
         seq_post = self.post_store.allocate_seq()
@@ -1017,10 +1026,8 @@ class MinhashIndex:
         # ---- journal, then commit both stores --------------------------
         # per-store commit tokens ride the journal so a pointer-protocol
         # redo re-copies to the SAME immutable names (idempotent)
-        import uuid as _uuid
-
-        sig_token = _uuid.uuid4().hex[:12]
-        post_token = _uuid.uuid4().hex[:12]
+        sig_token = uuid.uuid4().hex[:12]
+        post_token = uuid.uuid4().hex[:12]
         journal = {
             "stores": [
                 {
@@ -1055,17 +1062,17 @@ class MinhashIndex:
 
     def _ingest_mor(
         self,
-        new_sigs: DataFrame,
-        deleted: DataFrame | None,
+        snapshot: DataFrame,
         touched_sig: list[int],
         touched_post: list[int],
         old_banded: DataFrame,
         new_banded: DataFrame,
     ) -> dict:
         """Merge-on-read ingest: append the batch as per-bucket delta
-        files — upserts plus tombstones for deleted ids (sig store) and
-        vacated band keys (posting store) — O(batch) write I/O. Reads
-        fold base + deltas by (key, seq) LWW (_LwwIndexStore). Posting
+        files — upserts plus tombstones for deleted ids (the snapshot's
+        NULL-sig rows, sig store) and vacated band keys (posting store)
+        — O(batch) write I/O. Reads fold base + deltas by (key, seq)
+        LWW (_LwwIndexStore). Posting
         delta first: its tombstones derive from the pre-batch sig rows
         (``old_banded``, read by ingest() before any write), which a
         crash-replay can only re-derive while the sig store is still
@@ -1075,7 +1082,7 @@ class MinhashIndex:
         seq_sig = self.sig_store.allocate_seq()
         seq_post = self.post_store.allocate_seq()
 
-        sig_type = new_sigs.schema["sig"].dataType
+        sig_type = snapshot.schema["sig"].dataType
 
         # ---- posting delta: new postings + vacated-key tombstones ------
         vacated = old_banded.select("band", "bkey", "id").join(
@@ -1102,17 +1109,12 @@ class MinhashIndex:
         post_files = self.post_store._append(post_staging, staged_post, post_rows)
 
         # ---- signature delta: upserts + deleted-id tombstones ----------
-        sig_delta = new_sigs.select("id", "sig").withColumn(
-            OP, F.lit(OP_UPSERT)
+        op = F.when(F.col("sig").isNull(), F.lit(OP_DELETE)).otherwise(F.lit(OP_UPSERT))
+        sig_delta = (
+            snapshot.withColumn(OP, op)
+            .withColumn(SEQ, F.lit(seq_sig).cast("long"))
+            .withColumn("bucket", self._sig_bucket())
         )
-        if deleted is not None:
-            sig_delta = sig_delta.unionByName(
-                deleted.withColumn("sig", F.lit(None).cast(sig_type))
-                .withColumn(OP, F.lit(OP_DELETE))
-            )
-        sig_delta = sig_delta.withColumn(
-            SEQ, F.lit(seq_sig).cast("long")
-        ).withColumn("bucket", self._sig_bucket())
         sig_staging = f"{self.sig_store.path}.delta_staging"
         staged_sig, sig_rows = self.sig_store._stage(
             sig_delta.repartition(max(len(touched_sig), 1), "bucket"),
@@ -1184,11 +1186,13 @@ class MinhashIndex:
     def _pairs_for(
         self,
         new_banded: DataFrame,
+        touched: list[int],
         threshold: float,
         max_fanout: int | None = None,
     ) -> DataFrame:
         """Band-bucket join of the new side against ONLY the posting
-        partitions its keys hash to (partition-pruned index lookup).
+        partitions its keys hash to, ``touched`` (partition-pruned index
+        lookup; the caller probed them).
 
         ``max_fanout`` bounds the join blowup: posting keys whose
         stored list exceeds it are excluded from candidate generation
@@ -1197,20 +1201,13 @@ class MinhashIndex:
         OTHER, colder band keys, so recall degrades gracefully; with
         ``bands`` independent chances a pair is only lost when every
         one of its shared keys is viral. Default None = exact."""
-        if not self.post_store.exists():
-            # e.g. the very first batch held only deletes → the posting
-            # store exists as a dir but has no bucket data; a pruned
-            # read would have no schema to infer. Typed-empty result
-            # (id types follow the caller's id column).
-            return new_banded.select(
-                F.col("id").alias("id_a"),
-                F.col("id").alias("id_b"),
-                F.lit(0.0).alias("est_jaccard"),
-            ).limit(0)
-        touched = self._distinct_buckets(
-            new_banded.select("band", "bkey"), self._post_bucket()
+        # no posting data yet (e.g. a first batch of deletes only): an
+        # empty index side gives the typed-empty result
+        index_side = (
+            self.post_store.read_buckets(touched)
+            if self.post_store.exists()
+            else new_banded.limit(0)
         )
-        index_side = self.post_store.read_buckets(touched)
         if max_fanout is not None:
             # few keys breach the cap by construction → broadcast the
             # hot-key list into an anti-join; counted over the SAME
@@ -1269,7 +1266,10 @@ class MinhashIndex:
         out once (id_a < id_b). ``max_fanout`` caps hot posting lists —
         see :meth:`_pairs_for`."""
         new_banded = self._banded(self._sigs_of(new_docs, content_col, id_col))
-        return self._pairs_for(new_banded, threshold, max_fanout)
+        touched = self._distinct_buckets(
+            new_banded.select("band", "bkey"), self._post_bucket()
+        )
+        return self._pairs_for(new_banded, touched, threshold, max_fanout)
 
 
 def connected_components(

@@ -46,8 +46,9 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..plans.checkpoint import Manifest
 from . import publish
@@ -201,12 +202,18 @@ class IncrementalAggregate:
         }
 
     def read(self) -> DataFrame:
-        """The maintained aggregate: ``group_cols + n + <sums>``."""
-        if not self.exists():
+        """The maintained aggregate: ``group_cols + n + <sums>``, read
+        against the schema its meta records (a meta written before the
+        field existed infers it)."""
+        meta = self._meta()
+        if meta is None:
             raise ValueError(
                 f"aggregate at {self.path} has never been refreshed"
             )
-        return self.spark.read.parquet(self.agg_dir)
+        reader = self.spark.read
+        if "schema" in meta:
+            reader = reader.schema(T.StructType.fromJson(meta["schema"]))
+        return reader.parquet(self.agg_dir)
 
     # -- maintenance ----------------------------------------------------
 
@@ -287,8 +294,6 @@ class IncrementalAggregate:
             )
         obs = None
         if guard:
-            from pyspark.sql import Observation
-
             obs = Observation()
             kinds = ("update", "update_preimage", "delete", "delete_preimage")
             feed = feed.observe(
@@ -340,6 +345,7 @@ class IncrementalAggregate:
             return {
                 **self._merge_applied(meta, todo, fold_ids),
                 "spec": self._spec,
+                "schema": merged.schema.jsonValue(),
             }
 
         publish.replace_dir(self.agg_dir, write, self.META)
@@ -375,6 +381,7 @@ class IncrementalAggregate:
             return {
                 **self._merge_applied(None, seen, fold=seen),
                 "spec": self._spec,
+                "schema": full.schema.jsonValue(),
             }
 
         publish.replace_dir(self.agg_dir, write, self.META)

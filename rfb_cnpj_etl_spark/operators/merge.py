@@ -35,7 +35,7 @@ import shutil
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import CODE_KEY, OP_DELETE, OP_UPSERT
@@ -148,6 +148,7 @@ class StateTable(BucketedParquetStore):
         prepared = self._prepare(like.limit(0)).drop("op")
         prepared.write.mode("overwrite").partitionBy("bucket").parquet(self.path)
         self._live = {}  # empty layout: nothing committed yet
+        self._schema = None  # recorded by the first staged write
         self._write_meta()
 
     def _prepare(self, df: DataFrame) -> DataFrame:
@@ -300,8 +301,7 @@ class StateTable(BucketedParquetStore):
         self, touched: list[int]
     ) -> tuple[DataFrame | None, DataFrame | None]:
         """Raw (base, delta) scans of the touched buckets (None where
-        empty). Each read infers its schema in a Spark job, so the feed
-        reads each side once for both the pre-image and the preimages."""
+        empty), read once for both the pre-image and the preimages."""
         base = self._read_base_buckets(touched) if self.exists() else None
         delta_ids = [b for b in self.delta_bucket_ids() if b in set(touched)]
         return base, self._read_delta(delta_ids) if delta_ids else None
@@ -366,8 +366,6 @@ class StateTable(BucketedParquetStore):
         """
 
         def write(staging: str) -> dict:
-            from pyspark.sql import Observation
-
             obs = Observation()
             with self._changes(winners, lsn_col, op_col, touched) as feed:
                 feed = feed.observe(obs, F.count(F.lit(1)).alias("rows"))
@@ -472,26 +470,14 @@ class StateTable(BucketedParquetStore):
                 old = dl if old is None else old.unionByName(
                     dl, allowMissingColumns=True
                 )
-            wtypes = dict(winners.dtypes)
-            # add-column evolution: the pre-mutation state lacks columns
-            # this batch introduces — NULL-fill them (the state table's
-            # own evolution contract) so the preimage rows union cleanly
-            for c in data_cols:
-                if c not in old.columns:
-                    old = old.withColumn(c, F.lit(None).cast(wtypes[c]))
-            # ...and the REVERSE: state columns this batch omits (MERGE
-            # NULL-fills them in the winner) must still ride the
-            # preimage rows with their OLD values — dropping them would
-            # make a downstream incremental aggregate subtract 0 for a
-            # retired non-NULL contribution (silent divergence). The
-            # postimage rows carry NULL there, which is exactly the
-            # merged new row's value.
+            # The preimage rows carry every column of the OLD row, also
+            # state columns this batch omits (MERGE NULL-fills them in
+            # the winner): dropping them would make a downstream
+            # incremental aggregate subtract 0 for a retired non-NULL
+            # contribution (silent divergence). Columns this batch adds
+            # read NULL in them through the union below.
             skip = {*self.keys, op_col, "bucket", "content_sha256", prev_col}
-            pre_data_cols = data_cols + [
-                c
-                for c in old.columns
-                if c not in skip and c not in data_cols
-            ]
+            pre_data_cols = [c for c in old.columns if c not in skip]
             # no broadcast hint: old_ids is O(replaced-in-batch), and a
             # huge update batch must be allowed to shuffle instead
             pre_rows = old.join(old_ids, [*self.keys, lsn_col], "inner")
@@ -505,7 +491,7 @@ class StateTable(BucketedParquetStore):
                     "change_type",
                     F.concat(F.col("change_type"), F.lit("_preimage")),
                 )
-                .withColumn(prev_col, F.lit(None).cast(wtypes[lsn_col]))
+                .withColumn(prev_col, F.lit(None).cast(dict(winners.dtypes)[lsn_col]))
                 .select(*self.keys, "change_type", *pre_data_cols, prev_col)
             )
             yield classified.unionByName(pre_rows, allowMissingColumns=True)

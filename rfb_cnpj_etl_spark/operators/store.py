@@ -9,6 +9,11 @@ rename-aside bucket swaps with crash recovery (the staging, swap and
 heal rules live in operators/publish.py), partition-pruned reads,
 staged writes, small-file compaction and a metadata-only health report.
 
+The layout marker records the read ``schema`` too — the union by name
+of every staged write, ``bucket`` last — widened when a write is staged,
+before any file needing it is published. Reads pass it to the reader:
+no inference job, and a column some files lack reads NULL there.
+
 The merge-on-read (MOR) policy lives here once as well: the LWW fold of
 base + delta rows, the per-bucket row-estimate ledger persisted in the
 layout marker, the auto copy-on-write (COW) vs MOR decision with its
@@ -54,16 +59,29 @@ import shutil
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schema import OP_DELETE, OP_UPSERT
 from . import publish
 
 
-def key_bucket(keys: list[str], buckets: int) -> Column:
-    """Deterministic key → bucket assignment."""
-    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(buckets)).cast("int")
+def key_bucket(keys: list[str | Column], buckets: int) -> Column:
+    """Deterministic key → bucket assignment (key column names, or
+    expressions that evaluate to those columns)."""
+    cols = [F.col(k) if isinstance(k, str) else k for k in keys]
+    return F.pmod(F.xxhash64(*cols), F.lit(buckets)).cast("int")
+
+
+def widen_schema(schema: T.StructType | None, other: T.StructType) -> T.StructType:
+    """``schema`` plus ``other``'s columns it lacks, by name, with the
+    ``bucket`` partition column last, typed as partition discovery
+    types it."""
+    fields = [f for f in (schema or []) if f.name != "bucket"]
+    names = {f.name for f in fields}
+    fields += [f for f in other if f.name not in names and f.name != "bucket"]
+    return T.StructType([*fields, T.StructField("bucket", T.IntegerType())])
 
 
 def parquet_footer_rows(path: str) -> int:
@@ -104,6 +122,12 @@ class BucketedParquetStore:
     layout marker. Provides: crash recovery for interrupted swaps,
     rename-aside bucket swaps, partition-pruned reads, staged writes,
     small-file compaction and a metadata-only health report.
+
+    The marker holds ``buckets``, ``protocol``, ``row_est``,
+    ``bucket_keys``, the pointer ``live`` map and the read ``schema``,
+    which :meth:`_stage` widens and writes before :meth:`commit_staged`
+    or :meth:`append_delta` publish a file needing it (a crash leaves
+    at most a recorded column that reads NULL); see :meth:`_read_schema`.
 
     It also owns the one COW/MOR write path. A subclass passes its
     ``fold`` spec ``(keys, order col, op col)`` and then only builds the
@@ -204,6 +228,11 @@ class BucketedParquetStore:
         self._row_est: dict[int, int] = {
             int(b): int(n) for b, n in (stored.get("row_est") or {}).items()
         }
+        #: read schema of base and delta files (see the class docstring);
+        #: None until the first staged write or legacy inference
+        self._schema: T.StructType | None = (
+            T.StructType.fromJson(stored["schema"]) if "schema" in stored else None
+        )
         self._recover()
         marker = stored.get("buckets")
         marker = int(marker) if marker is not None else None
@@ -255,10 +284,13 @@ class BucketedParquetStore:
             payload["live"] = {str(b): fs for b, fs in self._live.items()}
         if self.bucket_keys is not None:
             payload["bucket_keys"] = self.bucket_keys
+        if self._schema is not None:
+            payload["schema"] = self._schema.jsonValue()
         return payload
 
     def _write_meta(self) -> None:
         """Write the layout marker (atomically) into the live dir."""
+        os.makedirs(self.path, exist_ok=True)
         publish.write_json(
             os.path.join(self.path, self.META_FILE), self._meta_payload()
         )
@@ -342,32 +374,57 @@ class BucketedParquetStore:
             for e in self._live.get(b, [])
         ]
 
+    def _read_schema(self) -> T.StructType | None:
+        """The recorded read schema. A marker that predates it infers it
+        once over every base and delta file (``mergeSchema``); the next
+        marker write records it. None: no schema and no data yet."""
+        if self._schema is None:
+            for root, paths in (
+                (self.path, self._base_paths(self.base_bucket_ids())),
+                (self.delta_root, self._delta_paths(self.delta_bucket_ids())),
+            ):
+                if paths:
+                    reader = self.spark.read.option("basePath", root)
+                    inferred = reader.option("mergeSchema", "true").parquet(*paths)
+                    self._schema = widen_schema(self._schema, inferred.schema)
+        return self._schema
+
+    def _scan(self, root: str, paths: list[str], delta: bool = False) -> DataFrame:
+        """Scan ``paths`` under ``root`` against the read schema (base
+        scans leave out the fold's op column, which only deltas hold)."""
+        reader = self.spark.read.option("basePath", root)
+        schema = self._read_schema()
+        if schema is None:
+            return reader.parquet(*paths)
+        if not delta and self.fold is not None:
+            schema = T.StructType([f for f in schema if f.name != self.fold[2]])
+        return reader.schema(schema).parquet(*paths)
+
+    def _base_paths(self, bucket_ids: list[int]) -> list[str]:
+        """Live files (pointer) or dirs (rename) of those base buckets."""
+        if self.commit_protocol == "pointer":
+            return self._live_files(bucket_ids)
+        return [
+            f"{self.path}/bucket={b}"
+            for b in bucket_ids
+            if os.path.isdir(f"{self.path}/bucket={b}")
+        ]
+
     def _read_base(self) -> DataFrame:
         if self.commit_protocol == "pointer":
             # the live map IS the table: explicit committed files only
             # (directory contents may include pre-GC garbage)
-            return self.spark.read.option("basePath", self.path).parquet(
-                *self._live_files(sorted(self._live))
-            )
-        return self.spark.read.option("basePath", self.path).parquet(self.path)
+            return self._scan(self.path, self._live_files(sorted(self._live)))
+        return self._scan(self.path, [self.path])
 
     def _read_base_buckets(self, bucket_ids: list[int]) -> DataFrame | None:
         """Partition-pruned base scan; None when no requested bucket has
         base data (callers fold None with the delta side, or treat it
         as empty)."""
-        if self.commit_protocol == "pointer":
-            files = self._live_files(bucket_ids)
-            if not files:
-                return self._read_base().limit(0) if self.exists() else None
-            return self.spark.read.option("basePath", self.path).parquet(*files)
-        paths = [
-            f"{self.path}/bucket={b}"
-            for b in bucket_ids
-            if os.path.isdir(f"{self.path}/bucket={b}")
-        ]
+        paths = self._base_paths(bucket_ids)
         if not paths:
             return self._read_base().limit(0) if self.exists() else None
-        return self.spark.read.option("basePath", self.path).parquet(*paths)
+        return self._scan(self.path, paths)
 
     def read(self) -> DataFrame:
         """Current table contents. With merge-on-read delta segments
@@ -428,14 +485,16 @@ class BucketedParquetStore:
             for b in self._bucket_dirs(self.delta_root)
         }
 
-    def _read_delta(self, bucket_ids: list[int] | None = None) -> DataFrame:
-        ids = self.delta_bucket_ids() if bucket_ids is None else bucket_ids
-        paths = [
+    def _delta_paths(self, bucket_ids: list[int]) -> list[str]:
+        return [
             f"{self.delta_root}/bucket={b}"
-            for b in ids
+            for b in bucket_ids
             if os.path.isdir(f"{self.delta_root}/bucket={b}")
         ]
-        return self.spark.read.option("basePath", self.delta_root).parquet(*paths)
+
+    def _read_delta(self, bucket_ids: list[int] | None = None) -> DataFrame:
+        ids = self.delta_bucket_ids() if bucket_ids is None else bucket_ids
+        return self._scan(self.delta_root, self._delta_paths(ids), delta=True)
 
     def _base_rows(self, base: DataFrame) -> DataFrame:
         """Base rows as they enter the fold (the index stores give
@@ -447,9 +506,10 @@ class BucketedParquetStore:
     ) -> DataFrame:
         """Base ∪ delta → current rows: ONE hash-agg LWW per fold key by
         the fold's order column, delete tombstones filtered — the dedup
-        a COW write runs, applied at read time. ``allowMissingColumns``
-        carries add-column schema evolution across base/delta vintages
-        (older rows read NULL for columns added later)."""
+        a COW write runs, applied at read time. Scans against the
+        recorded schema already read NULL for a column a file lacks;
+        ``allowMissingColumns`` covers callers whose two sides project
+        different columns."""
         from .dedup import last_writer_wins_agg
 
         if self.fold is None:
@@ -641,8 +701,6 @@ class BucketedParquetStore:
         OBSERVE_METRICS_MAX_BUCKETS."""
         if len(touched) > self.OBSERVE_METRICS_MAX_BUCKETS:
             return df, None
-        from pyspark.sql import Observation
-
         obs = Observation()
         df = df.observe(
             obs,
@@ -661,10 +719,14 @@ class BucketedParquetStore:
         from ``obs`` (:meth:`_observe_counts`) when given and intact,
         else from the staged files' parquet footers (no Spark job, no
         recompute — AQE empty-relation propagation can drop the
-        metrics node, e.g. when every key was deleted). Returns
-        ``(staged bucket ids, rows per bucket)``."""
+        metrics node, e.g. when every key was deleted). A marker whose
+        read schema ``df`` widens is written before anything staged is
+        published. Returns ``(staged bucket ids, rows per bucket)``."""
         staged = self.stage_write(df, staging)
         self._check_staged(staging, staged, touched)
+        if (widened := widen_schema(self._read_schema(), df.schema)) != self._schema:
+            self._schema = widened
+            self._write_meta()
         if obs is not None:
             try:
                 return staged, {
@@ -847,14 +909,10 @@ class BucketedParquetStore:
                 .partitionBy("bucket")
                 .parquet(staging)
             )
-            # per-bucket counts (≤ B′ ints on the driver) — footer-only
-            # via parquet aggregate pushdown
+            # per-bucket counts from the staged footers (no Spark job)
             bucket_rows.update(
-                (int(r["bucket"]), int(r["n"]))
-                for r in self.spark.read.parquet(staging)
-                .groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
+                (b, parquet_footer_rows(f"{staging}/bucket={b}"))
+                for b in self._bucket_dirs(staging)
             )
             if self.commit_protocol == "pointer":
                 # the staged marker must reference the staged files: on
@@ -913,17 +971,6 @@ class BucketedParquetStore:
         Merge-on-read delta files count toward ``max_files_per_bucket``
         (reads pay base + delta files until a compaction folds them)."""
         return store_health(self.path)
-
-    # -- audits ----------------------------------------------------------
-
-    def bucket_assignment_audit(self, bucket_col: Column) -> int:
-        """Rows whose stored partition value disagrees with ``bucket_col``
-        recomputed from their own columns — 0 for a healthy store."""
-        return (
-            self.read()
-            .filter(F.col("bucket") != bucket_col)
-            .count()
-        )
 
 
 def path_health(path: str) -> dict:

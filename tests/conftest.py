@@ -65,3 +65,19 @@ def state_dict(st):
 def docs_df(spark, rows):
     """A MinHash index batch of ``(doc_id, text)`` tuples."""
     return spark.createDataFrame(rows, "doc_id string, text string")
+
+
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` submits: counted through a job group, after
+    the listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

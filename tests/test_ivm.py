@@ -13,6 +13,7 @@ import os
 import shutil
 
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
 from rfb_cnpj_etl_spark.engine import CdcEngine
@@ -178,6 +179,36 @@ class TestIncrementalAggregate:
             eng.replay(log.filter(F.col("lsn") < cut), batch_size=1000)
             agg.advance(eng)
             assert agg.verify_against_state(eng)["ok"]
+
+    def test_read_uses_recorded_schema(self, spark, tmp_path):
+        """The meta records the aggregate's schema, so read() submits no
+        inference job and yields the inferred schema; a meta without
+        the field (written before it existed) still reads, and the next
+        refresh records it. seed() records it too."""
+        eng = self._engine(spark, tmp_path)
+        agg = IncrementalAggregate(
+            spark, str(tmp_path / "ivm"), ["repo"], self.SUMS
+        )
+        log = synthesize_changelog(spark, 600, n_repos=4, n_paths=20).cache()
+        eng.replay(log.filter(F.col("lsn") < 300), batch_size=300)
+        agg.advance(eng)
+        assert spark_jobs(spark, lambda: agg.read().schema) == 0
+        assert agg.read().schema == spark.read.parquet(agg.agg_dir).schema
+        before = sorted(map(tuple, agg.read().collect()))
+        meta_path = os.path.join(agg.agg_dir, agg.META)
+        meta = agg._meta()
+        del meta["schema"]
+        with open(meta_path, "w") as f:
+            json.dump(meta, f)
+        assert sorted(map(tuple, agg.read().collect())) == before
+        eng.replay(log, batch_size=300)
+        agg.advance(eng)
+        assert "schema" in agg._meta()
+        assert agg.verify_against_state(eng)["ok"]
+        agg.seed(eng)
+        assert agg.read().schema == spark.read.parquet(agg.agg_dir).schema
+        assert agg.verify_against_state(eng)["ok"]
+        log.unpersist()
 
     def test_group_retires_to_zero_and_returns(self, spark, tmp_path):
         eng = self._engine(spark, tmp_path)

@@ -8,17 +8,19 @@ from __future__ import annotations
 import ast
 import json
 import os
+import uuid
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import BASE_TEXT, docs_df, log_df, row, state_dict
+from conftest import BASE_TEXT, docs_df, log_df, row, spark_jobs, state_dict
 
-from rfb_cnpj_etl_spark.engine import CdcEngine
+from rfb_cnpj_etl_spark.engine import CdcEngine, MaintenancePolicy
 from rfb_cnpj_etl_spark.gen import expected_final_state, synthesize_changelog
 from rfb_cnpj_etl_spark.operators.dedup import MinhashIndex
 from rfb_cnpj_etl_spark.operators.merge import StateTable
+from rfb_cnpj_etl_spark.operators import store as store_mod
 from rfb_cnpj_etl_spark.operators.store import parquet_footer_rows
 
 
@@ -342,6 +344,111 @@ class TestRebucketMarkerFresh:
         k.store = k.reopen()
         assert k.store._row_est == want
         assert k.write([7], batch_rows=1) == "mor"
+
+
+class TestRecordedSchema:
+    """Stores read against the schema their layout marker records."""
+
+    def _stores(self, k):
+        if k.kind == "state":
+            return [k.store]
+        return [k.index.sig_store, k.index.post_store]
+
+    @staticmethod
+    def _inferred(spark, root):
+        return spark.read.option("basePath", root).parquet(root)
+
+    def test_reads_submit_no_job_and_match_inference(self, kind, spark):
+        """read()/read_buckets() build their plans without a Spark job,
+        and on a store no evolution touched they yield exactly the
+        schema the inferring reads gave: column order, nullability and
+        the partition column's type."""
+        k = kind(4)
+        k.write(range(40))
+        k.write(range(5), mode="mor")
+        k.write(range(3), op="delete", mode="mor")
+        for st in self._stores(k):
+            assert st.delta_bucket_ids()
+            assert spark_jobs(spark, lambda st=st: st.read().schema) == 0
+            assert spark_jobs(spark, lambda st=st: st.read_buckets([0, 1]).schema) == 0
+            folded = st._fold_delta(
+                self._inferred(spark, st.path), self._inferred(spark, st.delta_root)
+            )
+            assert st.read().schema == folded.schema
+            st.compact()
+            assert st.read().schema == self._inferred(spark, st.path).schema
+            assert dict(st.read().dtypes)["bucket"] == "int"
+
+    def test_marker_without_schema_reads_the_same(self, kind):
+        """A marker written before the field existed infers the schema
+        once (every file's footer), reads the same rows, and records
+        the schema at the next write."""
+        k = kind(4)
+        k.write(range(40))
+        k.write(range(5), mode="mor")
+        before = sorted(map(tuple, k.store.read().collect()))
+        marker = os.path.join(k.store.path, k.store.META_FILE)
+        with open(marker) as f:
+            meta = json.load(f)
+        del meta["schema"]
+        with open(marker, "w") as f:
+            json.dump(meta, f)
+        k.store = k.reopen()
+        assert k.store._schema is None
+        assert sorted(map(tuple, k.store.read().collect())) == before
+        assert k.write([7], mode="mor") == "mor"
+        with open(marker) as f:
+            assert "schema" in json.load(f)
+
+    @pytest.mark.parametrize("then", ["cow", "compact"])
+    def test_delta_spanning_add_column_keeps_it(
+        self, spark, tmp_path, monkeypatch, then
+    ):
+        """One delta bucket holds a file from before and one from after
+        an add-column evolution; the pre-evolution file sorts first.
+        The added ``branch`` column and its values survive the folded
+        read, a folding COW window and a compaction."""
+        tokens = iter(range(1, 10_000))  # file tokens sort by write order
+        monkeypatch.setattr(
+            store_mod.uuid, "uuid4", lambda: uuid.UUID(int=next(tokens) << 100)
+        )
+        log = synthesize_changelog(
+            spark, 800, n_repos=4, n_paths=30, delete_ratio=0.2,
+            hot_repo_fraction=0.3, evolve_at=400, seed=7,
+        ).cache()
+        eng = CdcEngine(
+            spark, str(tmp_path / "state"), str(tmp_path / "m.jsonl"), buckets=1
+        )
+        eng.replay(log.filter("lsn < 200").drop("branch"), batch_size=200)
+        eng.merge_mode = "mor"
+        eng.replay(log.filter("lsn < 400").drop("branch"), batch_size=200)
+        entries = eng.replay(log.filter("lsn < 600"), batch_size=200)
+        assert [e["mode"] for e in entries] == ["mor"]
+        assert len(os.listdir(f"{eng.state.delta_root}/bucket=0")) == 2
+
+        def check(hi):
+            state = eng.final_state()
+            assert "branch" in state.columns
+            cols = ["repo", "path", "lsn", "branch"]
+            want = expected_final_state(log.filter(F.col("lsn") < hi))
+            assert sorted(map(tuple, state.select(*cols).collect())) == sorted(
+                map(tuple, want.select(*cols).collect())
+            )
+            assert state.filter("lsn >= 400 AND branch IS NULL").count() == 0
+            assert state.filter("lsn >= 400").count() > 0
+            assert eng.verify_against(want)["ok"]
+
+        check(600)
+        if then == "cow":
+            eng.merge_mode = "cow"
+            assert [e["mode"] for e in eng.replay(log, batch_size=200)] == ["cow"]
+            check(800)
+        else:
+            res = eng.maintain(MaintenancePolicy(max_files_per_bucket=1))
+            assert any(a.get("store") == "state" for a in res["actions"]), res
+            assert not eng.state.delta_bucket_ids()
+            check(600)
+        log.unpersist()
 
 
 class TestOneWritePolicy:

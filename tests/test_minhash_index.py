@@ -18,7 +18,7 @@ import random
 
 import pytest
 
-from conftest import BASE_TEXT, OTHER_TEXT, docs_df
+from conftest import BASE_TEXT, OTHER_TEXT, docs_df, spark_jobs
 
 from rfb_cnpj_etl_spark.operators.dedup import MinhashIndex, minhash_lsh_pairs
 from rfb_cnpj_etl_spark.operators.store import (
@@ -277,17 +277,15 @@ class TestIndexTouchedSetGuard:
             return sorted(map(tuple, store.read().collect()))
 
         before = contents(idx.sig_store), contents(idx.post_store)
-        probe = MinhashIndex._distinct_buckets
+        probe = MinhashIndex._snapshot
         calls = []
 
-        def drop_one_sig_bucket(df, bucket_col):
-            out = probe(df, bucket_col)
-            calls.append(out)
-            return out[1:] if len(calls) == 1 else out
+        def drop_one_sig_bucket(self, *args):
+            snapshot, touched_sig, new_post = probe(self, *args)
+            calls.append(touched_sig)
+            return snapshot, touched_sig[1:], new_post
 
-        monkeypatch.setattr(
-            MinhashIndex, "_distinct_buckets", staticmethod(drop_one_sig_bucket)
-        )
+        monkeypatch.setattr(MinhashIndex, "_snapshot", drop_one_sig_bucket)
         batch = _docs(spark, [(i, f"changed text {i} words") for i in range(20)])
         with pytest.raises(TouchedSetMismatchError, match="outside the precomputed"):
             idx.ingest(batch, compute_pairs=False, mode="cow")
@@ -301,6 +299,61 @@ class TestIndexTouchedSetGuard:
             if name.endswith(".staging")
         ]
         assert left == []
+
+
+class TestIngestJobBudget:
+    #: Spark jobs of one warm ingest below (upserts, deletes and the
+    #: pair probe): one snapshot write that observes its touched
+    #: buckets, one old-key probe, two stage writes and the pairs
+    #: write, each with its shuffle and broadcast stages. Schema
+    #: inference on every store read and three bucket collects made it
+    #: 27 (COW) and 28 (MOR).
+    BUDGET = {"cow": 12, "mor": 15}
+
+    def test_warm_ingest_stays_within_budget(self, spark, tmp_path, monkeypatch):
+        """A warm forced-COW and forced-MOR ingest each stay within the
+        job budget, find the same pairs, and the pair probe reuses the
+        new-key posting buckets the snapshot write observed instead of
+        collecting them again."""
+        idx = MinhashIndex(spark, str(tmp_path / "idx"), buckets=8, **PARAMS)
+        base = _corpus_rows(200)
+        idx.ingest(_docs(spark, base), pairs_out=str(tmp_path / "p0"))
+        probe = MinhashIndex._distinct_buckets
+        pairs_for = MinhashIndex._pairs_for
+        in_pairs_for, probes_there = [], []
+
+        def counting_probe(df, bucket_col):
+            probes_there.extend(in_pairs_for)
+            return probe(df, bucket_col)
+
+        def flagged_pairs_for(self, *args, **kwargs):
+            in_pairs_for.append(True)
+            try:
+                return pairs_for(self, *args, **kwargs)
+            finally:
+                in_pairs_for.pop()
+
+        monkeypatch.setattr(
+            MinhashIndex, "_distinct_buckets", staticmethod(counting_probe)
+        )
+        monkeypatch.setattr(MinhashIndex, "_pairs_for", flagged_pairs_for)
+        deleted = spark.createDataFrame([(1,), (2,)], "doc_id long")
+        for n, mode in enumerate(["cow", "mor"], 1):
+            batch = [_near_dup(base[10 + n], 10 + n), _near_dup(base[3], 500 + n)]
+            got = {}
+
+            def ingest():
+                got["m"], _ = idx.ingest(
+                    _docs(spark, batch), deleted_ids=deleted, mode=mode,
+                    batch_rows=4, threshold=THRESHOLD,
+                    pairs_out=str(tmp_path / f"p{n}"),
+                )
+
+            jobs = spark_jobs(spark, ingest)
+            assert got["m"]["mode"] == mode
+            assert got["m"]["pairs"] >= 1
+            assert jobs <= self.BUDGET[mode], (mode, jobs)
+        assert probes_there == []
 
 
 class TestIndexCapTouchedOnly:
