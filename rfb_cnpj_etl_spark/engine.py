@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators import publish
-from .operators.merge import StateTable, shared
+from .operators.merge import StateTable, read_feed, shared
 from .operators.store import key_bucket, parquet_footer_rows
 from .plans.checkpoint import Manifest
 from .schema import CHANGELOG_SCHEMA, CODE_KEY, OP_DELETE, SchemaRegistry
@@ -706,16 +706,10 @@ class CdcEngine:
             raise ValueError(
                 f"no published change-feed batches under {self.changes_dir}"
             )
-        # mergeSchema: add-column evolution mid-history leaves older
-        # batch dirs without the new columns — merge the footers so the
-        # feed presents ONE evolved schema (old rows NULL-filled, same
-        # contract as the state table itself). Cost is a footer read per
-        # file over the (small, net-changes-only) feed, not a data scan.
-        return (
-            self.spark.read.option("basePath", self.changes_dir)
-            .option("mergeSchema", "true")
-            .parquet(*dirs)
-        )
+        # add-column evolution mid-history leaves older batch dirs
+        # without the new columns: the feed presents ONE evolved schema
+        # (old rows NULL-filled, same contract as the state table)
+        return read_feed(self.spark, dirs, self.changes_dir)
 
     def _merge_entries(self) -> list[dict]:
         """Manifest entries that mutated row content, in commit order —
@@ -806,15 +800,15 @@ class CdcEngine:
                 if c in snap.columns
             ]
             obs = Observation()
-            snap = snap.drop(*drop).observe(
-                obs, F.count(F.lit(1)).alias("rows")
-            )
+            snap = snap.drop(*drop)
+            schema = snap.schema.jsonValue()
+            snap = snap.observe(obs, F.count(F.lit(1)).alias("rows"))
             snap.write.mode("overwrite").parquet(staging)
             try:
                 rows = int(obs.get["rows"])
             except Exception:  # noqa: BLE001 — AQE may prune the metrics node
                 rows = parquet_footer_rows(staging)
-            return {"rows": rows, "checkpoint_of": batch_id}
+            return {"rows": rows, "checkpoint_of": batch_id, "schema": schema}
 
         out_dir = os.path.join(self.changes_dir, f"checkpoint={batch_id}")
         res = publish.publish_once(out_dir, write, StateTable.FEED_META)
@@ -903,16 +897,11 @@ class CdcEngine:
         parts: list[DataFrame] = []
         if cp_dir is not None:
             parts.append(
-                self.spark.read.parquet(cp_dir).withColumn(
-                    op_col, F.lit(OP_UPSERT)
-                )
+                read_feed(self.spark, [cp_dir]).withColumn(op_col, F.lit(OP_UPSERT))
             )
         if dirs:
-            feed = (
-                self.spark.read.option("basePath", self.changes_dir)
-                .option("mergeSchema", "true")
-                .parquet(*dirs)
-                .drop("batch", f"prev_{self.state.lsn_col}")
+            feed = read_feed(self.spark, dirs, self.changes_dir).drop(
+                "batch", f"prev_{self.state.lsn_col}"
             )
             parts.append(
                 # preimage rows (feed_preimages=True) restate REPLACED

@@ -52,6 +52,7 @@ from pyspark.sql import types as T
 
 from ..plans.checkpoint import Manifest
 from . import publish
+from .merge import read_feed
 
 #: change_type values that contribute to the aggregate, with sign.
 _SIGNS = {
@@ -430,12 +431,8 @@ class IncrementalAggregate:
         todo = sorted(pending)
         if not todo:
             return {"applied": 0}
-        feed = (
-            self.spark.read.option("basePath", engine.changes_dir)
-            # add-column evolution mid-history: older dirs NULL-fill
-            .option("mergeSchema", "true")
-            .parquet(*[dirs[b] for b in todo])
-        )
+        # add-column evolution mid-history: older dirs NULL-fill
+        feed = read_feed(self.spark, [dirs[b] for b in todo], engine.changes_dir)
         # fold set = EVERY committed id (not just todo): after this
         # refresh all of them are applied, and folding the already-
         # applied exact ones (e.g. a batch a direct refresh applied

@@ -35,8 +35,9 @@ import shutil
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schema import CODE_KEY, OP_DELETE, OP_UPSERT
 from . import publish
@@ -72,6 +73,24 @@ def shared(df: DataFrame, readers: int) -> Iterator[DataFrame]:
         yield df
     finally:
         df.unpersist()
+
+
+def read_feed(spark: SparkSession, dirs: list[str], root: str | None = None) -> DataFrame:
+    """Published feed (or checkpoint) ``dirs`` read against the union by
+    name of the schemas their :attr:`StateTable.FEED_META` records: no
+    inference job, and a column older dirs lack reads NULL. Under
+    ``root`` the ``batch=<id>`` dir names add the ``batch`` column,
+    typed by partition discovery. A dir that predates the record makes
+    the read infer its schema from every dir (``mergeSchema``)."""
+    reader = spark.read if root is None else spark.read.option("basePath", root)
+    fields: dict[str, T.StructField] = {}
+    for d in dirs:
+        meta = publish.read_json(os.path.join(d, StateTable.FEED_META)) or {}
+        if "schema" not in meta:
+            return reader.option("mergeSchema", "true").parquet(*dirs)
+        for f in T.StructType.fromJson(meta["schema"]):
+            fields.setdefault(f.name, f)
+    return reader.schema(T.StructType(list(fields.values()))).parquet(*dirs)
 
 
 class StateTable(BucketedParquetStore):
@@ -126,8 +145,9 @@ class StateTable(BucketedParquetStore):
         #: update/delete (``update_preimage`` / ``delete_preimage`` rows
         #: — Delta CDF's preimage analog), so a downstream incremental
         #: aggregate can subtract retired contributions without ever
-        #: reading this table. Costs a full-column (not keys+lsn-pruned)
-        #: read of the touched buckets per feed batch — default off.
+        #: reading this table. The feed's one scan of the touched
+        #: buckets then reads every column, not just keys + lsn (only
+        #: rows sharing a key with the batch go further) — default off.
         self.feed_preimages = feed_preimages
         super().__init__(
             spark,
@@ -232,7 +252,8 @@ class StateTable(BucketedParquetStore):
         (:meth:`BucketedParquetStore._choose_mode`) —
         requiring ``batch_rows`` (the replay loop gets it free from its
         upfront window probe; a standalone caller may pass
-        ``batch.count()``; without it auto stays on COW). For MOR
+        ``batch.count()``; without it auto stays on COW, and the feed
+        never broadcasts the batch's keys). For MOR
         batches ``bucket_rows`` counts the winners *appended* per
         bucket, not the bucket's total rows — the manifest entry's
         ``mode`` field says which reading applies.
@@ -268,7 +289,7 @@ class StateTable(BucketedParquetStore):
             if changes_out is not None:
                 # before-image diff MUST run before any state mutation below
                 feed_metrics = self._emit_changes(
-                    winners, lsn_col, op_col, touched, changes_out
+                    winners, lsn_col, op_col, touched, changes_out, batch_rows
                 )
             try:
                 if self._choose_mode(mode, touched, batch_rows) == "mor":
@@ -297,43 +318,6 @@ class StateTable(BucketedParquetStore):
     #: (underscore prefix → ignored by parquet readers).
     FEED_META = "_feed_meta.json"
 
-    def _touched_scans(
-        self, touched: list[int]
-    ) -> tuple[DataFrame | None, DataFrame | None]:
-        """Raw (base, delta) scans of the touched buckets (None where
-        empty), read once for both the pre-image and the preimages."""
-        base = self._read_base_buckets(touched) if self.exists() else None
-        delta_ids = [b for b in self.delta_bucket_ids() if b in set(touched)]
-        return base, self._read_delta(delta_ids) if delta_ids else None
-
-    def _pre_image(
-        self,
-        touched: list[int],
-        lsn_col: str,
-        scans: tuple[DataFrame | None, DataFrame | None] | None = None,
-    ) -> DataFrame | None:
-        """Pruned ``(keys, lsn)`` view of the CURRENT surviving rows in
-        the touched buckets — the before-image the change feed diffs
-        against. MOR deltas are folded on a projection pruned to
-        keys+lsn+op BEFORE the LWW aggregate, so the pre-image scan
-        never reads content columns (``read_buckets`` would fold full
-        rows: ``max_by``'s struct payload blocks column pruning).
-
-        Row-pruning this scan to the batch's key set was tried and
-        REVERTED: a broadcast left-semi join cannot push below the
-        parquet scan (the narrow read happens either way) and the extra
-        distinct+broadcast job per window measured neutral-to-slower in
-        the interleaved A/B (scripts/bench_ab_feed.py methodology).
-        The scan is the intrinsic price of eager CDF classification —
-        the same price Delta's CDF pays on MERGE."""
-        cols = [*self.keys, lsn_col]
-        base, delta = scans or self._touched_scans(touched)
-        if base is not None:
-            base = base.select(*cols)
-        if delta is not None:
-            return self._fold_delta(base, delta.select(*cols, self.op_col))
-        return base
-
     def _emit_changes(
         self,
         winners: DataFrame,
@@ -341,9 +325,13 @@ class StateTable(BucketedParquetStore):
         op_col: str,
         touched: list[int],
         out_dir: str,
+        batch_rows: int | None = None,
     ) -> dict:
-        """Compute this batch's net row-level changes against the
-        current state and publish them atomically to ``out_dir``.
+        """Publish :meth:`_changes` (this batch's net row-level changes
+        against the current state) atomically to ``out_dir``, with its
+        row count, touched set and schema in the :attr:`FEED_META`
+        sidecar (:func:`read_feed` reads the dir against that schema).
+        ``batch_rows`` is the replay probe's window row count, if known.
 
         Exactly-once contract (the feed is the one artifact a LWW
         re-apply can NOT recompute — after the state swap the same
@@ -367,14 +355,15 @@ class StateTable(BucketedParquetStore):
 
         def write(staging: str) -> dict:
             obs = Observation()
-            with self._changes(winners, lsn_col, op_col, touched) as feed:
-                feed = feed.observe(obs, F.count(F.lit(1)).alias("rows"))
-                feed.write.mode("overwrite").parquet(staging)
+            feed = self._changes(winners, lsn_col, op_col, touched, batch_rows)
+            schema = feed.schema.jsonValue()
+            feed = feed.observe(obs, F.count(F.lit(1)).alias("rows"))
+            feed.write.mode("overwrite").parquet(staging)
             try:
                 rows = int(obs.get["rows"])
             except Exception:  # noqa: BLE001 — AQE may prune the metrics node
                 rows = parquet_footer_rows(staging)
-            return {"rows": rows, "touched": sorted(touched)}
+            return {"rows": rows, "touched": sorted(touched), "schema": schema}
 
         res = publish.publish_once(out_dir, write, self.FEED_META)
         recorded = set(res.get("touched", touched))
@@ -385,34 +374,77 @@ class StateTable(BucketedParquetStore):
             return {"change_rows": res.get("rows"), "change_feed_reused": True}
         return {"change_rows": res["rows"]}
 
-    @contextmanager
     def _changes(
         self,
         winners: DataFrame,
         lsn_col: str,
         op_col: str,
         touched: list[int],
-    ) -> Iterator[DataFrame]:
+        batch_rows: int | None = None,
+    ) -> DataFrame:
         """This batch's net row-level changes against the current state
-        of the ``touched`` buckets (the feed :meth:`_emit_changes`
-        publishes), valid inside the ``with`` block.
+        of the ``touched`` buckets: the feed :meth:`_emit_changes`
+        publishes.
 
-        ONE classification, winners ⟕ pre-image: no before-row →
-        ``insert`` (delete-on-absent emits nothing); before-row
-        outranked (lsn, delete-priority) → ``update`` / ``delete``; a
-        stale winner the state outranks emits nothing. Its rows are the
-        feed rows and, with preimages on, also name the replaced rows.
-        """
+        ONE scan of the touched base and delta files — every column with
+        preimages on, else keys + lsn (+ op) — left-semi-joined with the
+        winners' keys before any aggregate, so only the O(batch) rows
+        sharing a key with a winner reach :meth:`_fold_delta`, which
+        folds them into the pre-image: one row per key, crash-duplicated
+        delta rows included. The keys are broadcast only when the
+        probe's ``batch_rows`` says they fit Spark's own broadcast
+        threshold; otherwise the planner picks, and a bulk window
+        shuffles. (Left alone, it sizes the persisted winners by a plan
+        estimate before their cache exists, and may broadcast the
+        O(state) side instead.)
+
+        ONE join, winners ⟕ pre-image, classifies each change: no
+        before-row → ``insert`` (delete-on-absent emits nothing);
+        before-row outranked (lsn, delete-priority) → ``update`` /
+        ``delete``; a stale winner the state outranks emits nothing.
+        With preimages on, each update/delete row also yields, from the
+        same joined row, the row it REPLACES: ``update_preimage`` /
+        ``delete_preimage`` with the old lsn and ``prev_<lsn>`` NULL. It
+        carries every column of the old row, also state columns this
+        batch omits (a downstream aggregate must subtract a retired
+        non-NULL contribution); a column the batch adds reads NULL."""
         prev_col = f"prev_{lsn_col}"
-        scans = self._touched_scans(touched)
-        pre = self._pre_image(touched, lsn_col, scans)
-        if pre is None:
+        skip = (*self.keys, op_col, self.op_col, "bucket", "content_sha256")
+        old: dict[str, str] = {}
+        base = self._read_base_buckets(touched) if self.exists() else None
+        delta_ids = [b for b in self.delta_bucket_ids() if b in set(touched)]
+        delta = self._read_delta(delta_ids) if delta_ids else None
+        if base is None and delta is None:
             joined = winners.withColumn(
                 prev_col, F.lit(None).cast(dict(winners.dtypes)[lsn_col])
             )
         else:
+            keys = winners.select(*self.keys)
+            conf = self.spark._jsparkSession.sessionState().conf()
+            if batch_rows is not None and (
+                batch_rows * keys._jdf.schema().defaultSize()
+                <= conf.autoBroadcastJoinThreshold()
+            ):
+                keys = F.broadcast(keys)
+
+            def candidates(scan: DataFrame, *op: str) -> DataFrame:
+                if not self.feed_preimages:
+                    scan = scan.select(*self.keys, lsn_col, *op)
+                return scan.join(keys, self.keys, "left_semi")
+
+            pre = base = candidates(base) if base is not None else None
+            if delta is not None:
+                pre = self._fold_delta(base, candidates(delta, self.op_col))
+            # the replaced row's columns, renamed apart from the winner's
+            old = {c: f"__old_{c}" for c in pre.columns if c not in (*skip, lsn_col)}
             joined = winners.join(
-                pre.withColumnRenamed(lsn_col, prev_col), self.keys, "left"
+                pre.select(
+                    *self.keys,
+                    F.col(lsn_col).alias(prev_col),
+                    *[F.col(c).alias(o) for c, o in old.items()],
+                ),
+                self.keys,
+                "left",
             )
         is_del = F.col(op_col) == OP_DELETE
         prev, new = F.col(prev_col), F.col(lsn_col)
@@ -423,78 +455,35 @@ class StateTable(BucketedParquetStore):
             .when(~is_del & prev.isNull(), F.lit("insert"))
             .when(~is_del & (new > prev), F.lit("update"))
         )
-        data_cols = [
-            c
-            for c in winners.columns
-            if c not in (*self.keys, op_col, "bucket", "content_sha256")
-        ]
-        classified = (
-            joined.withColumn("change_type", change_type)
-            .filter(F.col("change_type").isNotNull())
-            .select(*self.keys, "change_type", *data_cols, prev_col)
+        changes = joined.withColumn("change_type", change_type).filter(
+            F.col("change_type").isNotNull()
         )
-        preimages = self.feed_preimages and pre is not None
-        with shared(classified, 2 if preimages else 1) as classified:
-            if not preimages:
-                yield classified
-                return
-            # Delta-CDF-style preimages: for every update/delete also
-            # publish the row being REPLACED (its own lsn, prev NULL) as
-            # change_type update_preimage / delete_preimage. An
-            # incremental downstream aggregate subtracts these instead
-            # of reading the state table. Fold-transparent for LWW
-            # consumers (a preimage always carries a strictly older —
-            # or, on the lsn-tie delete, an outranked — lsn than the
-            # row that replaced it), but state_as_of / the streaming
-            # source still filter them explicitly. Price: the old rows
-            # come from a full-column scan of the touched buckets, not
-            # the keys+lsn-pruned _pre_image scan — exactly the cost
-            # Delta CDF pays on MERGE, and why the flag defaults off.
+        data_cols = [c for c in winners.columns if c not in skip]
+        if not old:  # preimages off, or no state yet
+            return changes.select(*self.keys, "change_type", *data_cols, prev_col)
+        # one copy of each row, two of an update/delete: the second is
+        # its preimage
+        replaced = F.col("change_type").isin("update", "delete")
+        changes = changes.withColumn(
+            "__copy", F.explode(F.sequence(F.lit(0), replaced.cast("int")))
+        )
+        is_pre = F.col("__copy") == 1
+        old[lsn_col] = prev_col
 
-            # (key, old_lsn) of every replaced row: O(batch), straight
-            # from the classification, no second pre-image pass
-            old_ids = classified.filter(
-                F.col("change_type").isin("update", "delete")
-            ).select(*self.keys, prev.alias(lsn_col), "change_type")
-            # fetch the full old rows by IDENTITY join (key + lsn picks
-            # exactly the surviving version) against the raw base +
-            # delta scan — a codegen hash join, NOT a full-width LWW
-            # aggregate (max_by's struct payload carries strings →
-            # SortAggregate; measured 4.6× churn-replay cost before this
-            # rewrite, scripts/bench_ab_ivm.py methodology)
-            old, dl = scans
-            if dl is not None:
-                dl = dl.filter(F.col(self.op_col) != OP_DELETE).drop(
-                    self.op_col
-                )
-                old = dl if old is None else old.unionByName(
-                    dl, allowMissingColumns=True
-                )
-            # The preimage rows carry every column of the OLD row, also
-            # state columns this batch omits (MERGE NULL-fills them in
-            # the winner): dropping them would make a downstream
-            # incremental aggregate subtract 0 for a retired non-NULL
-            # contribution (silent divergence). Columns this batch adds
-            # read NULL in them through the union below.
-            skip = {*self.keys, op_col, "bucket", "content_sha256", prev_col}
-            pre_data_cols = [c for c in old.columns if c not in skip]
-            # no broadcast hint: old_ids is O(replaced-in-batch), and a
-            # huge update batch must be allowed to shuffle instead
-            pre_rows = old.join(old_ids, [*self.keys, lsn_col], "inner")
-            if dl is not None:
-                # a crash-window delta re-append (or a COW that crashed
-                # before dropping the deltas it folded) can hold the
-                # same (key, lsn) row twice — identical rows, keep one
-                pre_rows = pre_rows.dropDuplicates(self.keys)
-            pre_rows = (
-                pre_rows.withColumn(
-                    "change_type",
-                    F.concat(F.col("change_type"), F.lit("_preimage")),
-                )
-                .withColumn(prev_col, F.lit(None).cast(dict(winners.dtypes)[lsn_col]))
-                .select(*self.keys, "change_type", *pre_data_cols, prev_col)
-            )
-            yield classified.unionByName(pre_rows, allowMissingColumns=True)
+        def pick(c: str) -> Column:
+            return F.when(
+                is_pre, F.col(old[c]) if c in old else F.lit(None)
+            ).otherwise(F.col(c) if c in data_cols else F.lit(None)).alias(c)
+
+        return changes.select(
+            *self.keys,
+            F.when(is_pre, F.concat("change_type", F.lit("_preimage")))
+            .otherwise(F.col("change_type"))
+            .alias("change_type"),
+            *[pick(c) for c in data_cols],
+            F.when(~is_pre, prev).alias(prev_col),
+            *[pick(c) for c in old if c not in (*data_cols, lsn_col)],
+        )
 
     def _merge_mor(
         self, winners: DataFrame, op_col: str, touched: list[int]

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..engine import CdcEngine
 from ..operators import publish
+from ..operators.merge import read_feed
 from ..schema import CHANGELOG_SCHEMA, CODE_KEY
 
 
@@ -189,9 +190,10 @@ def change_feed_stream(
     order-free by lsn. ``as_changelog=False`` yields raw feed rows.
 
     ``schema``: Structured Streaming needs a fixed schema up front; by
-    default it is inferred ONCE from the already-published dirs (a
-    footer-only batch read). Pass it explicitly to start a tail before
-    the first batch is published, or to pin a pre-evolution schema.
+    default it is the union of the schemas the already-published dirs
+    record (:func:`read_feed`; no Spark job). Pass it explicitly to
+    start a tail before the first batch is published, or to pin a
+    pre-evolution schema.
     """
     import os
 
@@ -205,9 +207,7 @@ def change_feed_stream(
                 f"no published change-feed batches under {changes_dir}; "
                 "pass schema= to tail a feed that has not produced yet"
             )
-        schema = (
-            spark.read.option("mergeSchema", "true").parquet(*dirs).schema
-        )
+        schema = read_feed(spark, dirs).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)

@@ -17,6 +17,7 @@ import os
 import shutil
 
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
 from rfb_cnpj_etl_spark.engine import CdcEngine, MaintenancePolicy
@@ -138,17 +139,21 @@ class TestChangeFeedModes:
         assert feeds["cow"] == feeds["mor"]
 
     def test_pre_image_scan_is_column_pruned(self, spark, tmp_path):
-        """The before-image fold must not read content columns — at
-        100 TB the feed diff costs a narrow key+lsn scan, not a second
-        full-content pass (max_by full-row payload would block
-        Catalyst's pruning, so _pre_image prunes before the fold)."""
+        """With preimages off the feed reads only keys + lsn of the
+        touched base and keys + lsn + op of their deltas — at 100 TB the
+        feed diff is a narrow columnar scan, not a second full-content
+        pass."""
         t = StateTable(spark, str(tmp_path / "state"), ["repo", "path"], buckets=4)
         t.merge(log_df(spark, [row("r", f"p{i}", f"v{i}", i + 1) for i in range(20)]))
-        # leave MOR deltas in place so the fold branch is the one audited
+        # leave MOR deltas in place so the delta scan is audited too
         t.merge(log_df(spark, [row("r", "p1", "v1b", 50)]), mode="mor")
-        pre = t._pre_image(list(range(4)), "lsn")
-        plan = pre._jdf.queryExecution().executedPlan().toString()
-        assert "content" not in plan, plan
+        winners = t.batch_winners(log_df(spark, [row("r", "p1", "v1c", 60)]))
+        feed = t._changes(winners, "lsn", "op", list(range(4)), batch_rows=1)
+        own, _computed = _parquet_scans(feed)
+        assert sorted(cols for _paths, cols in own) == [
+            ["repo", "path", "lsn"],
+            ["repo", "path", "lsn", "op"],
+        ], own
 
 
 class TestChangeFeedExactlyOnce:
@@ -475,6 +480,55 @@ def _parquet_scans(df):
     return walk(plan, False), walk(plan, True)
 
 
+def _scans_below_aggregates_unfiltered(df):
+    """Root paths of the parquet scans in ``df``'s own plan that feed an
+    aggregate without first passing the filtered (left) side of a
+    left-semi join."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def walk(node, under_agg):
+        cls = node.getClass().getSimpleName()
+        if cls == "FileSourceScanExec":
+            paths = seq(node.relation().location().rootPaths())
+            return [[p.toString() for p in paths]] if under_agg else []
+        if cls == "InMemoryTableScanExec":
+            return []
+        kids = seq(node.children())
+        if "Join" in cls and node.joinType().toString() == "LeftSemi":
+            return walk(kids[0], False) + walk(kids[1], under_agg)
+        under_agg = under_agg or "Aggregate" in cls
+        return [s for kid in kids for s in walk(kid, under_agg)]
+
+    return walk(df._jdf.queryExecution().sparkPlan(), False)
+
+
+def _broadcast_rows(spark, path_part):
+    """Output rows of every broadcast exchange, as executed, in the SQL
+    executions whose plan mentions ``path_part`` (read from the
+    session's SQL status store, which is kept with the UI off too)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    rows = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if path_part not in e.physicalPlanDescription():
+            continue
+        values = store.executionMetrics(e.executionId())
+        nodes = store.planGraph(e.executionId()).allNodes()
+        for j in range(nodes.size()):
+            if nodes.apply(j).name() != "BroadcastExchange":
+                continue
+            metrics = nodes.apply(j).metrics()
+            for k in range(metrics.size()):
+                if metrics.apply(k).name() == "number of output rows":
+                    value = values.get(metrics.apply(k).accumulatorId()).get()
+                    rows.append(int(value.replace(",", "")))
+    return rows
+
+
 class TestOneLwwPassPerWindow:
     """The window's LWW winners and the feed's classification are each
     computed once and shared: by the feed, the MERGE and the index."""
@@ -511,15 +565,20 @@ class TestOneLwwPassPerWindow:
         )
         eng.replay(log.filter("lsn < 500"), batch_size=500, minhash_index=idx)
         eng.merge_mode = "mor"
+        # a MOR window first, so the spied window's buckets hold deltas
+        eng.replay(log.filter("lsn < 550"), batch_size=50, minhash_index=idx)
 
         frames: dict[str, list] = {"feed": [], "stage_write": [], "index": []}
         write_parquet = DataFrameWriter.parquet
         stage_write = StateTable.stage_write
         ingest = MinhashIndex.ingest
 
+        unfiltered: list = []
+
         def spy_write(writer, path, *a, **kw):
             if str(path).startswith(eng.changes_dir):
                 frames["feed"].append(_parquet_scans(writer._df))
+                unfiltered.extend(_scans_below_aggregates_unfiltered(writer._df))
             return write_parquet(writer, path, *a, **kw)
 
         def spy_stage(store, df, staging):
@@ -533,7 +592,7 @@ class TestOneLwwPassPerWindow:
         monkeypatch.setattr(DataFrameWriter, "parquet", spy_write)
         monkeypatch.setattr(StateTable, "stage_write", spy_stage)
         monkeypatch.setattr(MinhashIndex, "ingest", spy_ingest)
-        (entry,) = eng.replay(log, batch_size=500, minhash_index=idx)
+        (entry,) = eng.replay(log, batch_size=50, minhash_index=idx)
         monkeypatch.undo()
 
         assert entry["mode"] == "mor" and entry["change_rows"] > 0
@@ -543,14 +602,22 @@ class TestOneLwwPassPerWindow:
                 assert not [
                     s for s in own if any(log_path in p for p in s[0])
                 ], f"{name} rescans the changelog: {own}"
-        (_own, computed), = frames["feed"]
-        folds = [
-            s
-            for s in computed
-            if all("/state/bucket=" in p for p in s[0])
-            and s[1] == ["repo", "path", "lsn"]
-        ]
-        assert len(folds) == 1, computed
+        # the touched buckets are scanned once per root (base, delta),
+        # and no state row reaches an aggregate unfiltered by the
+        # winners' keys
+        (own, _computed), = frames["feed"]
+        roots = sorted(
+            root
+            for paths, _cols in own
+            for root in {p.split("/bucket=")[0].rsplit("/", 1)[-1] for p in paths}
+        )
+        assert roots == ["state", "state.delta"], own
+        assert unfiltered == []
+        # no broadcast carries more rows than the window has winners
+        winners = log.filter("lsn >= 550").select("repo", "path").distinct().count()
+        staging = os.path.join(eng.changes_dir, f".batch={entry['batch_id']}.staging")
+        rows = _broadcast_rows(spark, staging)
+        assert rows and max(rows) <= winners, (rows, winners)
 
     def test_feed_equals_oracle_state_diff_per_window(self, spark, tmp_path):
         """COW first window, MOR after, hot keys, deletes and an
@@ -645,3 +712,87 @@ class TestOneLwwPassPerWindow:
         with pytest.raises(TouchedSetMismatchError):
             t.merge(batch, touched=wrong[:1], changes_out=str(tmp_path / "c2/batch=b1"))
         assert persisted() == before
+
+
+class TestFeedRecordedSchema:
+    """Feed dirs and checkpoints record the schema of the frame they
+    hold in their meta sidecar, and every feed read uses it."""
+
+    def _replay(self, spark, tmp_path):
+        """A COW seed without ``branch``, then MOR windows adding it."""
+        from rfb_cnpj_etl_spark.gen import synthesize_changelog
+
+        synthesize_changelog(
+            spark, 600, n_repos=4, n_paths=30, delete_ratio=0.2,
+            evolve_at=300, seed=3,
+        ).write.parquet(str(tmp_path / "log"))
+        log = spark.read.parquet(str(tmp_path / "log"))
+        eng = CdcEngine(
+            spark,
+            str(tmp_path / "state"),
+            str(tmp_path / "m.jsonl"),
+            buckets=4,
+            normalize=None,
+            changes_dir=str(tmp_path / "changes"),
+            feed_preimages=True,
+        )
+        entries = eng.replay(log.filter("lsn < 300").drop("branch"), batch_size=300)
+        eng.merge_mode = "mor"
+        return eng, entries + eng.replay(log, batch_size=150)
+
+    def test_feed_reads_infer_nothing(self, spark, tmp_path, monkeypatch):
+        from pyspark.sql.readwriter import DataFrameReader
+
+        from rfb_cnpj_etl_spark.operators.ivm import IncrementalAggregate
+        from rfb_cnpj_etl_spark.streaming.pipeline import change_feed_stream
+
+        eng, entries = self._replay(spark, tmp_path)
+        eng.checkpoint_feed(entries[1]["batch_id"])
+        options = []
+        option = DataFrameReader.option
+
+        def spy(reader, key, value):
+            options.append(key)
+            return option(reader, key, value)
+
+        monkeypatch.setattr(DataFrameReader, "option", spy)
+        assert spark_jobs(spark, eng.change_feed) == 0
+        assert spark_jobs(spark, lambda: eng.state_as_of(entries[2]["batch_id"])) == 0
+        assert spark_jobs(spark, lambda: change_feed_stream(spark, eng.changes_dir)) == 0
+        agg = IncrementalAggregate(
+            spark, str(tmp_path / "agg"), ["repo"], {"chars": "length(content)"}
+        )
+        assert agg.advance(eng)["applied"] == len(entries)
+        assert "mergeSchema" not in options
+        assert agg.verify_against_state(eng)["ok"]
+
+    def test_recorded_and_legacy_reads_equal_merge_schema(self, spark, tmp_path):
+        from collections import Counter
+
+        from rfb_cnpj_etl_spark.operators import publish
+
+        eng, entries = self._replay(spark, tmp_path)
+        dirs = list(publish.published(eng.changes_dir, "batch").values())
+        inferred = (
+            spark.read.option("basePath", eng.changes_dir)
+            .option("mergeSchema", "true")
+            .parquet(*dirs)
+        )
+
+        def contents(df):
+            cols = sorted(df.columns)
+            types = {f.name: f.dataType for f in df.schema}
+            return types, Counter(tuple(r) for r in df.select(*cols).collect())
+
+        feed = eng.change_feed()
+        assert contents(feed) == contents(inferred)
+        # the seed window predates the column: NULL-filled there only
+        seed = feed.filter(F.col("batch") == entries[0]["batch_id"])
+        assert seed.filter(F.col("branch").isNotNull()).count() == 0
+        assert feed.filter(F.col("branch").isNotNull()).count() > 0
+        for d in dirs:
+            meta_path = os.path.join(d, StateTable.FEED_META)
+            meta = publish.read_json(meta_path)
+            del meta["schema"]
+            publish.write_json(meta_path, meta)
+        assert contents(eng.change_feed()) == contents(inferred)

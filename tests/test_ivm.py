@@ -155,6 +155,44 @@ class TestFeedPreimages:
         assert pre["branch"] is None  # old row predates the column
         assert rows[("r", "a", "update", 9)]["branch"] == "main"
 
+    def test_crash_duplicated_delta_yields_one_preimage_per_key(
+        self, spark, tmp_path
+    ):
+        """A delta re-appended by a crash-replay stores the same (key,
+        lsn) rows twice under a second ``d-*`` name; the pre-image fold
+        keeps one row per key, so each replaced key gets exactly one
+        preimage and the aggregate subtracts its old row once."""
+        state, man, changes, ivm = paths(tmp_path)
+        eng = CdcEngine(
+            spark, state, man, buckets=4, normalize=None,
+            changes_dir=changes, feed_preimages=True, merge_mode="mor",
+        )
+        agg = IncrementalAggregate(spark, ivm, ["repo"], {"chars": "length(content)"})
+        log = [row("r", f"p{i}", f"v{i}", i) for i in range(20)]
+        log += [row("r", f"p{i}", f"w{i}" * 3, 100 + i) for i in range(6)]
+        eng.replay(log_df(spark, log), batch_size=100, aggregates=[agg])
+        for root, _dirs, files in os.walk(eng.state.delta_root):
+            for name in files:
+                if name.startswith("d-") and name.endswith(".parquet"):
+                    shutil.copy(
+                        os.path.join(root, name),
+                        os.path.join(root, "d-" + "0" * 12 + name[14:]),
+                    )
+        log += [row("r", f"p{i}", f"x{i}", 200 + i) for i in range(3)]
+        log += [row("r", f"p{i}", None, 200 + i, "delete") for i in range(3, 6)]
+        (entry,) = eng.replay(log_df(spark, log), batch_size=100, aggregates=[agg])
+        assert entry["mode"] == "mor" and entry["change_rows"] == 12
+        feed = spark.read.parquet(os.path.join(changes, f"batch={entry['batch_id']}"))
+        pre = sorted(
+            (r["path"], r["change_type"], r["lsn"])
+            for r in feed.filter(F.col("change_type").endswith("_preimage")).collect()
+        )
+        assert pre == [
+            (f"p{i}", f"{'update' if i < 3 else 'delete'}_preimage", 100 + i)
+            for i in range(6)
+        ]
+        assert agg.verify_against_state(eng)["ok"]
+
 
 class TestIncrementalAggregate:
     SUMS = {"content_chars": "length(content)"}
