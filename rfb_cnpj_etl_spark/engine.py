@@ -6,16 +6,34 @@ One call = one resumable CDC replay::
     engine = CdcEngine(spark, state_path, manifest_path)
     engine.replay(changelog_df, batch_size=100_000)
 
-Per micro-batch: filter the log to the LSN window → normalize (vectorized
-cleaners) → ONE LWW dedup into the batch winners → optional change feed
-(one classification of the winners against the pre-image) →
+The log is cut into LSN windows above ``manifest.high_watermark()``; one
+upfront probe gives each window its touched buckets and event count.
+Per window: normalize (vectorized cleaners) → ONE LWW dedup into the
+batch winners → optional change feed (one classification of the winners
+against the pre-image, published before the state mutates) →
 bucket-pruned MERGE of the winners → optional index update from the
 same winners → atomically commit a manifest entry carrying lsn range,
 per-bucket row counts (per-partition lineage + metrics, the north_rule
-requirement) and schema version. The winners are O(batch); when two or
-more of the feed, the MERGE and the index read them they are persisted
-for the window and released when it commits or fails. Restart resumes
-after ``manifest.high_watermark()``; re-delivered batches are no-ops.
+requirement) and schema version.
+
+**Group apply.** A window's cost is fixed Spark jobs, not data, so
+consecutive windows of one call are applied as one plan while, taken
+together, they would still apply merge-on-read: one LWW pass keeps a
+winner per key and window, one classification diffs each window against
+the pre-image and the group's earlier windows, one write publishes every
+window's feed dir, and one delta append writes the group's net winners.
+Each window still commits its own manifest entry, in window order, so
+it keeps its batch id, feed dir and ``state_as_of`` point; aggregates
+advance once per group. COW windows, engines fed a MinHash index (whose
+pair outputs are per window) and windows whose feed dir is already
+published apply one at a time.
+
+**Crash contract.** Feeds publish before the state mutates, the state
+append is LWW-idempotent, and the manifest commit is each window's
+exactly-once point. A crash after j of a group's k commits re-drives
+windows j+1..k; their feed dirs are published, so each applies on its
+own and reuses its feed. Restart resumes after the high watermark;
+re-delivered batches are no-ops.
 """
 
 from __future__ import annotations
@@ -24,16 +42,30 @@ import os
 import shutil
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators import publish
-from .operators.merge import StateTable, read_feed, shared
+from .operators.merge import FeedWindow, StateTable, read_feed, shared
 from .operators.store import key_bucket, parquet_footer_rows
 from .plans.checkpoint import Manifest
 from .schema import CHANGELOG_SCHEMA, CODE_KEY, OP_DELETE, SchemaRegistry
+
+
+class LsnWindow(NamedTuple):
+    """One window of changelog events: the id its manifest entry and
+    feed dir carry, its real lsn span, and — when known, as the replay
+    probe knows them — the buckets its keys hash to and its event
+    count."""
+
+    batch_id: str
+    lsn_lo: int
+    lsn_hi: int
+    touched: list[int] | None = None
+    rows: int | None = None
 
 
 @dataclass
@@ -197,17 +229,23 @@ class CdcEngine:
     def apply_batch(
         self,
         batch: DataFrame,
-        batch_id: str,
-        lsn_lo: int,
-        lsn_hi: int,
-        touched: list[int] | None = None,
+        *windows: LsnWindow,
         minhash_index=None,
         index_threshold: float = 0.5,
         index_max_fanout: int | None = None,
-        batch_rows: int | None = None,
-    ) -> dict:
+    ) -> list[dict]:
         """Normalize → dedup → MERGE → (optional near-dup index update +
-        per-batch pair report) → manifest-commit one micro-batch.
+        per-batch pair report) → manifest-commit the ``windows`` that
+        ``batch`` holds. Returns one manifest entry per window.
+
+        One window is the micro-batch. Several are a group
+        (:meth:`replay`): consecutive merge-on-read windows applied by
+        one grouped :meth:`StateTable.merge` — one LWW pass, one feed
+        write and one delta append — then committed one entry each, in
+        window order. Each entry keeps its window's ``mode``,
+        ``change_rows``, ``touched_buckets``, lsn span and
+        ``added_columns``; the group's write metrics go on the last. A
+        group takes no index: pair outputs are per window.
 
         The index step is the reference's "patch pass as part of the
         load lifecycle" (``orchestrator.py:113-114``) generalized: dedup
@@ -217,8 +255,11 @@ class CdcEngine:
         pairs overwritten per batch), so the commit stays the single
         exactly-once point.
         """
-        if self.manifest.is_applied(batch_id):
-            return {"batch_id": batch_id, "skipped": True}
+        group = len(windows) > 1
+        if not group and self.manifest.is_applied(windows[0].batch_id):
+            return [{"batch_id": windows[0].batch_id, "skipped": True}]
+        if group and minhash_index is not None:
+            raise ValueError("a window group takes no index: pair outputs are per window")
         # add-column evolution: new batch columns extend the registry;
         # batches missing known columns are fine (NULL-filled in MERGE).
         cur_names = {f.name for f in self.registry.current.fields}
@@ -231,37 +272,52 @@ class CdcEngine:
             added = self.registry.evolve(merged_schema)
         if self.normalize is not None:
             batch = self.normalize(batch)
-        readers = 1 + bool(self.changes_dir) + (minhash_index is not None)
-        with shared(self.state.batch_winners(batch), readers) as winners:
-            metrics = self.state.merge(
-                batch,
-                touched=touched,
-                mode=self.merge_mode,
-                batch_rows=batch_rows,
-                changes_out=(
-                    os.path.join(self.changes_dir, f"batch={batch_id}")
-                    if self.changes_dir
-                    else None
-                ),
-                winners=winners,
+        touched, rows = [w.touched for w in windows], [w.rows for w in windows]
+        merge_args = {
+            "touched": None if None in touched else sorted(set().union(*touched)),
+            "mode": self.merge_mode,
+            "batch_rows": None if None in rows else sum(rows),
+        }
+        if self.changes_dir:
+            dirs = [os.path.join(self.changes_dir, f"batch={w.batch_id}") for w in windows]
+            merge_args["changes_out"] = (
+                [FeedWindow(d, w.lsn_hi, w.touched) for d, w in zip(dirs, windows)]
+                if group
+                else dirs[0]
             )
-            entry = {
-                "batch_id": batch_id,
-                "lsn_lo": int(lsn_lo),
-                "lsn_hi": int(lsn_hi),
-                "schema_version": self.registry.version,
-                "added_columns": [f.name for f in added],
-                "columns": batch.columns,
-                **metrics,
-            }
-            if minhash_index is not None:
-                entry.update(
-                    self._update_index(
-                        minhash_index, winners, batch_id, index_threshold,
-                        index_max_fanout, batch_rows,
+        index: dict = {}
+        if group:
+            metrics = self.state.merge(batch, **merge_args)
+        else:
+            readers = 1 + bool(self.changes_dir) + (minhash_index is not None)
+            with shared(self.state.batch_winners(batch), readers) as winners:
+                metrics = self.state.merge(batch, winners=winners, **merge_args)
+                if minhash_index is not None:
+                    index = self._update_index(
+                        minhash_index, winners, windows[0].batch_id,
+                        index_threshold, index_max_fanout, merge_args["batch_rows"],
                     )
-                )
-            return self.manifest.commit(entry)
+        per_window = metrics.pop("window_change_rows", None)
+        entries = []
+        for i, w in enumerate(windows):
+            entry = {
+                "batch_id": w.batch_id,
+                "lsn_lo": int(w.lsn_lo),
+                "lsn_hi": int(w.lsn_hi),
+                "schema_version": self.registry.version,
+                "added_columns": [f.name for f in added] if i == 0 else [],
+                "columns": batch.columns,
+            }
+            if i == len(windows) - 1:
+                entry.update(metrics, **index)
+            else:
+                entry.update((k, metrics[k]) for k in ("buckets", "mode") if k in metrics)
+            if group:
+                entry["touched_buckets"] = w.touched
+                if per_window is not None:
+                    entry["change_rows"] = per_window[i]
+            entries.append(self.manifest.commit(entry))
+        return entries
 
     #: unit separator — joins the MERGE key columns into the index's
     #: single doc id (no printable-text collisions).
@@ -329,20 +385,30 @@ class CdcEngine:
         aggregates: list | None = None,
     ) -> list[dict]:
         """Resumable replay: equal-width LSN windows above the manifest
-        high watermark. Returns the committed manifest entries.
+        high watermark. Returns the committed manifest entries, one per
+        window, in window order.
+
+        Consecutive windows are applied as one group (one
+        :meth:`apply_batch` call) while :meth:`StateTable._choose_mode`,
+        given their summed probe rows and the union of their touched
+        buckets, would still pick merge-on-read, and while each window's
+        feed dir is unpublished — so a group is only ever classified
+        against a state that holds none of its rows. Anything else
+        applies one window at a time, exactly as a group of one.
 
         ``minhash_index`` (a dedup.MinhashIndex) opts near-dup detection
         into the ingest loop: each micro-batch updates the index and its
-        manifest entry reports the pairs that batch made detectable.
-        ``maintenance`` runs the post-replay health check / compaction
-        policy (the reference's automatic lifecycle steps 7–8).
+        manifest entry reports the pairs that batch made detectable; it
+        keeps every window on its own. ``maintenance`` runs the
+        post-replay health check / compaction policy (the reference's
+        automatic lifecycle steps 7–8).
 
         ``aggregates`` (ivm.IncrementalAggregate list) are advanced
-        after every committed batch — downstream materialized views
-        stay fresh inside the ingest loop, and they are guaranteed to
-        run BEFORE any ``maintenance`` feed retention (an aggregate
-        can never lose an unapplied feed dir to the same replay's
-        prune)."""
+        after every committed group — one job folds all of its windows —
+        so downstream materialized views stay fresh inside the ingest
+        loop, and they are guaranteed to run BEFORE any ``maintenance``
+        feed retention (an aggregate can never lose an unapplied feed
+        dir to the same replay's prune)."""
         watermark = self.manifest.high_watermark()
         pending = changelog.filter(F.col(lsn_col) > watermark)
         # Micro-batch windows are aligned on absolute LSN
@@ -404,57 +470,83 @@ class CdcEngine:
                 .toLocalIterator()
             )
 
-        entries = []
+        def windows():
+            """:class:`LsnWindow` per window with events, in order. The
+            iterator yields (window, bucket) rows in global (__w, __b)
+            order — from the bounded driver-side sort, or streamed one
+            shuffle partition at a time — so a window's rows are
+            contiguous."""
+            cur_w: int | None = None
+            buckets: list[int] = []
+            lo = hi = rows = 0
+            for r in row_iter:
+                w = int(r["__w"])
+                if cur_w is not None and w != cur_w:
+                    # batch_id and the manifest record the REAL lsn span
+                    # (not the window bounds): a partially-filled tail
+                    # window must not advance the watermark past events
+                    # that haven't arrived yet, and its later events must
+                    # not collide with the applied id.
+                    yield LsnWindow(f"lsn_{lo}_{hi}", lo, hi, sorted(buckets), rows)
+                    buckets, rows = [], 0
+                if not buckets:
+                    lo, hi = int(r["__lo"]), int(r["__hi"])
+                else:
+                    lo, hi = min(lo, int(r["__lo"])), max(hi, int(r["__hi"]))
+                cur_w = w
+                buckets.append(int(r["__b"]))
+                rows += int(r["__n"])
+            if cur_w is not None:
+                yield LsnWindow(f"lsn_{lo}_{hi}", lo, hi, sorted(buckets), rows)
 
-        def flush(
-            wid: int, buckets: list[int], lo: int, hi: int, rows: int
-        ) -> None:
-            start, end = wid * batch_size, (wid + 1) * batch_size - 1
-            batch = pending.filter(F.col(lsn_col).between(start, end))
-            # batch_id and the manifest record the REAL lsn span (not the
-            # window bounds): a partially-filled tail window must not
-            # advance the watermark past events that haven't arrived yet,
-            # and its later events must not collide with the applied id.
-            entries.append(
+        def fresh(w: LsnWindow) -> bool:
+            """No attempt committed this window or published its feed."""
+            return not self.manifest.is_applied(w.batch_id) and not (
+                self.changes_dir
+                and os.path.isdir(os.path.join(self.changes_dir, f"batch={w.batch_id}"))
+            )
+
+        def mor(group: list[LsnWindow]) -> bool:
+            touched = sorted(set().union(*(w.touched for w in group)))
+            rows = sum(w.rows for w in group)
+            return self.state._choose_mode(self.merge_mode, touched, rows) == "mor"
+
+        entries: list[dict] = []
+
+        def flush(group: list[LsnWindow]) -> None:
+            if not group:
+                return
+            entries.extend(
                 self.apply_batch(
-                    batch,
-                    f"lsn_{lo}_{hi}",
-                    lo,
-                    hi,
-                    touched=sorted(buckets),
+                    pending.filter(F.col(lsn_col).between(group[0].lsn_lo, group[-1].lsn_hi)),
+                    *group,
                     minhash_index=minhash_index,
                     index_threshold=index_threshold,
                     index_max_fanout=index_max_fanout,
-                    batch_rows=rows,
                 )
             )
             for agg in aggregates or []:
                 agg.advance(self)
 
-        # The iterator yields (window, bucket) rows in global (__w, __b)
-        # order — from the bounded driver-side sort, or streamed one
-        # shuffle partition at a time — and each window's batch is
-        # applied as soon as its rows are exhausted (the order
-        # guarantees a window's rows are contiguous).
-        cur_w: int | None = None
-        cur_buckets: list[int] = []
-        cur_lo = cur_hi = cur_rows = 0
-        for r in row_iter:
-            w = int(r["__w"])
-            if cur_w is not None and w != cur_w:
-                flush(cur_w, cur_buckets, cur_lo, cur_hi, cur_rows)
-                cur_buckets = []
-                cur_rows = 0
-            if not cur_buckets:
-                cur_lo, cur_hi = int(r["__lo"]), int(r["__hi"])
-            else:
-                cur_lo = min(cur_lo, int(r["__lo"]))
-                cur_hi = max(cur_hi, int(r["__hi"]))
-            cur_w = w
-            cur_buckets.append(int(r["__b"]))
-            cur_rows += int(r["__n"])
-        if cur_w is not None:
-            flush(cur_w, cur_buckets, cur_lo, cur_hi, cur_rows)
+        # A window joins the group before it while both are fresh, the
+        # group's first window would apply merge-on-read alone, and the
+        # group with it would still. The state does not change until the
+        # group applies, so each check sees the state the group will be
+        # classified against.
+        group: list[LsnWindow] = []
+        for w in windows():
+            if not (
+                group
+                and minhash_index is None
+                and fresh(group[0])
+                and fresh(w)
+                and mor(group[:1])
+                and mor([*group, w])
+            ):
+                flush(group)
+                group = []
+            group.append(w)
+        flush(group)
         # catch up aggregates when no window flushed this call (batches
         # committed by an earlier, interrupted replay); if any window
         # flushed, its own per-batch advance already caught up
@@ -621,29 +713,23 @@ class CdcEngine:
         )
 
     def _prune_change_feed(self, retention: int) -> int:
-        """Count-based feed retention, made time-travel-safe once a
-        snapshot checkpoint exists: only batch dirs the NEWEST
-        checkpoint covers (manifest position ≤ the checkpoint's) are
-        eligible for pruning — removing an uncovered dir would destroy
-        ``state_as_of`` for every later batch. Without a checkpoint the
-        behavior is the original opt-in count prune (documented as
-        trading time travel for space). Dirs not in the manifest (the
-        published-but-uncommitted crash window) are never touched — the
-        re-driven batch reuses them."""
-        root = self.changes_dir
-        dirs = publish.published(root, "batch")
+        """Count-based feed retention: drop the oldest batch dirs, in
+        manifest order, until ``retention`` are left. Only committed
+        dirs are ever dropped: a dir the manifest has not committed (the
+        published-but-uncommitted crash window) is the feed its re-driven
+        batch reuses, and the state may already hold its mutations, so a
+        recomputed feed would come out empty. Once a snapshot checkpoint
+        exists only the dirs the NEWEST one covers (manifest position ≤
+        the checkpoint's) are eligible — removing an uncovered dir would
+        destroy ``state_as_of`` for every later batch; without one the
+        prune trades time travel for space (opt-in)."""
+        dirs = publish.published(self.changes_dir, "batch")
         if len(dirs) <= retention:
             return 0
+        pos = {e["batch_id"]: i for i, e in enumerate(self._merge_entries())}
         cps = self._feed_checkpoints()
-        ids = [e["batch_id"] for e in self._merge_entries()]
-        pos = {bid: i for i, bid in enumerate(ids)}
-        newest_cp = max((pos[b] for b in cps if b in pos), default=None)
-        if newest_cp is None:
-            return self._prune_batch_dirs(root, retention)
-        removable = sorted(
-            (b for b in dirs if pos.get(b, newest_cp + 1) <= newest_cp),
-            key=pos.__getitem__,
-        )
+        horizon = max((pos[b] for b in cps if b in pos), default=len(pos))
+        removable = sorted((b for b in dirs if pos.get(b, horizon + 1) <= horizon), key=pos.get)
         doomed = removable[: len(dirs) - retention]
         for b in doomed:
             shutil.rmtree(dirs[b], ignore_errors=True)

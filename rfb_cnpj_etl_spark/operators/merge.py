@@ -34,8 +34,9 @@ import os
 import shutil
 from collections.abc import Iterator
 from contextlib import contextmanager
+from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -51,6 +52,35 @@ from .store import (
 )
 
 
+#: a grouped merge's window index column (0 = its first window)
+_WINDOW = "__window"
+
+
+class FeedWindow(NamedTuple):
+    """One window of a grouped :meth:`StateTable.merge`: the feed dir it
+    publishes, the highest lsn it holds and the buckets its keys hash
+    to."""
+
+    out_dir: str
+    lsn_hi: int
+    touched: list[int]
+
+
+@contextmanager
+def _conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Session conf ``key`` set to ``value`` for the block."""
+    conf = spark.conf
+    prev = conf.get(key, None)
+    conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            conf.unset(key)
+        else:
+            conf.set(key, prev)
+
+
 @contextmanager
 def shared(df: DataFrame, readers: int) -> Iterator[DataFrame]:
     """``df`` for ``readers`` consumers: persisted while two or more
@@ -62,17 +92,25 @@ def shared(df: DataFrame, readers: int) -> Iterator[DataFrame]:
     # read when the cache is defined: only with it on does AQE size the
     # cached partitions (else one per shuffle partition: a task for each
     # reader and a file for each write)
-    conf, key = df.sparkSession.conf, "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    prev = conf.get(key)
-    conf.set(key, "true")
-    try:
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    with _conf(df.sparkSession, key, "true"):
         df = df.persist()
-    finally:
-        conf.set(key, prev)
     try:
         yield df
     finally:
         df.unpersist()
+
+
+def _write_feed(df: DataFrame, staging: str, *partition: str) -> None:
+    """Write a feed frame. Its one semi-join of the touched scans (base
+    ∪ delta) with the winners' keys stays above the union: the optimizer
+    would push it into each scan, and each copy builds its own broadcast
+    of the same keys."""
+    rules = "spark.sql.optimizer.excludedRules"
+    prev = df.sparkSession.conf.get(rules, None)
+    push = "org.apache.spark.sql.catalyst.optimizer.PushDownLeftSemiAntiJoin"
+    with _conf(df.sparkSession, rules, ",".join(filter(None, [prev, push]))):
+        df.write.mode("overwrite").partitionBy(*partition).parquet(staging)
 
 
 def read_feed(spark: SparkSession, dirs: list[str], root: str | None = None) -> DataFrame:
@@ -199,10 +237,13 @@ class StateTable(BucketedParquetStore):
         row per key, tombstones included, with ``bucket`` and
         ``content_sha256`` (NULL on a tombstone). O(batch) and a pure
         function of the batch, so a crash-replay recomputes identical
-        rows; the feed, the MERGE and the engine's index all read it."""
+        rows; the feed, the MERGE and the engine's index all read it.
+        A grouped merge's batch carries its window index, and keeps one
+        winner per key and window."""
         lsn_col = lsn_col or self.lsn_col
         op_col = op_col or self.op_col
-        winners = last_writer_wins_agg(batch, self.keys, lsn_col, op_col)
+        keys = [*self.keys, _WINDOW] if _WINDOW in batch.columns else self.keys
+        winners = last_writer_wins_agg(batch, keys, lsn_col, op_col)
         if "bucket" not in winners.columns:
             winners = winners.withColumn(
                 "bucket", key_bucket(self.keys, self.buckets)
@@ -222,7 +263,7 @@ class StateTable(BucketedParquetStore):
         touched: list[int] | None = None,
         mode: str = "auto",
         batch_rows: int | None = None,
-        changes_out: str | None = None,
+        changes_out: str | list[FeedWindow] | None = None,
         *,
         winners: DataFrame | None = None,
     ) -> dict:
@@ -240,7 +281,7 @@ class StateTable(BucketedParquetStore):
         The batch is deduplicated ONCE (:meth:`batch_winners`); the
         feed, the MOR append and the COW fold of state ∪ winners (LWW is
         associative) all read those winners. ``winners`` passes a
-        caller-owned :meth:`batch_winners` frame. ``touched`` can
+        caller-owned :meth:`batch_winners` frame. ``touched`` can be
         precomputed for all batches in a single upfront pass
         (CdcEngine.replay does), stored sha256 is reused so only new
         winners hash, and the per-bucket manifest metrics ride the
@@ -270,6 +311,16 @@ class StateTable(BucketedParquetStore):
         can consume this table as a changelog of its own. The dir must
         be unique per batch (the engine uses ``batch=<batch_id>``);
         see :meth:`_emit_changes` for the exactly-once crash contract.
+
+        A list of :class:`FeedWindow` makes this a **grouped merge** of
+        consecutive windows (``CdcEngine.replay``): window ``i`` holds
+        the batch rows above the previous window's ``lsn_hi``. One LWW
+        pass keeps a winner per key and window, one classification
+        diffs each window against the state plus the group's earlier
+        windows (:meth:`_changes`), one write publishes every window's
+        feed dir, and one merge-on-read append writes the group's net
+        winners. The result's ``change_rows`` is the group's total and
+        ``window_change_rows`` splits it per window.
         """
         if mode not in ("auto", "cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}")
@@ -280,19 +331,38 @@ class StateTable(BucketedParquetStore):
         if not touched:
             return {"touched_buckets": [], "bucket_rows": {}, "rows": 0}
 
+        group = isinstance(changes_out, list)
+        if group:
+            # window index = how many earlier windows end below the row
+            batch = batch.withColumn(
+                _WINDOW,
+                sum(
+                    ((F.col(lsn_col) > w.lsn_hi).cast("int") for w in changes_out[:-1]),
+                    F.lit(0),
+                ),
+            )
         own = winners is None
         if own:
             winners = self.batch_winners(batch, lsn_col, op_col)
         readers = 2 if own and changes_out is not None else 1
         with shared(winners, readers) as winners:
             feed_metrics: dict = {}
-            if changes_out is not None:
+            fresh: list[str] = []
+            if group:
+                feed_metrics, fresh = self._emit_group_changes(
+                    winners, lsn_col, op_col, touched, changes_out, batch_rows
+                )
+            elif changes_out is not None:
                 # before-image diff MUST run before any state mutation below
                 feed_metrics = self._emit_changes(
                     winners, lsn_col, op_col, touched, changes_out, batch_rows
                 )
+                fresh = [] if feed_metrics.get("change_feed_reused") else [changes_out]
             try:
-                if self._choose_mode(mode, touched, batch_rows) == "mor":
+                if group:
+                    net = last_writer_wins_agg(winners, self.keys, lsn_col, op_col)
+                    res = self._merge_mor(net.drop(_WINDOW), op_col, touched)
+                elif self._choose_mode(mode, touched, batch_rows) == "mor":
                     res = self._merge_mor(winners, op_col, touched)
                 else:
                     res = self._merge_cow(winners, lsn_col, op_col, touched)
@@ -303,10 +373,8 @@ class StateTable(BucketedParquetStore):
                 # guaranteed unchanged at this raise, so unpublish it —
                 # otherwise the re-driven batch would reuse the poisoned
                 # feed via the exactly-once reuse check.
-                if changes_out is not None and not feed_metrics.get(
-                    "change_feed_reused"
-                ):
-                    shutil.rmtree(changes_out, ignore_errors=True)
+                for out_dir in fresh:
+                    shutil.rmtree(out_dir, ignore_errors=True)
                 raise
         res.update(feed_metrics)
         return res
@@ -358,7 +426,7 @@ class StateTable(BucketedParquetStore):
             feed = self._changes(winners, lsn_col, op_col, touched, batch_rows)
             schema = feed.schema.jsonValue()
             feed = feed.observe(obs, F.count(F.lit(1)).alias("rows"))
-            feed.write.mode("overwrite").parquet(staging)
+            _write_feed(feed, staging)
             try:
                 rows = int(obs.get["rows"])
             except Exception:  # noqa: BLE001 — AQE may prune the metrics node
@@ -374,6 +442,49 @@ class StateTable(BucketedParquetStore):
             return {"change_rows": res.get("rows"), "change_feed_reused": True}
         return {"change_rows": res["rows"]}
 
+    def _emit_group_changes(
+        self,
+        winners: DataFrame,
+        lsn_col: str,
+        op_col: str,
+        touched: list[int],
+        windows: list[FeedWindow],
+        batch_rows: int | None = None,
+    ) -> tuple[dict, list[str]]:
+        """Publish a grouped merge's feed: ONE write of :meth:`_changes`
+        partitioned by window, then each window's dir published on its
+        own, in window order, with the :attr:`FEED_META` sidecar a
+        single-window merge writes (:func:`publish.publish_each`). Every
+        dir is published before the state mutates, so the crash contract
+        of :meth:`_emit_changes` holds per window. Returns the metrics
+        and the dirs this call published."""
+        k = len(windows)
+
+        def write(staging: str) -> list[tuple[str, dict]]:
+            feed = self._changes(winners, lsn_col, op_col, touched, batch_rows)
+            schema = feed.drop(_WINDOW).schema.jsonValue()
+            obs = Observation()
+            feed = feed.observe(
+                obs,
+                *[F.sum((F.col(_WINDOW) == i).cast("long")).alias(f"w{i}") for i in range(k)],
+            )
+            # one task per window: one parquet file per feed dir
+            _write_feed(feed.repartition(_WINDOW), staging, _WINDOW)
+            parts = [os.path.join(staging, f"{_WINDOW}={i}") for i in range(k)]
+            try:
+                rows = [int(obs.get[f"w{i}"] or 0) for i in range(k)]
+            except Exception:  # noqa: BLE001 — AQE may prune the metrics node
+                rows = [parquet_footer_rows(p) for p in parts]
+            return [
+                (p, {"rows": n, "touched": sorted(w.touched), "schema": schema})
+                for p, n, w in zip(parts, rows, windows)
+            ]
+
+        res = publish.publish_each([w.out_dir for w in windows], write, self.FEED_META)
+        rows = [r.get("rows") for r in res]
+        fresh = [w.out_dir for w, r in zip(windows, res) if not r["reused"]]
+        return {"change_rows": sum(rows), "window_change_rows": rows}, fresh
+
     def _changes(
         self,
         winners: DataFrame,
@@ -387,38 +498,50 @@ class StateTable(BucketedParquetStore):
         publishes.
 
         ONE scan of the touched base and delta files — every column with
-        preimages on, else keys + lsn (+ op) — left-semi-joined with the
-        winners' keys before any aggregate, so only the O(batch) rows
-        sharing a key with a winner reach :meth:`_fold_delta`, which
-        folds them into the pre-image: one row per key, crash-duplicated
-        delta rows included. The keys are broadcast only when the
-        probe's ``batch_rows`` says they fit Spark's own broadcast
-        threshold; otherwise the planner picks, and a bulk window
-        shuffles. (Left alone, it sizes the persisted winners by a plan
-        estimate before their cache exists, and may broadcast the
-        O(state) side instead.)
+        preimages on, else keys + lsn (+ op) — left-semi-joined, as one
+        union, with the winners' keys before any aggregate, so only the
+        O(batch) rows sharing a key with a winner go further. The keys
+        are broadcast only when the probe's ``batch_rows`` says they fit
+        Spark's own broadcast threshold; otherwise the planner picks,
+        and a bulk window shuffles. (Left alone, it sizes the persisted
+        winners by a plan estimate before their cache exists, and may
+        broadcast the O(state) side instead.)
 
-        ONE join, winners ⟕ pre-image, classifies each change: no
-        before-row → ``insert`` (delete-on-absent emits nothing);
-        before-row outranked (lsn, delete-priority) → ``update`` /
-        ``delete``; a stale winner the state outranks emits nothing.
-        With preimages on, each update/delete row also yields, from the
-        same joined row, the row it REPLACES: ``update_preimage`` /
-        ``delete_preimage`` with the old lsn and ``prev_<lsn>`` NULL. It
-        carries every column of the old row, also state columns this
-        batch omits (a downstream aggregate must subtract a retired
-        non-NULL contribution); a column the batch adds reads NULL."""
+        Each winner meets the row it would replace: for one window, one
+        join winners ⟕ pre-image, the candidates folded by
+        :meth:`_fold_delta` to one row per key (crash-duplicated delta
+        rows included). Winners of a grouped merge carry their window
+        index, and a window's winner meets the LWW of the pre-image
+        candidates and the same key's winners in earlier windows: a
+        running max over the key, ordered by window. A tombstone there
+        means no row.
+
+        That row classifies each change: none → ``insert``
+        (delete-on-absent emits nothing); outranked (lsn,
+        delete-priority) → ``update`` / ``delete``; a stale winner the
+        state outranks emits nothing. With preimages on, each
+        update/delete row also yields, from the same row pair, the row
+        it REPLACES: ``update_preimage`` / ``delete_preimage`` with the
+        old lsn and ``prev_<lsn>`` NULL. It carries every column of the
+        old row, also state columns this batch omits (a downstream
+        aggregate must subtract a retired non-NULL contribution); a
+        column the batch adds reads NULL."""
         prev_col = f"prev_{lsn_col}"
-        skip = (*self.keys, op_col, self.op_col, "bucket", "content_sha256")
-        old: dict[str, str] = {}
-        base = self._read_base_buckets(touched) if self.exists() else None
+        group = [_WINDOW] if _WINDOW in winners.columns else []
+        skip = (*self.keys, op_col, self.op_col, "bucket", "content_sha256", _WINDOW)
+        scan = None
+        if self.exists():
+            scan = self._read_base_buckets(touched)
+            if not self.feed_preimages:
+                scan = scan.select(*self.keys, lsn_col)
+            scan = scan.withColumn(self.op_col, F.lit(OP_UPSERT))
         delta_ids = [b for b in self.delta_bucket_ids() if b in set(touched)]
-        delta = self._read_delta(delta_ids) if delta_ids else None
-        if base is None and delta is None:
-            joined = winners.withColumn(
-                prev_col, F.lit(None).cast(dict(winners.dtypes)[lsn_col])
-            )
-        else:
+        if delta_ids:
+            delta = self._read_delta(delta_ids)
+            if not self.feed_preimages:
+                delta = delta.select(*self.keys, lsn_col, self.op_col)
+            scan = delta if scan is None else scan.unionByName(delta, allowMissingColumns=True)
+        if scan is not None:
             keys = winners.select(*self.keys)
             conf = self.spark._jsparkSession.sessionState().conf()
             if batch_rows is not None and (
@@ -426,17 +549,46 @@ class StateTable(BucketedParquetStore):
                 <= conf.autoBroadcastJoinThreshold()
             ):
                 keys = F.broadcast(keys)
-
-            def candidates(scan: DataFrame, *op: str) -> DataFrame:
-                if not self.feed_preimages:
-                    scan = scan.select(*self.keys, lsn_col, *op)
-                return scan.join(keys, self.keys, "left_semi")
-
-            pre = base = candidates(base) if base is not None else None
-            if delta is not None:
-                pre = self._fold_delta(base, candidates(delta, self.op_col))
-            # the replaced row's columns, renamed apart from the winner's
-            old = {c: f"__old_{c}" for c in pre.columns if c not in (*skip, lsn_col)}
+            scan = scan.join(keys, self.keys, "left_semi")
+        # the replaced row's columns, renamed apart from the winner's
+        old: dict[str, str] = {}
+        if self.feed_preimages and (scan is not None or group):
+            cols = dict.fromkeys(
+                [*(scan.columns if scan is not None else []), *(winners.columns if group else [])]
+            )
+            old = {c: f"__old_{c}" for c in cols if c not in (*skip, lsn_col)}
+        if group:
+            rows = winners
+            if scan is not None:
+                rows = (
+                    scan.withColumnRenamed(self.op_col, op_col)
+                    .withColumn(_WINDOW, F.lit(-1))
+                    .unionByName(winners, allowMissingColumns=True)
+                )
+            before = (
+                Window.partitionBy(*self.keys)
+                .orderBy(_WINDOW)
+                .rangeBetween(Window.unboundedPreceding, -1)
+            )
+            prio = F.when(F.col(op_col) == OP_DELETE, 1).otherwise(0)
+            rank = F.struct(lsn_col, prio.alias("__p"), *old)
+            prev = F.col("__prev")
+            live = prev["__p"] == 0
+            joined = (
+                rows.withColumn("__prev", F.max(rank).over(before))
+                .filter(F.col(_WINDOW) >= 0)
+                .select(
+                    *winners.columns,
+                    F.when(live, prev[lsn_col]).alias(prev_col),
+                    *[F.when(live, prev[c]).alias(o) for c, o in old.items()],
+                )
+            )
+        elif scan is None:
+            joined = winners.withColumn(
+                prev_col, F.lit(None).cast(dict(winners.dtypes)[lsn_col])
+            )
+        else:
+            pre = self._fold_delta(None, scan) if delta_ids else scan.drop(self.op_col)
             joined = winners.join(
                 pre.select(
                     *self.keys,
@@ -460,7 +612,7 @@ class StateTable(BucketedParquetStore):
         )
         data_cols = [c for c in winners.columns if c not in skip]
         if not old:  # preimages off, or no state yet
-            return changes.select(*self.keys, "change_type", *data_cols, prev_col)
+            return changes.select(*self.keys, "change_type", *data_cols, prev_col, *group)
         # one copy of each row, two of an update/delete: the second is
         # its preimage
         replaced = F.col("change_type").isin("update", "delete")
@@ -483,6 +635,7 @@ class StateTable(BucketedParquetStore):
             *[pick(c) for c in data_cols],
             F.when(~is_pre, prev).alias(prev_col),
             *[pick(c) for c in old if c not in (*data_cols, lsn_col)],
+            *group,
         )
 
     def _merge_mor(

@@ -9,9 +9,11 @@ It is the reference's ``.part`` + ``os.replace`` idiom
 * a directory is written into the dot-hidden staging dir
   ``.<name>.staging`` next to its target, together with a JSON meta
   sidecar, and only then renamed into place — once for a write-once
-  artifact (:func:`publish_once`: feed batches, checkpoints), or as a
-  rename-aside swap through ``<name>.old`` for one that is rewritten
-  (:func:`replace_dir`: the IVM aggregate, a rebucketed store).
+  artifact (:func:`publish_once`: feed batches, checkpoints; or
+  :func:`publish_each` for several that one write produces: a grouped
+  merge's feed batches), or as a rename-aside swap through
+  ``<name>.old`` for one that is rewritten (:func:`replace_dir`: the
+  IVM aggregate, a rebucketed store).
 
 So a reader never sees a partly written directory: staging is hidden
 from ``name=*`` globs and listings, and :func:`published` lists only
@@ -85,6 +87,40 @@ def publish_once(target: str, write: Callable[[str], dict], meta: str) -> dict:
     payload = _stage(target, write, meta)
     os.rename(_staging(target), target)
     return {**payload, "reused": False}
+
+
+def publish_each(
+    targets: list[str],
+    write: Callable[[str], list[tuple[str, dict]]],
+    meta: str,
+) -> list[dict]:
+    """Publish write-once directories that ONE write produces.
+
+    ``write(staging)`` writes into a staging dir shared by the targets
+    (hidden ``.group.staging`` next to them) and returns, per target in
+    order, the sub-dir holding its files (missing: no files) and its
+    meta payload. Each target is then published as :func:`publish_once`
+    publishes it — its own staging and sidecar, one atomic rename — in
+    order, so a crash leaves a published prefix. The shared staging is
+    dropped on the way out, and before the write in case a crash left
+    it. Returns :func:`publish_once`'s result per target."""
+    shared = os.path.join(os.path.dirname(targets[0]), ".group.staging")
+    shutil.rmtree(shared, ignore_errors=True)
+    try:
+        out = []
+        for target, (part, payload) in zip(targets, write(shared)):
+
+            def move(staging: str, part=part, payload=payload) -> dict:
+                if os.path.isdir(part):
+                    os.replace(part, staging)
+                else:
+                    os.makedirs(staging)
+                return payload
+
+            out.append(publish_once(target, move, meta))
+        return out
+    finally:
+        shutil.rmtree(shared, ignore_errors=True)
 
 
 def replace_dir(target: str, write: Callable[[str], dict], meta: str) -> dict:

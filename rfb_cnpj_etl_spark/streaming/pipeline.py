@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import CdcEngine
+from ..engine import CdcEngine, LsnWindow
 from ..operators import publish
 from ..operators.merge import read_feed
 from ..schema import CHANGELOG_SCHEMA, CODE_KEY
@@ -121,11 +121,8 @@ class StreamingCdcPipeline:
         ).collect()[0]
         self.engine.apply_batch(
             batch,
-            batch_id,
-            int(bounds["lo"]),
-            int(bounds["hi"]),
+            LsnWindow(batch_id, int(bounds["lo"]), int(bounds["hi"]), rows=int(bounds["n"])),
             minhash_index=self.minhash_index,
-            batch_rows=int(bounds["n"]),
         )
         for agg in self.aggregates:
             agg.advance(self.engine)

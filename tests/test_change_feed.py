@@ -529,6 +529,27 @@ def _broadcast_rows(spark, path_part):
     return rows
 
 
+def _semi_join_broadcasts(spark, path_part):
+    """Broadcast hash left-semi joins, as executed, in the SQL
+    executions whose plan mentions ``path_part``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    joins = 0
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if path_part not in e.physicalPlanDescription():
+            continue
+        nodes = store.planGraph(e.executionId()).allNodes()
+        joins += sum(
+            1
+            for j in range(nodes.size())
+            if nodes.apply(j).name() == "BroadcastHashJoin"
+            and "LeftSemi" in nodes.apply(j).desc()
+        )
+    return joins
+
+
 class TestOneLwwPassPerWindow:
     """The window's LWW winners and the feed's classification are each
     computed once and shared: by the feed, the MERGE and the index."""
@@ -618,6 +639,9 @@ class TestOneLwwPassPerWindow:
         staging = os.path.join(eng.changes_dir, f".batch={entry['batch_id']}.staging")
         rows = _broadcast_rows(spark, staging)
         assert rows and max(rows) <= winners, (rows, winners)
+        # the touched base and delta share one semi-join, so the
+        # winners' keys are broadcast once
+        assert _semi_join_broadcasts(spark, staging) == 1
 
     def test_feed_equals_oracle_state_diff_per_window(self, spark, tmp_path):
         """COW first window, MOR after, hot keys, deletes and an
@@ -700,8 +724,9 @@ class TestOneLwwPassPerWindow:
         eng.replay(log.filter("lsn < 100"), batch_size=100)
         eng.merge_mode = "mor"
         assert len(eng.replay(log, batch_size=100)) == 4
-        # one window's winners at a time, held through the merge
-        assert held == [1] * 5
+        # one set of winners at a time, held through the merge: the COW
+        # window's, then the four MOR windows' as one group
+        assert held == [1, 1]
         assert persisted() == before
 
         # a merge that raises releases its frames too
