@@ -8,32 +8,32 @@ One call = one resumable CDC replay::
 
 The log is cut into LSN windows above ``manifest.high_watermark()``; one
 upfront probe gives each window its touched buckets and event count.
-Per window: normalize (vectorized cleaners) → ONE LWW dedup into the
-batch winners → optional change feed (one classification of the winners
-against the pre-image, published before the state mutates) →
-bucket-pruned MERGE of the winners → optional index update from the
-same winners → atomically commit a manifest entry carrying lsn range,
-per-bucket row counts (per-partition lineage + metrics, the north_rule
-requirement) and schema version.
 
-**Group apply.** A window's cost is fixed Spark jobs, not data, so
-consecutive windows of one call are applied as one plan while, taken
-together, they would still apply merge-on-read: one LWW pass keeps a
-winner per key and window, one classification diffs each window against
-the pre-image and the group's earlier windows, one write publishes every
-window's feed dir, and one delta append writes the group's net winners.
-Each window still commits its own manifest entry, in window order, so
-it keeps its batch id, feed dir and ``state_as_of`` point; aggregates
-advance once per group. COW windows, engines fed a MinHash index (whose
-pair outputs are per window) and windows whose feed dir is already
-published apply one at a time.
+**One apply path.** :meth:`CdcEngine.apply_batch` applies one or more
+consecutive windows as one plan: normalize (vectorized cleaners) → ONE
+LWW pass into the winners, one per key and window → optional change
+feed (one classification of each window's winners against the pre-image
+and the earlier windows, one write publishing every window's feed dir
+before the state mutates) → bucket-pruned MERGE of the net winners →
+optional index update from the same winners → one manifest entry per
+window, committed in window order, carrying its lsn range, per-bucket
+row counts (per-partition lineage + metrics, the north_rule
+requirement) and schema version. A window's cost is fixed Spark jobs,
+not data, so :meth:`CdcEngine.replay` hands consecutive windows of one
+call to one ``apply_batch`` while, taken together, they would still
+apply merge-on-read; each window keeps its batch id, feed dir and
+``state_as_of`` point, and aggregates advance once per call. COW
+windows, engines fed a MinHash index (whose pair outputs are per
+window) and windows whose feed dir is already published apply as a
+group of one.
 
 **Crash contract.** Feeds publish before the state mutates, the state
 append is LWW-idempotent, and the manifest commit is each window's
 exactly-once point. A crash after j of a group's k commits re-drives
 windows j+1..k; their feed dirs are published, so each applies on its
-own and reuses its feed. Restart resumes after the high watermark;
-re-delivered batches are no-ops.
+own and reuses its feed. Restart resumes after the high watermark, with
+the schema registry the manifest committed; re-delivered batches are
+no-ops.
 """
 
 from __future__ import annotations
@@ -44,15 +44,16 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators import publish
+from .operators.dedup import last_writer_wins_agg
 from .operators.merge import FeedWindow, StateTable, read_feed, shared
 from .operators.store import key_bucket, parquet_footer_rows
 from .plans.checkpoint import Manifest
-from .schema import CHANGELOG_SCHEMA, CODE_KEY, OP_DELETE, SchemaRegistry
+from .schema import CHANGELOG_SCHEMA, CODE_KEY, OP_DELETE, OP_UPSERT, SchemaRegistry
 
 
 class LsnWindow(NamedTuple):
@@ -205,7 +206,15 @@ class CdcEngine:
             feed_preimages=feed_preimages,
         )
         self.normalize = normalize
-        self.registry = registry or SchemaRegistry(CHANGELOG_SCHEMA)
+        if registry is None:
+            # resume the schema history the manifest committed — not the
+            # state's layout marker, which a crash between a window's
+            # append and its commit leaves holding uncommitted columns
+            registry = SchemaRegistry(CHANGELOG_SCHEMA)
+            last = next((e for e in reversed(self.manifest.entries()) if "columns" in e), None)
+            if last is not None:
+                registry.resume(last["columns"], self.manifest.schema_version())
+        self.registry = registry
         #: per-batch write strategy: "cow" always rewrites touched
         #: buckets, "mor" always appends delta files, "auto" decides per
         #: batch from the batch-size/state-size ratio (StateTable.merge).
@@ -238,14 +247,16 @@ class CdcEngine:
         per-batch pair report) → manifest-commit the ``windows`` that
         ``batch`` holds. Returns one manifest entry per window.
 
-        One window is the micro-batch. Several are a group
-        (:meth:`replay`): consecutive merge-on-read windows applied by
-        one grouped :meth:`StateTable.merge` — one LWW pass, one feed
-        write and one delta append — then committed one entry each, in
-        window order. Each entry keeps its window's ``mode``,
-        ``change_rows``, ``touched_buckets``, lsn span and
-        ``added_columns``; the group's write metrics go on the last. A
-        group takes no index: pair outputs are per window.
+        One path for any window count: one LWW pass into the winners
+        (one per key and window when the feed is on), one
+        :meth:`StateTable.merge` — one feed write publishing every
+        window's dir and one write of the net winners — then one entry
+        per window, committed in window order. Each entry keeps its
+        window's ``mode``, ``change_rows``, ``touched_buckets``, lsn span
+        and ``added_columns``; the write metrics go on the last. One
+        window is the micro-batch, a group of one; several are a group
+        of consecutive merge-on-read windows (:meth:`replay`). Only one
+        window takes an index: pair outputs are per window.
 
         The index step is the reference's "patch pass as part of the
         load lifecycle" (``orchestrator.py:113-114``) generalized: dedup
@@ -255,10 +266,9 @@ class CdcEngine:
         pairs overwritten per batch), so the commit stays the single
         exactly-once point.
         """
-        group = len(windows) > 1
-        if not group and self.manifest.is_applied(windows[0].batch_id):
-            return [{"batch_id": windows[0].batch_id, "skipped": True}]
-        if group and minhash_index is not None:
+        if all(self.manifest.is_applied(w.batch_id) for w in windows):
+            return [{"batch_id": w.batch_id, "skipped": True} for w in windows]
+        if len(windows) > 1 and minhash_index is not None:
             raise ValueError("a window group takes no index: pair outputs are per window")
         # add-column evolution: new batch columns extend the registry;
         # batches missing known columns are fine (NULL-filled in MERGE).
@@ -278,25 +288,23 @@ class CdcEngine:
             "mode": self.merge_mode,
             "batch_rows": None if None in rows else sum(rows),
         }
+        feed = None
         if self.changes_dir:
-            dirs = [os.path.join(self.changes_dir, f"batch={w.batch_id}") for w in windows]
-            merge_args["changes_out"] = (
-                [FeedWindow(d, w.lsn_hi, w.touched) for d, w in zip(dirs, windows)]
-                if group
-                else dirs[0]
-            )
+            feed = [
+                FeedWindow(
+                    os.path.join(self.changes_dir, f"batch={w.batch_id}"), w.lsn_hi, w.touched
+                )
+                for w in windows
+            ]
         index: dict = {}
-        if group:
-            metrics = self.state.merge(batch, **merge_args)
-        else:
-            readers = 1 + bool(self.changes_dir) + (minhash_index is not None)
-            with shared(self.state.batch_winners(batch), readers) as winners:
-                metrics = self.state.merge(batch, winners=winners, **merge_args)
-                if minhash_index is not None:
-                    index = self._update_index(
-                        minhash_index, winners, windows[0].batch_id,
-                        index_threshold, index_max_fanout, merge_args["batch_rows"],
-                    )
+        readers = 1 + bool(feed) + (minhash_index is not None)
+        with shared(self.state.batch_winners(batch, windows=feed), readers) as winners:
+            metrics = self.state.merge(batch, changes_out=feed, winners=winners, **merge_args)
+            if minhash_index is not None:
+                index = self._update_index(
+                    minhash_index, winners, windows[0].batch_id,
+                    index_threshold, index_max_fanout, merge_args["batch_rows"],
+                )
         per_window = metrics.pop("window_change_rows", None)
         entries = []
         for i, w in enumerate(windows):
@@ -312,10 +320,10 @@ class CdcEngine:
                 entry.update(metrics, **index)
             else:
                 entry.update((k, metrics[k]) for k in ("buckets", "mode") if k in metrics)
-            if group:
+            if w.touched is not None:
                 entry["touched_buckets"] = w.touched
-                if per_window is not None:
-                    entry["change_rows"] = per_window[i]
+            if per_window is not None:
+                entry["change_rows"] = per_window[i]
             entries.append(self.manifest.commit(entry))
         return entries
 
@@ -388,13 +396,13 @@ class CdcEngine:
         high watermark. Returns the committed manifest entries, one per
         window, in window order.
 
-        Consecutive windows are applied as one group (one
-        :meth:`apply_batch` call) while :meth:`StateTable._choose_mode`,
-        given their summed probe rows and the union of their touched
-        buckets, would still pick merge-on-read, and while each window's
-        feed dir is unpublished — so a group is only ever classified
-        against a state that holds none of its rows. Anything else
-        applies one window at a time, exactly as a group of one.
+        Every window goes through :meth:`apply_batch`, the one apply
+        path. Consecutive windows share one call (a group) while
+        :meth:`StateTable._choose_mode`, given their summed probe rows
+        and the union of their touched buckets, would still pick
+        merge-on-read, and while each window's feed dir is unpublished —
+        so a group is only ever classified against a state that holds
+        none of its rows. Any other window is a group of one.
 
         ``minhash_index`` (a dedup.MinhashIndex) opts near-dup detection
         into the ingest loop: each micro-batch updates the index and its
@@ -853,8 +861,6 @@ class CdcEngine:
             raise ValueError(f"batch {batch_id!r} not in the manifest")
 
         def write(staging: str) -> dict:
-            from pyspark.sql import Observation
-
             if batch_id == ids[-1]:
                 # newest batch: the live state IS the snapshot — one
                 # state scan, no feed fold (and no feed-coverage
@@ -930,7 +936,7 @@ class CdcEngine:
         per-batch state copies are ever written, which is what makes
         every batch a readable snapshot for free. Correctness: each
         batch's feed is its net diff vs the pre-batch state
-        (``_emit_changes``) and a checkpoint is the exact post-batch
+        (``StateTable._emit_changes``) and a checkpoint is the exact post-batch
         state with original LSNs, so the union replayed under the same
         LWW fold (max lsn, delete-priority tie-break) reproduces the
         post-batch state exactly — including keys deleted and later
@@ -977,8 +983,6 @@ class CdcEngine:
                     "pruning to keep later batches reconstructible)"
                 )
             dirs.append(d)
-        from .operators.dedup import OP_DELETE, OP_UPSERT, last_writer_wins_agg
-
         op_col = self.state.op_col
         parts: list[DataFrame] = []
         if cp_dir is not None:

@@ -243,8 +243,9 @@ class IncrementalAggregate:
     def _check_preimage_counts(counts: dict) -> None:
         """Fail loud if the feed lacks preimage rows — refreshing from a
         preimage-less feed would silently double-count every update.
-        Invariant of ``StateTable._emit_changes(feed_preimages=True)``:
-        each update/delete row has exactly one preimage twin, so the
+        Invariant of the feed a ``StateTable(feed_preimages=True)``
+        publishes (``StateTable._changes``): each update/delete row has
+        exactly one preimage twin, so the
         per-kind totals must match over any whole set of batches."""
         for kind in ("update", "delete"):
             if counts.get(kind, 0) != counts.get(f"{kind}_preimage", 0):

@@ -52,18 +52,18 @@ from .store import (
 )
 
 
-#: a grouped merge's window index column (0 = its first window)
+#: the feed's window index column (0 = a merge's first window)
 _WINDOW = "__window"
 
 
 class FeedWindow(NamedTuple):
-    """One window of a grouped :meth:`StateTable.merge`: the feed dir it
-    publishes, the highest lsn it holds and the buckets its keys hash
-    to."""
+    """One window of a :meth:`StateTable.merge`: the feed dir it
+    publishes, the highest lsn it holds (unused for the last window) and
+    the buckets its keys hash to (None: the merge's)."""
 
     out_dir: str
-    lsn_hi: int
-    touched: list[int]
+    lsn_hi: int | None = None
+    touched: list[int] | None = None
 
 
 @contextmanager
@@ -231,18 +231,29 @@ class StateTable(BucketedParquetStore):
         )
 
     def batch_winners(
-        self, batch: DataFrame, lsn_col: str | None = None, op_col: str | None = None
+        self,
+        batch: DataFrame,
+        lsn_col: str | None = None,
+        op_col: str | None = None,
+        windows: list[FeedWindow] | None = None,
     ) -> DataFrame:
         """The batch's LWW winners (:func:`last_writer_wins_agg`): one
         row per key, tombstones included, with ``bucket`` and
         ``content_sha256`` (NULL on a tombstone). O(batch) and a pure
         function of the batch, so a crash-replay recomputes identical
         rows; the feed, the MERGE and the engine's index all read it.
-        A grouped merge's batch carries its window index, and keeps one
-        winner per key and window."""
+        With the feed's ``windows`` each row carries its window index,
+        and a key keeps one winner per window."""
         lsn_col = lsn_col or self.lsn_col
         op_col = op_col or self.op_col
-        keys = [*self.keys, _WINDOW] if _WINDOW in batch.columns else self.keys
+        keys = self.keys
+        if windows:
+            # window index = how many earlier windows end below the row
+            batch = batch.withColumn(
+                _WINDOW,
+                sum(((F.col(lsn_col) > w.lsn_hi).cast("int") for w in windows[:-1]), F.lit(0)),
+            )
+            keys = [*keys, _WINDOW]
         winners = last_writer_wins_agg(batch, keys, lsn_col, op_col)
         if "bucket" not in winners.columns:
             winners = winners.withColumn(
@@ -306,24 +317,25 @@ class StateTable(BucketedParquetStore):
         row's LSN as ``prev_<lsn>``, plus ``update_preimage`` /
         ``delete_preimage`` rows carrying the replaced row itself when
         the table was built with ``feed_preimages=True`` — are
-        published atomically to that
-        directory BEFORE the state mutates, so a downstream pipeline
-        can consume this table as a changelog of its own. The dir must
-        be unique per batch (the engine uses ``batch=<batch_id>``);
-        see :meth:`_emit_changes` for the exactly-once crash contract.
+        published atomically BEFORE the state mutates, so a downstream
+        pipeline can consume this table as a changelog of its own.
 
-        A list of :class:`FeedWindow` makes this a **grouped merge** of
-        consecutive windows (``CdcEngine.replay``): window ``i`` holds
-        the batch rows above the previous window's ``lsn_hi``. One LWW
-        pass keeps a winner per key and window, one classification
-        diffs each window against the state plus the group's earlier
-        windows (:meth:`_changes`), one write publishes every window's
-        feed dir, and one merge-on-read append writes the group's net
-        winners. The result's ``change_rows`` is the group's total and
-        ``window_change_rows`` splits it per window.
+        ``changes_out`` is a list of :class:`FeedWindow`, one per window
+        of consecutive changelog windows the batch holds
+        (``CdcEngine.apply_batch``); a dir string is a list of one.
+        Window ``i`` holds the batch rows above the previous window's
+        ``lsn_hi``. One LWW pass keeps a winner per key and window, one
+        classification diffs each window against the state plus the
+        earlier windows (:meth:`_changes`), one write publishes every
+        window's feed dir (:meth:`_emit_changes`, which holds the
+        exactly-once crash contract), and the state takes the net
+        winners. Each dir must be unique per window (the engine uses
+        ``batch=<batch_id>``). The result's ``change_rows`` is the
+        total and ``window_change_rows`` splits it per window.
         """
         if mode not in ("auto", "cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}")
+        windows = [FeedWindow(changes_out)] if isinstance(changes_out, str) else changes_out
         lsn_col = lsn_col or self.lsn_col
         op_col = op_col or self.op_col
         if touched is None:
@@ -331,48 +343,35 @@ class StateTable(BucketedParquetStore):
         if not touched:
             return {"touched_buckets": [], "bucket_rows": {}, "rows": 0}
 
-        group = isinstance(changes_out, list)
-        if group:
-            # window index = how many earlier windows end below the row
-            batch = batch.withColumn(
-                _WINDOW,
-                sum(
-                    ((F.col(lsn_col) > w.lsn_hi).cast("int") for w in changes_out[:-1]),
-                    F.lit(0),
-                ),
-            )
         own = winners is None
         if own:
-            winners = self.batch_winners(batch, lsn_col, op_col)
-        readers = 2 if own and changes_out is not None else 1
+            winners = self.batch_winners(batch, lsn_col, op_col, windows)
+        readers = 2 if own and windows else 1
         with shared(winners, readers) as winners:
             feed_metrics: dict = {}
             fresh: list[str] = []
-            if group:
-                feed_metrics, fresh = self._emit_group_changes(
-                    winners, lsn_col, op_col, touched, changes_out, batch_rows
+            if windows:
+                # the before-image diff MUST run before any state mutation
+                feed_metrics, fresh = self._emit_changes(
+                    winners, lsn_col, op_col, touched, windows, batch_rows
                 )
-            elif changes_out is not None:
-                # before-image diff MUST run before any state mutation below
-                feed_metrics = self._emit_changes(
-                    winners, lsn_col, op_col, touched, changes_out, batch_rows
-                )
-                fresh = [] if feed_metrics.get("change_feed_reused") else [changes_out]
+            # several windows: a key's winners fold to its net winner
+            net = winners
+            if len(windows or ()) > 1:
+                net = last_writer_wins_agg(winners, self.keys, lsn_col, op_col)
+            net = net.drop(_WINDOW)
             try:
-                if group:
-                    net = last_writer_wins_agg(winners, self.keys, lsn_col, op_col)
-                    res = self._merge_mor(net.drop(_WINDOW), op_col, touched)
-                elif self._choose_mode(mode, touched, batch_rows) == "mor":
-                    res = self._merge_mor(winners, op_col, touched)
+                if self._choose_mode(mode, touched, batch_rows) == "mor":
+                    res = self._merge_mor(net, op_col, touched)
                 else:
-                    res = self._merge_cow(winners, lsn_col, op_col, touched)
+                    res = self._merge_cow(net, lsn_col, op_col, touched)
             except TouchedSetMismatchError:
-                # the feed just published above was diffed against a
+                # the feeds just published above were diffed against a
                 # pre-image read from the SAME wrong touched set (keys in
                 # unprobed buckets misclassify as inserts). The state is
-                # guaranteed unchanged at this raise, so unpublish it —
+                # guaranteed unchanged at this raise, so unpublish them —
                 # otherwise the re-driven batch would reuse the poisoned
-                # feed via the exactly-once reuse check.
+                # feeds via the exactly-once reuse check.
                 for out_dir in fresh:
                     shutil.rmtree(out_dir, ignore_errors=True)
                 raise
@@ -392,73 +391,45 @@ class StateTable(BucketedParquetStore):
         lsn_col: str,
         op_col: str,
         touched: list[int],
-        out_dir: str,
-        batch_rows: int | None = None,
-    ) -> dict:
-        """Publish :meth:`_changes` (this batch's net row-level changes
-        against the current state) atomically to ``out_dir``, with its
-        row count, touched set and schema in the :attr:`FEED_META`
-        sidecar (:func:`read_feed` reads the dir against that schema).
-        ``batch_rows`` is the replay probe's window row count, if known.
-
-        Exactly-once contract (the feed is the one artifact a LWW
-        re-apply can NOT recompute — after the state swap the same
-        batch diffs to an empty set): the feed is staged and published
-        via one atomic rename BEFORE any state mutation, and a
-        re-apply that finds the dir already published reuses it.
-        Crash windows: torn staging → recomputed against the still
-        unmutated state; published-but-unmerged → merge re-applies
-        (LWW idempotent), feed reused; merged-but-uncommitted →
-        manifest re-drives the batch, feed reused (it holds the
-        correct pre-image diff).
-
-        The one published dir NOT reused: its recorded touched set
-        misses buckets of this call's. That feed came from an attempt
-        whose merge raised :class:`TouchedSetMismatchError` — before
-        any state mutation, but after the publish, and the crash hit
-        before the raise could unpublish it — so it was diffed against
-        a pre-image missing those buckets. It is recomputed. Dirs from
-        before the set was recorded are reused as they are.
-        """
-
-        def write(staging: str) -> dict:
-            obs = Observation()
-            feed = self._changes(winners, lsn_col, op_col, touched, batch_rows)
-            schema = feed.schema.jsonValue()
-            feed = feed.observe(obs, F.count(F.lit(1)).alias("rows"))
-            _write_feed(feed, staging)
-            try:
-                rows = int(obs.get["rows"])
-            except Exception:  # noqa: BLE001 — AQE may prune the metrics node
-                rows = parquet_footer_rows(staging)
-            return {"rows": rows, "touched": sorted(touched), "schema": schema}
-
-        res = publish.publish_once(out_dir, write, self.FEED_META)
-        recorded = set(res.get("touched", touched))
-        if res["reused"] and not recorded.issuperset(touched):
-            shutil.rmtree(out_dir)
-            res = publish.publish_once(out_dir, write, self.FEED_META)
-        if res["reused"]:
-            return {"change_rows": res.get("rows"), "change_feed_reused": True}
-        return {"change_rows": res["rows"]}
-
-    def _emit_group_changes(
-        self,
-        winners: DataFrame,
-        lsn_col: str,
-        op_col: str,
-        touched: list[int],
         windows: list[FeedWindow],
         batch_rows: int | None = None,
     ) -> tuple[dict, list[str]]:
-        """Publish a grouped merge's feed: ONE write of :meth:`_changes`
-        partitioned by window, then each window's dir published on its
-        own, in window order, with the :attr:`FEED_META` sidecar a
-        single-window merge writes (:func:`publish.publish_each`). Every
-        dir is published before the state mutates, so the crash contract
-        of :meth:`_emit_changes` holds per window. Returns the metrics
-        and the dirs this call published."""
+        """Publish :meth:`_changes` (each window's net row-level changes
+        against the current state and the earlier windows): ONE write,
+        partitioned by window when there are several, then each window's
+        dir published on its own, in window order, with its row count,
+        touched set and schema in the :attr:`FEED_META` sidecar
+        (:func:`publish.publish_each`; :func:`read_feed` reads the dir
+        against that schema). ``batch_rows`` is the replay probe's row
+        count, if known. Returns the metrics and the dirs this call
+        published.
+
+        Exactly-once contract (the feed is the one artifact a LWW
+        re-apply can NOT recompute — after the state mutates the same
+        window diffs to an empty set): every dir is staged and published
+        via one atomic rename BEFORE any state mutation, and a re-apply
+        that finds every dir already published reuses them without a
+        write (``change_feed_reused``). Crash windows: torn staging →
+        recomputed against the still unmutated state; published-but-
+        unmerged → merge re-applies (LWW idempotent), feeds reused;
+        merged-but-uncommitted → manifest re-drives the windows, feeds
+        reused (they hold the correct pre-image diff).
+
+        The one published dir NOT reused: its recorded touched set
+        misses buckets of its window's. That feed came from an attempt
+        whose merge raised :class:`TouchedSetMismatchError` — before any
+        state mutation, but after the publish, and the crash hit before
+        the raise could unpublish it — so it was diffed against a
+        pre-image missing those buckets. It is unpublished and
+        recomputed. Dirs from before the set was recorded are reused as
+        they are.
+        """
         k = len(windows)
+        want = [sorted(touched if w.touched is None else w.touched) for w in windows]
+        for w, t in zip(windows, want):
+            meta = publish.read_json(os.path.join(w.out_dir, self.FEED_META)) or {}
+            if os.path.isdir(w.out_dir) and not set(meta.get("touched", t)).issuperset(t):
+                shutil.rmtree(w.out_dir)
 
         def write(staging: str) -> list[tuple[str, dict]]:
             feed = self._changes(winners, lsn_col, op_col, touched, batch_rows)
@@ -468,22 +439,28 @@ class StateTable(BucketedParquetStore):
                 obs,
                 *[F.sum((F.col(_WINDOW) == i).cast("long")).alias(f"w{i}") for i in range(k)],
             )
-            # one task per window: one parquet file per feed dir
-            _write_feed(feed.repartition(_WINDOW), staging, _WINDOW)
-            parts = [os.path.join(staging, f"{_WINDOW}={i}") for i in range(k)]
+            if k == 1:
+                parts = [staging]
+                _write_feed(feed.drop(_WINDOW), staging)
+            else:
+                parts = [os.path.join(staging, f"{_WINDOW}={i}") for i in range(k)]
+                # one task per window: one parquet file per feed dir
+                _write_feed(feed.repartition(_WINDOW), staging, _WINDOW)
             try:
                 rows = [int(obs.get[f"w{i}"] or 0) for i in range(k)]
             except Exception:  # noqa: BLE001 — AQE may prune the metrics node
                 rows = [parquet_footer_rows(p) for p in parts]
             return [
-                (p, {"rows": n, "touched": sorted(w.touched), "schema": schema})
-                for p, n, w in zip(parts, rows, windows)
+                (p, {"rows": n, "touched": t, "schema": schema})
+                for p, n, t in zip(parts, rows, want)
             ]
 
         res = publish.publish_each([w.out_dir for w in windows], write, self.FEED_META)
         rows = [r.get("rows") for r in res]
-        fresh = [w.out_dir for w, r in zip(windows, res) if not r["reused"]]
-        return {"change_rows": sum(rows), "window_change_rows": rows}, fresh
+        metrics = {"change_rows": sum(rows), "window_change_rows": rows}
+        if all(r["reused"] for r in res):
+            metrics["change_feed_reused"] = True
+        return metrics, [w.out_dir for w, r in zip(windows, res) if not r["reused"]]
 
     def _changes(
         self,
@@ -493,9 +470,10 @@ class StateTable(BucketedParquetStore):
         touched: list[int],
         batch_rows: int | None = None,
     ) -> DataFrame:
-        """This batch's net row-level changes against the current state
-        of the ``touched`` buckets: the feed :meth:`_emit_changes`
-        publishes.
+        """Each window's net row-level changes against the current state
+        of the ``touched`` buckets and the earlier windows: the feed
+        :meth:`_emit_changes` publishes. ``winners`` carry their window
+        index (:meth:`batch_winners`); without it they are one window.
 
         ONE scan of the touched base and delta files — every column with
         preimages on, else keys + lsn (+ op) — left-semi-joined, as one
@@ -507,14 +485,11 @@ class StateTable(BucketedParquetStore):
         winners by a plan estimate before their cache exists, and may
         broadcast the O(state) side instead.)
 
-        Each winner meets the row it would replace: for one window, one
-        join winners ⟕ pre-image, the candidates folded by
-        :meth:`_fold_delta` to one row per key (crash-duplicated delta
-        rows included). Winners of a grouped merge carry their window
-        index, and a window's winner meets the LWW of the pre-image
-        candidates and the same key's winners in earlier windows: a
-        running max over the key, ordered by window. A tombstone there
-        means no row.
+        Each winner meets the row it would replace: the scanned
+        candidates are window −1, and a window's winner meets the LWW of
+        the candidates and the same key's winners in earlier windows — a
+        running max over the key, ordered by window, which also folds
+        crash-duplicated delta rows. A tombstone there means no row.
 
         That row classifies each change: none → ``insert``
         (delete-on-absent emits nothing); outranked (lsn,
@@ -527,8 +502,10 @@ class StateTable(BucketedParquetStore):
         aggregate must subtract a retired non-NULL contribution); a
         column the batch adds reads NULL."""
         prev_col = f"prev_{lsn_col}"
-        group = [_WINDOW] if _WINDOW in winners.columns else []
+        if _WINDOW not in winners.columns:
+            winners = winners.withColumn(_WINDOW, F.lit(0))
         skip = (*self.keys, op_col, self.op_col, "bucket", "content_sha256", _WINDOW)
+        rows = winners
         scan = None
         if self.exists():
             scan = self._read_base_buckets(touched)
@@ -549,55 +526,34 @@ class StateTable(BucketedParquetStore):
                 <= conf.autoBroadcastJoinThreshold()
             ):
                 keys = F.broadcast(keys)
-            scan = scan.join(keys, self.keys, "left_semi")
+            rows = (
+                scan.join(keys, self.keys, "left_semi")
+                .withColumnRenamed(self.op_col, op_col)
+                .withColumn(_WINDOW, F.lit(-1))
+                .unionByName(winners, allowMissingColumns=True)
+            )
         # the replaced row's columns, renamed apart from the winner's
         old: dict[str, str] = {}
-        if self.feed_preimages and (scan is not None or group):
-            cols = dict.fromkeys(
-                [*(scan.columns if scan is not None else []), *(winners.columns if group else [])]
+        if self.feed_preimages:
+            old = {c: f"__old_{c}" for c in rows.columns if c not in (*skip, lsn_col)}
+        before = (
+            Window.partitionBy(*self.keys)
+            .orderBy(_WINDOW)
+            .rangeBetween(Window.unboundedPreceding, -1)
+        )
+        prio = F.when(F.col(op_col) == OP_DELETE, 1).otherwise(0)
+        rank = F.struct(lsn_col, prio.alias("__p"), *old)
+        prev = F.col("__prev")
+        live = prev["__p"] == 0
+        joined = (
+            rows.withColumn("__prev", F.max(rank).over(before))
+            .filter(F.col(_WINDOW) >= 0)
+            .select(
+                *winners.columns,
+                F.when(live, prev[lsn_col]).alias(prev_col),
+                *[F.when(live, prev[c]).alias(o) for c, o in old.items()],
             )
-            old = {c: f"__old_{c}" for c in cols if c not in (*skip, lsn_col)}
-        if group:
-            rows = winners
-            if scan is not None:
-                rows = (
-                    scan.withColumnRenamed(self.op_col, op_col)
-                    .withColumn(_WINDOW, F.lit(-1))
-                    .unionByName(winners, allowMissingColumns=True)
-                )
-            before = (
-                Window.partitionBy(*self.keys)
-                .orderBy(_WINDOW)
-                .rangeBetween(Window.unboundedPreceding, -1)
-            )
-            prio = F.when(F.col(op_col) == OP_DELETE, 1).otherwise(0)
-            rank = F.struct(lsn_col, prio.alias("__p"), *old)
-            prev = F.col("__prev")
-            live = prev["__p"] == 0
-            joined = (
-                rows.withColumn("__prev", F.max(rank).over(before))
-                .filter(F.col(_WINDOW) >= 0)
-                .select(
-                    *winners.columns,
-                    F.when(live, prev[lsn_col]).alias(prev_col),
-                    *[F.when(live, prev[c]).alias(o) for c, o in old.items()],
-                )
-            )
-        elif scan is None:
-            joined = winners.withColumn(
-                prev_col, F.lit(None).cast(dict(winners.dtypes)[lsn_col])
-            )
-        else:
-            pre = self._fold_delta(None, scan) if delta_ids else scan.drop(self.op_col)
-            joined = winners.join(
-                pre.select(
-                    *self.keys,
-                    F.col(lsn_col).alias(prev_col),
-                    *[F.col(c).alias(o) for c, o in old.items()],
-                ),
-                self.keys,
-                "left",
-            )
+        )
         is_del = F.col(op_col) == OP_DELETE
         prev, new = F.col(prev_col), F.col(lsn_col)
         change_type = (
@@ -611,8 +567,8 @@ class StateTable(BucketedParquetStore):
             F.col("change_type").isNotNull()
         )
         data_cols = [c for c in winners.columns if c not in skip]
-        if not old:  # preimages off, or no state yet
-            return changes.select(*self.keys, "change_type", *data_cols, prev_col, *group)
+        if not old:  # preimages off
+            return changes.select(*self.keys, "change_type", *data_cols, prev_col, _WINDOW)
         # one copy of each row, two of an update/delete: the second is
         # its preimage
         replaced = F.col("change_type").isin("update", "delete")
@@ -635,7 +591,7 @@ class StateTable(BucketedParquetStore):
             *[pick(c) for c in data_cols],
             F.when(~is_pre, prev).alias(prev_col),
             *[pick(c) for c in old if c not in (*data_cols, lsn_col)],
-            *group,
+            _WINDOW,
         )
 
     def _merge_mor(

@@ -9,9 +9,9 @@ It is the reference's ``.part`` + ``os.replace`` idiom
 * a directory is written into the dot-hidden staging dir
   ``.<name>.staging`` next to its target, together with a JSON meta
   sidecar, and only then renamed into place — once for a write-once
-  artifact (:func:`publish_once`: feed batches, checkpoints; or
-  :func:`publish_each` for several that one write produces: a grouped
-  merge's feed batches), or as a rename-aside swap through
+  artifact (:func:`publish_once`: checkpoints; or :func:`publish_each`
+  for one or several that one write produces: the feed batches of every
+  merge, one per window), or as a rename-aside swap through
   ``<name>.old`` for one that is rewritten (:func:`replace_dir`: the
   IVM aggregate, a rebucketed store).
 
@@ -73,6 +73,11 @@ def _stage(target: str, write: Callable[[str], dict], meta: str) -> dict:
     return payload
 
 
+def _reused(target: str, meta: str) -> dict:
+    """The stored meta of a published ``target``, with ``reused=True``."""
+    return {**(read_json(os.path.join(target, meta)) or {}), "reused": True}
+
+
 def publish_once(target: str, write: Callable[[str], dict], meta: str) -> dict:
     """Publish a write-once directory: stage it, then one atomic rename.
 
@@ -81,8 +86,7 @@ def publish_once(target: str, write: Callable[[str], dict], meta: str) -> dict:
     keeps the artifact its first attempt committed. Otherwise the
     result is ``write``'s payload with ``reused=False``."""
     if os.path.isdir(target):
-        stored = read_json(os.path.join(target, meta)) or {}
-        return {**stored, "reused": True}
+        return _reused(target, meta)
     recover(target)
     payload = _stage(target, write, meta)
     os.rename(_staging(target), target)
@@ -96,14 +100,21 @@ def publish_each(
 ) -> list[dict]:
     """Publish write-once directories that ONE write produces.
 
-    ``write(staging)`` writes into a staging dir shared by the targets
-    (hidden ``.group.staging`` next to them) and returns, per target in
-    order, the sub-dir holding its files (missing: no files) and its
-    meta payload. Each target is then published as :func:`publish_once`
-    publishes it — its own staging and sidecar, one atomic rename — in
-    order, so a crash leaves a published prefix. The shared staging is
-    dropped on the way out, and before the write in case a crash left
-    it. Returns :func:`publish_once`'s result per target."""
+    ``write(staging)`` writes into a staging dir and returns, per target
+    in order, the dir holding its files (missing: no files) and its meta
+    payload. One target is :func:`publish_once`'d, staged in place: its
+    files must be the staging dir itself. Several share a staging dir
+    (hidden ``.group.staging`` next to them), and each is then published
+    as :func:`publish_once` publishes it — its own staging and sidecar,
+    one atomic rename — in order, so a crash leaves a published prefix.
+    The shared staging is dropped on the way out, and before the write
+    in case a crash left it. When every target is published already,
+    nothing is written. Returns :func:`publish_once`'s result per
+    target."""
+    if len(targets) == 1:
+        return [publish_once(targets[0], lambda staging: write(staging)[0][1], meta)]
+    if all(os.path.isdir(t) for t in targets):
+        return [_reused(t, meta) for t in targets]
     shared = os.path.join(os.path.dirname(targets[0]), ".group.staging")
     shutil.rmtree(shared, ignore_errors=True)
     try:

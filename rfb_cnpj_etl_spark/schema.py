@@ -209,6 +209,17 @@ class SchemaRegistry:
     def version(self) -> int:
         return len(self.versions) - 1
 
+    def resume(self, columns: list[str], version: int) -> None:
+        """Continue a history recorded elsewhere (an engine's manifest):
+        ``version`` evolutions made, ``columns`` the newest schema's
+        names. The record holds names only, so a column the base lacks
+        comes back as ``NullType``; add-column evolution matches names
+        (``CdcEngine.apply_batch``)."""
+        known = {f.name for f in self.current.fields}
+        added = [T.StructField(c, T.NullType()) for c in columns if c not in known]
+        current = T.StructType([*self.current.fields, *added])
+        self.versions = [*[self.versions[0]] * version, current]
+
     def evolve(self, new: T.StructType) -> list[T.StructField]:
         """Register a new schema; only add-column evolution is allowed.
 

@@ -81,3 +81,58 @@ def spark_jobs(spark, fn) -> int:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def feed_rows(df):
+    """A change feed frame's rows as ``(repo, path, change_type, lsn,
+    content, branch, prev_lsn)`` tuples; ``branch`` is None where the
+    frame lacks the column."""
+    return [
+        (
+            r["repo"], r["path"], r["change_type"], r["lsn"],
+            r["content"], r.asDict().get("branch"), r["prev_lsn"],
+        )
+        for r in df.collect()
+    ]
+
+
+def oracle_feed(log, prev_hi, hi, preimages=True):
+    """The feed of the window ``(prev_hi, hi]`` of a synthesized ``log``,
+    from the oracle alone: the row diff of ``expected_final_state`` at
+    ``prev_hi`` (None: the empty state) and at ``hi``, as a set of
+    :func:`feed_rows` tuples. A delete carries the key's last event in
+    the window; with ``preimages`` each update and delete also yields
+    the row it replaced."""
+    from pyspark.sql import functions as F
+
+    from rfb_cnpj_etl_spark.gen import expected_final_state
+
+    def state_at(upto):
+        if upto is None:
+            return {}
+        return {
+            (r["repo"], r["path"]): (r["lsn"], r["content"], r["branch"])
+            for r in expected_final_state(log.filter(F.col("lsn") <= upto)).collect()
+        }
+
+    prev, cur = state_at(prev_hi), state_at(hi)
+    window = log.filter(F.col("lsn") <= hi)
+    if prev_hi is not None:
+        window = window.filter(F.col("lsn") > prev_hi)
+    last = {
+        (r["repo"], r["path"]): (r["lsn"], r["content"], r["branch"])
+        for r in sorted(window.collect(), key=lambda r: r["lsn"])
+    }
+    expected = set()
+    for key in prev.keys() | cur.keys():
+        if key not in prev:
+            expected.add((*key, "insert", *cur[key], None))
+            continue
+        (old_lsn, *old_row) = prev[key]
+        if key in cur and cur[key][0] == old_lsn:
+            continue
+        kind, new = ("update", cur[key]) if key in cur else ("delete", last[key])
+        expected.add((*key, kind, *new, old_lsn))
+        if preimages:
+            expected.add((*key, f"{kind}_preimage", old_lsn, *old_row, None))
+    return expected

@@ -17,10 +17,11 @@ import os
 import shutil
 
 import pytest
-from conftest import spark_jobs
+from conftest import feed_rows, oracle_feed, spark_jobs
 from pyspark.sql import functions as F
 
 from rfb_cnpj_etl_spark.engine import CdcEngine, MaintenancePolicy
+from rfb_cnpj_etl_spark.operators import merge as merge_mod
 from rfb_cnpj_etl_spark.operators.merge import StateTable
 
 LOG_SCHEMA = (
@@ -158,7 +159,7 @@ class TestChangeFeedModes:
 
 class TestChangeFeedExactlyOnce:
     def test_published_feed_survives_reapply_after_state_mutation(
-        self, spark, tmp_path
+        self, spark, tmp_path, monkeypatch
     ):
         """Crash window: feed published + state swapped, manifest commit
         lost. The re-applied batch now diffs to an EMPTY set against the
@@ -177,7 +178,11 @@ class TestChangeFeedExactlyOnce:
         first = feed_tuples(spark.read.parquet(out))
         # manifest-driven redo: same batch, same changes_out, state now
         # already holds the batch
+        writes = []
+        monkeypatch.setattr(merge_mod, "_write_feed", lambda *a: writes.append(a))
         m2 = t.merge(batch, changes_out=out)
+        monkeypatch.undo()
+        assert writes == []  # reused without a write
         assert m2.get("change_feed_reused") is True
         assert m2["change_rows"] == 1  # count reread from the sidecar
         assert feed_tuples(spark.read.parquet(out)) == first
@@ -648,7 +653,7 @@ class TestOneLwwPassPerWindow:
         add-column evolution: each window's feed, preimages included,
         is exactly the row diff of the oracle states at the previous and
         the current lsn_hi."""
-        from rfb_cnpj_etl_spark.gen import expected_final_state, synthesize_changelog
+        from rfb_cnpj_etl_spark.gen import synthesize_changelog
 
         log = synthesize_changelog(
             spark, 900, n_repos=4, n_paths=30, delete_ratio=0.2,
@@ -660,46 +665,13 @@ class TestOneLwwPassPerWindow:
         entries += eng.replay(log, batch_size=150)
         assert [e["mode"] for e in entries] == ["cow"] + ["mor"] * 4
 
-        def state_at(hi):
-            if hi is None:
-                return {}
-            return {
-                (r["repo"], r["path"]): (r["lsn"], r["content"], r["branch"])
-                for r in expected_final_state(log.filter(F.col("lsn") <= hi)).collect()
-            }
-
-        events = sorted(log.collect(), key=lambda r: r["lsn"])
         prev_hi = None
         for e in entries:
-            prev, cur = state_at(prev_hi), state_at(e["lsn_hi"])
-            last = {
-                (r["repo"], r["path"]): (r["lsn"], r["content"], r["branch"])
-                for r in events
-                if (prev_hi is None or r["lsn"] > prev_hi) and r["lsn"] <= e["lsn_hi"]
-            }
-            expected = set()
-            for key in prev.keys() | cur.keys():
-                if key not in prev:
-                    expected.add((*key, "insert", *cur[key], None))
-                    continue
-                (old_lsn, *old_row) = prev[key]
-                if key in cur and cur[key][0] == old_lsn:
-                    continue
-                kind, new = ("update", cur[key]) if key in cur else ("delete", last[key])
-                expected.add((*key, kind, *new, old_lsn))
-                expected.add((*key, f"{kind}_preimage", old_lsn, *old_row, None))
-            feed = spark.read.parquet(
-                os.path.join(eng.changes_dir, f"batch={e['batch_id']}")
-            ).collect()
-            got = {
-                (
-                    r["repo"], r["path"], r["change_type"], r["lsn"],
-                    r["content"], r.asDict().get("branch"), r["prev_lsn"],
-                )
-                for r in feed
-            }
-            assert len(feed) == len(got) == e["change_rows"]
-            assert got == expected, e["batch_id"]
+            feed = feed_rows(
+                spark.read.parquet(os.path.join(eng.changes_dir, f"batch={e['batch_id']}"))
+            )
+            assert len(feed) == len(set(feed)) == e["change_rows"]
+            assert set(feed) == oracle_feed(log, prev_hi, e["lsn_hi"]), e["batch_id"]
             prev_hi = e["lsn_hi"]
         log.unpersist()
 
