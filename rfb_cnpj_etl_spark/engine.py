@@ -15,24 +15,25 @@ LWW pass into the winners, one per key and window → optional change
 feed (one classification of each window's winners against the pre-image
 and the earlier windows, one write publishing every window's feed dir
 before the state mutates) → bucket-pruned MERGE of the net winners →
-optional index update from the same winners → one manifest entry per
-window, committed in window order, carrying its lsn range, per-bucket
-row counts (per-partition lineage + metrics, the north_rule
-requirement) and schema version. A window's cost is fixed Spark jobs,
-not data, so :meth:`CdcEngine.replay` hands consecutive windows of one
-call to one ``apply_batch`` while, taken together, they would still
-apply merge-on-read; each window keeps its batch id, feed dir and
-``state_as_of`` point, and aggregates advance once per call. COW
-windows, engines fed a MinHash index (whose pair outputs are per
-window) and windows whose feed dir is already published apply as a
-group of one.
+optional MinHash index ingest of the same winners (one write publishing
+every window's pairs dir before the index mutates, then the net rows) →
+one manifest entry per window, committed in window order, carrying its
+lsn range, per-bucket row counts (per-partition lineage + metrics, the
+north_rule requirement), schema version and near-dup pair count. A
+window's cost is fixed Spark jobs, not data, so :meth:`CdcEngine.replay`
+hands consecutive windows of one call to one ``apply_batch`` while,
+taken together, they would still apply merge-on-read; each window keeps
+its batch id, feed dir, pairs dir and ``state_as_of`` point, and
+aggregates advance once per call. COW windows and windows whose feed or
+pairs dir is already published apply as a group of one.
 
-**Crash contract.** Feeds publish before the state mutates, the state
-append is LWW-idempotent, and the manifest commit is each window's
-exactly-once point. A crash after j of a group's k commits re-drives
-windows j+1..k; their feed dirs are published, so each applies on its
-own and reuses its feed. Restart resumes after the high watermark, with
-the schema registry the manifest committed; re-delivered batches are
+**Crash contract.** Feeds publish before the state mutates and pairs
+before the index mutates, the state append and the index ingest are
+LWW-idempotent, and the manifest commit is each window's exactly-once
+point. A crash after j of a group's k commits re-drives windows
+j+1..k; their feed and pairs dirs are published, so each applies on its
+own and reuses them. Restart resumes after the high watermark, with the
+schema registry the manifest committed; re-delivered batches are
 no-ops.
 """
 
@@ -51,7 +52,7 @@ from pyspark.sql import types as T
 from .operators import publish
 from .operators.dedup import last_writer_wins_agg
 from .operators.merge import FeedWindow, StateTable, read_feed, shared
-from .operators.store import key_bucket, parquet_footer_rows
+from .operators.store import WINDOW, key_bucket, parquet_footer_rows
 from .plans.checkpoint import Manifest
 from .schema import CHANGELOG_SCHEMA, CODE_KEY, OP_DELETE, OP_UPSERT, SchemaRegistry
 
@@ -93,8 +94,10 @@ class MaintenancePolicy:
     include_index: bool = True
     #: keep only the newest N per-batch pair outputs under
     #: ``{index}/pairs/`` — a long replay writes one dir per
-    #: micro-batch, and their counts already live in the manifest, so
-    #: old ones are re-derivable garbage. None = keep everything.
+    #: micro-batch, and their counts already live in the manifest.
+    #: Like the feed prune, only manifest-committed dirs go, oldest
+    #: first: an uncommitted dir is the only correct copy of its
+    #: window's pairs (its re-drive reuses it). None = keep everything.
     pairs_retention_batches: int | None = 16
     #: keep only the newest N per-batch change-feed dirs under the
     #: engine's ``changes_dir`` (CDC-out). None = keep everything —
@@ -248,28 +251,26 @@ class CdcEngine:
         ``batch`` holds. Returns one manifest entry per window.
 
         One path for any window count: one LWW pass into the winners
-        (one per key and window when the feed is on), one
+        (one per key and window when there are several), one
         :meth:`StateTable.merge` — one feed write publishing every
-        window's dir and one write of the net winners — then one entry
-        per window, committed in window order. Each entry keeps its
-        window's ``mode``, ``change_rows``, ``touched_buckets``, lsn span
-        and ``added_columns``; the write metrics go on the last. One
-        window is the micro-batch, a group of one; several are a group
-        of consecutive merge-on-read windows (:meth:`replay`). Only one
-        window takes an index: pair outputs are per window.
+        window's dir and one write of the net winners — one index
+        ingest, then one entry per window, committed in window order.
+        Each entry keeps its window's ``mode``, ``change_rows``,
+        ``touched_buckets``, lsn span, ``added_columns``,
+        ``near_dup_pairs`` and ``pairs_path``; the write metrics go on
+        the last. One window is the micro-batch, a group of one; several
+        are a group of consecutive merge-on-read windows (:meth:`replay`).
 
         The index step is the reference's "patch pass as part of the
         load lifecycle" (``orchestrator.py:113-114``) generalized: dedup
         detection runs AS PART OF ingest, per micro-batch, not as a
         periodic full recompute. Everything before the manifest commit
-        is idempotent (LWW merge, upsert-by-id index, deterministic
-        pairs overwritten per batch), so the commit stays the single
+        is idempotent (LWW merge, upsert-by-id index, pairs published
+        once per window and reused), so the commit stays the single
         exactly-once point.
         """
         if all(self.manifest.is_applied(w.batch_id) for w in windows):
             return [{"batch_id": w.batch_id, "skipped": True} for w in windows]
-        if len(windows) > 1 and minhash_index is not None:
-            raise ValueError("a window group takes no index: pair outputs are per window")
         # add-column evolution: new batch columns extend the registry;
         # batches missing known columns are fine (NULL-filled in MERGE).
         cur_names = {f.name for f in self.registry.current.fields}
@@ -296,15 +297,16 @@ class CdcEngine:
                 )
                 for w in windows
             ]
-        index: dict = {}
+        pairs: list[dict] = [{} for _ in windows]
         readers = 1 + bool(feed) + (minhash_index is not None)
-        with shared(self.state.batch_winners(batch, windows=feed), readers) as winners:
+        with shared(self.state.batch_winners(batch, windows=windows), readers) as winners:
             metrics = self.state.merge(batch, changes_out=feed, winners=winners, **merge_args)
             if minhash_index is not None:
-                index = self._update_index(
-                    minhash_index, winners, windows[0].batch_id,
+                pairs, index = self._update_index(
+                    minhash_index, winners, windows,
                     index_threshold, index_max_fanout, merge_args["batch_rows"],
                 )
+                metrics.update(index)
         per_window = metrics.pop("window_change_rows", None)
         entries = []
         for i, w in enumerate(windows):
@@ -315,9 +317,10 @@ class CdcEngine:
                 "schema_version": self.registry.version,
                 "added_columns": [f.name for f in added] if i == 0 else [],
                 "columns": batch.columns,
+                **pairs[i],
             }
             if i == len(windows) - 1:
-                entry.update(metrics, **index)
+                entry.update(metrics)
             else:
                 entry.update((k, metrics[k]) for k in ("buckets", "mode") if k in metrics)
             if w.touched is not None:
@@ -331,38 +334,46 @@ class CdcEngine:
     #: single doc id (no printable-text collisions).
     _ID_SEP = "\x1f"
 
+    @staticmethod
+    def _pairs_dir(index, batch_id: str) -> str:
+        return f"{index.path}/pairs/batch={batch_id}"
+
     def _update_index(
         self,
         index,
         winners: DataFrame,
-        batch_id: str,
+        windows: tuple[LsnWindow, ...],
         threshold: float,
         max_fanout: int | None = None,
         batch_rows: int | None = None,
-    ) -> dict:
-        """Fold one micro-batch's LWW winners (the same
-        :meth:`StateTable.batch_winners` frame the MERGE applied) into
-        the MinHash index and surface the near-dup pairs that become
-        detectable with it. The winners are a pure function of the
+    ) -> tuple[list[dict], dict]:
+        """Fold the ``windows``' LWW winners (the same
+        :meth:`StateTable.batch_winners` frame the MERGE applied, one
+        per key and window when there are several) into the MinHash
+        index in one ingest, and surface the near-dup pairs each window
+        makes detectable. The winners are a pure function of the
         normalized batch — NOT of merged state — so a crash-replay feeds
         the index identical docs; upsert winners become index docs,
-        delete winners drop their signatures/postings. Pairs land in
-        ``{index.path}/pairs/batch=<id>`` (overwritten on re-apply:
-        idempotent), and the manifest entry carries their count."""
+        delete winners drop their signatures/postings. Each window's
+        pairs land in ``{index.path}/pairs/batch=<id>``, published before
+        the index mutates and reused on re-apply
+        (:meth:`MinhashIndex.ingest`). Returns each window's manifest
+        fields (pair count and dir) and the ingest's write metrics."""
         doc_id = F.concat_ws(self._ID_SEP, *self.state.keys).alias("doc_id")
+        window = [WINDOW] if WINDOW in winners.columns else []
         is_del = F.col(self.state.op_col) == OP_DELETE
         upserts = winners.filter(~is_del).select(
-            doc_id, F.col(self.state.content_col).alias("text")
+            doc_id, F.col(self.state.content_col).alias("text"), *window
         )
-        deletes = winners.filter(is_del).select(doc_id)
-        pairs_path = f"{index.path}/pairs/batch={batch_id}"
+        deletes = winners.filter(is_del).select(doc_id, *window)
+        paths = [self._pairs_dir(index, w.batch_id) for w in windows]
         metrics, _pairs = index.ingest(
             upserts,
             content_col="text",
             id_col="doc_id",
             deleted_ids=deletes,
             threshold=threshold,
-            pairs_out=pairs_path,
+            pairs_out=paths,
             max_fanout=max_fanout,
             # a forced engine write strategy applies to the index too;
             # the replay probe's window row count rides along so auto
@@ -371,10 +382,15 @@ class CdcEngine:
             mode=self.merge_mode,
             batch_rows=batch_rows,
         )
-        return {
-            # count observed inside the pairs write — no re-read job
-            "near_dup_pairs": int(metrics["pairs"]),
-            "pairs_path": pairs_path,
+        # counts observed inside the pairs write (or read from a reused
+        # dir's sidecar) — no re-read job
+        pairs = [
+            {"near_dup_pairs": n, "pairs_path": p}
+            for n, p in zip(metrics["window_pairs"], paths)
+        ]
+        reused = {"pairs_reused": True} if metrics.get("pairs_reused") else {}
+        return pairs, {
+            **reused,
             "index_sig_buckets": metrics["sig_touched_buckets"],
             "index_post_buckets": metrics["post_touched_buckets"],
             "index_bytes_written": metrics["sig_bytes_written"]
@@ -400,14 +416,15 @@ class CdcEngine:
         path. Consecutive windows share one call (a group) while
         :meth:`StateTable._choose_mode`, given their summed probe rows
         and the union of their touched buckets, would still pick
-        merge-on-read, and while each window's feed dir is unpublished —
-        so a group is only ever classified against a state that holds
-        none of its rows. Any other window is a group of one.
+        merge-on-read, and while each window's feed and pairs dirs are
+        unpublished — so a group is only ever classified against a state,
+        and paired against an index, that hold none of its rows. Any
+        other window is a group of one.
 
         ``minhash_index`` (a dedup.MinhashIndex) opts near-dup detection
-        into the ingest loop: each micro-batch updates the index and its
-        manifest entry reports the pairs that batch made detectable; it
-        keeps every window on its own. ``maintenance`` runs the
+        into the ingest loop: each group makes one index ingest, and each
+        window's manifest entry reports the pairs that window made
+        detectable, in its own pairs dir. ``maintenance`` runs the
         post-replay health check / compaction policy (the reference's
         automatic lifecycle steps 7–8).
 
@@ -508,11 +525,14 @@ class CdcEngine:
                 yield LsnWindow(f"lsn_{lo}_{hi}", lo, hi, sorted(buckets), rows)
 
         def fresh(w: LsnWindow) -> bool:
-            """No attempt committed this window or published its feed."""
-            return not self.manifest.is_applied(w.batch_id) and not (
-                self.changes_dir
-                and os.path.isdir(os.path.join(self.changes_dir, f"batch={w.batch_id}"))
-            )
+            """No attempt committed this window or published its feed or
+            pairs dir."""
+            dirs = []
+            if self.changes_dir:
+                dirs.append(os.path.join(self.changes_dir, f"batch={w.batch_id}"))
+            if minhash_index is not None:
+                dirs.append(self._pairs_dir(minhash_index, w.batch_id))
+            return not self.manifest.is_applied(w.batch_id) and not any(map(os.path.isdir, dirs))
 
         def mor(group: list[LsnWindow]) -> bool:
             touched = sorted(set().union(*(w.touched for w in group)))
@@ -545,7 +565,6 @@ class CdcEngine:
         for w in windows():
             if not (
                 group
-                and minhash_index is None
                 and fresh(group[0])
                 and fresh(w)
                 and mor(group[:1])
@@ -649,9 +668,11 @@ class CdcEngine:
                             "recommended_max_fanout": policy.max_posting_list,
                         }
                     )
-            pruned = self._prune_pair_outputs(
-                minhash_index, policy.pairs_retention_batches
-            )
+            pruned = 0
+            if policy.pairs_retention_batches is not None:
+                pruned = self._prune_committed(
+                    os.path.join(minhash_index.path, "pairs"), policy.pairs_retention_batches
+                )
             if pruned:
                 actions.append(
                     {
@@ -708,51 +729,33 @@ class CdcEngine:
             report["manifest_entry"] = entry
         return report
 
-    @staticmethod
-    def _prune_pair_outputs(index, retention: int | None) -> int:
-        """Drop all but the newest ``retention`` per-batch pair dirs
-        under ``{index}/pairs/``. Their counts are in the manifest and
-        the data is re-derivable from the index, so this is garbage
-        collection, not state loss."""
-        if retention is None:
-            return 0
-        return CdcEngine._prune_batch_dirs(
-            os.path.join(index.path, "pairs"), retention
-        )
-
     def _prune_change_feed(self, retention: int) -> int:
-        """Count-based feed retention: drop the oldest batch dirs, in
-        manifest order, until ``retention`` are left. Only committed
-        dirs are ever dropped: a dir the manifest has not committed (the
-        published-but-uncommitted crash window) is the feed its re-driven
-        batch reuses, and the state may already hold its mutations, so a
-        recomputed feed would come out empty. Once a snapshot checkpoint
-        exists only the dirs the NEWEST one covers (manifest position ≤
-        the checkpoint's) are eligible — removing an uncovered dir would
-        destroy ``state_as_of`` for every later batch; without one the
-        prune trades time travel for space (opt-in)."""
-        dirs = publish.published(self.changes_dir, "batch")
+        """Count-based feed retention (:meth:`_prune_committed`). Once a
+        snapshot checkpoint exists only the dirs the NEWEST one covers
+        (manifest position ≤ the checkpoint's) are eligible — removing
+        an uncovered dir would destroy ``state_as_of`` for every later
+        batch; without one the prune trades time travel for space
+        (opt-in)."""
+        return self._prune_committed(self.changes_dir, retention, self._feed_checkpoints())
+
+    def _prune_committed(self, root: str, retention: int, checkpoints=()) -> int:
+        """Drop the oldest ``batch=<id>`` dirs under ``root`` (feed or
+        pairs), in manifest order, until ``retention`` are left, none
+        past the newest of ``checkpoints``. Only committed dirs are ever
+        dropped: a dir the manifest has not committed (the published-
+        but-uncommitted crash window) is the one its re-driven batch
+        reuses, and the state or index may already hold its mutations,
+        so a recomputed feed would come out empty and recomputed pairs
+        would meet later windows' documents."""
+        dirs = publish.published(root, "batch")
         if len(dirs) <= retention:
             return 0
         pos = {e["batch_id"]: i for i, e in enumerate(self._merge_entries())}
-        cps = self._feed_checkpoints()
-        horizon = max((pos[b] for b in cps if b in pos), default=len(pos))
+        horizon = max((pos[b] for b in checkpoints if b in pos), default=len(pos))
         removable = sorted((b for b in dirs if pos.get(b, horizon + 1) <= horizon), key=pos.get)
         doomed = removable[: len(dirs) - retention]
         for b in doomed:
             shutil.rmtree(dirs[b], ignore_errors=True)
-        return len(doomed)
-
-    @staticmethod
-    def _prune_batch_dirs(root: str, retention: int) -> int:
-        """Drop all but the newest ``retention`` ``batch=*`` dirs under
-        ``root`` (ordered by commit time — batch ids are opaque here)."""
-        dirs = sorted(
-            publish.published(root, "batch").values(), key=os.path.getmtime
-        )
-        doomed = dirs[: max(0, len(dirs) - retention)]
-        for d in doomed:
-            shutil.rmtree(d, ignore_errors=True)
         return len(doomed)
 
     # ------------------------------------------------------------------

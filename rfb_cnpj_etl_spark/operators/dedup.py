@@ -19,9 +19,11 @@ band-bucket equi-join).
 
 from __future__ import annotations
 
+import operator
 import os
 import shutil
 import uuid
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -29,11 +31,12 @@ from pyspark.sql import functions as F
 from ..schema import OP_DELETE, OP_UPSERT
 from . import publish
 from .store import (
+    WINDOW,
     BucketedParquetStore,
     TouchedSetMismatchError,
     dir_bytes,
     key_bucket,
-    parquet_footer_rows,
+    write_windows,
 )
 
 # ---------------------------------------------------------------------------
@@ -412,12 +415,12 @@ def release_operator_caches() -> None:
             pass
 
 
-def band_key(b: int, rows: int, hash_family: str) -> Column:
+def band_key(b: int, rows: int, hash_family: str, sig: str = "sig") -> Column:
     """Band ``b`` (``rows`` lanes) of ``sig``: the joined lane string
     for the md5 (oracle-parity) family — xxhash64 has no DuckDB twin —
     and its xxhash64 compression for the engine family."""
     joined = F.array_join(
-        F.transform(F.slice("sig", b * rows + 1, rows), lambda x: x.cast("string")),
+        F.transform(F.slice(sig, b * rows + 1, rows), lambda x: x.cast("string")),
         ",",
     )
     return joined if hash_family == "md5" else F.xxhash64(joined)
@@ -427,11 +430,11 @@ def band_explode(
     sigs: DataFrame, num_hashes: int, bands: int, hash_family: str
 ) -> DataFrame:
     """(id, sig) → one (id, sig, band, bucket) row per band, the bucket
-    being :func:`band_key`."""
+    being :func:`band_key`. A :data:`~.store.WINDOW` column rides along."""
     r = num_hashes // bands
+    keep = [c for c in ("id", "sig", WINDOW) if c in sigs.columns]
     return sigs.select(
-        "id",
-        "sig",
+        *keep,
         F.explode(
             F.array(
                 *[
@@ -443,7 +446,7 @@ def band_explode(
                 ]
             )
         ).alias("bb"),
-    ).select("id", "sig", "bb.band", "bb.bucket")
+    ).select(*keep, "bb.band", "bb.bucket")
 
 
 def minhash_lsh_pairs(
@@ -762,6 +765,9 @@ class MinhashIndex:
 
     # -- write path ------------------------------------------------------
 
+    #: sidecar recording a published pairs dir's row count
+    PAIRS_META = "_pairs_meta.json"
+
     def ingest(
         self,
         docs: DataFrame,
@@ -770,22 +776,40 @@ class MinhashIndex:
         deleted_ids: DataFrame | None = None,
         threshold: float = 0.5,
         compute_pairs: bool = True,
-        pairs_out: str | None = None,
+        pairs_out: str | list[str] | None = None,
         max_fanout: int | None = None,
         mode: str = "auto",
         batch_rows: int | None = None,
     ) -> tuple[dict, DataFrame | None]:
-        """One index micro-batch: upsert ``docs``' signatures, drop
-        ``deleted_ids``, and (optionally) return the near-dup pairs that
-        become detectable with this batch (pairs touching ≥1 new doc).
+        """One index micro-batch, or a group of consecutive ones: upsert
+        ``docs``' signatures, drop ``deleted_ids``, and (optionally)
+        return the near-dup pairs that become detectable with it (pairs
+        touching ≥1 new doc). Returns ``(metrics, pairs_df_or_None)``;
+        ``metrics['pairs']`` (per window: ``window_pairs``) counts them
+        with no extra job. Idempotent: re-running after a crash
+        converges to the same stores and the same pairs.
 
-        Returns ``(metrics, pairs_df_or_None)``. Signatures are computed
-        ONCE for the batch and shared by the store updates and the pair
-        probe. Idempotent: re-running after a crash converges to the
-        same stores and the same pairs.
+        **Windows.** ``pairs_out`` lists one dir per window of a group
+        (``CdcEngine.apply_batch``; a dir string is a group of one), and
+        ``docs`` and ``deleted_ids`` then carry each row's window index
+        in :data:`~.store.WINDOW`, one row per id and window. Window j's
+        pairs meet the postings live after window j (:meth:`_live`); one
+        write, partitioned by window, produces them all, and the stores
+        then take each id's last-window row once.
 
-        ``mode`` picks the write strategy per batch (the state table's
-        COW/MOR split, operators/merge.py, applied to the index):
+        **Pairs before mutation.** Every pairs dir is published
+        (:func:`publish.publish_each`, its count in the
+        :attr:`PAIRS_META` sidecar) BEFORE either store mutates, and a
+        dir already published is reused without a write, its count read
+        from the sidecar (``pairs_reused`` when all are): after a crash
+        past the ingest the index holds the group's net rows, and pairs
+        recomputed against it would meet later windows' documents.
+        Without ``pairs_out`` they are collected to the driver before
+        the stores mutate. Either way the returned frame never depends
+        on store buckets a later ``ingest`` rewrites.
+
+        ``mode`` picks the write strategy (the state table's COW/MOR
+        split, operators/merge.py, applied to the index):
 
         * ``"cow"`` — rewrite the touched buckets whole (bulk path;
           anti-join + union is a fixed point, so replays converge).
@@ -811,33 +835,29 @@ class MinhashIndex:
         rows; appends themselves are redo-idempotent (a replay appends
         the same logical rows under a fresh seq and the fold keeps the
         newer, identical content).
-
-        The returned pairs are MATERIALIZED before this method returns:
-        written as parquet to ``pairs_out`` when given (the engine
-        passes its per-batch path; count observed inside the write),
-        else collected and re-parallelized. Either way the DataFrame
-        never lazily depends on store buckets a later ``ingest`` would
-        rewrite, so callers may defer collection. ``metrics['pairs']``
-        carries the pair count with no extra job.
         """
         if mode not in ("auto", "cow", "mor"):
             raise ValueError(f"unknown ingest mode {mode!r}")
+        outs = [pairs_out] if isinstance(pairs_out, str) else list(pairs_out or [])
+        k = max(len(outs), 1)
 
         # Materialize the batch signatures ONCE (:meth:`_snapshot`,
         # which also observes the touched buckets): the old-key probe,
-        # the two staging writes and the pair probe then plan against a
+        # the pair probe and the two staging writes then plan against a
         # trivial scan instead of re-deriving the wide shingle-explode +
         # min-lane aggregation (measured at sf0.1, re-planning it
         # dominated the ingest, ~2× end-to-end). Deterministic from the
         # batch, so a crash-replay recomputes it identically. No leading
         # "_" in the name: Spark's file index hides such paths. Removed
-        # after the pair probe, its last consumer.
+        # after the store writes, its last consumer.
         snap = os.path.join(self.path, "batch-sigs.tmp")
         snapshot, touched_sig, new_post = self._snapshot(
-            docs, content_col, id_col, deleted_ids, snap
+            docs, content_col, id_col, deleted_ids, snap, k
         )
-        new_sigs = snapshot.filter(F.col("sig").isNotNull())
-        changed = snapshot.select("id")
+        # the stores take each id's row of its last window
+        net = (snapshot.filter("__last") if k > 1 else snapshot).select("id", "sig")
+        new_sigs = net.filter(F.col("sig").isNotNull())
+        changed = net.select("id")
 
         # Current stored signatures of the changed ids (pre-update
         # state, bucket-pruned) — shared by both write paths: the COW
@@ -857,6 +877,31 @@ class MinhashIndex:
             old_post = self._distinct_buckets(old_banded, self._post_bucket())
             touched_post = sorted({*new_post, *old_post})
 
+        pairs, found = None, {}
+        if compute_pairs:
+            plan = self._pairs_for(
+                *self._live(snapshot, new_post, k), threshold, max_fanout
+            )
+            schema = plan.drop(WINDOW).schema
+            if outs:
+
+                def write(staging: str) -> list[tuple[str, dict]]:
+                    return [
+                        (p, {"rows": n})
+                        for p, n in write_windows(plan, staging, k, _write_pairs)
+                    ]
+
+                res = publish.publish_each(outs, write, self.PAIRS_META)
+                counts = [int(r.get("rows") or 0) for r in res]
+                found = {"pairs": sum(counts), "window_pairs": counts, "pairs_path": pairs_out}
+                if all(r["reused"] for r in res):
+                    found["pairs_reused"] = True
+                pairs = self.spark.read.schema(schema).parquet(*outs)
+            else:
+                collected = plan.drop(WINDOW).collect()
+                found = {"pairs": len(collected)}
+                pairs = self.spark.createDataFrame(collected, schema)
+
         rows = changed.distinct().count if batch_rows is None else batch_rows
         chosen = self.sig_store._choose_mode(mode, touched_sig, rows)
         if mode == "auto" and chosen == "mor" and self.post_store._capped(
@@ -865,49 +910,17 @@ class MinhashIndex:
             chosen = "cow"
         if chosen == "mor":
             metrics = self._ingest_mor(
-                snapshot, touched_sig, touched_post, old_banded, new_banded
+                net, touched_sig, touched_post, old_banded, new_banded
             )
         else:
             metrics = self._ingest_cow(
                 new_sigs, changed, touched_sig, touched_post, cur,
                 new_banded,
             )
-
-        pairs = None
-        if compute_pairs:
-            plan = self._pairs_for(new_banded, new_post, threshold, max_fanout)
-            if pairs_out is not None:
-                # engine path: pairs land at the caller's (per-batch,
-                # immutable) destination; count observed inside the
-                # write — no second job, and the returned frame reads
-                # files no later ingest will touch.
-                obs = Observation()
-                plan.observe(
-                    obs, F.count(F.lit(1)).alias("n")
-                ).write.mode("overwrite").parquet(pairs_out)
-                try:
-                    n = int(obs.get["n"])
-                except Exception:  # noqa: BLE001
-                    # AQE empty-relation propagation can eliminate the
-                    # CollectMetrics node (BucketedParquetStore._stage has
-                    # the same fallback); footer-only count of what was
-                    # just written — no data scan (the pairs output is a
-                    # flat parquet dir, not bucket-partitioned).
-                    n = parquet_footer_rows(pairs_out)
-                metrics["pairs"] = n
-                metrics["pairs_path"] = pairs_out
-                pairs = self.spark.read.schema(plan.schema).parquet(pairs_out)
-            else:
-                # convenience path: pin the (batch-sized, small) pair
-                # set on the driver so the returned frame stays valid
-                # after later ingests rewrite the live buckets.
-                rows = plan.collect()
-                metrics["pairs"] = len(rows)
-                pairs = self.spark.createDataFrame(rows, plan.schema)
         # last consumer of the signature snapshot has run — drop it so a
         # long replay doesn't keep one stale snapshot per index forever
         shutil.rmtree(snap, ignore_errors=True)
-        return metrics, pairs
+        return {**metrics, **found}, pairs
 
     def _snapshot(
         self,
@@ -916,19 +929,34 @@ class MinhashIndex:
         id_col: str,
         deleted_ids: DataFrame | None,
         path: str,
+        k: int = 1,
     ) -> tuple[DataFrame, list[int], list[int]]:
-        """Write the batch's ``(id, sig)`` rows, deleted ids as NULL-sig
-        rows, to ``path``. Returns the snapshot (read back with the
-        schema just written) and, observed by the write as
-        ``collect_set`` metrics, the sig buckets of every changed id and
-        the posting buckets of the new band keys (collected when AQE
-        drops the metrics node, as in ``BucketedParquetStore._stage``)."""
-        sigs = self._sigs_of(docs, content_col, id_col)
+        """Write the batch's ``(id, WINDOW, sig)`` rows, deleted ids as
+        NULL-sig rows, to ``path``: one per id and window, and over
+        ``k`` > 1 windows ``__last`` on each id's last. Returns the
+        snapshot (read back with the schema just written) and, observed
+        by the write as ``collect_set`` metrics, the sig buckets of
+        every changed id and the posting buckets of the new band keys
+        (collected when AQE drops the metrics node, as in
+        ``BucketedParquetStore._stage``)."""
+
+        def window(df: DataFrame) -> Column:
+            return (F.col(WINDOW) if WINDOW in df.columns else F.lit(0)).alias(WINDOW)
+
+        # the signature of each (id, window) doc: a struct key groups both
+        key = F.struct(F.col(id_col).alias("id"), window(docs)).alias("key")
+        sigs = self._sigs_of(docs.select(key, content_col), content_col, "key")
+        sigs = sigs.select("id.*", "sig")
         if deleted_ids is not None:
             no_sig = F.lit(None).cast(sigs.schema["sig"].dataType).alias("sig")
             sigs = sigs.unionByName(
-                deleted_ids.select(F.col(deleted_ids.columns[0]).alias("id"), no_sig)
+                deleted_ids.select(
+                    F.col(deleted_ids.columns[0]).alias("id"), window(deleted_ids), no_sig
+                )
             )
+        if k > 1:
+            last = F.max(WINDOW).over(Window.partitionBy("id"))
+            sigs = sigs.withColumn("__last", F.col(WINDOW) == last)
         has_sig = F.col("sig").isNotNull()
         r, nb = self.num_hashes // self.bands, self.post_store.buckets
         post_buckets = [
@@ -1183,73 +1211,116 @@ class MinhashIndex:
             .limit(top_n)
         )
 
+    def _postings(self, touched: list[int], empty: DataFrame) -> DataFrame:
+        """Posting rows of the ``touched`` buckets; none stored yet (e.g.
+        a first batch of deletes only): ``empty.limit(0)``, typed-empty."""
+        if self.post_store.exists():
+            return self.post_store.read_buckets(touched)
+        return empty.limit(0)
+
+    def _live(
+        self, snapshot: DataFrame, touched: list[int], k: int
+    ) -> tuple[DataFrame, DataFrame]:
+        """The two sides of a group's pair probe, ``(band, bkey, id,
+        sig, WINDOW)``: the upserts of each window, and the postings
+        live after each window j — the pre-ingest posting rows of the
+        ``touched`` buckets (all a band join of the upserts' keys can
+        meet) whose id has no snapshot row in windows ≤ j, and each
+        upsert ``(id, w)`` for w ≤ j up to the id's next window. Every
+        live row is repeated once per window it is live in, with the
+        window it was born in (``__born``, −1 before the group); a row
+        dies at the first later snapshot row of its id."""
+        new = self._banded(snapshot.filter(F.col("sig").isNotNull())).select(
+            "band", "bkey", "id", "sig", WINDOW
+        )
+        born = F.col("__born")
+        windows = F.sequence(F.greatest(born, F.lit(0)), F.lit(k - 1))
+        rows = (
+            self._postings(touched, new)
+            .select("band", "bkey", "id", "sig", F.lit(-1).alias("__born"))
+            .unionByName(new.withColumnRenamed(WINDOW, "__born"))
+            .withColumn(WINDOW, F.explode(windows))
+        )
+        ends = snapshot.select(F.col("id").alias("__id"), F.col(WINDOW).alias("__end"))
+        end = F.col("__end")
+        live = rows.join(
+            ends,
+            (F.col("id") == F.col("__id")) & (born < end) & (end <= F.col(WINDOW)),
+            "left_anti",
+        )
+        return new, live
+
     def _pairs_for(
         self,
         new_banded: DataFrame,
-        touched: list[int],
+        live: DataFrame,
         threshold: float,
         max_fanout: int | None = None,
     ) -> DataFrame:
-        """Band-bucket join of the new side against ONLY the posting
-        partitions its keys hash to, ``touched`` (partition-pruned index
-        lookup; the caller probed them).
+        """Band-bucket join of the new side against the ``live`` posting
+        rows of the same window (:meth:`_live`'s sides):
+        ``(WINDOW, id_a, id_b, est_jaccard)`` for each pair at or above
+        ``threshold``.
 
-        ``max_fanout`` bounds the join blowup: posting keys whose
-        stored list exceeds it are excluded from candidate generation
-        (the skew cap — same role as ``max_df`` in the n-gram Jaccard
-        path). Members of such a hot cluster still pair through their
-        OTHER, colder band keys, so recall degrades gracefully; with
-        ``bands`` independent chances a pair is only lost when every
-        one of its shared keys is viral. Default None = exact."""
-        # no posting data yet (e.g. a first batch of deletes only): an
-        # empty index side gives the typed-empty result
-        index_side = (
-            self.post_store.read_buckets(touched)
-            if self.post_store.exists()
-            else new_banded.limit(0)
-        )
+        Each pair comes out once per window: when both docs are new in
+        the window (the live one born there) only the side with the
+        smaller id emits it, and of the band keys a pair shares only its
+        lowest band does — no dedup shuffle. A cap can drop that band's
+        row, so a capped probe deduplicates instead.
+
+        ``max_fanout`` bounds the join blowup: posting keys whose live
+        list in a window exceeds it are excluded from that window's
+        candidate generation (the skew cap — same role as ``max_df`` in
+        the n-gram Jaccard path). Members of such a hot cluster still
+        pair through their OTHER, colder band keys, so recall degrades
+        gracefully; with ``bands`` independent chances a pair is only
+        lost when every one of its shared keys is viral. Default None =
+        exact."""
+        on = ["band", "bkey", WINDOW]
+        a, b = F.col("a.id"), F.col("b.id")
+        keep = (a != b) & ((F.col("__born") != F.col(WINDOW)) | (a < b))
         if max_fanout is not None:
             # few keys breach the cap by construction → broadcast the
             # hot-key list into an anti-join; counted over the SAME
-            # pruned buckets the probe reads, no extra partitions.
+            # live rows the probe reads
             hot = (
-                index_side.groupBy("band", "bkey")
+                live.groupBy(*on)
                 .agg(F.count(F.lit(1)).alias("__c"))
                 .filter(F.col("__c") > max_fanout)
-                .select("band", "bkey")
+                .select(*on)
             )
-            index_side = index_side.join(
-                F.broadcast(hot), ["band", "bkey"], "left_anti"
+            live = live.join(F.broadcast(hot), on, "left_anti")
+        else:
+            r = self.num_hashes // self.bands
+
+            def key(t: int, side: str) -> Column:
+                return band_key(t, r, self.hash_family, f"{side}.sig")
+
+            lower = [
+                (F.col("band") > t) & (key(t, "a") == key(t, "b")) for t in range(self.bands - 1)
+            ]
+            keep &= ~reduce(operator.or_, lower, F.lit(False))
+        agree = F.size(
+            F.filter(
+                F.zip_with("a.sig", "b.sig", lambda x, y: (x == y).cast("int")),
+                lambda v: v == 1,
             )
-        cand = (
+        ) / F.lit(self.num_hashes)
+        pairs = (
             new_banded.alias("a")
-            .join(index_side.alias("b"), ["band", "bkey"])
-            .filter(F.col("a.id") != F.col("b.id"))
+            .join(live.alias("b"), on)
+            .filter(keep)
             .select(
-                F.least("a.id", "b.id").alias("id_a"),
-                F.greatest("a.id", "b.id").alias("id_b"),
-                F.when(F.col("a.id") < F.col("b.id"), F.col("a.sig"))
-                .otherwise(F.col("b.sig"))
-                .alias("sig_a"),
-                F.when(F.col("a.id") < F.col("b.id"), F.col("b.sig"))
-                .otherwise(F.col("a.sig"))
-                .alias("sig_b"),
+                WINDOW,
+                F.least(a, b).alias("id_a"),
+                F.greatest(a, b).alias("id_b"),
+                agree.alias("est_jaccard"),
             )
-            .dropDuplicates(["id_a", "id_b"])
+            .filter(F.col("est_jaccard") >= threshold)
         )
-        est = cand.withColumn(
-            "est_jaccard",
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                    lambda v: v == 1,
-                )
-            )
-            / F.lit(self.num_hashes),
-        )
-        return est.filter(F.col("est_jaccard") >= threshold).select(
-            "id_a", "id_b", "est_jaccard"
-        )
+        if max_fanout is not None:
+            pairs = pairs.dropDuplicates([WINDOW, "id_a", "id_b"])
+        return pairs
 
     def incremental_pairs(
         self,
@@ -1260,16 +1331,28 @@ class MinhashIndex:
         max_fanout: int | None = None,
     ) -> DataFrame:
         """Candidate near-dup pairs touching at least one NEW document:
-        pruned band join of the new side against the posting store
-        (which must already include the new docs via ``update``/
-        ``ingest``). Old×old pairs are never rebuilt; new×new pairs come
-        out once (id_a < id_b). ``max_fanout`` caps hot posting lists —
-        see :meth:`_pairs_for`."""
+        band join of the new side against ONLY the posting partitions
+        its keys hash to (which must already include the new docs via
+        ``update``/``ingest``). Old×old pairs are never rebuilt; new×new
+        pairs come out once (id_a < id_b). ``max_fanout`` caps hot
+        posting lists — see :meth:`_pairs_for`."""
         new_banded = self._banded(self._sigs_of(new_docs, content_col, id_col))
         touched = self._distinct_buckets(
             new_banded.select("band", "bkey"), self._post_bucket()
         )
-        return self._pairs_for(new_banded, touched, threshold, max_fanout)
+        at0 = ("band", "bkey", "id", "sig", F.lit(0).alias(WINDOW))
+        pairs = self._pairs_for(
+            new_banded.select(*at0),
+            self._postings(touched, new_banded).select(*at0, F.lit(-1).alias("__born")),
+            threshold,
+            max_fanout,
+        )
+        # a pair of two new docs meets each through the other's stored row
+        return pairs.drop(WINDOW).dropDuplicates(["id_a", "id_b"])
+
+
+def _write_pairs(df: DataFrame, path: str, *partition: str) -> None:
+    df.write.mode("overwrite").partitionBy(*partition).parquet(path)
 
 
 def connected_components(

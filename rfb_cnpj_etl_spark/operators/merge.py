@@ -36,7 +36,7 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -44,16 +44,13 @@ from ..schema import CODE_KEY, OP_DELETE, OP_UPSERT
 from . import publish
 from .dedup import last_writer_wins_agg
 from .store import (
+    WINDOW as _WINDOW,
     BucketedParquetStore,
     TouchedSetMismatchError,
     dir_bytes,
     key_bucket,
-    parquet_footer_rows,
+    write_windows,
 )
-
-
-#: the feed's window index column (0 = a merge's first window)
-_WINDOW = "__window"
 
 
 class FeedWindow(NamedTuple):
@@ -102,10 +99,13 @@ def shared(df: DataFrame, readers: int) -> Iterator[DataFrame]:
 
 
 def _write_feed(df: DataFrame, staging: str, *partition: str) -> None:
-    """Write a feed frame. Its one semi-join of the touched scans (base
-    ∪ delta) with the winners' keys stays above the union: the optimizer
-    would push it into each scan, and each copy builds its own broadcast
-    of the same keys."""
+    """Write a feed frame, one task and file per ``partition`` value.
+    Its one semi-join of the touched scans (base ∪ delta) with the
+    winners' keys stays above the union: the optimizer would push it
+    into each scan, and each copy builds its own broadcast of the same
+    keys."""
+    if partition:
+        df = df.repartition(*partition)
     rules = "spark.sql.optimizer.excludedRules"
     prev = df.sparkSession.conf.get(rules, None)
     push = "org.apache.spark.sql.catalyst.optimizer.PushDownLeftSemiAntiJoin"
@@ -235,19 +235,21 @@ class StateTable(BucketedParquetStore):
         batch: DataFrame,
         lsn_col: str | None = None,
         op_col: str | None = None,
-        windows: list[FeedWindow] | None = None,
+        windows: list | None = None,
     ) -> DataFrame:
         """The batch's LWW winners (:func:`last_writer_wins_agg`): one
         row per key, tombstones included, with ``bucket`` and
         ``content_sha256`` (NULL on a tombstone). O(batch) and a pure
         function of the batch, so a crash-replay recomputes identical
         rows; the feed, the MERGE and the engine's index all read it.
-        With the feed's ``windows`` each row carries its window index,
-        and a key keeps one winner per window."""
+        ``windows`` are the consecutive windows the batch holds (anything
+        with an ``lsn_hi``: :class:`FeedWindow`, the engine's
+        ``LsnWindow``); with two or more each row carries its window
+        index, and a key keeps one winner per window."""
         lsn_col = lsn_col or self.lsn_col
         op_col = op_col or self.op_col
         keys = self.keys
-        if windows:
+        if len(windows or ()) > 1:
             # window index = how many earlier windows end below the row
             batch = batch.withColumn(
                 _WINDOW,
@@ -355,11 +357,10 @@ class StateTable(BucketedParquetStore):
                 feed_metrics, fresh = self._emit_changes(
                     winners, lsn_col, op_col, touched, windows, batch_rows
                 )
-            # several windows: a key's winners fold to its net winner
+            # winners of several windows fold to one net winner per key
             net = winners
-            if len(windows or ()) > 1:
-                net = last_writer_wins_agg(winners, self.keys, lsn_col, op_col)
-            net = net.drop(_WINDOW)
+            if _WINDOW in winners.columns:
+                net = last_writer_wins_agg(winners, self.keys, lsn_col, op_col).drop(_WINDOW)
             try:
                 if self._choose_mode(mode, touched, batch_rows) == "mor":
                     res = self._merge_mor(net, op_col, touched)
@@ -434,25 +435,9 @@ class StateTable(BucketedParquetStore):
         def write(staging: str) -> list[tuple[str, dict]]:
             feed = self._changes(winners, lsn_col, op_col, touched, batch_rows)
             schema = feed.drop(_WINDOW).schema.jsonValue()
-            obs = Observation()
-            feed = feed.observe(
-                obs,
-                *[F.sum((F.col(_WINDOW) == i).cast("long")).alias(f"w{i}") for i in range(k)],
-            )
-            if k == 1:
-                parts = [staging]
-                _write_feed(feed.drop(_WINDOW), staging)
-            else:
-                parts = [os.path.join(staging, f"{_WINDOW}={i}") for i in range(k)]
-                # one task per window: one parquet file per feed dir
-                _write_feed(feed.repartition(_WINDOW), staging, _WINDOW)
-            try:
-                rows = [int(obs.get[f"w{i}"] or 0) for i in range(k)]
-            except Exception:  # noqa: BLE001 — AQE may prune the metrics node
-                rows = [parquet_footer_rows(p) for p in parts]
             return [
                 (p, {"rows": n, "touched": t, "schema": schema})
-                for p, n, t in zip(parts, rows, want)
+                for (p, n), t in zip(write_windows(feed, staging, k, _write_feed), want)
             ]
 
         res = publish.publish_each([w.out_dir for w in windows], write, self.FEED_META)

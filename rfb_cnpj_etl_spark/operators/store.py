@@ -67,6 +67,37 @@ from ..schema import OP_DELETE, OP_UPSERT
 from . import publish
 
 
+#: the window index column of a grouped apply (0 = the group's first
+#: window): winners, feed rows and index pairs carry it
+WINDOW = "__window"
+
+
+def write_windows(
+    df: DataFrame, staging: str, k: int, write: Callable[..., None]
+) -> list[tuple[str, int]]:
+    """Write ``df``, whose :data:`WINDOW` column holds ``0..k-1``, as one
+    dir per window: ``staging`` itself for one window, else its
+    ``WINDOW=<i>`` partitions. ``write(df, staging, *partition_cols)``
+    runs the write. Returns each window's ``(dir, rows)``, the rows
+    observed inside the write (footer counts when AQE drops the metrics
+    node); a window without rows has no dir."""
+    obs = Observation()
+    df = df.observe(
+        obs, *[F.sum((F.col(WINDOW) == i).cast("long")).alias(f"w{i}") for i in range(k)]
+    )
+    if k == 1:
+        parts = [staging]
+        write(df.drop(WINDOW), staging)
+    else:
+        parts = [os.path.join(staging, f"{WINDOW}={i}") for i in range(k)]
+        write(df, staging, WINDOW)
+    try:
+        rows = [int(obs.get[f"w{i}"] or 0) for i in range(k)]
+    except Exception:  # noqa: BLE001 — AQE may prune the metrics node
+        rows = [parquet_footer_rows(p) for p in parts]
+    return list(zip(parts, rows))
+
+
 def key_bucket(keys: list[str | Column], buckets: int) -> Column:
     """Deterministic key → bucket assignment (key column names, or
     expressions that evaluate to those columns)."""

@@ -136,3 +136,52 @@ def oracle_feed(log, prev_hi, hi, preimages=True):
         if preimages:
             expected.add((*key, f"{kind}_preimage", old_lsn, *old_row, None))
     return expected
+
+
+def oracle_pairs(spark, log, prev_hi, hi, index, threshold):
+    """The near-dup pairs of the window ``(prev_hi, hi]`` of a
+    synthesized ``log`` that a ``MinhashIndex`` shaped like ``index``
+    must report, from the oracle alone: the MinHash signatures
+    (:func:`minhash_signatures`, the index's parameters) of every doc
+    live in ``expected_final_state`` at ``hi``, and every pair of them
+    at or above ``threshold`` that touches a doc the window last wrote
+    (its upsert winners), as ``(id_a, id_b, est_jaccard)`` with
+    ``id_a < id_b``. Doc ids join the keys as the engine does.
+
+    Restricted to pairs that share a band (all lanes of one band equal):
+    LSH candidate generation only ever meets those, so a pair above the
+    threshold that agrees on no whole band is one the index cannot
+    report."""
+    from pyspark.sql import functions as F
+
+    from rfb_cnpj_etl_spark.engine import CdcEngine
+    from rfb_cnpj_etl_spark.gen import expected_final_state
+    from rfb_cnpj_etl_spark.operators.dedup import minhash_signatures
+
+    state = expected_final_state(log.filter(F.col("lsn") <= hi))
+    docs = state.select(
+        F.concat_ws(CdcEngine._ID_SEP, "repo", "path").alias("doc_id"),
+        F.col("content").alias("text"),
+        (F.col("lsn") > (-1 if prev_hi is None else prev_hi)).alias("new"),
+    )
+    new = {r["doc_id"] for r in docs.filter("new").collect()}
+    sigs = {
+        r["id"]: list(r["sig"])
+        for r in minhash_signatures(
+            docs, "text", "doc_id", index.k, index.num_hashes, index.hash_family
+        ).collect()
+    }
+    rows = index.num_hashes // index.bands
+    bands = [slice(i * rows, (i + 1) * rows) for i in range(index.bands)]
+    out = set()
+    for a in new:
+        sig_a = sigs[a]
+        for b, sig_b in sigs.items():
+            if a == b or (b in new and b < a):
+                continue
+            if not any(sig_a[s] == sig_b[s] for s in bands):
+                continue
+            est = sum(x == y for x, y in zip(sig_a, sig_b)) / index.num_hashes
+            if est >= threshold:
+                out.add((min(a, b), max(a, b), est))
+    return out
