@@ -52,7 +52,7 @@ from pyspark.sql import types as T
 from .operators import publish
 from .operators.dedup import last_writer_wins_agg
 from .operators.merge import FeedWindow, StateTable, read_feed, shared
-from .operators.store import WINDOW, key_bucket, parquet_footer_rows
+from .operators.store import FIRST, NEXT, WINDOW, key_bucket, parquet_footer_rows
 from .plans.checkpoint import Manifest
 from .schema import CHANGELOG_SCHEMA, CODE_KEY, OP_DELETE, OP_UPSERT, SchemaRegistry
 
@@ -360,12 +360,12 @@ class CdcEngine:
         (:meth:`MinhashIndex.ingest`). Returns each window's manifest
         fields (pair count and dir) and the ingest's write metrics."""
         doc_id = F.concat_ws(self._ID_SEP, *self.state.keys).alias("doc_id")
-        window = [WINDOW] if WINDOW in winners.columns else []
+        chain = [WINDOW, NEXT, FIRST] if WINDOW in winners.columns else []
         is_del = F.col(self.state.op_col) == OP_DELETE
         upserts = winners.filter(~is_del).select(
-            doc_id, F.col(self.state.content_col).alias("text"), *window
+            doc_id, F.col(self.state.content_col).alias("text"), *chain
         )
-        deletes = winners.filter(is_del).select(doc_id, *window)
+        deletes = winners.filter(is_del).select(doc_id, *chain)
         paths = [self._pairs_dir(index, w.batch_id) for w in windows]
         metrics, _pairs = index.ingest(
             upserts,

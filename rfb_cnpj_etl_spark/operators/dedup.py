@@ -19,11 +19,9 @@ band-bucket equi-join).
 
 from __future__ import annotations
 
-import operator
 import os
 import shutil
 import uuid
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -31,6 +29,8 @@ from pyspark.sql import functions as F
 from ..schema import OP_DELETE, OP_UPSERT
 from . import publish
 from .store import (
+    FIRST,
+    NEXT,
     WINDOW,
     BucketedParquetStore,
     TouchedSetMismatchError,
@@ -415,12 +415,12 @@ def release_operator_caches() -> None:
             pass
 
 
-def band_key(b: int, rows: int, hash_family: str, sig: str = "sig") -> Column:
+def band_key(b: int, rows: int, hash_family: str) -> Column:
     """Band ``b`` (``rows`` lanes) of ``sig``: the joined lane string
     for the md5 (oracle-parity) family — xxhash64 has no DuckDB twin —
     and its xxhash64 compression for the engine family."""
     joined = F.array_join(
-        F.transform(F.slice(sig, b * rows + 1, rows), lambda x: x.cast("string")),
+        F.transform(F.slice("sig", b * rows + 1, rows), lambda x: x.cast("string")),
         ",",
     )
     return joined if hash_family == "md5" else F.xxhash64(joined)
@@ -430,9 +430,10 @@ def band_explode(
     sigs: DataFrame, num_hashes: int, bands: int, hash_family: str
 ) -> DataFrame:
     """(id, sig) → one (id, sig, band, bucket) row per band, the bucket
-    being :func:`band_key`. A :data:`~.store.WINDOW` column rides along."""
+    being :func:`band_key`. The :data:`~.store.WINDOW` and
+    :data:`~.store.NEXT` columns ride along."""
     r = num_hashes // bands
-    keep = [c for c in ("id", "sig", WINDOW) if c in sigs.columns]
+    keep = [c for c in ("id", "sig", WINDOW, NEXT) if c in sigs.columns]
     return sigs.select(
         *keep,
         F.explode(
@@ -758,10 +759,18 @@ class MinhashIndex:
 
     @staticmethod
     def _distinct_buckets(df: DataFrame, bucket_col: Column) -> list[int]:
-        """Tiny driver collect: ≤ B ints."""
-        return sorted(
-            r["b"] for r in df.select(bucket_col.alias("b")).distinct().collect()
-        )
+        """The ≤ B distinct values of ``bucket_col`` over ``df``, observed
+        as a ``collect_set`` metric by a no-op write: no shuffle, so one
+        job besides ``df``'s own broadcasts (a distinct collect, the
+        fallback when AQE drops the metrics node, takes two)."""
+        obs = Observation()
+        df.observe(obs, F.collect_set(bucket_col).alias("b")).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        try:
+            return sorted(obs.get["b"])
+        except Exception:  # noqa: BLE001 — AQE may prune the metrics node
+            return sorted(r["b"] for r in df.select(bucket_col.alias("b")).distinct().collect())
 
     # -- write path ------------------------------------------------------
 
@@ -791,11 +800,13 @@ class MinhashIndex:
 
         **Windows.** ``pairs_out`` lists one dir per window of a group
         (``CdcEngine.apply_batch``; a dir string is a group of one), and
-        ``docs`` and ``deleted_ids`` then carry each row's window index
-        in :data:`~.store.WINDOW`, one row per id and window. Window j's
-        pairs meet the postings live after window j (:meth:`_live`); one
-        write, partitioned by window, produces them all, and the stores
-        then take each id's last-window row once.
+        ``docs`` and ``deleted_ids`` then carry, one row per id and
+        window, the window index in :data:`~.store.WINDOW` and the id's
+        :data:`~.store.NEXT` and :data:`~.store.FIRST`
+        (:meth:`StateTable.batch_winners`). Window j's pairs meet the
+        postings live after window j (:meth:`_live`); one write,
+        partitioned by window, produces them all, and the stores then
+        take each id's last-window row once.
 
         **Pairs before mutation.** Every pairs dir is published
         (:func:`publish.publish_each`, its count in the
@@ -803,7 +814,9 @@ class MinhashIndex:
         dir already published is reused without a write, its count read
         from the sidecar (``pairs_reused`` when all are): after a crash
         past the ingest the index holds the group's net rows, and pairs
-        recomputed against it would meet later windows' documents.
+        recomputed against it would meet later windows' documents. A dir
+        without the sidecar was never published (or predates it), so it
+        is removed and recomputed.
         Without ``pairs_out`` they are collected to the driver before
         the stores mutate. Either way the returned frame never depends
         on store buckets a later ``ingest`` rewrites.
@@ -855,7 +868,7 @@ class MinhashIndex:
             docs, content_col, id_col, deleted_ids, snap, k
         )
         # the stores take each id's row of its last window
-        net = (snapshot.filter("__last") if k > 1 else snapshot).select("id", "sig")
+        net = snapshot.filter(F.col(NEXT) == k).select("id", "sig")
         new_sigs = net.filter(F.col("sig").isNotNull())
         changed = net.select("id")
 
@@ -884,6 +897,11 @@ class MinhashIndex:
             )
             schema = plan.drop(WINDOW).schema
             if outs:
+                for out in outs:
+                    if os.path.isdir(out) and not os.path.exists(
+                        os.path.join(out, self.PAIRS_META)
+                    ):
+                        shutil.rmtree(out)
 
                 def write(staging: str) -> list[tuple[str, dict]]:
                     return [
@@ -931,32 +949,31 @@ class MinhashIndex:
         path: str,
         k: int = 1,
     ) -> tuple[DataFrame, list[int], list[int]]:
-        """Write the batch's ``(id, WINDOW, sig)`` rows, deleted ids as
-        NULL-sig rows, to ``path``: one per id and window, and over
-        ``k`` > 1 windows ``__last`` on each id's last. Returns the
-        snapshot (read back with the schema just written) and, observed
-        by the write as ``collect_set`` metrics, the sig buckets of
-        every changed id and the posting buckets of the new band keys
-        (collected when AQE drops the metrics node, as in
-        ``BucketedParquetStore._stage``)."""
+        """Write the batch's ``(id, WINDOW, NEXT, FIRST, sig)`` rows,
+        deleted ids as NULL-sig rows, to ``path``: one per id and window
+        of the ``k``, ``NEXT`` being ``k`` on the id's last (one window:
+        0, 1 and true). Returns the snapshot (read back with the schema
+        just written) and, observed by the write as ``collect_set``
+        metrics, the sig buckets of every changed id and the posting
+        buckets of the new band keys (collected when AQE drops the
+        metrics node, as in ``BucketedParquetStore._stage``)."""
 
-        def window(df: DataFrame) -> Column:
-            return (F.col(WINDOW) if WINDOW in df.columns else F.lit(0)).alias(WINDOW)
+        def chain(df: DataFrame) -> list[Column]:
+            if WINDOW in df.columns:
+                return [F.col(WINDOW), F.coalesce(NEXT, F.lit(k)).alias(NEXT), F.col(FIRST)]
+            return [F.lit(0).alias(WINDOW), F.lit(k).alias(NEXT), F.lit(True).alias(FIRST)]
 
-        # the signature of each (id, window) doc: a struct key groups both
-        key = F.struct(F.col(id_col).alias("id"), window(docs)).alias("key")
+        # the signature of each (id, window) doc: a struct key groups them
+        key = F.struct(F.col(id_col).alias("id"), *chain(docs)).alias("key")
         sigs = self._sigs_of(docs.select(key, content_col), content_col, "key")
         sigs = sigs.select("id.*", "sig")
         if deleted_ids is not None:
             no_sig = F.lit(None).cast(sigs.schema["sig"].dataType).alias("sig")
             sigs = sigs.unionByName(
                 deleted_ids.select(
-                    F.col(deleted_ids.columns[0]).alias("id"), window(deleted_ids), no_sig
+                    F.col(deleted_ids.columns[0]).alias("id"), *chain(deleted_ids), no_sig
                 )
             )
-        if k > 1:
-            last = F.max(WINDOW).over(Window.partitionBy("id"))
-            sigs = sigs.withColumn("__last", F.col(WINDOW) == last)
         has_sig = F.col("sig").isNotNull()
         r, nb = self.num_hashes // self.bands, self.post_store.buckets
         post_buckets = [
@@ -1221,34 +1238,28 @@ class MinhashIndex:
     def _live(
         self, snapshot: DataFrame, touched: list[int], k: int
     ) -> tuple[DataFrame, DataFrame]:
-        """The two sides of a group's pair probe, ``(band, bkey, id,
-        sig, WINDOW)``: the upserts of each window, and the postings
-        live after each window j — the pre-ingest posting rows of the
-        ``touched`` buckets (all a band join of the upserts' keys can
-        meet) whose id has no snapshot row in windows ≤ j, and each
-        upsert ``(id, w)`` for w ≤ j up to the id's next window. Every
-        live row is repeated once per window it is live in, with the
-        window it was born in (``__born``, −1 before the group); a row
-        dies at the first later snapshot row of its id."""
-        new = self._banded(snapshot.filter(F.col("sig").isNotNull())).select(
-            "band", "bkey", "id", "sig", WINDOW
+        """The two sides of a group's pair probe: the upserts of each
+        window, ``(band, bkey, id, sig, WINDOW)``, and the posting rows,
+        ``(band, bkey, id, sig, __born, NEXT)``, each live in the
+        windows j with ``__born ≤ j < NEXT``. They are the upserts, live
+        from their window up to their id's next one, and the pre-ingest
+        posting rows of the ``touched`` buckets (all a band join of the
+        upserts' keys can meet), live from before the group up to their
+        id's first window in it."""
+        cols = ("band", "bkey", "id", "sig")
+        new = self._banded(snapshot.filter(F.col("sig").isNotNull()))
+        first = snapshot.filter(FIRST).select(
+            F.col("id").alias("__id"), F.col(WINDOW).alias("__first")
         )
-        born = F.col("__born")
-        windows = F.sequence(F.greatest(born, F.lit(0)), F.lit(k - 1))
-        rows = (
+        pre = (
             self._postings(touched, new)
-            .select("band", "bkey", "id", "sig", F.lit(-1).alias("__born"))
-            .unionByName(new.withColumnRenamed(WINDOW, "__born"))
-            .withColumn(WINDOW, F.explode(windows))
+            .select(*cols)
+            .join(first, F.col("id") == F.col("__id"), "left")
+            .select(*cols, F.lit(-1).alias("__born"), F.coalesce("__first", F.lit(k)).alias(NEXT))
+            .filter(F.col(NEXT) > 0)
         )
-        ends = snapshot.select(F.col("id").alias("__id"), F.col(WINDOW).alias("__end"))
-        end = F.col("__end")
-        live = rows.join(
-            ends,
-            (F.col("id") == F.col("__id")) & (born < end) & (end <= F.col(WINDOW)),
-            "left_anti",
-        )
-        return new, live
+        live = pre.unionByName(new.select(*cols, F.col(WINDOW).alias("__born"), NEXT))
+        return new.select(*cols, WINDOW), live
 
     def _pairs_for(
         self,
@@ -1257,16 +1268,10 @@ class MinhashIndex:
         threshold: float,
         max_fanout: int | None = None,
     ) -> DataFrame:
-        """Band-bucket join of the new side against the ``live`` posting
-        rows of the same window (:meth:`_live`'s sides):
-        ``(WINDOW, id_a, id_b, est_jaccard)`` for each pair at or above
-        ``threshold``.
-
-        Each pair comes out once per window: when both docs are new in
-        the window (the live one born there) only the side with the
-        smaller id emits it, and of the band keys a pair shares only its
-        lowest band does — no dedup shuffle. A cap can drop that band's
-        row, so a capped probe deduplicates instead.
+        """Band-bucket join of each window's upserts against the posting
+        rows live in that window (:meth:`_live`'s sides):
+        ``(WINDOW, id_a, id_b, est_jaccard)`` once per window for each
+        pair at or above ``threshold``.
 
         ``max_fanout`` bounds the join blowup: posting keys whose live
         list in a window exceeds it are excluded from that window's
@@ -1276,51 +1281,40 @@ class MinhashIndex:
         gracefully; with ``bands`` independent chances a pair is only
         lost when every one of its shared keys is viral. Default None =
         exact."""
-        on = ["band", "bkey", WINDOW]
-        a, b = F.col("a.id"), F.col("b.id")
-        keep = (a != b) & ((F.col("__born") != F.col(WINDOW)) | (a < b))
+        on = ["band", "bkey"]
         if max_fanout is not None:
             # few keys breach the cap by construction → broadcast the
-            # hot-key list into an anti-join; counted over the SAME
-            # live rows the probe reads
+            # hot (key, window) list into an anti-join; counted over the
+            # SAME live rows the probe meets, in each window they live in
+            at = F.explode(F.sequence(F.greatest("__born", F.lit(0)), F.col(NEXT) - 1))
             hot = (
-                live.groupBy(*on)
+                live.select(*on, at.alias(WINDOW))
+                .groupBy(*on, WINDOW)
                 .agg(F.count(F.lit(1)).alias("__c"))
                 .filter(F.col("__c") > max_fanout)
-                .select(*on)
+                .select(*on, WINDOW)
             )
-            live = live.join(F.broadcast(hot), on, "left_anti")
-        else:
-            r = self.num_hashes // self.bands
-
-            def key(t: int, side: str) -> Column:
-                return band_key(t, r, self.hash_family, f"{side}.sig")
-
-            lower = [
-                (F.col("band") > t) & (key(t, "a") == key(t, "b")) for t in range(self.bands - 1)
-            ]
-            keep &= ~reduce(operator.or_, lower, F.lit(False))
+            new_banded = new_banded.join(F.broadcast(hot), [*on, WINDOW], "left_anti")
+        a, b, j = F.col("a.id"), F.col("b.id"), F.col(f"a.{WINDOW}")
         agree = F.size(
             F.filter(
                 F.zip_with("a.sig", "b.sig", lambda x, y: (x == y).cast("int")),
                 lambda v: v == 1,
             )
         ) / F.lit(self.num_hashes)
-        pairs = (
+        return (
             new_banded.alias("a")
             .join(live.alias("b"), on)
-            .filter(keep)
+            .filter((a != b) & (F.col("b.__born") <= j) & (j < F.col(f"b.{NEXT}")))
             .select(
-                WINDOW,
+                j.alias(WINDOW),
                 F.least(a, b).alias("id_a"),
                 F.greatest(a, b).alias("id_b"),
                 agree.alias("est_jaccard"),
             )
             .filter(F.col("est_jaccard") >= threshold)
+            .dropDuplicates([WINDOW, "id_a", "id_b"])
         )
-        if max_fanout is not None:
-            pairs = pairs.dropDuplicates([WINDOW, "id_a", "id_b"])
-        return pairs
 
     def incremental_pairs(
         self,
@@ -1340,15 +1334,16 @@ class MinhashIndex:
         touched = self._distinct_buckets(
             new_banded.select("band", "bkey"), self._post_bucket()
         )
-        at0 = ("band", "bkey", "id", "sig", F.lit(0).alias(WINDOW))
+        cols = ("band", "bkey", "id", "sig")
         pairs = self._pairs_for(
-            new_banded.select(*at0),
-            self._postings(touched, new_banded).select(*at0, F.lit(-1).alias("__born")),
+            new_banded.select(*cols, F.lit(0).alias(WINDOW)),
+            self._postings(touched, new_banded).select(
+                *cols, F.lit(-1).alias("__born"), F.lit(1).alias(NEXT)
+            ),
             threshold,
             max_fanout,
         )
-        # a pair of two new docs meets each through the other's stored row
-        return pairs.drop(WINDOW).dropDuplicates(["id_a", "id_b"])
+        return pairs.drop(WINDOW)
 
 
 def _write_pairs(df: DataFrame, path: str, *partition: str) -> None:

@@ -44,6 +44,8 @@ from ..schema import CODE_KEY, OP_DELETE, OP_UPSERT
 from . import publish
 from .dedup import last_writer_wins_agg
 from .store import (
+    FIRST as _FIRST,
+    NEXT as _NEXT,
     WINDOW as _WINDOW,
     BucketedParquetStore,
     TouchedSetMismatchError,
@@ -245,7 +247,10 @@ class StateTable(BucketedParquetStore):
         ``windows`` are the consecutive windows the batch holds (anything
         with an ``lsn_hi``: :class:`FeedWindow`, the engine's
         ``LsnWindow``); with two or more each row carries its window
-        index, and a key keeps one winner per window."""
+        index, and a key keeps one winner per window, which also carries
+        the key's next window (NULL on its last: the net winner the
+        state takes) and whether it is the key's first — the index's
+        pair probe reads both."""
         lsn_col = lsn_col or self.lsn_col
         op_col = op_col or self.op_col
         keys = self.keys
@@ -257,6 +262,11 @@ class StateTable(BucketedParquetStore):
             )
             keys = [*keys, _WINDOW]
         winners = last_writer_wins_agg(batch, keys, lsn_col, op_col)
+        if _WINDOW in keys:
+            chain = Window.partitionBy(*self.keys).orderBy(_WINDOW)
+            winners = winners.withColumn(_NEXT, F.lead(_WINDOW).over(chain)).withColumn(
+                _FIRST, F.lag(_WINDOW).over(chain).isNull()
+            )
         if "bucket" not in winners.columns:
             winners = winners.withColumn(
                 "bucket", key_bucket(self.keys, self.buckets)
@@ -357,10 +367,10 @@ class StateTable(BucketedParquetStore):
                 feed_metrics, fresh = self._emit_changes(
                     winners, lsn_col, op_col, touched, windows, batch_rows
                 )
-            # winners of several windows fold to one net winner per key
+            # of several windows' winners the state takes each key's last
             net = winners
             if _WINDOW in winners.columns:
-                net = last_writer_wins_agg(winners, self.keys, lsn_col, op_col).drop(_WINDOW)
+                net = winners.filter(F.col(_NEXT).isNull()).drop(_WINDOW, _NEXT, _FIRST)
             try:
                 if self._choose_mode(mode, touched, batch_rows) == "mor":
                     res = self._merge_mor(net, op_col, touched)
@@ -489,7 +499,7 @@ class StateTable(BucketedParquetStore):
         prev_col = f"prev_{lsn_col}"
         if _WINDOW not in winners.columns:
             winners = winners.withColumn(_WINDOW, F.lit(0))
-        skip = (*self.keys, op_col, self.op_col, "bucket", "content_sha256", _WINDOW)
+        skip = (*self.keys, op_col, self.op_col, "bucket", "content_sha256", _WINDOW, _NEXT, _FIRST)
         rows = winners
         scan = None
         if self.exists():

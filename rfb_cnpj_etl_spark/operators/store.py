@@ -70,6 +70,10 @@ from . import publish
 #: the window index column of a grouped apply (0 = the group's first
 #: window): winners, feed rows and index pairs carry it
 WINDOW = "__window"
+#: a grouped winner's place in its key's chain of windows: the key's
+#: next window in the group (NULL on its last), and whether it is the
+#: key's first
+NEXT, FIRST = "__next", "__first"
 
 
 def write_windows(

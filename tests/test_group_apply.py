@@ -535,6 +535,20 @@ class TestIndexGroupCrash:
         assert all(e.get("pairs_reused") for e in entries)
         assert _isnapshot(spark, eng, idx) == ireference["exact"]
 
+    def test_pairs_dir_without_sidecar_is_recomputed(self, spark, ilog, tmp_path, ireference):
+        """A pairs dir without its count sidecar was never published (an
+        older engine wrote its pairs straight into place, where a crash
+        can tear them), so the window recomputes it."""
+        eng, idx = _iseeded(spark, ilog, str(tmp_path), "exact")
+        ref = ireference["exact"]
+        torn = CdcEngine._pairs_dir(idx, ref["entries"][1][0])
+        spark.createDataFrame(
+            [("a", "b", 1.0)], "id_a string, id_b string, est_jaccard double"
+        ).write.parquet(torn)
+        entries = _ireplay(eng, idx, ilog, "exact")
+        assert not entries[0].get("pairs_reused")
+        assert _isnapshot(spark, eng, idx) == ref
+
     def test_retention_keeps_uncommitted_pairs_dirs(
         self, spark, ilog, tmp_path, monkeypatch, ireference
     ):

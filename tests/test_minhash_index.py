@@ -168,34 +168,6 @@ class TestIncrementalExactness:
         assert any({a, b} == {5, 800} for a, b, _ in got)
         assert not any(700 in (a, b) for a, b, _ in got)
 
-    @pytest.mark.parametrize("max_fanout", [None, 5])
-    def test_pair_comes_out_once_through_its_lowest_uncapped_band(
-        self, spark, tmp_path, max_fanout
-    ):
-        """A pair that shares bands 0 and 2 comes out once; when band 0's
-        key is hot (seven live ids) and capped, it still comes out
-        through band 2."""
-        from pyspark.sql import functions as F
-
-        from rfb_cnpj_etl_spark.operators.store import WINDOW
-
-        idx = MinhashIndex(spark, str(tmp_path / "idx"), buckets=4, **PARAMS)
-        sig_a = list(range(1, 17))
-        sig_b = sig_a[:4] + [101, 102, 103, 104] + sig_a[8:12] + [105, 106, 107, 108]
-        hot = [sig_a[:4] + [1000 * h + i for i in range(12)] for h in range(1, 7)]
-
-        def banded(rows):
-            sigs = spark.createDataFrame(rows, "id long, sig array<bigint>")
-            return idx._banded(sigs).select(
-                "band", "bkey", "id", "sig", F.lit(0).alias(WINDOW)
-            )
-
-        live = banded([(2, sig_b)] + [(10 + h, s) for h, s in enumerate(hot)])
-        pairs = idx._pairs_for(
-            banded([(1, sig_a)]), live.withColumn("__born", F.lit(-1)), 0.5, max_fanout
-        )
-        assert sorted(map(tuple, pairs.collect())) == [(0, 1, 2, 0.5)]
-
 
 class TestCrashRecovery:
     def _twin_state(self, spark, tmp_path, name, batches):
